@@ -19,6 +19,16 @@ from dataclasses import asdict, dataclass, field
 # containment of documents").
 MERSENNE_PRIME_61 = (1 << 61) - 1
 
+# Row bound for work that runs on (or ships through) the driver instead of a
+# distributed plan: connected components union-finds edge sets of at most
+# this many rows in driver Python (``connected_components(driver_max_edges=)``)
+# and the exact-span pass broadcasts candidate-pair sets up to it. Driver
+# memory assumption: 200k rows of two URL-sized (~60 B) ids are ~25 MB of
+# Arrow plus ~70 MB of Python objects for the union-find, and ~1.3 s of
+# driver CPU — inside the 1-2 GB heap of a default driver. Raise it only with
+# the driver's memory.
+DRIVER_MAX_ROWS = 200_000
+
 
 @dataclass(frozen=True)
 class DedupConfig:

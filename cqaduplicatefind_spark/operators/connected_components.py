@@ -1,12 +1,22 @@
-"""Iterative large-star/small-star connected components over the candidate-edge
-DataFrame (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14).
+"""Connected components over the candidate-edge DataFrame, on one of two paths
+that give identical assignments:
+
+- **Driver path** (edge sets of at most ``driver_max_edges`` rows, default
+  ``config.DRIVER_MAX_ROWS``): one bounded collect job brings the canonical
+  edges to the driver as Arrow, a union-find with min-id roots labels them in
+  Python, and the assignment comes back as an Arrow-built frame. Verification
+  usually leaves a small accepted edge set (tens of edges per thousand docs),
+  where the star loop below is pure fixed cost: a dozen job barriers for a few
+  kilobytes of data.
+- **Star loop** (larger graphs): iterative large-star/small-star (Kiveris et
+  al., "Connected Components in MapReduce and Beyond", SoCC'14).
 
 The reference encodes duplicate groups only as per-question ``dups`` lists
 (``/root/reference/src/JsonToCsvConverter.py:17-22``); cluster resolution is the new
 capability the north_rule mandates. Canonical cluster id = min node id in the
 component (FIXTURES.md).
 
-Spark-first design notes:
+Spark-first design notes for the star loop:
 
 - No ``collect_list``: star operations are expressed as groupBy-min + join, so a
   giant component never materializes a giant array in one task.
@@ -23,6 +33,10 @@ Spark-first design notes:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
+
+from cqaduplicatefind_spark.config import DRIVER_MAX_ROWS
+from cqaduplicatefind_spark.session import arrow_frame
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -137,16 +151,56 @@ class CheckpointHandle:
         self._ids = set()
 
 
+def _min_root_components(id_a: list, id_b: list) -> tuple[list, list]:
+    """Union-find over edge lists whose union keeps the smaller root, so every
+    root is its component's minimum id. Returns (ids, cluster_ids)."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while (up := parent.setdefault(root, root)) != root:
+            root = up
+        while x != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in zip(id_a, id_b):
+        ra, rb = find(a), find(b)
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    ids = list(parent)
+    return ids, [find(x) for x in ids]
+
+
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
     assume_unconverged: bool = False,
     input_distinct: bool = False,
     persisted: list | None = None,
+    driver_max_edges: int = DRIVER_MAX_ROWS,
+    stats: dict | None = None,
 ) -> DataFrame:
     """edges(id_a, id_b) -> assignments(id, cluster_id) for every node that appears
     in an edge. cluster_id = min node id in the component. Callers attach singletons
     with a left join + coalesce (see ``plans.pipeline``).
+
+    ``driver_max_edges`` bounds the driver path: a canonical edge set (oriented,
+    self-loops dropped, duplicates NOT yet dropped) of at most that many rows is
+    collected in one ``limit``-bounded job and union-found in driver Python;
+    the assignment comes back as an Arrow-built frame, with no checkpoint and
+    nothing persisted. A larger set pays that one bounded probe job (at most
+    ``driver_max_edges + 1`` rows reach the driver) and then runs the star
+    loop unchanged; ``driver_max_edges=0`` forces the star loop. Both paths
+    label by min id, so ids must order the same in Python and Spark: strings
+    (UTF-8 byte order is code-point order) and integers do. ``stats`` (a
+    dict) receives ``path`` ("driver" or "star"), ``rounds`` (star rounds
+    run) and ``nodes`` (the assignment's row count when the driver path knows
+    it, else None) — callers use ``nodes`` instead of a count job.
+
+    The star loop's knobs:
 
     ``assume_unconverged=True`` runs the first large/small-star round before the
     first fixed-point probe. Tradeoff, not a free win: a raw pairing graph with
@@ -169,7 +223,6 @@ def connected_components(
     ``release()`` frees it; without the handle the blocks stay pinned for the
     session lifetime (the round-4 runner-leak finding)."""
     spark = edges.sparkSession
-    before = _persistent_rdd_ids(spark)
     cur = (
         # canonical orientation is larger -> smaller (id_a > id_b): that is the
         # converged star-forest form, so an input that is ALREADY an assignment
@@ -183,6 +236,24 @@ def connected_components(
         )
         .where(F.col("id_a") != F.col("id_b"))
     )
+    stats = {} if stats is None else stats
+    if driver_max_edges > 0:
+        # limit + toArrow is ONE job (a plain collect of a limit scans the
+        # partitions in escalating waves); duplicates are harmless to
+        # union-find, so the bound needs no dedup shuffle first
+        table = cur.limit(driver_max_edges + 1).toArrow()
+        if table.num_rows <= driver_max_edges:
+            ids, labels = _min_root_components(
+                table.column("id_a").to_pylist(), table.column("id_b").to_pylist()
+            )
+            stats.update(path="driver", rounds=0, nodes=len(ids))
+            id_type = cur.schema["id_a"].dataType
+            schema = StructType(
+                [StructField("id", id_type), StructField("cluster_id", id_type)]
+            )
+            return arrow_frame(spark, schema, {"id": ids, "cluster_id": labels})
+
+    before = _persistent_rdd_ids(spark)
     if not input_distinct:
         cur = cur.distinct()
     cur = cur.localCheckpoint()
@@ -205,6 +276,7 @@ def connected_components(
         live = _persistent_rdd_ids(spark) - pre
         rounds += 1
 
+    stats.update(path="star", rounds=rounds, nodes=None)
     if persisted is not None:
         persisted.append(CheckpointHandle(spark, live))
     # at convergence every edge is (node, component-min)

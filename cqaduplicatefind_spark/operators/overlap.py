@@ -42,13 +42,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from cqaduplicatefind_spark.config import DedupConfig
+from cqaduplicatefind_spark.config import DRIVER_MAX_ROWS, DedupConfig
 from cqaduplicatefind_spark.functions.hashing import (  # noqa: F401 (re-exports)
     RollingHash,
     TokenHasher,
     winnow_kernel,
     winnow_params,
 )
+from cqaduplicatefind_spark.session import arrow_frame
+
+SPAN_EDGE_SCHEMA = "id_a string, id_b string, overlap_span int"
 
 
 def longest_common_span(a: np.ndarray, b: np.ndarray) -> int:
@@ -123,9 +126,7 @@ def overlap_spans(
                 {"id_a": pdf["id_a"], "id_b": pdf["id_b"], "overlap_span": spans}
             )
 
-    return joined.mapInPandas(
-        compute, "id_a string, id_b string, overlap_span int"
-    )
+    return joined.mapInPandas(compute, SPAN_EDGE_SCHEMA)
 
 
 def make_winnow_udf(gram: int, window: int, hash_seed: int):
@@ -165,9 +166,7 @@ def span_candidates(
         persisted, assignments_count,
     )
     if out is None:
-        return normalized.sparkSession.createDataFrame(
-            [], "id_a string, id_b string"
-        )
+        return arrow_frame(normalized.sparkSession, "id_a string, id_b string")
     return out
 
 
@@ -408,9 +407,7 @@ def exact_span_edges(
             # discovery short-circuited on the het-aggregate gate (no bucket
             # spans two clusters): no pairing kernel, no checkpoint, no count —
             # the span-free corpus pays exactly one aggregate job
-            return spark.createDataFrame(
-                [], "id_a string, id_b string, overlap_span int"
-            )
+            return arrow_frame(spark, SPAN_EDGE_SCHEMA)
         cands = raw.localCheckpoint()  # materialize once; count + verify read it
     finally:
         # the eager checkpoint materialized the candidate set (or the job
@@ -427,15 +424,13 @@ def exact_span_edges(
         # an empty stream. The empty result never reads cands again: free its
         # blocks now.
         _unpersist_rdd_ids(spark, ckpt_ids)
-        return spark.createDataFrame(
-            [], "id_a string, id_b string, overlap_span int"
-        )
+        return arrow_frame(spark, SPAN_EDGE_SCHEMA)
     if persisted is not None:
         persisted.append(_CheckpointHandle(spark, ckpt_ids))
     # few candidates (the usual case after same-cluster pruning): broadcast the
     # pair side so the doc joins stay exchange-free for the corpus table — the
     # driver-side analog of AQE's SMJ->BHJ rewrite, decided on the actual count
-    pairs = F.broadcast(cands) if n <= 200_000 else cands
+    pairs = F.broadcast(cands) if n <= DRIVER_MAX_ROWS else cands
     spans = overlap_spans(pairs, normalized, id_col, text_col)
     return spans.where(F.col("overlap_span") >= cfg.min_overlap_span)
 

@@ -15,7 +15,10 @@ Shuffle budget (the plan you'd want at 10^12 docs):
   2. candidates: one shuffle on band key (+ one on simhash piece key), one on the
      pair key for dedup.
   3. verify: two id-key shuffles (attach signature evidence to each pair side).
-  4. clustering: O(log n) rounds over the (tiny) accepted-edge set.
+  4. clustering: the accepted-edge set is usually tiny, and up to
+     ``config.DRIVER_MAX_ROWS`` edges it is collected in one job and
+     union-found on the driver (no shuffle); larger sets run O(log n)
+     large-star/small-star rounds (``operators/connected_components.py``).
   5. metrics: counts on edges/clusters — negligible.
 Every stage's output is columnar-prunable; nothing materializes O(n^2).
 """
@@ -297,25 +300,28 @@ def run_pipeline(
         # accept_edges output is one row per undirected pair (candidate dedup)
         # and a fresh pairing graph is never a converged star forest: skip the
         # initial dedup shuffle and the first fixed-point probe
+        cc_stats: dict = {}
         pre_assign = stage(
             "pre_clusters",
             lambda: connected_components(
                 edges.select("id_a", "id_b"),
                 assume_unconverged=True, input_distinct=True,
-                persisted=persisted,
+                persisted=persisted, stats=cc_stats,
             ),
             # consumed by exact_span_edges (fingerprint-row join) AND by the
-            # final clusters stage: CC's return value re-runs its
+            # final clusters stage: the star loop's return value re-runs its
             # roots-union + groupBy-min shuffle on EVERY action, so without a
             # persist the span branch pays that assignment shuffle twice
             reused=True,
         )
-        # materialize the shared assignment cache NOW, outside the span-cost
-        # window: the span-free branch pays the same CC-output re-derivation
-        # inside attach_singletons, so this is common-path work, and the count
-        # doubles as the span stage's broadcast-vs-shuffle gate (saving it an
-        # extra job)
-        n_assign = pre_assign.count()
+        # the span stage's broadcast-vs-shuffle gate needs the assignment
+        # count: the driver path knows it; after the star loop (or a warehouse
+        # resume) count the cache, which materializes it NOW, outside the
+        # span-cost window — the span-free branch pays the same CC-output
+        # re-derivation inside attach_singletons, so that is common-path work
+        n_assign = cc_stats.get("nodes")
+        if n_assign is None:
+            n_assign = pre_assign.count()
         _span_t0 = time.perf_counter()
         overlap_edges = stage(
             "overlap_edges",
@@ -328,7 +334,9 @@ def run_pipeline(
         )
         # count, not isEmpty: the frame is persisted and consumed in full either
         # way, and on the (common) empty result take(1) runs its partition scan
-        # in several escalating waves while count() is one wave + a scalar agg
+        # in several escalating waves while count() is one wave + a scalar agg.
+        # The empty result is an Arrow-built frame, so this count starts no
+        # Python worker.
         if overlap_edges.count() == 0:
             # nothing new beyond the LSH clustering: skip the second components
             # job entirely (the common case on corpora without shell-containment)
@@ -356,12 +364,14 @@ def run_pipeline(
         if timings is not None:
             # everything since _span_t0 is span-specific: the het-aggregate
             # discovery job, candidate verify, the emptiness probe, and the
-            # second CC when spans exist. The pre_assign cache materialization
-            # (the n_assign count above) is NOT in the window — the span-free
-            # branch pays the same CC-output re-derivation inside
-            # attach_singletons, so it is common-path work. The clusters stage
-            # itself is lazy in the empty case, eager (CC driver loop)
-            # otherwise — both correctly charged.
+            # second CC when spans exist. After the star loop, the pre_assign
+            # cache materialization (the n_assign count above) is NOT in the
+            # window — the span-free branch pays the same CC-output
+            # re-derivation inside attach_singletons, so it is common-path
+            # work; the driver path's Arrow-built assignment caches inside the
+            # window, at the cost of a local scan. The clusters stage
+            # itself is lazy in the empty case, eager (the second components
+            # run) otherwise — both correctly charged.
             timings["span_extra_sec"] = time.perf_counter() - _span_t0
     else:
         clusters = stage(

@@ -10,7 +10,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def build_session(
@@ -69,6 +71,15 @@ def build_session(
         "spark.sql.session.timeZone": "UTC",
         # deterministic shuffle behavior for the local[8]==local[32] check
         "spark.sql.execution.sortBeforeRepartition": "true",
+        # PySpark 4.1's DataFrame debugging captures a Python stack and sets a
+        # JVM origin on EVERY F.* / DataFrame call: about half the py4j round
+        # trips of a pipeline pass's driver plan building (a warm pass over
+        # the 200-page test fixture: ~6,200 -> ~3,200 calls). The cost of turning it off: error messages lose the
+        # Python call site in their DataFrame query context. To get it back,
+        # pass extra={"spark.python.sql.dataFrameDebugging.enabled": "true"};
+        # PySpark reads the flag once per Python process, at the first
+        # DataFrame call after the session exists.
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     # shuffle files on tmpfs when available: this sandbox's /tmp is a slow overlay
     # (2x shuffle-stage latency). On a real cluster the platform sets local dirs
@@ -83,3 +94,18 @@ def build_session(
     for k, v in confs.items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def arrow_frame(
+    spark: SparkSession, schema: StructType | str, columns: dict | None = None
+) -> DataFrame:
+    """A frame of driver-side data (``columns``: name -> list; omitted or
+    missing columns are empty) built through Arrow. Actions on it decode the
+    Arrow batches in the JVM and start no Python worker — unlike
+    ``createDataFrame(list, ...)``, whose rows go through one (an empty one
+    costs a ~0.4 s Python-worker job per action)."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    columns = columns or {}
+    table = pa.table({f.name: columns.get(f.name, []) for f in schema.fields})
+    return spark.createDataFrame(table, schema)

@@ -58,6 +58,7 @@ from cqaduplicatefind_spark.operators.candidates import (
     explode_bands,
 )
 from cqaduplicatefind_spark.operators.verify import accept_edges, score_pairs
+from cqaduplicatefind_spark.session import arrow_frame
 
 SIG_COLS = ("url", "minhash", "simhash", "n_tokens", "n_shingles", "shingles")
 
@@ -527,7 +528,7 @@ class IncrementalDedup:
     def matches(self) -> DataFrame:
         m = self._read_batches(self.matches_dir, schema=EDGE_SCHEMA)
         if m is None:
-            return self.spark.createDataFrame([], EDGE_SCHEMA)
+            return arrow_frame(self.spark, EDGE_SCHEMA)
         return m
 
 

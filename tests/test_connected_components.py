@@ -1,16 +1,33 @@
 """Connected-components correctness vs a union-find oracle, on adversarial graph
 shapes (long paths stress iteration count; stars/cliques stress the star ops) and
-random graphs, plus partitioning-invariance."""
+random graphs, plus partitioning-invariance. Every case runs on BOTH paths: the
+driver-side union-find (test-sized graphs take it by default) and the star loop
+(forced with ``driver_max_edges=0``)."""
 
 import random
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from cqaduplicatefind_spark.operators.connected_components import (
+    _persistent_rdd_ids,
     attach_singletons,
     connected_components,
 )
+
+# driver_max_edges per path: the default bound, and 0 (star loop only)
+PATHS = {"driver": None, "star": 0}
+
+
+def _cc(df, path, **kw):
+    bound = PATHS[path]
+    if bound is not None:
+        kw["driver_max_edges"] = bound
+    stats: dict = {}
+    out = connected_components(df, stats=stats, **kw)
+    assert stats["path"] == path
+    return out, stats
 
 
 def _oracle(edges, nodes=None):
@@ -45,12 +62,15 @@ def _oracle(edges, nodes=None):
     return result
 
 
-def _run(spark, edges):
-    df = spark.createDataFrame(edges, "id_a string, id_b string")
+def _run(spark, edges, ddl="id_a string, id_b string"):
+    """Assignment from both paths; they must agree exactly."""
+    df = spark.createDataFrame(edges, ddl)
     got = {
-        r.id: r.cluster_id for r in connected_components(df).collect()
+        path: {r.id: r.cluster_id for r in _cc(df, path)[0].collect()}
+        for path in PATHS
     }
-    return got
+    assert got["driver"] == got["star"]
+    return got["driver"]
 
 
 GRAPHS = {
@@ -87,9 +107,10 @@ def test_partitioning_invariance(spark):
     edges = GRAPHS["path"] + GRAPHS["star"]
     df1 = spark.createDataFrame(edges, "id_a string, id_b string").repartition(1)
     df17 = spark.createDataFrame(edges, "id_a string, id_b string").repartition(17)
-    got1 = {r.id: r.cluster_id for r in connected_components(df1).collect()}
-    got17 = {r.id: r.cluster_id for r in connected_components(df17).collect()}
-    assert got1 == got17
+    for path in PATHS:
+        got1 = {r.id: r.cluster_id for r in _cc(df1, path)[0].collect()}
+        got17 = {r.id: r.cluster_id for r in _cc(df17, path)[0].collect()}
+        assert got1 == got17, path
 
 
 def test_fixed_point_equivalence_adversarial(spark):
@@ -147,12 +168,79 @@ def test_converged_input_runs_zero_rounds(spark):
     assert _is_star_forest(cur)
     got = _run(spark, assign)
     assert got == _oracle(assign, {n for e in assign for n in e})
+    df = spark.createDataFrame(assign, "id_a string, id_b string")
+    assert _cc(df, "star")[1]["rounds"] == 0
 
 
 def test_attach_singletons(spark):
     edges = [("a", "b")]
     df = spark.createDataFrame(edges, "id_a string, id_b string")
-    assign = connected_components(df)
     ids = spark.createDataFrame([("a",), ("b",), ("c",)], "url string")
-    full = {r.url: r.cluster_id for r in attach_singletons(ids, assign).collect()}
-    assert full == {"a": "a", "b": "a", "c": "c"}
+    for path in PATHS:
+        assign = _cc(df, path)[0]
+        full = {r.url: r.cluster_id for r in attach_singletons(ids, assign).collect()}
+        assert full == {"a": "a", "b": "a", "c": "c"}, path
+
+
+def test_driver_path_leaves_nothing_persisted(spark):
+    """The driver path runs no checkpoint and persists nothing: the session's
+    persistent-RDD set is unchanged and no release handle is handed out. It
+    also reports the assignment size, which callers use instead of a count."""
+    df = spark.createDataFrame(GRAPHS["two_cliques"], "id_a string, id_b string")
+    before = _persistent_rdd_ids(spark)
+    persisted: list = []
+    out, stats = _cc(df, "driver", persisted=persisted)
+    assert out.count() == stats["nodes"] == 9
+    assert persisted == []
+    assert _persistent_rdd_ids(spark) == before
+
+
+def test_graphs_above_the_bound_run_the_star_loop(spark):
+    edges = GRAPHS["path"]
+    df = spark.createDataFrame(edges, "id_a string, id_b string")
+    stats: dict = {}
+    out = connected_components(df, driver_max_edges=len(edges) - 1, stats=stats)
+    assert stats["path"] == "star" and stats["rounds"] > 0
+    assert stats["nodes"] is None
+    got = {r.id: r.cluster_id for r in out.collect()}
+    assert got == _oracle(edges, {n for e in edges for n in e})
+
+
+def _edge_sets(ids):
+    """Random edge lists over ``ids``: chains and stars (in either orientation),
+    plus random extra pairs — which bring duplicate and reversed pairs and
+    self-loops."""
+    nodes = st.lists(ids, min_size=1, max_size=12, unique=True)
+    chain = nodes.map(lambda ns: list(zip(ns, ns[1:])))
+    star = nodes.map(lambda ns: [(ns[0], n) for n in ns])
+    flip = st.booleans()
+    shape = st.tuples(st.one_of(chain, star), flip).map(
+        lambda t: [(b, a) for a, b in t[0]] if t[1] else t[0]
+    )
+    pairs = st.lists(st.tuples(ids, ids), max_size=8)
+    return st.tuples(st.lists(shape, max_size=3), pairs).map(
+        lambda t: [e for es in t[0] for e in es] + t[1] + t[1][:2]
+    )
+
+
+# no surrogates: they cannot be encoded as UTF-8 for the JVM
+UNICODE_IDS = st.text(
+    st.characters(blacklist_categories=("Cs",)), min_size=1, max_size=4
+)
+
+
+@settings(max_examples=12, deadline=None, derandomize=True)
+@given(edges=_edge_sets(UNICODE_IDS))
+def test_paths_agree_on_random_unicode_graphs(spark, edges):
+    """Differential: driver path, star loop and a pure-Python union-find give
+    identical assignments (UTF-8 byte order and Python code-point order agree,
+    so min-id labels match)."""
+    got = _run(spark, edges)
+    assert got == _oracle(edges, {n for e in edges for n in e if e[0] != e[1]})
+
+
+@settings(max_examples=8, deadline=None, derandomize=True)
+@given(edges=_edge_sets(st.integers(-(2**62), 2**62)))
+def test_paths_agree_on_random_numeric_graphs(spark, edges):
+    got = _run(spark, edges, "id_a long, id_b long")
+    assert got == _oracle(edges, {n for e in edges for n in e if e[0] != e[1]})

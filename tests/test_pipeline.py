@@ -10,6 +10,8 @@
 import pytest
 from pyspark.sql import functions as F
 
+from cqaduplicatefind_spark.config import DedupConfig
+
 from cqaduplicatefind_spark.operators.candidates import all_pairs
 from cqaduplicatefind_spark.operators.metrics import (
     cluster_exact_match,
@@ -91,3 +93,43 @@ def test_cluster_summary_shape(tiny_run):
     summary = cluster_summary(result.clusters)
     total = summary.agg(F.sum("size")).collect()[0][0]
     assert total == pages.count()
+
+
+def test_star_loop_clusters_match_driver_path(spark, tiny_run, cfg, monkeypatch):
+    """Every components call forced onto the star loop (driver bound 0) gives
+    the default run's clusters — on the tiny fixture, and on a corpus with a
+    containment shell whose span edges run the second components job."""
+    from functools import partial
+
+    from cqaduplicatefind_spark.plans import pipeline as pipeline_mod
+
+    content = " ".join(f"story{j} word{j}" for j in range(25))
+    shell = " ".join(f"boiler{j} nav{j}" for j in range(60))
+    shell_pages = spark.createDataFrame(
+        [
+            ("page", content),
+            ("page-copy", content + " tail"),
+            ("shellpage", f"{shell} {content} {shell}"),
+            ("unrelated", " ".join(f"zzz{j} yyy{j}" for j in range(85))),
+        ],
+        "url string, text string",
+    )
+    shell_cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.7,
+                            min_overlap_span=40, shuffle_partitions=8,
+                            signature_partitions=8)
+    tiny_result, tiny_pages, _, _ = tiny_run
+    shell_result = run_pipeline(spark, shell_pages, shell_cfg)
+    assert shell_result.overlap_edges.count() > 0
+    default = [(tiny_result, tiny_pages, cfg), (shell_result, shell_pages, shell_cfg)]
+
+    monkeypatch.setattr(
+        pipeline_mod, "connected_components",
+        partial(pipeline_mod.connected_components, driver_max_edges=0),
+    )
+    for result, pages, run_cfg in default:
+        star = run_pipeline(spark, pages, run_cfg)
+        try:
+            assert sorted(star.clusters.collect()) == sorted(result.clusters.collect())
+        finally:
+            star.release()
+    shell_result.release()
