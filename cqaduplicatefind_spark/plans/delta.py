@@ -14,13 +14,14 @@ O(index) stats recovery count the streaming path pays once per stream is
 skipped here (``count_index_stats=False`` — a fresh processor per increment
 would otherwise re-pay it every month).
 
-The store layout (``bands/`` ``sigs/`` ``matches/`` under one work dir, tiered
-compaction, ``src_batch`` row tags) is shared with the streaming matcher, so
-batch increments, streaming micro-batches, and this API interoperate on ONE
-index. Batch-id convention: seeds take NEGATIVE ids (default -1 — Structured
-Streaming numbers its micro-batches from 0, so a non-negative seed id would be
-silently excluded-then-OVERWRITTEN by the colliding micro-batch); increments
-and micro-batches take disjoint non-negative ids.
+The store (``bands/`` ``sigs/`` ``matches/`` under one work dir) is the
+streaming matcher's: ``streaming/store.py`` owns its layout, file sizing,
+``src_batch`` row tags and crash-window protocol, so batch increments,
+streaming micro-batches, and this API interoperate on ONE index. Batch-id
+convention: seeds take NEGATIVE ids (default -1 — Structured Streaming numbers
+its micro-batches from 0, so a non-negative seed id would be silently
+excluded-then-OVERWRITTEN by the colliding micro-batch); increments and
+micro-batches take disjoint non-negative ids.
 
 Identity precondition: increment ids must be NEW ids. Recrawls of an already
 indexed url are the URL tier's job (``canonical_url`` +
@@ -47,7 +48,6 @@ re-paired at all.
 
 from __future__ import annotations
 
-import os
 from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -63,6 +63,7 @@ from cqaduplicatefind_spark.streaming.incremental import (
     SIG_COLS,
     IncrementalDedup,
 )
+from cqaduplicatefind_spark.streaming.store import open_stores, store_roots
 
 
 class DeltaResult:
@@ -98,14 +99,6 @@ class DeltaResult:
         for h in self._persisted:
             h.unpersist()
         self._persisted.clear()
-
-
-def _store_dirs(work_dir: str) -> tuple[str, str, str]:
-    return (
-        os.path.join(work_dir, "bands"),
-        os.path.join(work_dir, "sigs"),
-        os.path.join(work_dir, "matches"),
-    )
 
 
 def signature_frame(
@@ -157,15 +150,7 @@ def seed_index(
             f"seed batch_id must be negative (got {batch_id}); non-negative "
             "ids are reserved for increments and streaming micro-batches"
         )
-    bands_dir, sigs_dir, matches_dir = _store_dirs(work_dir)
-    for d in (bands_dir, sigs_dir, matches_dir):
-        os.makedirs(d, exist_ok=True)
-    from cqaduplicatefind_spark.streaming.incremental import (
-        BAND_ROWS_PER_FILE,
-        SIG_ROWS_PER_FILE,
-        _n_files,
-    )
-
+    band_store, sig_store, _ = open_stores(spark, *store_roots(work_dir))
     sig = signature_frame(corpus_pages, cfg, id_col, text_col).persist()
     try:
         # count FIRST: it materializes the signature cache at full input
@@ -175,18 +160,8 @@ def seed_index(
         # these files per trigger, so a 32-files-per-tiny-store layout taxed
         # every delta_dedup call (guide §6)
         n = sig.count()
-        explode_bands(sig, cfg).withColumn(
-            "src_batch", F.lit(batch_id).cast("long")
-        ).coalesce(
-            _n_files(n * cfg.bands, BAND_ROWS_PER_FILE)
-        ).write.mode("overwrite").parquet(
-            os.path.join(bands_dir, f"batch={batch_id}")
-        )
-        sig.select(*SIG_COLS).coalesce(
-            _n_files(n, SIG_ROWS_PER_FILE)
-        ).write.mode("overwrite").parquet(
-            os.path.join(sigs_dir, f"batch={batch_id}")
-        )
+        band_store.append(batch_id, explode_bands(sig, cfg), n * cfg.bands)
+        sig_store.append(batch_id, sig, n)
         return n
     finally:
         sig.unpersist()
@@ -252,21 +227,16 @@ def delta_dedup(
             f"increment batch_id must be non-negative (got {batch_id}); "
             "negative ids are reserved for seeds"
         )
-    bands_dir, sigs_dir, matches_dir = _store_dirs(work_dir)
     dedup = IncrementalDedup(
-        spark, cfg, bands_dir, sigs_dir, matches_dir,
+        spark, cfg, *store_roots(work_dir),
         compact_every=compact_every,
         count_index_stats=index_stats,
     )
     sig = signature_frame(new_pages, cfg, id_col, text_col)
     dedup.process_batch(sig, batch_id)
-    # process_batch writes matches/batch=<id> unconditionally (empty frames
-    # included), so a read failure here is a real failure — let it propagate.
-    # Declared schema: no footer inference (same as the store reads).
-    from cqaduplicatefind_spark.streaming.incremental import EDGE_SCHEMA
-
-    edges = spark.read.schema(EDGE_SCHEMA).parquet(
-        os.path.join(matches_dir, f"batch={batch_id}")
-    )
+    # process_batch appends the increment's matches unconditionally (empty
+    # frames included), so a read failure here is a real failure — let it
+    # propagate
+    edges = dedup.match_store.read_batch(batch_id)
     ids = new_pages.select(F.col(id_col).cast("string").alias("url")).distinct()
     return DeltaResult(edges=edges, new_ids=ids, stats=dedup.batch_stats[-1])

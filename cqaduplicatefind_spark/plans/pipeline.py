@@ -214,15 +214,15 @@ def run_pipeline(
     )
     # is_star rides through scoring so the rescue round's orphan probe can read
     # the rejected side of the accept decision straight off the scored frame
-    # (see below) instead of anti-joining two million-row frames
-    has_star = "is_star" in candidates.columns  # absent: pre-upgrade checkpoint
+    # (see below) instead of anti-joining two million-row frames. A warehouse
+    # checkpoint written before candidate_stage emitted is_star fails here.
     scored = stage(
         "scored_pairs",
         lambda: score_pairs(
             candidates, signatures, cfg, evidence=cfg.verify_evidence,
-            keep_cols=("is_star",) if has_star else (),
+            keep_cols=("is_star",),
         ),
-        reused=has_star and cfg.verify_evidence == "exact",  # edges + orphan probe
+        reused=cfg.verify_evidence == "exact",  # edges + orphan probe
     )
     edges = stage("dup_edges", lambda: accept_edges(scored, cfg), reused=True)
 
@@ -236,57 +236,56 @@ def run_pipeline(
     # orphan set is empty and the round is skipped: the pipeline pays O(m) per
     # hot bucket, never C(m,2)/n_sub, unless verify proves a band heterogeneous.
     rescue_edges = None
-    if has_star:
-        if cfg.verify_evidence == "exact" and "is_star" in scored.columns:
-            # evidence="exact" has no estimate prefilter, so EVERY candidate
-            # pair reaches the scored frame and a rejected star edge is simply
-            # a scored row failing the accept condition — one filter over the
-            # persisted scored cache, no join. ("both"/"estimate" drop
-            # implausible pairs before scoring; a prefiltered-away star edge is
-            # also a rejection, so those modes keep the anti-join below.)
-            from cqaduplicatefind_spark.operators.verify import accept_condition
+    if cfg.verify_evidence == "exact":
+        # evidence="exact" has no estimate prefilter, so EVERY candidate
+        # pair reaches the scored frame and a rejected star edge is simply
+        # a scored row failing the accept condition — one filter over the
+        # persisted scored cache, no join. ("both"/"estimate" drop
+        # implausible pairs before scoring; a prefiltered-away star edge is
+        # also a rejection, so those modes keep the anti-join below.)
+        from cqaduplicatefind_spark.operators.verify import accept_condition
 
-            orphans = (
-                scored.where(F.col("is_star") & ~accept_condition(cfg))
-                .select(F.explode(F.array("id_a", "id_b")).alias("id"))
-                .distinct()
-            )
-        else:
-            orphans = (
-                candidates.where(F.col("is_star"))
-                .join(edges.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
-                .select(F.explode(F.array("id_a", "id_b")).alias("id"))
-                .distinct()
-            )
-        # count, not isEmpty: orphans is usually EMPTY (homogeneous corpora),
-        # and take(1) on an empty frame runs its scan in several escalating
-        # waves — each wave re-driving the candidate+verify mega-job's final
-        # stage. count() is one wave plus a scalar agg, and it materializes
-        # the persisted candidates/edges caches the rescue branch reads anyway.
-        if orphans.count() > 0:
-            rescue_cands = stage(
-                "rescue_pairs",
-                lambda: candidate_stage(
-                    signatures, cfg, group_col, mode="rescue", orphans=orphans
-                ).join(
-                    candidates.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
+        orphans = (
+            scored.where(F.col("is_star") & ~accept_condition(cfg))
+            .select(F.explode(F.array("id_a", "id_b")).alias("id"))
+            .distinct()
+        )
+    else:
+        orphans = (
+            candidates.where(F.col("is_star"))
+            .join(edges.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
+            .select(F.explode(F.array("id_a", "id_b")).alias("id"))
+            .distinct()
+        )
+    # count, not isEmpty: orphans is usually EMPTY (homogeneous corpora),
+    # and take(1) on an empty frame runs its scan in several escalating
+    # waves — each wave re-driving the candidate+verify mega-job's final
+    # stage. count() is one wave plus a scalar agg, and it materializes
+    # the persisted candidates/edges caches the rescue branch reads anyway.
+    if orphans.count() > 0:
+        rescue_cands = stage(
+            "rescue_pairs",
+            lambda: candidate_stage(
+                signatures, cfg, group_col, mode="rescue", orphans=orphans
+            ).join(
+                candidates.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
+            ),
+        )
+        rescue_edges = stage(
+            "rescue_edges",
+            lambda: accept_edges(
+                score_pairs(
+                    rescue_cands, signatures, cfg, evidence=cfg.verify_evidence
                 ),
-            )
-            rescue_edges = stage(
-                "rescue_edges",
-                lambda: accept_edges(
-                    score_pairs(
-                        rescue_cands, signatures, cfg, evidence=cfg.verify_evidence
-                    ),
-                    cfg,
-                ),
-                # components reads the union twice when it is larger than the
-                # driver bound (the bounded probe, then the star loop's
-                # checkpoint): without a persist the rescue candidate, score
-                # and accept plan runs twice
-                reused=True,
-            )
-            edges = edges.unionByName(rescue_edges)
+                cfg,
+            ),
+            # components reads the union twice when it is larger than the
+            # driver bound (the bounded probe, then the star loop's
+            # checkpoint): without a persist the rescue candidate, score
+            # and accept plan runs twice
+            reused=True,
+        )
+        edges = edges.unionByName(rescue_edges)
 
     # the suffix-array-analog stage (north_star): exact-span edges for pairs
     # sharing a contiguous run >= min_overlap_span tokens, discovered corpus-wide

@@ -31,13 +31,13 @@ Design (the part that must stay sub-linear per batch at 10^12 docs):
   the pairing window re-shuffled the ENTIRE index every micro-batch (O(index)
   per trigger — the round-2 scale hazard);
 - the band/signature stores are **tier-compacted**: every ``compact_every``
-  small ``batch=*`` parts fold into one ``compacted=`` tier (write work
-  bounded by those parts, not the store), and tiers themselves merge once
-  ``compact_every`` of them accumulate — a long-running stream reads
-  O(compact_every) parquet footers per trigger and never pays an O(index)
-  rewrite per compaction; the merge protocol keeps the store a readable
-  superset through every crash window (see ``_merge``);
-- exactly-once via batch-id-keyed idempotent writes (overwrite-by-batch-subdir,
+  small per-batch parts fold into one tier (write work bounded by those
+  parts, not the store), and tiers themselves merge once ``compact_every`` of
+  them accumulate — a long-running stream reads O(compact_every) parquet
+  footers per trigger and never pays an O(index) rewrite per compaction. The
+  on-disk layout, the file-size rule and the crash-window protocol that keeps
+  the store a readable superset live in ``streaming/store.py``;
+- exactly-once via batch-id-keyed idempotent writes (overwrite-by-batch-part,
   the Iceberg ``MERGE`` analog);
 - event-time windowed aggregation with a watermark covers the metrics-over-time
   surface (docs/sec, dup-rate per window).
@@ -59,41 +59,14 @@ from cqaduplicatefind_spark.operators.candidates import (
 )
 from cqaduplicatefind_spark.operators.verify import accept_edges, score_pairs
 from cqaduplicatefind_spark.session import arrow_frame
+from cqaduplicatefind_spark.streaming.store import (  # noqa: F401 (re-export)
+    EDGE_SCHEMA,
+    SIG_STORE_SCHEMA,
+    open_stores,
+    store_roots,
+)
 
 SIG_COLS = ("url", "minhash", "simhash", "n_tokens", "n_shingles", "shingles")
-
-# accept_edges output schema — the empty-matches frame and any caller
-# synthesizing an edge frame must stay in lockstep with score_pairs/accept_edges
-EDGE_SCHEMA = (
-    "id_a string, id_b string, jaccard double, est_jaccard double, "
-    "hamming int, containment double"
-)
-
-# Explicit store schemas: reading with a declared schema skips parquet footer
-# schema inference entirely (the old mergeSchema=true read opened EVERY footer
-# in the store on EVERY trigger — measured at ~0.5s/trigger on a 4-batch sf0.1
-# store, and O(files) at scale). Parquet fills columns absent from a file with
-# NULLs, so legacy pre-``src_batch`` dirs read exactly as the mergeSchema path
-# read them (src_batch=null ⇒ treated as index; see _read_batches) — pinned by
-# tests/test_streaming.py's legacy-store tests.
-BAND_STORE_SCHEMA = "id string, band int, bh long, src_batch long"
-SIG_STORE_SCHEMA = (
-    "url string, minhash array<long>, simhash long, n_tokens int, "
-    "n_shingles int, shingles array<long>"
-)
-
-# File-sizing targets for the store writers (rows per output file). The stores
-# were previously written with the upstream partitioning (32-64 tiny files per
-# batch dir at bench scale): every trigger then re-listed and re-opened
-# hundreds of files across the accumulated dirs. Row-count-based sizing is
-# scale-free: a 6k-doc micro-batch folds to 1 file, a 10^9-row increment still
-# writes ~250 band files of a few hundred MB each (guide §6: aim 128MB-1GB).
-BAND_ROWS_PER_FILE = 4_000_000  # ~50B/row -> ~200MB files
-SIG_ROWS_PER_FILE = 250_000     # ~1KB/row (shingle payload) -> ~250MB files
-
-
-def _n_files(n_rows: int, rows_per_file: int) -> int:
-    return max(1, -(-int(n_rows) // int(rows_per_file)))
 
 
 def stream_signatures(pages_stream: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -105,10 +78,11 @@ def stream_signatures(pages_stream: DataFrame, cfg: DedupConfig) -> DataFrame:
 class IncrementalDedup:
     """foreachBatch processor: match each micro-batch against the corpus index.
 
-    Layout under ``work_dir``: ``bands/batch=N`` (slim band index rows),
-    ``sigs/batch=N`` (signature payloads, read back only for candidate ids),
-    ``matches/batch=N`` (accepted duplicate edges). Idempotent re-runs of a batch
-    id overwrite their own subdirs — micro-batch replays cannot duplicate rows.
+    Three part stores (``streaming/store.py``): ``bands_dir`` (slim band index
+    rows), ``sigs_dir`` (signature payloads, read back only for candidate ids)
+    and ``matches_dir`` (accepted duplicate edges). Idempotent re-runs of a
+    batch id overwrite their own parts — micro-batch replays cannot duplicate
+    rows.
 
     ``batch_stats`` records per-batch row counts (new docs, index band rows
     joined, candidate pairs, signature payload rows fetched) — the evidence that
@@ -153,128 +127,9 @@ class IncrementalDedup:
         # keyed by batch_id so idempotent replays overwrite, not double-count
         self._band_rows_base: int | None = None
         self._band_rows_by_batch: dict[int, int] = {}
-        for d in (bands_dir, sigs_dir, matches_dir):
-            os.makedirs(d, exist_ok=True)
-
-    def _parts(self, root: str) -> list[str]:
-        return [
-            os.path.join(root, d)
-            for d in sorted(os.listdir(root))
-            if d.startswith("batch=") or d.startswith("compacted=")
-        ]
-
-    def _read_batches(
-        self, root: str, exclude_batch: int | None = None,
-        schema: str | None = None,
-    ) -> DataFrame | None:
-        """Read the store; ``exclude_batch`` skips that batch's own
-        ``batch=<id>`` subdir. Used by the replay path: a crash between the
-        index append and the checkpoint commit means the replayed batch finds
-        its OWN rows in the store — they are not "index" (the overwrite is
-        about to replace them), and including them would inflate the recovery
-        row count and feed the pairing kernel stale copies of the batch's own
-        docs. The dir-name skip is only an I/O shortcut: rows a pre-crash
-        compaction already folded into a tier no longer live under the
-        ``batch=<id>`` name, so the BAND store also tags every row with its
-        source batch (``src_batch``) and the caller filters on it — that row
-        tag, not the dir name, is what makes replay exclusion exact through
-        every crash window."""
-        parts = self._parts(root)
-        if exclude_batch is not None:
-            skip = f"batch={exclude_batch}"
-            parts = [p for p in parts if os.path.basename(p) != skip]
-        if not parts:
-            return None
-        if schema is not None:
-            # declared schema: zero footer reads; files lacking a column (a
-            # store written before the src_batch row tag existed, or a mixed
-            # store upgraded mid-stream) fill it with NULL — identical frames
-            # to the old mergeSchema read, without opening every footer on
-            # every trigger
-            return self.spark.read.schema(schema).parquet(*parts)
-        # no declared schema (callers outside the three known stores):
-        # mergeSchema keeps the tag column present even when inference from a
-        # single legacy footer would drop it. Footer count is bounded by the
-        # tier compaction (~2*compact_every dirs), so this stays O(1)/trigger.
-        return self.spark.read.option("mergeSchema", "true").parquet(*parts)
-
-    def _merge(
-        self, root: str, sources: list[str], final: str,
-        schema: str | None = None,
-    ) -> None:
-        """Fold ``sources`` into ``final``, leaving the store a READABLE
-        SUPERSET through every crash window: (1) the union is written to a temp
-        dir no reader scans, (2) a pre-existing ``final`` (batch replay) is
-        renamed to ``<final>.old`` — still matching the reader prefix, and its
-        rows are already in the temp union because sources are read FIRST —
-        (3) the temp dir renames into place, (4) sources and ``.old`` are
-        removed LAST. A crash at any point leaves every row reachable under a
-        scanned name (possibly duplicated; readers dropDuplicate), and stale
-        ``.old`` dirs self-heal by re-entering the next merge as sources."""
-        import shutil
-
-        tmp = os.path.join(root, "_compact_tmp")
-        # declared schema when the store is a known one (same legacy-column
-        # rule as _read_batches: a MIXED store's pre-src_batch rows read the
-        # tag as NULL, never dropping the column from the tier); mergeSchema
-        # fallback otherwise. The fold is written size-targeted (one shuffle-
-        # free coalesce) instead of inheriting the scan's many-small-files
-        # partitioning — a tier must not multiply the file count it replaces.
-        src = (
-            self.spark.read.schema(schema).parquet(*sources)
-            if schema is not None
-            else self.spark.read.option("mergeSchema", "true").parquet(*sources)
+        self.band_store, self.sig_store, self.match_store = open_stores(
+            spark, bands_dir, sigs_dir, matches_dir, compact_every
         )
-        n_bytes = sum(
-            os.path.getsize(os.path.join(p, f))
-            for p in sources
-            for f in os.listdir(p)
-            if f.endswith(".parquet")
-        )
-        target = max(1, -(-n_bytes // (512 * 1024 * 1024)))  # ~512MB/file
-        src.coalesce(target).write.mode("overwrite").parquet(tmp)
-        old = final + ".old"
-        if os.path.exists(final):
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            os.rename(final, old)
-        os.rename(tmp, final)
-        for p in sources + [old]:
-            if p != final and os.path.exists(p):
-                shutil.rmtree(p)
-
-    def _maybe_compact(
-        self, root: str, batch_id: int, schema: str | None = None
-    ) -> None:
-        """TIERED compaction: once ``compact_every`` small ``batch=*`` parts
-        accumulate they fold into ONE new ``compacted=<batch_id>`` tier —
-        O(compact_every x batch) write work, NOT a rewrite of the whole store —
-        and once ``compact_every`` tiers accumulate they merge into one
-        (amortized O(index / compact_every^2) per batch). Without any
-        compaction a stream at batch 10^4 reads 10^4 parquet footers per
-        trigger; with whole-store compaction every K batches the write path
-        becomes O(index) per K triggers — the same scale hazard the
-        touched-bucket semi-join removes from the read path. Tiering bounds
-        BOTH: <= ~2*compact_every dirs read per trigger, amortized per-batch
-        write work independent of the index for the common tier-0 fold."""
-        batches = [
-            p for p in self._parts(root)
-            if os.path.basename(p).startswith("batch=")
-        ]
-        if len(batches) >= self.compact_every:
-            self._merge(
-                root, batches, os.path.join(root, f"compacted={batch_id}"),
-                schema=schema,
-            )
-        tiers = [
-            p for p in self._parts(root)
-            if os.path.basename(p).startswith("compacted=")
-        ]
-        if len(tiers) >= self.compact_every:
-            self._merge(
-                root, tiers, os.path.join(root, f"compacted={batch_id}m"),
-                schema=schema,
-            )
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         cfg = self.cfg
@@ -303,27 +158,10 @@ class IncrementalDedup:
                 "is_new", F.lit(True)
             ).persist()
             held.append(new_bands)
-            idx_bands = self._read_batches(
-                self.bands_dir, exclude_batch=int(batch_id),
-                schema=BAND_STORE_SCHEMA,
-            )
+            # exact replay exclusion (see PartStore.read): rows this batch
+            # appended before a crash are not "index"
+            idx_bands = self.band_store.read(int(batch_id))
             _mark("read_band_store")
-            if idx_bands is not None:
-                # exact replay exclusion by row tag (see _read_batches): rows
-                # this batch appended before a crash are not "index" even when
-                # a pre-crash compaction moved them into a tier the dir-name
-                # skip cannot see. Legacy stores predate the tag: a whole-store
-                # legacy read has no src_batch column at all (add it as null),
-                # and a mixed store reads legacy rows as null — either way an
-                # untagged row was written by a finished pre-upgrade batch, so
-                # it IS index (null must not compare-exclude, hence coalesce).
-                if "src_batch" not in idx_bands.columns:
-                    idx_bands = idx_bands.withColumn(
-                        "src_batch", F.lit(None).cast("long")
-                    )
-                idx_bands = idx_bands.where(
-                    F.coalesce(F.col("src_batch"), F.lit(-1)) != int(batch_id)
-                ).drop("src_batch")
             if idx_bands is None:
                 all_bands = new_bands
                 idx_touched = None
@@ -334,7 +172,7 @@ class IncrementalDedup:
                     # restart over an existing store: one-time recovery count;
                     # every later batch maintains the total arithmetically.
                     # idx_bands already excludes the replaying batch's own
-                    # pre-crash append (src_batch row tag, see _read_batches),
+                    # pre-crash append (src_batch row tag, see PartStore.read),
                     # so the base is the index as it stood BEFORE this batch —
                     # and the count is LOGICAL (dedup over the key), so
                     # physical duplicates a crash-interrupted compaction left
@@ -418,10 +256,7 @@ class IncrementalDedup:
                     # as the touched-bucket probe; huge increments fall back
                     # to the shuffle semi-join)
                     ids = F.broadcast(ids)
-                idx_sigs = self._read_batches(
-                    self.sigs_dir, exclude_batch=int(batch_id),
-                    schema=SIG_STORE_SCHEMA,
-                )
+                idx_sigs = self.sig_store.read(int(batch_id))
                 store = (
                     batch_df.select(*SIG_COLS)
                     if idx_sigs is None
@@ -448,29 +283,14 @@ class IncrementalDedup:
             from concurrent.futures import ThreadPoolExecutor
 
             n_band_rows = n_new * cfg.bands  # explode_bands: exactly bands/doc
-
-            def _write_bands():
-                new_bands.drop("is_new").withColumn(
-                    "src_batch", F.lit(int(batch_id)).cast("long")
-                ).coalesce(
-                    _n_files(n_band_rows, BAND_ROWS_PER_FILE)
-                ).write.mode("overwrite").parquet(
-                    os.path.join(self.bands_dir, f"batch={batch_id}")
-                )
-
-            def _write_sigs():
-                batch_df.select(*SIG_COLS).coalesce(
-                    _n_files(n_new, SIG_ROWS_PER_FILE)
-                ).write.mode("overwrite").parquet(
-                    os.path.join(self.sigs_dir, f"batch={batch_id}")
-                )
-
             with ThreadPoolExecutor(max_workers=2) as pool:
-                f_bands = pool.submit(_write_bands)
-                f_sigs = pool.submit(_write_sigs)
-                edges.write.mode("overwrite").parquet(
-                    os.path.join(self.matches_dir, f"batch={batch_id}")
+                f_bands = pool.submit(
+                    self.band_store.append, batch_id, new_bands, n_band_rows
                 )
+                f_sigs = pool.submit(
+                    self.sig_store.append, batch_id, batch_df, n_new
+                )
+                self.match_store.append(batch_id, edges)
                 f_bands.result()
                 f_sigs.result()
             _mark("score_write")
@@ -507,7 +327,7 @@ class IncrementalDedup:
             # index append bookkeeping: the writes themselves ran overlapped
             # with the matches write above (src_batch rides every band row so
             # replay exclusion stays exact after compaction renames the row's
-            # home dir — see _read_batches); both writers read hot caches
+            # home dir — see PartStore.read); both writers read hot caches
             # materialized by the pairing job, and coalesce merges cached
             # partitions — no shuffle, no recompute — into size-targeted
             # files instead of one tiny file per upstream partition.
@@ -515,10 +335,8 @@ class IncrementalDedup:
             # compaction stays SERIAL (unlike the writes above): the merge
             # crash-window tests pin per-dir fault sequencing, and an A/B of
             # overlapping the two folds broke that pinned contract for ~0.5s
-            self._maybe_compact(self.bands_dir, int(batch_id),
-                                schema=BAND_STORE_SCHEMA)
-            self._maybe_compact(self.sigs_dir, int(batch_id),
-                                schema=SIG_STORE_SCHEMA)
+            self.band_store.compact(int(batch_id))
+            self.sig_store.compact(int(batch_id))
             _mark("compact")
         finally:
             for df in held:
@@ -526,7 +344,7 @@ class IncrementalDedup:
             self.phase_times.append(phases)
 
     def matches(self) -> DataFrame:
-        m = self._read_batches(self.matches_dir, schema=EDGE_SCHEMA)
+        m = self.match_store.read()
         if m is None:
             return arrow_frame(self.spark, EDGE_SCHEMA)
         return m
@@ -545,11 +363,7 @@ def run_incremental_dedup(
     read ``dedup.matches()``."""
     sigs = stream_signatures(pages_stream, cfg)
     dedup = IncrementalDedup(
-        spark, cfg,
-        os.path.join(work_dir, "bands"),
-        os.path.join(work_dir, "sigs"),
-        os.path.join(work_dir, "matches"),
-        compact_every=compact_every,
+        spark, cfg, *store_roots(work_dir), compact_every=compact_every
     )
     q = (
         sigs.writeStream.foreachBatch(dedup.process_batch)

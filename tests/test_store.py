@@ -1,0 +1,163 @@
+"""The incremental matcher's part store: file-size rule, schema guard at
+compaction, and streamed matches against a one-shot increment."""
+
+from __future__ import annotations
+
+import os
+import shutil
+import tempfile
+
+import pytest
+from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
+
+from cqaduplicatefind_spark.config import DedupConfig
+from cqaduplicatefind_spark.plans.delta import seed_index, signature_frame
+from cqaduplicatefind_spark.streaming import store
+from cqaduplicatefind_spark.streaming.incremental import IncrementalDedup
+
+CFG = DedupConfig(shingle_k=3, jaccard_threshold=0.7, shuffle_partitions=4)
+
+
+def _parquet_files(path):
+    return [f for f in os.listdir(path) if f.endswith(".parquet")]
+
+
+def _band_rows(spark, n, start=0):
+    return spark.range(start, start + n, numPartitions=16).select(
+        F.col("id").cast("string").alias("id"),
+        (F.col("id") % 4).cast("int").alias("band"),
+        F.col("id").alias("bh"),
+    )
+
+
+def test_appends_and_merges_share_one_file_size_rule(spark, tmp_path, monkeypatch):
+    """An append of N rows writes ceil(N / rows_per_file) files, and a merge
+    sizes its tier the same way from the summed footer row counts."""
+    monkeypatch.setattr(store, "BAND_ROWS_PER_FILE", 40)
+    bands, _, _ = store.open_stores(
+        spark, *store.store_roots(str(tmp_path)), compact_every=2
+    )
+    bands.append(0, _band_rows(spark, 50), 50)
+    assert len(_parquet_files(os.path.join(bands.root, "batch=0"))) == 2
+    bands.append(1, _band_rows(spark, 50, start=50), 50)
+    bands.compact(1)
+    (tier,) = bands.parts()
+    assert os.path.basename(tier) == "compacted=1"
+    assert len(_parquet_files(tier)) == 3  # ceil(100 / 40)
+    assert bands.read().count() == 100
+
+
+def test_compaction_refuses_a_part_with_an_undeclared_column(spark, tmp_path):
+    """A band part holding a column the store schema lacks makes the fold
+    raise before anything is written: every part stays where it was, and the
+    batch's matches, written before compaction, read back in full."""
+    dedup = IncrementalDedup(
+        spark, CFG, *store.store_roots(str(tmp_path)), compact_every=2
+    )
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
+
+    def sigs_for(i):
+        rows = [(f"fam{i}", base + f"tail{i}"), (f"noise{i}", f"zz{i} qq " * 30)]
+        return signature_frame(
+            spark.createDataFrame(rows, "url string, text string"), CFG
+        )
+
+    dedup.process_batch(sigs_for(0), 0)
+    part = os.path.join(dedup.bands_dir, "batch=0")
+    drifted = str(tmp_path / "drifted")
+    spark.read.parquet(part).withColumn("weight", F.lit(1.0)).write.parquet(drifted)
+    shutil.rmtree(part)
+    shutil.move(drifted, part)
+
+    with pytest.raises(ValueError, match="weight"):
+        dedup.process_batch(sigs_for(1), 1)
+    assert sorted(os.listdir(dedup.bands_dir)) == ["batch=0", "batch=1"]
+    assert {(r.id_a, r.id_b) for r in dedup.matches().collect()} == {
+        ("fam0", "fam1")
+    }
+
+
+def _doc(words):
+    return " ".join(words)
+
+
+@st.composite
+def _split_corpora(draw):
+    """Planted families plus noise docs; the seed holds each family's first
+    member and one noise doc, the rest is split into 2-4 batches."""
+    fams = draw(st.lists(st.integers(2, 4), min_size=1, max_size=3))
+    n_noise = draw(st.integers(1, 4))
+    seed, rest = [], []
+    for f, size in enumerate(fams):
+        base = [f"f{f}w{j}" for j in range(40)]
+        members = [(f"fam{f}m{m}", _doc(base + [f"tail{m}"])) for m in range(size)]
+        seed.append(members[0])
+        rest.extend(members[1:])
+    noise = [
+        (f"noise{i}", _doc(f"n{i}x{j}" for j in range(30))) for i in range(n_noise)
+    ]
+    seed.append(noise[0])
+    rest.extend(noise[1:])
+    n_batches = draw(st.integers(2, 4))
+    split = draw(st.lists(st.integers(0, n_batches - 1),
+                          min_size=len(rest), max_size=len(rest)))
+    batches = [[d for d, b in zip(rest, split) if b == k] for k in range(n_batches)]
+    return seed, batches, draw(st.sampled_from([2, 3]))
+
+
+@settings(max_examples=5, deadline=None, derandomize=True)
+@given(corpus=_split_corpora())
+def test_streamed_matches_equal_one_increment(spark, corpus):
+    """Differential: streaming the non-seed docs in random batches through
+    the store (compacting as it goes) emits exactly the edges one
+    process_batch of all of them emits over the same seed, and every batch's
+    index size is (seed docs + earlier batch docs) x bands."""
+    seed, batches, compact_every = corpus
+    pages = spark.createDataFrame(
+        seed + [d for b in batches for d in b], "url string, text string"
+    )
+    sigs = signature_frame(pages, CFG).persist()
+    seed_urls = [u for u, _ in seed]
+    work = tempfile.mkdtemp(prefix="store_diff_")
+    try:
+        def seeded(name, every):
+            root = os.path.join(work, name)
+            seed_index(spark, pages.where(F.col("url").isin(seed_urls)), CFG, root)
+            return IncrementalDedup(
+                spark, CFG, *store.store_roots(root), compact_every=every
+            )
+
+        def edges(dedup):
+            return {
+                (r.id_a, r.id_b, r.jaccard) for r in dedup.matches().collect()
+            }
+
+        streamed = seeded("stream", compact_every)
+        for k, batch in enumerate(batches):
+            urls = [u for u, _ in batch]
+            streamed.process_batch(sigs.where(F.col("url").isin(urls)), k)
+        once = seeded("once", 16)
+        once.process_batch(sigs.where(~F.col("url").isin(seed_urls)), 0)
+
+        assert edges(streamed) == edges(once)
+        assert {(a, b) for a, b, _ in edges(once)} == _family_pairs(
+            seed + [d for b in batches for d in b]
+        )
+        before = len(seed)
+        for stats, batch in zip(streamed.batch_stats, batches):
+            assert stats["n_index_band_rows"] == before * CFG.bands
+            before += len(batch)
+    finally:
+        sigs.unpersist()
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _family_pairs(docs):
+    """Every pair inside a planted family (seed members are one per family,
+    so no pair is seed-seed)."""
+    urls = sorted(u for u, _ in docs if u.startswith("fam"))
+    return {
+        (a, b) for a in urls for b in urls
+        if a < b and a.rsplit("m", 1)[0] == b.rsplit("m", 1)[0]
+    }

@@ -139,8 +139,8 @@ def test_per_batch_work_bounded_by_touched_buckets(spark, tmp_path):
     assert last["n_index_band_rows_joined"] <= (K - 1) * cfg.bands
 
     # compaction kept the store at O(compact_every) part dirs...
-    assert len(dedup._parts(dedup.bands_dir)) < 4 + 1
-    assert len(dedup._parts(dedup.sigs_dir)) < 4 + 1
+    assert len(dedup.band_store.parts()) < 4 + 1
+    assert len(dedup.sig_store.parts()) < 4 + 1
     # ...and results are the family's complete pair set, unchanged by compaction
     got = {(r.id_a, r.id_b) for r in dedup.matches().collect()}
     want = {
@@ -227,8 +227,8 @@ def test_tiered_compaction_bounds_parts_and_survives_replay(spark, tmp_path):
         dedup.process_batch(sigs_for(i), i)
 
     # tiering bound: far fewer dirs than batches, despite compact_every=2
-    assert len(dedup._parts(dedup.bands_dir)) <= 2 * 2
-    assert len(dedup._parts(dedup.sigs_dir)) <= 2 * 2
+    assert len(dedup.band_store.parts()) <= 2 * 2
+    assert len(dedup.sig_store.parts()) <= 2 * 2
     want = {(f"fam{i}", f"fam{j}") for i in range(K) for j in range(K) if i < j}
     got = {(r.id_a, r.id_b) for r in dedup.matches().collect()}
     assert got == want
@@ -479,4 +479,4 @@ def test_merge_crash_windows_leave_readable_store(spark, tmp_path, monkeypatch):
     dedup.process_batch(sigs_for(6), 6)
     assert {(r.id_a, r.id_b) for r in dedup.matches().collect()} == pairs_upto(6)
     # store stays tier-bounded after the turbulence
-    assert len(dedup._parts(str(bands_root))) <= 2 * 2 + 1
+    assert len(dedup.band_store.parts()) <= 2 * 2 + 1
