@@ -3785,12 +3785,12 @@ def q_multimodal_video_dedup(spark, sf):
 # contract surface
 # --------------------------------------------------------------------------
 
-# The driver's correctness gate checks the FIRST 50 entries of queries() in
-# dict order.  Rotation policy (every-other-round, encoded in
-# tests/test_registry_gate.py): a row may sit past the gate ONLY if it was
-# driver-checked green in the MOST RECENT official CORRECTNESS artifact, so
-# after each round every registry row has an official green entry at most two
-# rounds old.  Round-5 rotation: the 18 round-4 tail rows (TPC-H-style basics,
+# An external correctness gate once checked only the FIRST 50 entries of
+# queries() in dict order, and rows past it were rotated back in every other
+# round. Every row is now checked in-repo instead
+# (tests/test_registry_gate.py runs tools/check_oracle.py over all of them);
+# the order below is the last rotation's, kept so the CORRECTNESS artifacts
+# stay comparable.  Round-5 rotation: the 18 round-4 tail rows (TPC-H-style basics,
 # last checked r1-r3 + projection_pushdown r4) all return to the head, along
 # with every row whose code changed this round (the hashed n-gram kernel and
 # its consumers) and the new video codec row; the tail below is drawn

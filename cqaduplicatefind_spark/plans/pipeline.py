@@ -43,6 +43,7 @@ from cqaduplicatefind_spark.operators.connected_components import (
     connected_components,
 )
 from cqaduplicatefind_spark.operators.verify import accept_edges, score_pairs
+from cqaduplicatefind_spark.session import non_adaptive_count, small_plans
 from cqaduplicatefind_spark.sources.warehouse import Warehouse
 
 
@@ -185,7 +186,11 @@ def run_pipeline(
     het-aggregate discovery job, candidate verify, and — when spans exist —
     the second components job; the one CC pass both branches share is
     excluded). This is the low-variance direct measurement of the span pass's
-    cost; bench.py reports it next to the noisy full-run paired deltas."""
+    cost; bench.py reports it next to the noisy full-run paired deltas.
+
+    A corpus of at most ``config.DRIVER_MAX_ROWS`` band rows runs every stage
+    after the signatures non-adaptive (``session.small_plans``); frames the
+    result leaves lazy plan under the caller's setting when acted on."""
 
     persisted: list = []
 
@@ -207,6 +212,28 @@ def run_pipeline(
         ),
         reused=True,
     )
+    # it materializes the signature cache every later stage reads anyway,
+    # and the row count scopes their plans
+    n_sig = non_adaptive_count(signatures)
+    with small_plans(spark, n_sig * cfg.bands):
+        return _pair_and_cluster(
+            pages, cfg, warehouse, group_col, timings, stage, persisted,
+            signatures,
+        )
+
+
+def _pair_and_cluster(
+    pages: DataFrame,
+    cfg: DedupConfig,
+    warehouse: Warehouse | None,
+    group_col: str | None,
+    timings: dict | None,
+    stage,
+    persisted: list,
+    signatures: DataFrame,
+) -> PipelineResult:
+    """``run_pipeline`` after the signature stage: candidates, verify, the
+    rescue round, the span pass and clustering."""
     candidates = stage(
         "candidate_pairs",
         lambda: candidate_stage(signatures, cfg, group_col, mode="base"),

@@ -4,15 +4,36 @@ Centralizes the tuning the north_rule requires to be explicit: shuffle partition
 counts, AQE (runtime coalescing + skew-join splitting), and Arrow batching for the
 pandas-UDF stages. In production these settings ride along spark-submit; tests and
 bench use this helper so every run is reproducible from code.
+
+Small plans run non-adaptive (``small_plans``). Under AQE every query stage is
+its own Spark job, and each job pays a fixed scheduling cost (~0.1 s on a
+4-vCPU host) whatever its input: a 100-doc micro-batch ran 37 jobs per
+trigger with AQE and about 12 without. So ``IncrementalDedup.process_batch``
+and ``run_pipeline`` turn AQE off for their duration when their band-row
+count is at most ``config.DRIVER_MAX_ROWS`` — the bound below which the
+engine already finishes work on the driver. The count that sizes the scope
+plans non-adaptive at any size (``non_adaptive_count``): a global count has
+nothing to adapt. It counts a persisted frame, and the cache build it
+triggers keeps the plan ``persist()`` gave it, under the caller's setting.
+Everything above the bound keeps the AQE settings below
+(runtime join upgrades, size-based coalescing, skew splitting). SQL conf is
+session-global: for the duration of such a call, other queries on the same
+session (other threads included) also plan non-adaptive.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, _parse_datatype_string
+
+from cqaduplicatefind_spark import config
+
+_AQE = "spark.sql.adaptive.enabled"
 
 
 def build_session(
@@ -57,12 +78,21 @@ def build_session(
         # 64m A/B), and partitions <=64m may build local shuffled-hash joins
         # (skips the sort, parallel build). Both are size-gated at runtime,
         # so a 100TB run with multi-GB stages keeps sort-merge automatically —
-        # nothing here is tuned to the local corpus size.
+        # nothing here is tuned to the local corpus size. The two gates ARE
+        # tuned to memory: they were sized on a 6 GB local-mode heap that the
+        # driver and the executors share (bench.py at sf0.1). A broadcast
+        # relation is built on the driver and held once per executor, several
+        # times its shuffle size once decoded, and a shuffled-hash build holds
+        # a whole reduce partition per task. On smaller heaps lower both in
+        # proportion through ``extra=`` ("-1" and "0" turn them off).
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "24m",
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64m",
         # local-FS writes: commit algorithm v2 renames task output once
         # instead of twice (job commit loops over per-task dirs in v1) — the
-        # incremental stores commit 3 writes per micro-batch
+        # incremental stores commit 3 writes per micro-batch. Task output is
+        # visible before the job commits, so a write killed mid-job leaves
+        # part files without a _SUCCESS marker; the part store skips such
+        # dirs (streaming/store.py)
         "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
         # Arrow transfer for pandas UDFs; bounded batches keep the numpy signature
         # kernels' intermediates small and the pipeline memory-stable
@@ -95,6 +125,40 @@ def build_session(
     for k, v in confs.items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+@contextmanager
+def small_plans(spark: SparkSession, n_rows: int) -> Iterator[None]:
+    """Plan and run non-adaptive while inside, when ``n_rows`` (the call's
+    band-row bound) is at most ``config.DRIVER_MAX_ROWS``; a no-op above it.
+    At that size every AQE query stage is a separate job whose fixed cost
+    exceeds its work, and there is no skew or join size left to adapt to.
+    The caller's setting is restored on exit, error or not; a caller that
+    already runs non-adaptive stays so. The conf is session-global, so it
+    also covers queries other threads run on ``spark`` meanwhile, and caches
+    persisted inside keep the non-adaptive plan they were built with."""
+    if n_rows > config.DRIVER_MAX_ROWS:
+        yield
+        return
+    prev = spark.conf.get(_AQE)
+    spark.conf.set(_AQE, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(_AQE, prev)
+
+
+def non_adaptive_count(df: DataFrame) -> int:
+    """``df.count()`` with the count's own plan non-adaptive, at any size:
+    for the counts that size a ``small_plans`` scope before it exists. Meant
+    for a persisted ``df``. A global count has no join, skew or partition
+    count to adapt, while under AQE the cache it reads and its partial and
+    final aggregates each run as a separate job (a persisted micro-batch's
+    count: 3 jobs, against 1). The cache build is not affected: Spark plans
+    a persisted frame when ``persist()`` is called, so the build keeps the
+    caller's setting whatever the size."""
+    with small_plans(df.sparkSession, 0):
+        return df.count()
 
 
 def arrow_frame(

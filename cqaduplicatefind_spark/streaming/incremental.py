@@ -47,8 +47,9 @@ from __future__ import annotations
 
 import os
 import time
+from contextlib import ExitStack
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from cqaduplicatefind_spark.config import DedupConfig
 from cqaduplicatefind_spark.functions.normalize import with_normalized_text
@@ -58,7 +59,11 @@ from cqaduplicatefind_spark.operators.candidates import (
     explode_bands,
 )
 from cqaduplicatefind_spark.operators.verify import accept_edges, score_pairs
-from cqaduplicatefind_spark.session import arrow_frame
+from cqaduplicatefind_spark.session import (
+    arrow_frame,
+    non_adaptive_count,
+    small_plans,
+)
 from cqaduplicatefind_spark.streaming.store import (  # noqa: F401 (re-export)
     EDGE_SCHEMA,
     SIG_STORE_SCHEMA,
@@ -73,6 +78,16 @@ def stream_signatures(pages_stream: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Streaming pages(url, text, ...) -> streaming signatures. Stateless."""
     norm = with_normalized_text(pages_stream, "text", "norm_text")
     return with_signatures(norm, cfg, "norm_text").select(*SIG_COLS)
+
+
+def _observed_rows(obs: Observation, df: DataFrame) -> int:
+    """The row count ``obs`` observed while ``df``'s cache was built. Call it
+    only after a job that read ``df`` has finished: Spark completes an
+    observation when the first query over it ends, success or failure, so
+    the read does not wait. If the metric did not come back (an empty row),
+    count the populated cache instead."""
+    n = obs.get.get("n")
+    return df.count() if n is None else n
 
 
 class IncrementalDedup:
@@ -147,12 +162,21 @@ class IncrementalDedup:
         # finally block: a failed write/compaction must not strand caches in a
         # long-lived session (the delta path runs one processor per increment)
         held: list[DataFrame] = [batch_df]
+        scope = ExitStack()
         try:
             # materialize the batch cache ONCE, up front: n_new feeds the
             # stats row, the broadcast-decision bound, the exact band-row
             # arithmetic, and the store writers' file sizing — the old flow
             # re-derived each of those with its own job
-            n_new = batch_df.count()
+            n_new = non_adaptive_count(batch_df)
+            n_band_rows = n_new * cfg.bands  # explode_bands: exactly bands/doc
+            # a small batch plans everything below non-adaptive (see
+            # session.small_plans), the pooled store writes included. A
+            # foreachBatch frame belongs to the stream's cloned session, so
+            # the scope covers that session too.
+            sessions = {id(s): s for s in (self.spark, batch_df.sparkSession)}
+            for session in sessions.values():
+                scope.enter_context(small_plans(session, n_band_rows))
             _mark("batch_count")
             new_bands = explode_bands(batch_df, cfg).withColumn(
                 "is_new", F.lit(True)
@@ -162,6 +186,11 @@ class IncrementalDedup:
             # appended before a crash are not "index"
             idx_bands = self.band_store.read(int(batch_id))
             _mark("read_band_store")
+            # stats row counts observed by the jobs that build the caches.
+            # Spark keeps one observation registry per session, not a
+            # listener per observation; a batch that fails before any query
+            # reads an observed frame leaves one pending entry there.
+            idx_rows, payload_rows = Observation(), Observation()
             if idx_bands is None:
                 all_bands = new_bands
                 idx_touched = None
@@ -202,12 +231,13 @@ class IncrementalDedup:
                     # tolerate duplicate rows from a crash-interrupted
                     # compaction; cost bounded by touched rows, not the index
                     .dropDuplicates(["id", "band", "bh"])
+                    .observe(idx_rows, F.count(F.lit(1)).alias("n"))
                     .persist()
                 )
                 held.append(idx_touched)
-                # NOT pre-counted: the pairing job below materializes this
-                # cache inline (one job barrier instead of two); the stats
-                # count afterwards reads the populated cache
+                # NOT counted: the pairing job below materializes this cache
+                # inline (one job barrier instead of two), and the stats row
+                # count rides along as an observed metric
                 all_bands = idx_touched.withColumn(
                     "is_new", F.lit(False)
                 ).unionByName(new_bands)
@@ -229,17 +259,16 @@ class IncrementalDedup:
             ).persist()
             held.append(cand)
             n_cand = cand.count()
-            _mark("pairing")
             if idx_touched is not None:
-                n_idx_joined = idx_touched.count()  # cache hot from pairing
-                _mark("idx_count")
+                n_idx_joined = _observed_rows(idx_rows, idx_touched)
+            _mark("pairing")
 
             # fetch signature payloads ONLY for ids in candidate pairs; a
             # quiet batch (zero candidates) skips the store read entirely —
             # otherwise the semi-join still scans every sig part for nothing.
-            # The fetch is NOT pre-counted: the scoring job below is its first
+            # The fetch is NOT counted: the scoring job below is its first
             # action (one job materializes fetch + verify + write), and the
-            # stats count afterwards reads the already-populated cache.
+            # stats row count rides along as an observed metric.
             if n_cand == 0:
                 needed = batch_df.select(*SIG_COLS).limit(0)
                 n_payload = 0
@@ -265,6 +294,7 @@ class IncrementalDedup:
                 needed = (
                     store.join(ids, "url", "left_semi")
                     .dropDuplicates(["url"])  # compaction crash-window tolerance
+                    .observe(payload_rows, F.count(F.lit(1)).alias("n"))
                     .persist()
                 )
                 held.append(needed)
@@ -282,7 +312,6 @@ class IncrementalDedup:
             # serial job latencies.
             from concurrent.futures import ThreadPoolExecutor
 
-            n_band_rows = n_new * cfg.bands  # explode_bands: exactly bands/doc
             with ThreadPoolExecutor(max_workers=2) as pool:
                 f_bands = pool.submit(
                     self.band_store.append, batch_id, new_bands, n_band_rows
@@ -293,10 +322,9 @@ class IncrementalDedup:
                 self.match_store.append(batch_id, edges)
                 f_bands.result()
                 f_sigs.result()
-            _mark("score_write")
             if n_cand > 0:
-                n_payload = needed.count()  # cache populated by the write job
-                _mark("payload_count")
+                n_payload = _observed_rows(payload_rows, needed)
+            _mark("score_write")
 
             self.batch_stats.append(
                 {
@@ -339,6 +367,7 @@ class IncrementalDedup:
             self.sig_store.compact(int(batch_id))
             _mark("compact")
         finally:
+            scope.close()
             for df in held:
                 df.unpersist()
             self.phase_times.append(phases)

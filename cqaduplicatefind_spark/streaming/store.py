@@ -9,7 +9,12 @@ Layout: every append writes one ``batch=<id>`` part dir; tiered compaction
 folds parts into ``compacted=<id>`` tiers (``compacted=<id>m`` when tiers
 merge). Readers scan every dir whose name starts with ``batch=`` or
 ``compacted=`` — ``<tier>.old`` remnants of an interrupted merge included —
-and nothing else, so a merge's temp dir is never read.
+and holds a ``_SUCCESS`` marker, and nothing else, so a merge's temp dir is
+never read. The marker matters under the v2 output committer
+(``session.build_session``): each task moves its files into the final dir
+when it commits, so a write killed mid-job leaves a part dir holding some
+part files and no marker. Readers and merges skip it, and a replay of the
+batch id overwrites it.
 
 Schema: each store is read with its declared schema, so no parquet footer is
 opened for schema inference on the read path (a schema-merging read opened
@@ -103,11 +108,14 @@ class PartStore:
         os.makedirs(root, exist_ok=True)
 
     def parts(self) -> list[str]:
-        return [
+        """The committed part dirs: a job's ``_SUCCESS`` marker lands only
+        after every task's output did."""
+        parts = [
             os.path.join(self.root, d)
             for d in sorted(os.listdir(self.root))
             if d.startswith("batch=") or d.startswith("compacted=")
         ]
+        return [p for p in parts if os.path.exists(os.path.join(p, "_SUCCESS"))]
 
     def read(self, exclude_batch: int | None = None) -> DataFrame | None:
         """The store's rows without the ``src_batch`` tag, or None when it has

@@ -1,106 +1,34 @@
-"""The driver's correctness gate checks only the FIRST 50 queries() entries in
-dict order. Pin the rotation policy (round 5, "every other round"): a row may
-sit past the gate ONLY if it was driver-checked green in the most recent
-official CORRECTNESS artifact — so after each round, no registry row lacks an
-official green entry more than two rounds old. Also pin that every row needing
-official verification THIS round (the round-4 tail, rows whose code changed
-this round, and new rows) sits inside the gate, and that the contract dicts
-stay aligned."""
+"""Every registry row is checked in-repo: ``tools/check_oracle.py`` runs all
+``queries()`` entries on Spark and every ``oracle_sql()`` twin on DuckDB over
+the sf0.001 tables, and each oracle row must match (row count, column names,
+order-insensitive value hash). The contract dicts must stay aligned."""
 
-import glob
-import json
 import os
+import subprocess
+import sys
 
 import __spark_entry__ as entry_mod
+from test_plan_quality import SF  # the sf0.001 tables
 
-GATE = 50
-
-# rows that MUST be driver-checked this round:
-MUST_GATE = [
-    # the full round-4 tail (last official check r1-r3, except
-    # projection_pushdown which was gate row #50 in r4)
-    "projection_pushdown",
-    "filter_predicate",
-    "semi_join_filter",
-    "anti_join_gold_check",
-    "broadcast_dim_join",
-    "multiway_join_agg",
-    "cross_join_tiny",
-    "groupby_agg_tpch_q1",
-    "groupby_count_histogram",
-    "distinct_union",
-    "accuracy_metric",
-    "window_topk_per_group",
-    "global_topn",
-    "time_window_agg",
-    "latest_event_per_user",
-    "embedding_norms",
-    "token_count_stats",
-    "doc_fingerprint",
-    # code changed in round 5 (hashed n-gram kernel + ALL its consumers —
-    # bm25_retrieval_eval{,_directed} and overlap_token_spans build their
-    # candidate/gold sets from q_ngram_jaccard too)
-    "ngram_jaccard_pairs",
-    "ngram_containment_pairs",
-    "retrieval_metrics_p_at_k",
-    "bm25_retrieval_eval",
-    "bm25_retrieval_eval_directed",
-    "overlap_token_spans",
-    "qa_dumps_end_to_end",
-    "dedup_pipeline_candidate_pairs",
-    # new round-5 rows
-    "multimodal_video_dedup",
-    "dedup_pipeline_full_recall",
-    # flagship / north-rule core rows stay gated every round
-    "minhash_md5_signatures",
-    "dedup_pipeline_accepted_edges",
-    "dedup_pipeline_cluster_assignments",
-    "streaming_incremental_edges",
-]
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _recent_artifacts(k: int = 2) -> list[dict]:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    paths = sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")))
-    assert paths, "no official CORRECTNESS artifact found"
-    out = []
-    for p in paths[-k:]:
-        with open(p) as f:
-            out.append(json.load(f))
-    return out
-
-
-def test_must_gate_rows_inside_driver_window():
-    names = list(entry_mod.queries())
-    gated = set(names[:GATE])
-    missing = [n for n in MUST_GATE if n not in gated]
-    assert not missing, f"rows outside the driver's {GATE}-row gate: {missing}"
-
-
-def test_tail_rows_recently_checked():
-    """Every-other-round policy: a row past the gate must have a GREEN entry in
-    one of the TWO most recent official artifacts. (Not "the latest": a round-N
-    tail row is deliberately outside round N's own window, so the moment
-    CORRECTNESS_rN lands, the latest artifact cannot contain it — its green
-    entry is in rN-1, when it was inside. If the same row stayed in the tail a
-    second consecutive round, both recent artifacts would miss it and this
-    test forces the rotation.)"""
-    arts = _recent_artifacts(2)
-    names = list(entry_mod.queries())
-    for n in names[GATE:]:
-        green = any(
-            isinstance(v := a.get(n), dict)
-            and v.get("rows_match")
-            and v.get("schema_match")
-            and v.get("hash_match")
-            for a in arts
-        )
-        assert green, (
-            f"tail row {n} has no green entry in the two most recent official "
-            f"artifacts — rotate it inside the {GATE}-row gate this round"
-        )
-    # and the declared tail is what actually sits past the gate
-    assert set(names[GATE:]) <= set(entry_mod._STABLE_TAIL)
+def test_every_oracle_row_matches():
+    """~4 min: a fresh Spark JVM and DuckDB, as the tool runs by hand. A
+    missing table dir fails here rather than skipping."""
+    assert os.path.isdir(SF), f"oracle tables not found at {SF}"
+    proc = subprocess.run(
+        [sys.executable, os.path.join("tools", "check_oracle.py"), SF],
+        cwd=REPO, capture_output=True, text=True, timeout=1800,
+    )
+    report = proc.stdout + proc.stderr[-3000:]
+    assert proc.returncode == 0, report
+    assert proc.stdout.rstrip().endswith("all queries match"), report
+    matched = [
+        line.split()[0] for line in proc.stdout.splitlines()
+        if line.split()[1:2] == ["OK"]
+    ]
+    assert sorted(matched) == sorted(entry_mod.oracle_sql()), report
 
 
 def test_oracle_sql_subset_and_order():

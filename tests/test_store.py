@@ -1,5 +1,6 @@
 """The incremental matcher's part store: file-size rule, schema guard at
-compaction, and streamed matches against a one-shot increment."""
+compaction, uncommitted parts, and streamed matches against a one-shot
+increment."""
 
 from __future__ import annotations
 
@@ -76,6 +77,56 @@ def test_compaction_refuses_a_part_with_an_undeclared_column(spark, tmp_path):
     assert {(r.id_a, r.id_b) for r in dedup.matches().collect()} == {
         ("fam0", "fam1")
     }
+
+
+def test_uncommitted_part_stays_hidden_until_replayed(spark, tmp_path):
+    """Under the v2 committer a write killed mid-job leaves its ``batch=<id>``
+    dir holding the part files its finished tasks moved there, and no
+    ``_SUCCESS`` marker. A fresh reader's matches never include it, the next
+    compaction neither folds nor deletes it, and a replay of the batch id
+    overwrites it with a committed part."""
+    dedup = IncrementalDedup(
+        spark, CFG, *store.store_roots(str(tmp_path)), compact_every=3
+    )
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
+
+    def sigs_for(i):
+        rows = [(f"fam{i}", base + f"tail{i}"), (f"noise{i}", f"zz{i} qq " * 30)]
+        return signature_frame(
+            spark.createDataFrame(rows, "url string, text string"), CFG
+        )
+
+    def pairs(*fams):
+        return {(f"fam{i}", f"fam{j}") for i in fams for j in fams if i < j}
+
+    def matches(d):
+        return {(r.id_a, r.id_b) for r in d.matches().collect()}
+
+    for i in range(2):
+        dedup.process_batch(sigs_for(i), i)
+    # batch 1's job commit never ran: every store keeps its parts, unmarked
+    roots = (dedup.bands_dir, dedup.sigs_dir, dedup.matches_dir)
+    for root in roots:
+        os.remove(os.path.join(root, "batch=1", "_SUCCESS"))
+        assert _parquet_files(os.path.join(root, "batch=1"))
+
+    fresh = IncrementalDedup(
+        spark, CFG, *store.store_roots(str(tmp_path)), compact_every=3
+    )
+    assert matches(fresh) == set()
+    # batches 2 and 3 make three committed band parts: the fold takes 0, 2
+    # and 3, and fam1 is neither index for them nor in the tier
+    for i in (2, 3):
+        fresh.process_batch(sigs_for(i), i)
+    assert matches(fresh) == pairs(0, 2, 3)
+    assert sorted(os.listdir(fresh.bands_dir)) == ["batch=1", "compacted=3"]
+    assert _parquet_files(os.path.join(fresh.bands_dir, "batch=1"))
+    assert "fam1" not in {r.id for r in fresh.band_store.read().collect()}
+
+    fresh.process_batch(sigs_for(1), 1)  # the replay
+    for root in roots:
+        assert os.path.exists(os.path.join(root, "batch=1", "_SUCCESS"))
+    assert matches(fresh) == pairs(0, 1, 2, 3)
 
 
 def _doc(words):
