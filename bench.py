@@ -304,6 +304,9 @@ def bench_incremental(
     sigs.count()
 
     runs: dict[str, list[float]] = {"delta_dedup": [], "streaming_incremental": []}
+    # the matcher path each increment / micro-batch took ("driver" below
+    # config.DRIVER_MAX_ROWS band rows, else "spark"), one entry per run
+    paths: dict[str, list] = {"delta_dedup": [], "streaming_incremental": []}
     for _ in range(n_passes):
         work = tempfile.mkdtemp(prefix="bench_delta_")
         try:
@@ -311,6 +314,7 @@ def bench_incremental(
 
             def _delta():
                 res = delta_dedup(spark, increment, cfg, work, batch_id=1)
+                paths["delta_dedup"].append(res.path)
                 n = res.edges.count()
                 res.release()
                 return n
@@ -336,6 +340,7 @@ def bench_incremental(
                     dedup.process_batch(
                         sigs.where(F.col("_b") == b).select(*SIG_COLS), b
                     )
+                paths["streaming_incremental"].append(dedup.batch_paths)
                 return dedup.matches().count()
 
             t, _n = _cooled(_stream)
@@ -347,6 +352,7 @@ def bench_incremental(
     sigs.unpersist()
     out: dict[str, float] = {name: min(rs) for name, rs in runs.items()}
     out["_runs"] = {name: [round(x, 2) for x in rs] for name, rs in runs.items()}
+    out["_paths"] = paths
     return out
 
 
@@ -449,6 +455,7 @@ def main():
     span_overhead = pipe.pop("_span_overhead", {})
     inc = bench_incremental(spark, sf_dir)
     incremental_runs = inc.pop("_runs", {})
+    incremental_paths = inc.pop("_paths", {})
     queries.update({k: round(v, 3) for k, v in pipe.items()})
     queries.update({k: round(v, 3) for k, v in singles.items()})
     queries.update({k: round(v, 3) for k, v in inc.items()})
@@ -476,6 +483,9 @@ def main():
                 "query_runs": query_runs,
                 # per-run lists for the delta/streaming incremental legs
                 "incremental_runs": incremental_runs,
+                # which matcher path each of those increments / micro-batches
+                # took ("driver" or "spark")
+                "incremental_paths": incremental_paths,
                 # drift-cancelled span-pass cost (see bench_pipeline): the
                 # honest flavor comparison, robust where min(span)-min(nospan)
                 # is not

@@ -45,6 +45,10 @@ Scale design (the part that must survive 10^12 docs):
 
 from __future__ import annotations
 
+from itertools import combinations
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from cqaduplicatefind_spark.config import DedupConfig
@@ -226,6 +230,42 @@ def bucket_candidates(
     if not dedup:
         return out
     return out.groupBy("id_a", "id_b").agg(F.max("is_star").alias("is_star"))
+
+
+def driver_bucket_pairs(
+    new: pa.Table, index: pa.Table, max_group: int
+) -> list[tuple[str, str]] | None:
+    """``bucket_candidates``' small-bucket pairs under an involves-new gate,
+    on the driver, for one micro-batch's (id, band, bh) rows: ``new`` and the
+    ``index`` rows of the buckets they touch. Every pair id_a < id_b inside a
+    bucket with at least one new member, once, sorted. None when a bucket
+    holds more than ``max_group`` rows: hot buckets are the Spark kernel's."""
+    band, bh = (
+        np.concatenate([t[c].to_numpy() for t in (new, index)]).astype(np.int64)
+        for c in ("band", "bh")
+    )
+    order = np.lexsort((bh, band))
+    sb, sh = band[order], bh[order]
+    starts = np.r_[True, (sb[1:] != sb[:-1]) | (sh[1:] != sh[:-1])][: len(order)]
+    bucket = np.empty_like(order)
+    bucket[order] = np.cumsum(starts) - 1
+    size = np.bincount(bucket)
+    if size.size and size.max() > max_group:
+        return None
+    rows = np.flatnonzero(size[bucket] > 1)
+    ids = pa.chunked_array([*new["id"].chunks, *index["id"].chunks], pa.string())
+    buckets: dict[int, dict[str, bool]] = {}
+    for r, i in zip(rows.tolist(), ids.take(rows).to_pylist()):
+        if i is not None:
+            is_new = buckets.setdefault(bucket[r], {})
+            is_new[i] = is_new.get(i, False) or r < new.num_rows
+    pairs = set()
+    for is_new in buckets.values():
+        pairs.update(
+            (a, b) for a, b in combinations(sorted(is_new), 2)
+            if is_new[a] or is_new[b]
+        )
+    return sorted(pairs)
 
 
 def null_safe_group(df: DataFrame, group_col: str | None) -> DataFrame:

@@ -79,11 +79,14 @@ class DeltaResult:
     increment's ``IncrementalDedup`` batch-stats row (index rows joined,
     candidates, payload rows fetched — the per-increment work bound evidence;
     ``n_index_band_rows`` is None unless ``index_stats=True`` paid the
-    O(index) recovery count)."""
+    O(index) recovery count). ``path`` is the matcher path the increment
+    took: ``"driver"`` or ``"spark"`` (``IncrementalDedup.batch_paths``)."""
 
-    def __init__(self, edges: DataFrame, new_ids: DataFrame, stats: dict):
+    def __init__(self, edges: DataFrame, new_ids: DataFrame, stats: dict,
+                 path: str):
         self.edges = edges
         self.stats = stats
+        self.path = path
         self._new_ids = new_ids
         self._persisted: list = []
 
@@ -239,4 +242,5 @@ def delta_dedup(
     # propagate
     edges = dedup.match_store.read_batch(batch_id)
     ids = new_pages.select(F.col(id_col).cast("string").alias("url")).distinct()
-    return DeltaResult(edges=edges, new_ids=ids, stats=dedup.batch_stats[-1])
+    return DeltaResult(edges=edges, new_ids=ids, stats=dedup.batch_stats[-1],
+                       path=dedup.batch_paths[-1])

@@ -30,6 +30,13 @@ Design (the part that must stay sub-linear per batch at 10^12 docs):
   new row — index rows in untouched buckets can never contribute. Without this
   the pairing window re-shuffled the ENTIRE index every micro-batch (O(index)
   per trigger — the round-2 scale hazard);
+- **a small micro-batch pairs and verifies on the driver** (band rows at
+  most ``config.DRIVER_MAX_ROWS``, exact evidence): its band rows and the
+  touched index rows are collected, paired by ``driver_bucket_pairs`` and
+  scored by ``driver_accept_edges`` — the same rules, without building the
+  pairing and verify plans that were most of a 100-doc trigger's cost. Spark
+  still runs every scan and store write. A hot bucket, an overflowing probe
+  or too many endpoints send the batch to the Spark plans above;
 - the band/signature stores are **tier-compacted**: every ``compact_every``
   small per-batch parts fold into one tier (write work bounded by those
   parts, not the store), and tiers themselves merge once ``compact_every`` of
@@ -47,18 +54,27 @@ from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import ExitStack
 
+from py4j.protocol import Py4JJavaError
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.config import DedupConfig
 from cqaduplicatefind_spark.functions.normalize import with_normalized_text
 from cqaduplicatefind_spark.functions.signatures import with_signatures
 from cqaduplicatefind_spark.operators.candidates import (
     bucket_candidates,
+    driver_bucket_pairs,
     explode_bands,
 )
-from cqaduplicatefind_spark.operators.verify import accept_edges, score_pairs
+from cqaduplicatefind_spark.operators.verify import (
+    accept_edges,
+    driver_accept_edges,
+    score_pairs,
+)
 from cqaduplicatefind_spark.session import (
     arrow_frame,
     non_adaptive_count,
@@ -84,9 +100,14 @@ def _observed_rows(obs: Observation, df: DataFrame) -> int:
     """The row count ``obs`` observed while ``df``'s cache was built. Call it
     only after a job that read ``df`` has finished: Spark completes an
     observation when the first query over it ends, success or failure, so
-    the read does not wait. If the metric did not come back (an empty row),
-    count the populated cache instead."""
-    n = obs.get.get("n")
+    the read does not wait. If the metric did not come back, count the
+    populated cache instead: an adaptive plan that finds a join empty at
+    run time drops the observed node, and Spark 4.1 then fails to convert
+    the empty metrics row."""
+    try:
+        n = obs.get.get("n")
+    except Py4JJavaError:
+        n = None
     return df.count() if n is None else n
 
 
@@ -134,6 +155,9 @@ class IncrementalDedup:
         # compact) — the profiling evidence the bench-leg optimization work
         # reads; pure timing, no behavioral coupling
         self.phase_times: list[dict] = []
+        # per processed batch: "driver" (pairs and verifies on the driver)
+        # or "spark" (the bucket_candidates / score_pairs plans)
+        self.batch_paths: list[str] = []
         # logical band-index size, maintained arithmetically so the per-batch
         # stats never pay an O(index) count scan (the same per-trigger scale
         # hazard class the touched-bucket semi-join removes from pairing):
@@ -186,15 +210,8 @@ class IncrementalDedup:
             # appended before a crash are not "index"
             idx_bands = self.band_store.read(int(batch_id))
             _mark("read_band_store")
-            # stats row counts observed by the jobs that build the caches.
-            # Spark keeps one observation registry per session, not a
-            # listener per observation; a batch that fails before any query
-            # reads an observed frame leaves one pending entry there.
-            idx_rows, payload_rows = Observation(), Observation()
+            idx_touched = None
             if idx_bands is None:
-                all_bands = new_bands
-                idx_touched = None
-                n_idx_joined = 0
                 self._band_rows_base = 0
             else:
                 if self._band_rows_base is None and self.count_index_stats:
@@ -226,82 +243,106 @@ class IncrementalDedup:
                     if n_new * cfg.bands <= self.broadcast_touched_max
                     else touched
                 )
-                idx_touched = (
-                    idx_bands.join(probe, ["band", "bh"], "left_semi")
-                    # tolerate duplicate rows from a crash-interrupted
-                    # compaction; cost bounded by touched rows, not the index
-                    .dropDuplicates(["id", "band", "bh"])
-                    .observe(idx_rows, F.count(F.lit(1)).alias("n"))
-                    .persist()
+                idx_touched = idx_bands.join(probe, ["band", "bh"], "left_semi")
+
+            # a batch whose band rows fit the driver bound pairs and verifies
+            # on the driver; _pairs_on_driver says when it falls back
+            on_driver = None
+            if n_band_rows <= config.DRIVER_MAX_ROWS and cfg.verify_evidence == "exact":
+                on_driver = self._pairs_on_driver(new_bands, idx_touched)
+            if on_driver is not None:
+                pairs, n_idx_joined = on_driver
+                n_cand = len(pairs)
+            else:
+                # stats row counts observed by the jobs that build the
+                # caches. Spark keeps one observation registry per session,
+                # not a listener per observation; a batch that fails before
+                # any query reads an observed frame leaves one pending entry.
+                idx_rows, payload_rows = Observation(), Observation()
+                all_bands = new_bands
+                if idx_touched is not None:
+                    idx_touched = (
+                        idx_touched
+                        # tolerate duplicate rows from a crash-interrupted
+                        # compaction; cost bounded by touched rows
+                        .dropDuplicates(["id", "band", "bh"])
+                        .observe(idx_rows, F.count(F.lit(1)).alias("n"))
+                        .persist()
+                    )
+                    held.append(idx_touched)
+                    # NOT counted: the pairing job below materializes this
+                    # cache inline (one job barrier instead of two)
+                    all_bands = idx_touched.withColumn(
+                        "is_new", F.lit(False)
+                    ).unionByName(new_bands)
+
+                # one skew-capped pass over the band union: intra-batch pairs
+                # AND batch-vs-index pairs; index-index pairs (already
+                # reported when the younger doc arrived) are dropped by the
+                # pair filter
+                def involves_new(pairs: DataFrame) -> DataFrame:
+                    return pairs.where(F.col("is_new_a") | F.col("is_new_b"))
+
+                cand = bucket_candidates(
+                    all_bands,
+                    "id",
+                    ("band", "bh"),
+                    max_group=cfg.max_band_group,
+                    carry_cols=("is_new",),
+                    pair_filter=involves_new,
+                    salt_cap=cfg.salt_buckets,
+                ).persist()
+                held.append(cand)
+                n_cand = cand.count()
+                n_idx_joined = (
+                    0 if idx_touched is None
+                    else _observed_rows(idx_rows, idx_touched)
                 )
-                held.append(idx_touched)
-                # NOT counted: the pairing job below materializes this cache
-                # inline (one job barrier instead of two), and the stats row
-                # count rides along as an observed metric
-                all_bands = idx_touched.withColumn(
-                    "is_new", F.lit(False)
-                ).unionByName(new_bands)
-
-            # one skew-capped pass over the band union: intra-batch pairs AND
-            # batch-vs-index pairs; index-index pairs (already reported when the
-            # younger doc arrived) are dropped by the pair filter
-            def involves_new(pairs: DataFrame) -> DataFrame:
-                return pairs.where(F.col("is_new_a") | F.col("is_new_b"))
-
-            cand = bucket_candidates(
-                all_bands,
-                "id",
-                ("band", "bh"),
-                max_group=cfg.max_band_group,
-                carry_cols=("is_new",),
-                pair_filter=involves_new,
-                salt_cap=cfg.salt_buckets,
-            ).persist()
-            held.append(cand)
-            n_cand = cand.count()
-            if idx_touched is not None:
-                n_idx_joined = _observed_rows(idx_rows, idx_touched)
             _mark("pairing")
 
             # fetch signature payloads ONLY for ids in candidate pairs; a
             # quiet batch (zero candidates) skips the store read entirely —
             # otherwise the semi-join still scans every sig part for nothing.
-            # The fetch is NOT counted: the scoring job below is its first
-            # action (one job materializes fetch + verify + write), and the
-            # stats row count rides along as an observed metric.
-            if n_cand == 0:
-                needed = batch_df.select(*SIG_COLS).limit(0)
-                n_payload = 0
+            # On the Spark path the fetch is NOT counted: the scoring job
+            # below is its first action (one job materializes fetch + verify
+            # + write), and the stats row count rides along as an observed
+            # metric.
+            if on_driver is not None:
+                edges, n_payload = self._edges_on_driver(pairs, batch_df, batch_id)
             else:
-                ids = (
-                    cand.select(F.col("id_a").alias("url"))
-                    .unionByName(cand.select(F.col("id_b").alias("url")))
-                    .distinct()
+                if n_cand == 0:
+                    needed = batch_df.select(*SIG_COLS).limit(0)
+                    n_payload = 0
+                else:
+                    ids = (
+                        cand.select(F.col("id_a").alias("url"))
+                        .unionByName(cand.select(F.col("id_b").alias("url")))
+                        .distinct()
+                    )
+                    if 2 * n_cand <= self.broadcast_touched_max:
+                        # candidate endpoints are a tiny set in the streaming
+                        # case: broadcasting them keeps the store scan shuffle-
+                        # free for the semi-join (the same bound-based decision
+                        # as the touched-bucket probe; huge increments fall back
+                        # to the shuffle semi-join)
+                        ids = F.broadcast(ids)
+                    idx_sigs = self.sig_store.read(int(batch_id))
+                    store = (
+                        batch_df.select(*SIG_COLS)
+                        if idx_sigs is None
+                        else idx_sigs.unionByName(batch_df.select(*SIG_COLS))
+                    )
+                    needed = (
+                        store.join(ids, "url", "left_semi")
+                        .dropDuplicates(["url"])  # compaction crash-window tolerance
+                        .observe(payload_rows, F.count(F.lit(1)).alias("n"))
+                        .persist()
+                    )
+                    held.append(needed)
+                edges = accept_edges(
+                    score_pairs(cand, needed, cfg, evidence=cfg.verify_evidence),
+                    cfg,
                 )
-                if 2 * n_cand <= self.broadcast_touched_max:
-                    # candidate endpoints are a tiny set in the streaming
-                    # case: broadcasting them keeps the store scan shuffle-
-                    # free for the semi-join (the same bound-based decision
-                    # as the touched-bucket probe; huge increments fall back
-                    # to the shuffle semi-join)
-                    ids = F.broadcast(ids)
-                idx_sigs = self.sig_store.read(int(batch_id))
-                store = (
-                    batch_df.select(*SIG_COLS)
-                    if idx_sigs is None
-                    else idx_sigs.unionByName(batch_df.select(*SIG_COLS))
-                )
-                needed = (
-                    store.join(ids, "url", "left_semi")
-                    .dropDuplicates(["url"])  # compaction crash-window tolerance
-                    .observe(payload_rows, F.count(F.lit(1)).alias("n"))
-                    .persist()
-                )
-                held.append(needed)
-
-            edges = accept_edges(
-                score_pairs(cand, needed, cfg, evidence=cfg.verify_evidence), cfg
-            )
 
             # the three per-batch writes are mutually independent (distinct
             # dirs, distinct cached sources) and every one is idempotent per
@@ -309,20 +350,20 @@ class IncrementalDedup:
             # prefix replays correctly (the same exactly-once argument as the
             # serial order). Overlapping them fills each job's straggler tail
             # with the next job's tasks (guide §2.6) instead of paying three
-            # serial job latencies.
-            from concurrent.futures import ThreadPoolExecutor
-
+            # serial job latencies. The pooled appends run under the caller's
+            # Spark job group and local properties.
+            inherit = inheritable_thread_target(self.spark)
             with ThreadPoolExecutor(max_workers=2) as pool:
                 f_bands = pool.submit(
-                    self.band_store.append, batch_id, new_bands, n_band_rows
+                    inherit(self.band_store.append), batch_id, new_bands, n_band_rows
                 )
                 f_sigs = pool.submit(
-                    self.sig_store.append, batch_id, batch_df, n_new
+                    inherit(self.sig_store.append), batch_id, batch_df, n_new
                 )
                 self.match_store.append(batch_id, edges)
                 f_bands.result()
                 f_sigs.result()
-            if n_cand > 0:
+            if on_driver is None and n_cand > 0:
                 n_payload = _observed_rows(payload_rows, needed)
             _mark("score_write")
 
@@ -350,6 +391,7 @@ class IncrementalDedup:
                     "n_sig_payload_rows": n_payload,
                 }
             )
+            self.batch_paths.append("spark" if on_driver is None else "driver")
             _mark("stats_count")
 
             # index append bookkeeping: the writes themselves ran overlapped
@@ -371,6 +413,56 @@ class IncrementalDedup:
             for df in held:
                 df.unpersist()
             self.phase_times.append(phases)
+
+    def _pairs_on_driver(
+        self, new_bands: DataFrame, idx_touched: DataFrame | None
+    ) -> tuple[list[tuple[str, str]], int] | None:
+        """The driver path's pairs and index rows joined: one collect of the
+        batch's bands (filling the cache the band-store append reads), one
+        bounded collect of the touched index rows. None sends the batch to
+        the Spark path: the touched rows overflow, a bucket is hot, or the
+        endpoints, whose payloads come next, exceed ``DRIVER_MAX_ROWS //
+        bands`` docs."""
+        cfg = self.cfg
+        new = new_bands.select("id", "band", "bh").toArrow()
+        idx = new.slice(0, 0)
+        if idx_touched is not None:
+            idx = idx_touched.limit(config.DRIVER_MAX_ROWS + 1).toArrow()
+            if idx.num_rows > config.DRIVER_MAX_ROWS:
+                return None
+            # compaction crash-window tolerance, as on the Spark path
+            idx = idx.group_by(["id", "band", "bh"]).aggregate([])
+        pairs = driver_bucket_pairs(new, idx, cfg.max_band_group)
+        ends = {u for p in pairs or () for u in p}
+        if pairs is None or len(ends) > config.DRIVER_MAX_ROWS // cfg.bands:
+            return None
+        return pairs, idx.num_rows
+
+    def _edges_on_driver(
+        self, pairs: list[tuple[str, str]], batch_df: DataFrame, batch_id: int
+    ) -> tuple[DataFrame, int]:
+        """The accepted edges and the payload rows fetched: the endpoints'
+        only, in one semi-join against an Arrow-built id frame (no ``isin``
+        literals: ~1 s of py4j calls per 1.6k keys)."""
+        if not pairs:
+            return arrow_frame(self.spark, EDGE_SCHEMA), 0
+        ends = list({u for p in pairs for u in p})
+        ids = arrow_frame(self.spark, "url string", {"url": ends})
+        store = batch_df.select(*SIG_COLS)
+        idx_sigs = self.sig_store.read(int(batch_id))
+        if idx_sigs is not None:
+            store = idx_sigs.unionByName(store)
+        payload = (
+            store.join(F.broadcast(ids), "url", "left_semi")
+            .select("url", "simhash", "n_shingles", "shingles")
+            .toArrow()
+        )
+        first: dict[str, int] = {}
+        for i, u in enumerate(payload["url"].to_pylist()):
+            first.setdefault(u, i)  # compaction crash-window tolerance
+        payload = payload.take(list(first.values()))
+        edges = driver_accept_edges(pairs, payload, self.cfg)
+        return arrow_frame(self.spark, EDGE_SCHEMA, edges), payload.num_rows
 
     def matches(self) -> DataFrame:
         m = self.match_store.read()

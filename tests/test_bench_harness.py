@@ -36,7 +36,13 @@ def test_bench_incremental_smoke(spark, monkeypatch):
         spark, "/root/testdata/sf0.001", replicate=1, n_passes=1
     )
     runs = out.pop("_runs")
+    paths = out.pop("_paths")
     assert set(out) == {"delta_dedup", "streaming_incremental"}
+    # one increment and one 4-micro-batch stream, each tagged with its path
+    assert paths["delta_dedup"] in (["driver"], ["spark"])
+    (stream_paths,) = paths["streaming_incremental"]
+    assert len(stream_paths) == 4
+    assert set(stream_paths) <= {"driver", "spark"}
     for name, wall in out.items():
         assert wall > 0, name
         assert len(runs[name]) == 1, name

@@ -12,6 +12,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.config import DedupConfig
 from cqaduplicatefind_spark.plans.delta import seed_index, signature_frame
 from cqaduplicatefind_spark.streaming import store
@@ -163,7 +164,15 @@ def test_streamed_matches_equal_one_increment(spark, corpus):
     """Differential: streaming the non-seed docs in random batches through
     the store (compacting as it goes) emits exactly the edges one
     process_batch of all of them emits over the same seed, and every batch's
-    index size is (seed docs + earlier batch docs) x bands."""
+    index size is (seed docs + earlier batch docs) x bands. Runs the Spark
+    path (the bound below every batch); tests/test_driver_path.py shows the
+    driver path emits the same rows."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(config, "DRIVER_MAX_ROWS", -1)
+        _streamed_matches_equal_one_increment(spark, corpus)
+
+
+def _streamed_matches_equal_one_increment(spark, corpus):
     seed, batches, compact_every = corpus
     pages = spark.createDataFrame(
         seed + [d for b in batches for d in b], "url string, text string"
@@ -192,6 +201,7 @@ def test_streamed_matches_equal_one_increment(spark, corpus):
         once.process_batch(sigs.where(~F.col("url").isin(seed_urls)), 0)
 
         assert edges(streamed) == edges(once)
+        assert set(streamed.batch_paths) == set(once.batch_paths) == {"spark"}
         assert {(a, b) for a, b, _ in edges(once)} == _family_pairs(
             seed + [d for b in batches for d in b]
         )

@@ -5,6 +5,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.config import DedupConfig
 from cqaduplicatefind_spark.streaming.incremental import (
     run_incremental_dedup,
@@ -65,10 +66,11 @@ def test_incremental_dedup_file_source(spark, tmp_path):
     assert {(r.id_a, r.id_b) for r in d3.matches().collect()} == got2
 
 
-def test_touched_bucket_gate_shuffle_fallback(spark, tmp_path):
+def test_touched_bucket_gate_shuffle_fallback(spark, tmp_path, monkeypatch):
     """With broadcast_touched_max=0 the touched-key probe falls back to a plain
     shuffle semi-join (the huge-increment path that must not OOM the driver by
-    broadcasting O(batch x bands) keys) and produces IDENTICAL matches."""
+    broadcasting O(batch x bands) keys) and produces IDENTICAL matches, on
+    the Spark path (the bucket_candidates kernel) and on the driver path."""
     from cqaduplicatefind_spark.streaming.incremental import IncrementalDedup
     from cqaduplicatefind_spark.plans.delta import signature_frame
 
@@ -83,7 +85,7 @@ def test_touched_bucket_gate_shuffle_fallback(spark, tmp_path):
     )
 
     def run(max_bc):
-        work = str(tmp_path / f"w{max_bc}")
+        work = str(tmp_path / f"w{max_bc}-{config.DRIVER_MAX_ROWS}")
         d = IncrementalDedup(
             spark, cfg,
             os.path.join(work, "bands"), os.path.join(work, "sigs"),
@@ -92,18 +94,29 @@ def test_touched_bucket_gate_shuffle_fallback(spark, tmp_path):
         )
         d.process_batch(signature_frame(b1, cfg), 0)
         d.process_batch(signature_frame(b2, cfg), 1)
+        paths.update(d.batch_paths)
         return {(r.id_a, r.id_b) for r in d.matches().collect()}
 
+    paths: set[str] = set()
     assert run(0) == run(4_000_000) == {("u0", "u9")}
+    assert paths == {"driver"}
+    # the Spark path: every batch above the driver bound
+    paths.clear()
+    monkeypatch.setattr(config, "DRIVER_MAX_ROWS", 0)
+    assert run(0) == run(4_000_000) == {("u0", "u9")}
+    assert paths == {"spark"}
 
 
-def test_per_batch_work_bounded_by_touched_buckets(spark, tmp_path):
+def test_per_batch_work_bounded_by_touched_buckets(spark, tmp_path, monkeypatch):
     """K batches, each adding ONE member of a duplicate family plus several
     unrelated docs. The accumulated index grows linearly, but the band rows that
     enter the pairing kernel each batch stay bounded by the buckets the batch
     touches (the family's bands) — O(touched), never O(index). Also exercises
     store compaction: part-dir counts stay < compact_every while matches are
-    exactly the family's full pair set."""
+    exactly the family's full pair set. Runs the Spark path (every batch
+    above the driver bound); tests/test_driver_path.py shows the driver
+    path's stats equal it."""
+    monkeypatch.setattr(config, "DRIVER_MAX_ROWS", 0)
     cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.7, shuffle_partitions=4)
     src = str(tmp_path / "incoming")
     os.makedirs(src)
@@ -126,6 +139,7 @@ def test_per_batch_work_bounded_by_touched_buckets(spark, tmp_path):
         )
         q.awaitTermination(120)
         stats.extend(dedup.batch_stats)
+        assert dedup.batch_paths == ["spark"]
 
     docs_per_batch = 1 + noise_per_batch
     for i, s in enumerate(stats):
