@@ -121,6 +121,8 @@ def bench_pipeline(spark, sf_dir: str) -> dict[str, float]:
     # Two flavors: without the exact-span pass (comparable to the round-1
     # baseline) and the complete flagship including winnowing span discovery.
     span_extra: list[float] = []
+    # the matcher path each pipeline run took ("driver" or "spark")
+    paths: set[str] = set()
 
     def _full(c):
         def run():
@@ -128,6 +130,7 @@ def bench_pipeline(spark, sf_dir: str) -> dict[str, float]:
             result = bench_pipeline._last = run_pipeline(
                 spark, pages, c, timings=timings
             )
+            paths.add(result.path)
             n = result.clusters.count()
             result.release()
             if "span_extra_sec" in timings:
@@ -236,6 +239,7 @@ def bench_pipeline(spark, sf_dir: str) -> dict[str, float]:
         result = run_pipeline(
             spark, html_pages, replace(cfg, span_pass=False), use_html=True
         )
+        paths.add(result.path)
         n = result.clusters.count()
         result.release()
         return n
@@ -251,6 +255,7 @@ def bench_pipeline(spark, sf_dir: str) -> dict[str, float]:
     times["_runs"]["full_pipeline_html"] = [round(x, 2) for x in html_runs]
     html_pages.unpersist()
     times["_n_docs"] = n_docs
+    times["_paths"] = sorted(paths)
 
     pages.unpersist()
     return times
@@ -453,6 +458,7 @@ def main():
     n_docs = int(pipe.pop("_n_docs"))
     pipeline_runs = pipe.pop("_runs", {})
     span_overhead = pipe.pop("_span_overhead", {})
+    pipeline_paths = pipe.pop("_paths", [])
     inc = bench_incremental(spark, sf_dir)
     incremental_runs = inc.pop("_runs", {})
     incremental_paths = inc.pop("_paths", {})
@@ -486,6 +492,8 @@ def main():
                 # which matcher path each of those increments / micro-batches
                 # took ("driver" or "spark")
                 "incremental_paths": incremental_paths,
+                # ... and which path the pipeline legs' runs took
+                "pipeline_paths": pipeline_paths,
                 # drift-cancelled span-pass cost (see bench_pipeline): the
                 # honest flavor comparison, robust where min(span)-min(nospan)
                 # is not

@@ -32,6 +32,13 @@ MERSENNE_PRIME_61 = (1 << 61) - 1
 # 191 MB of payload as Arrow and 190 MB of per-doc shingle sets in numpy:
 # about 0.4 GB, and about 0.3 s of pairing plus 1.2 s of scoring in driver
 # Python on a 4-vCPU host (synthetic rows: one shared band per new doc).
+# ``run_pipeline`` pairs and verifies a pass whose signed docs' band rows fit
+# the bound on the driver too (``driver_pair_stage``): one collect of at most
+# ``DRIVER_MAX_ROWS // bands`` docs' band hashes, SimHash and shingles. At
+# the bound, with the pages above, that is 202 MB of Arrow plus the bucket
+# rows (~20 MB) and the endpoints' shingle sets, and 1.6-1.8 s warm in driver
+# Python on a 4-vCPU host (synthetic docs: 2,500 near-duplicate pairs among
+# 12,500).
 #
 # Set by driver memory, not by a speed crossover: no crossover showed up in
 # the sizes measured. On a 4-vCPU host (local[4]), dedup-shaped graphs

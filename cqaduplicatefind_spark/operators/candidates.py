@@ -396,6 +396,21 @@ def simhash_piece_keys(cfg: DedupConfig, simhash_col: str = "simhash"):
     ]
 
 
+def driver_piece_keys(simhash: np.ndarray, cfg: DedupConfig) -> np.ndarray:
+    """``simhash_piece_keys``' piece values in numpy: (docs, k+1) int64, the
+    same arithmetic shift and mask."""
+    n_pieces = cfg.hamming_k + 1
+    width = cfg.simhash_bits // n_pieces
+    shifts = np.arange(n_pieces, dtype=np.int64) * width
+    return (simhash.astype(np.int64)[:, None] >> shifts) & ((1 << width) - 1)
+
+
+def bit_count(x: np.ndarray) -> np.ndarray:
+    """Set bits per int64, as ``F.bit_count``: the Hamming distance of a xor."""
+    bits = np.unpackbits(np.ascontiguousarray(x, np.int64).view(np.uint8))
+    return bits.reshape(-1, 64).sum(axis=1, dtype=np.int64)
+
+
 def simhash_candidates(
     signatures: DataFrame,
     cfg: DedupConfig,

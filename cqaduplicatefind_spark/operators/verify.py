@@ -26,6 +26,19 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from cqaduplicatefind_spark.config import DedupConfig
+from cqaduplicatefind_spark.operators.candidates import bit_count
+
+# score_pairs / accept_edges output schemas: frames built on the driver (the
+# driver pair stage, the stream's driver path, empty-matches frames) must
+# stay in lockstep with them
+SCORED_SCHEMA = (
+    "id_a string, id_b string, est_jaccard double, hamming int, "
+    "jaccard double, containment double"
+)
+EDGE_SCHEMA = (
+    "id_a string, id_b string, jaccard double, est_jaccard double, "
+    "hamming int, containment double"
+)
 
 
 def _doc_side(
@@ -190,13 +203,13 @@ def accept_condition(cfg: DedupConfig):
     return accept
 
 
-def driver_accept_edges(
+def driver_score_pairs(
     pairs: list[tuple[str, str]], payload: pa.Table, cfg: DedupConfig
-) -> dict[str, list]:
-    """``score_pairs(evidence="exact")`` then ``accept_condition`` on the
-    driver: ``accept_edges``' columns, same doubles, for canonical ``pairs``
-    and one (url, simhash, n_shingles, shingles) ``payload`` row per url. A
-    pair with an endpoint missing from ``payload`` drops out, as in a join."""
+) -> dict[str, np.ndarray]:
+    """``score_pairs(evidence="exact")`` on the driver: its columns, same
+    doubles, as numpy arrays, for canonical ``pairs`` and one (url, simhash,
+    n_shingles, shingles) ``payload`` row per url. A pair with an endpoint
+    missing from ``payload`` drops out, as in a join."""
     row = {u: i for i, u in enumerate(payload["url"].to_pylist())}
     pairs = [(a, b) for a, b in pairs if a in row and b in row]
     ia = np.array([row[a] for a, _ in pairs], dtype=np.int64)
@@ -204,42 +217,50 @@ def driver_accept_edges(
 
     sim = payload["simhash"].to_numpy()
     n_sh = payload["n_shingles"].fill_null(0).to_numpy()
-    bits = np.unpackbits((sim[ia] ^ sim[ib]).view(np.uint8)).reshape(-1, 64)
     # empty-shingle docs share simhash=0: the SimHash route never links them
     hamming = np.where(
-        (n_sh[ia] > 0) & (n_sh[ib] > 0), bits.sum(axis=1), cfg.simhash_bits
-    )
+        (n_sh[ia] > 0) & (n_sh[ib] > 0), bit_count(sim[ia] ^ sim[ib]),
+        cfg.simhash_bits,
+    ).astype(np.int32)
 
     shingles = payload["shingles"].combine_chunks()
     offs = shingles.offsets.to_numpy()
     vals = shingles.values.to_numpy(zero_copy_only=False)
-    sets = [np.unique(vals[lo:hi]) for lo, hi in zip(offs[:-1], offs[1:])]
-    n_set = np.array([s.size for s in sets], dtype=np.int64)
+    # shingle sets of the pairs' endpoints only
+    sets = {
+        r: np.unique(vals[offs[r]:offs[r + 1]])
+        for r in np.unique(np.r_[ia, ib]).tolist()
+    }
+    n_set = np.array([sets[r].size for r in ia.tolist()], dtype=np.int64)
+    n_set_b = np.array([sets[r].size for r in ib.tolist()], dtype=np.int64)
     inter = np.array(
         [np.intersect1d(sets[a], sets[b], assume_unique=True).size
-         for a, b in zip(ia, ib)],
+         for a, b in zip(ia.tolist(), ib.tolist())],
         dtype=np.int64,
     )
-    union = n_set[ia] + n_set[ib] - inter
+    union = n_set + n_set_b - inter
     min_sz = np.minimum(np.diff(offs)[ia], np.diff(offs)[ib])
     with np.errstate(divide="ignore", invalid="ignore"):
         jaccard = np.where(union > 0, inter / union, 0.0)
         containment = np.where(min_sz > 0, inter / min_sz, 0.0)
-
-    accept = jaccard >= cfg.jaccard_threshold
-    if cfg.accept_hamming:
-        accept |= hamming <= cfg.hamming_k
-    if cfg.containment_accept is not None:
-        accept |= containment >= cfg.containment_accept
-    keep = np.flatnonzero(accept)
     return {
-        "id_a": [pairs[i][0] for i in keep],
-        "id_b": [pairs[i][1] for i in keep],
-        "jaccard": jaccard[keep].tolist(),
-        "est_jaccard": jaccard[keep].tolist(),  # exact evidence
-        "hamming": hamming[keep].tolist(),
-        "containment": containment[keep].tolist(),
+        "id_a": np.array([a for a, _ in pairs], dtype=object),
+        "id_b": np.array([b for _, b in pairs], dtype=object),
+        "est_jaccard": jaccard,  # exact evidence
+        "hamming": hamming,
+        "jaccard": jaccard,
+        "containment": containment,
     }
+
+
+def driver_accept(scored: dict[str, np.ndarray], cfg: DedupConfig) -> np.ndarray:
+    """``accept_condition`` over ``driver_score_pairs``' columns: a bool mask."""
+    accept = scored["jaccard"] >= cfg.jaccard_threshold
+    if cfg.accept_hamming:
+        accept |= scored["hamming"] <= cfg.hamming_k
+    if cfg.containment_accept is not None:
+        accept |= scored["containment"] >= cfg.containment_accept
+    return accept
 
 
 def accept_edges(scored: DataFrame, cfg: DedupConfig) -> DataFrame:

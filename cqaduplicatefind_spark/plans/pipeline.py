@@ -15,6 +15,10 @@ Shuffle budget (the plan you'd want at 10^12 docs):
   2. candidates: one shuffle on band key (+ one on simhash piece key), one on the
      pair key for dedup.
   3. verify: two id-key shuffles (attach signature evidence to each pair side).
+  Items 2-3 hold above ``config.DRIVER_MAX_ROWS`` band rows only. Below it,
+  with exact evidence, ``driver_pair_stage`` collects the signatures once and
+  pairs and scores them on the driver (no shuffle), unless a bucket is hot
+  or a url repeats.
   4. clustering: the accepted-edge set is usually tiny, and up to
      ``config.DRIVER_MAX_ROWS`` edges it is collected in one job and
      union-found on the driver (no shuffle); larger sets run O(log n)
@@ -28,22 +32,29 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.config import DedupConfig
 from cqaduplicatefind_spark.functions.html_strip import with_extracted_text
 from cqaduplicatefind_spark.functions.normalize import with_normalized_text
 from cqaduplicatefind_spark.functions.signatures import with_signatures
 from cqaduplicatefind_spark.operators.candidates import (
-    minhash_lsh_candidates,
-    simhash_candidates,
+    band_keys, bit_count, driver_bucket_pairs, driver_piece_keys,
+    minhash_lsh_candidates, null_safe_group, simhash_candidates,
 )
 from cqaduplicatefind_spark.operators.connected_components import (
     attach_singletons,
     connected_components,
 )
-from cqaduplicatefind_spark.operators.verify import accept_edges, score_pairs
-from cqaduplicatefind_spark.session import non_adaptive_count, small_plans
+from cqaduplicatefind_spark.operators.verify import (
+    EDGE_SCHEMA, SCORED_SCHEMA, accept_edges, driver_accept, driver_score_pairs,
+    score_pairs,
+)
+from cqaduplicatefind_spark.session import arrow_frame, non_adaptive_count, small_plans
 from cqaduplicatefind_spark.sources.warehouse import Warehouse
 
 
@@ -57,6 +68,7 @@ class PipelineResult:
     overlap_edges: DataFrame | None = None
     stage_metrics: dict = field(default_factory=dict)
     persisted: list = field(default_factory=list)
+    path: str = "spark"  # or "driver": driver_pair_stage paired and scored
 
     def release(self) -> None:
         """Unpersist every frame run_pipeline cached (signatures, candidates,
@@ -165,6 +177,61 @@ def candidate_stage(
     return u.dropDuplicates(["id_a", "id_b"])
 
 
+def driver_pair_stage(
+    signatures: DataFrame, cfg: DedupConfig, group_col: str | None = None
+) -> tuple[dict[str, np.ndarray], np.ndarray] | None:
+    """``candidate_stage(mode="base")`` and ``score_pairs(evidence="exact")``
+    on the driver, for signatures whose band rows fit
+    ``config.DRIVER_MAX_ROWS``: one collect, the stream path's bucket pairing
+    (``driver_bucket_pairs``) over the band keys and the SimHash pieces, the
+    Hamming gate on piece pairs, and the stream path's scorer. Returns the
+    scored columns of every candidate pair and the ``accept_condition``
+    mask. None sends the pass to the Spark plans: a bucket holds more than
+    ``max_band_group`` rows (stars and the rescue round are the Spark
+    kernel's), or a url repeats (the Spark joins would repeat its rows)."""
+    g = [group_col] if group_col else []
+    docs = null_safe_group(signatures, group_col).select(
+        "url", *g,
+        # band_keys' JVM-side hashes: the Spark path's keys, bit for bit
+        F.array(*[k.getField("bh") for k in band_keys(cfg)]).alias("bh"),
+        "simhash", "n_shingles", "shingles",
+    ).toArrow()
+    if pc.count_distinct(docs["url"], mode="all").as_py() < docs.num_rows:
+        return None
+    # zero-shingle docs share the sentinel signature: never candidates
+    docs = docs.filter(pc.greater(docs["n_shingles"], 0))
+    n = docs.num_rows
+    group = (
+        docs[group_col].combine_chunks().dictionary_encode().indices.to_numpy()
+        if group_col else np.zeros(n, dtype=np.int64)
+    ).astype(np.int64)
+
+    def bucket_pairs(keys: np.ndarray) -> list[tuple[str, str]] | None:
+        # a (group, family slot) pair folds into the band column of the key
+        per_doc = keys.shape[1]
+        slot = group[:, None] * per_doc + np.arange(per_doc)
+        rows = pa.table({
+            "id": docs["url"].take(np.repeat(np.arange(n), per_doc)),
+            "band": slot.ravel(),
+            "bh": keys.ravel(),
+        })
+        return driver_bucket_pairs(rows, rows.slice(0, 0), cfg.max_band_group)
+
+    bh = docs["bh"].combine_chunks().flatten().to_numpy()
+    lsh = bucket_pairs(bh.reshape(n, cfg.bands))
+    sim = docs["simhash"].to_numpy()
+    piece = bucket_pairs(driver_piece_keys(sim, cfg))
+    if lsh is None or piece is None:
+        return None
+    row = {u: i for i, u in enumerate(docs["url"].to_pylist())}
+    ia = np.array([row[a] for a, _ in piece], dtype=np.int64)
+    ib = np.array([row[b] for _, b in piece], dtype=np.int64)
+    near = bit_count(sim[ia] ^ sim[ib]) <= cfg.hamming_k
+    pairs = set(lsh).union(p for p, ok in zip(piece, near) if ok)
+    scored = driver_score_pairs(sorted(pairs), docs, cfg)
+    return scored, driver_accept(scored, cfg)
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -190,7 +257,9 @@ def run_pipeline(
 
     A corpus of at most ``config.DRIVER_MAX_ROWS`` band rows runs every stage
     after the signatures non-adaptive (``session.small_plans``); frames the
-    result leaves lazy plan under the caller's setting when acted on."""
+    result leaves lazy plan under the caller's setting when acted on. With
+    exact evidence it also pairs and verifies on the driver
+    (``driver_pair_stage``; ``PipelineResult.path`` says which path ran)."""
 
     persisted: list = []
 
@@ -216,9 +285,13 @@ def run_pipeline(
     # and the row count scopes their plans
     n_sig = non_adaptive_count(signatures)
     with small_plans(spark, n_sig * cfg.bands):
+        driver = None
+        if (n_sig * cfg.bands <= config.DRIVER_MAX_ROWS
+                and cfg.verify_evidence == "exact"):
+            driver = driver_pair_stage(signatures, cfg, group_col)
         return _pair_and_cluster(
             pages, cfg, warehouse, group_col, timings, stage, persisted,
-            signatures,
+            signatures, driver,
         )
 
 
@@ -231,88 +304,31 @@ def _pair_and_cluster(
     stage,
     persisted: list,
     signatures: DataFrame,
+    driver: tuple[dict, np.ndarray] | None,
 ) -> PipelineResult:
     """``run_pipeline`` after the signature stage: candidates, verify, the
-    rescue round, the span pass and clustering."""
-    candidates = stage(
-        "candidate_pairs",
-        lambda: candidate_stage(signatures, cfg, group_col, mode="base"),
-        reused=True,  # feeds scoring AND the rescue round's orphan derivation
-    )
-    # is_star rides through scoring so the rescue round's orphan probe can read
-    # the rejected side of the accept decision straight off the scored frame
-    # (see below) instead of anti-joining two million-row frames. A warehouse
-    # checkpoint written before candidate_stage emitted is_star fails here.
-    scored = stage(
-        "scored_pairs",
-        lambda: score_pairs(
-            candidates, signatures, cfg, evidence=cfg.verify_evidence,
-            keep_cols=("is_star",),
-        ),
-        reused=cfg.verify_evidence == "exact",  # edges + orphan probe
-    )
-    edges = stage("dup_edges", lambda: accept_edges(scored, cfg), reused=True)
-
-    # rescue round (operators/candidates.py module docstring): members of
-    # MinHash-band star edges that verify REJECTED ("orphans") get salted
-    # sub-bucket pairing inside their hot buckets (both bucket families) —
-    # recovering true pairs a heterogeneous hot bucket's star backbone cannot
-    # connect. SimHash stars carry is_star=false (hot piece buckets are noise
-    # collisions; their rejections are expected, not a heterogeneity signal).
-    # On homogeneous corpora (hot bands = one dup family, stars all pass) the
-    # orphan set is empty and the round is skipped: the pipeline pays O(m) per
-    # hot bucket, never C(m,2)/n_sub, unless verify proves a band heterogeneous.
-    rescue_edges = None
-    if cfg.verify_evidence == "exact":
-        # evidence="exact" has no estimate prefilter, so EVERY candidate
-        # pair reaches the scored frame and a rejected star edge is simply
-        # a scored row failing the accept condition — one filter over the
-        # persisted scored cache, no join. ("both"/"estimate" drop
-        # implausible pairs before scoring; a prefiltered-away star edge is
-        # also a rejection, so those modes keep the anti-join below.)
-        from cqaduplicatefind_spark.operators.verify import accept_condition
-
-        orphans = (
-            scored.where(F.col("is_star") & ~accept_condition(cfg))
-            .select(F.explode(F.array("id_a", "id_b")).alias("id"))
-            .distinct()
+    rescue round, the span pass and clustering. ``driver`` is
+    ``driver_pair_stage``'s result, if any: it has no stars to rescue."""
+    rescued = False
+    if driver is None:
+        candidates, scored, edges, rescued = _spark_pairs(
+            cfg, group_col, stage, signatures
         )
     else:
-        orphans = (
-            candidates.where(F.col("is_star"))
-            .join(edges.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
-            .select(F.explode(F.array("id_a", "id_b")).alias("id"))
-            .distinct()
+        cols, accept = driver
+        cols["is_star"] = np.zeros(len(accept), dtype=bool)
+
+        def frame(schema: str, columns: dict):
+            return lambda: arrow_frame(signatures.sparkSession, schema, columns)
+
+        candidates = stage(
+            "candidate_pairs",
+            frame("id_a string, id_b string, is_star boolean", cols),
         )
-    # count, not isEmpty: orphans is usually EMPTY (homogeneous corpora),
-    # and take(1) on an empty frame runs its scan in several escalating
-    # waves — each wave re-driving the candidate+verify mega-job's final
-    # stage. count() is one wave plus a scalar agg, and it materializes
-    # the persisted candidates/edges caches the rescue branch reads anyway.
-    if orphans.count() > 0:
-        rescue_cands = stage(
-            "rescue_pairs",
-            lambda: candidate_stage(
-                signatures, cfg, group_col, mode="rescue", orphans=orphans
-            ).join(
-                candidates.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
-            ),
+        scored = stage("scored_pairs", frame(SCORED_SCHEMA + ", is_star boolean", cols))
+        edges = stage(
+            "dup_edges", frame(EDGE_SCHEMA, {c: v[accept] for c, v in cols.items()})
         )
-        rescue_edges = stage(
-            "rescue_edges",
-            lambda: accept_edges(
-                score_pairs(
-                    rescue_cands, signatures, cfg, evidence=cfg.verify_evidence
-                ),
-                cfg,
-            ),
-            # components reads the union twice when it is larger than the
-            # driver bound (the bounded probe, then the star loop's
-            # checkpoint): without a persist the rescue candidate, score
-            # and accept plan runs twice
-            reused=True,
-        )
-        edges = edges.unionByName(rescue_edges)
 
     # the suffix-array-analog stage (north_star): exact-span edges for pairs
     # sharing a contiguous run >= min_overlap_span tokens, discovered corpus-wide
@@ -424,7 +440,7 @@ def _pair_and_cluster(
     stage_metrics: dict = {}
     if warehouse is not None:
         tables = ["signatures", "candidate_pairs", "scored_pairs", "dup_edges"]
-        if rescue_edges is not None:
+        if rescued:
             tables.extend(["rescue_pairs", "rescue_edges"])
         if overlap_edges is not None:
             tables.extend(["pre_clusters", "overlap_edges"])
@@ -434,8 +450,96 @@ def _pair_and_cluster(
 
     return PipelineResult(
         signatures, candidates, scored, edges, clusters, overlap_edges,
-        stage_metrics, persisted,
+        stage_metrics, persisted, "spark" if driver is None else "driver",
     )
+
+
+def _spark_pairs(
+    cfg: DedupConfig, group_col: str | None, stage, signatures: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame, bool]:
+    """The candidate, score and accept plans, then the rescue round:
+    (candidates, scored, edges with any rescue edges, whether it ran)."""
+    candidates = stage(
+        "candidate_pairs",
+        lambda: candidate_stage(signatures, cfg, group_col, mode="base"),
+        reused=True,  # feeds scoring AND the rescue round's orphan derivation
+    )
+    # is_star rides through scoring so the rescue round's orphan probe can read
+    # the rejected side of the accept decision straight off the scored frame
+    # (see below) instead of anti-joining two million-row frames. A warehouse
+    # checkpoint written before candidate_stage emitted is_star fails here.
+    scored = stage(
+        "scored_pairs",
+        lambda: score_pairs(
+            candidates, signatures, cfg, evidence=cfg.verify_evidence,
+            keep_cols=("is_star",),
+        ),
+        reused=cfg.verify_evidence == "exact",  # edges + orphan probe
+    )
+    edges = stage("dup_edges", lambda: accept_edges(scored, cfg), reused=True)
+
+    # rescue round (operators/candidates.py module docstring): members of
+    # MinHash-band star edges that verify REJECTED ("orphans") get salted
+    # sub-bucket pairing inside their hot buckets (both bucket families) —
+    # recovering true pairs a heterogeneous hot bucket's star backbone cannot
+    # connect. SimHash stars carry is_star=false (hot piece buckets are noise
+    # collisions; their rejections are expected, not a heterogeneity signal).
+    # On homogeneous corpora (hot bands = one dup family, stars all pass) the
+    # orphan set is empty and the round is skipped: the pipeline pays O(m) per
+    # hot bucket, never C(m,2)/n_sub, unless verify proves a band heterogeneous.
+    rescue_edges = None
+    if cfg.verify_evidence == "exact":
+        # evidence="exact" has no estimate prefilter, so EVERY candidate
+        # pair reaches the scored frame and a rejected star edge is simply
+        # a scored row failing the accept condition — one filter over the
+        # persisted scored cache, no join. ("both"/"estimate" drop
+        # implausible pairs before scoring; a prefiltered-away star edge is
+        # also a rejection, so those modes keep the anti-join below.)
+        from cqaduplicatefind_spark.operators.verify import accept_condition
+
+        orphans = (
+            scored.where(F.col("is_star") & ~accept_condition(cfg))
+            .select(F.explode(F.array("id_a", "id_b")).alias("id"))
+            .distinct()
+        )
+    else:
+        orphans = (
+            candidates.where(F.col("is_star"))
+            .join(edges.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
+            .select(F.explode(F.array("id_a", "id_b")).alias("id"))
+            .distinct()
+        )
+    # count, not isEmpty: orphans is usually EMPTY (homogeneous corpora),
+    # and take(1) on an empty frame runs its scan in several escalating
+    # waves — each wave re-driving the candidate+verify mega-job's final
+    # stage. count() is one wave plus a scalar agg, and it materializes
+    # the persisted candidates/edges caches the rescue branch reads anyway.
+    if orphans.count() > 0:
+        rescue_cands = stage(
+            "rescue_pairs",
+            lambda: candidate_stage(
+                signatures, cfg, group_col, mode="rescue", orphans=orphans
+            ).join(
+                candidates.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
+            ),
+        )
+        rescue_edges = stage(
+            "rescue_edges",
+            lambda: accept_edges(
+                score_pairs(
+                    rescue_cands, signatures, cfg, evidence=cfg.verify_evidence
+                ),
+                cfg,
+            ),
+            # components reads the union twice when it is larger than the
+            # driver bound (the bounded probe, then the star loop's
+            # checkpoint): without a persist the rescue candidate, score
+            # and accept plan runs twice
+            reused=True,
+        )
+        edges = edges.unionByName(rescue_edges)
+
+    return candidates, scored, edges, rescue_edges is not None
 
 
 def dedup_clusters_df(spark: SparkSession, pages: DataFrame, cfg: DedupConfig) -> DataFrame:

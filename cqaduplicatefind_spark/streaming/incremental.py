@@ -33,10 +33,11 @@ Design (the part that must stay sub-linear per batch at 10^12 docs):
 - **a small micro-batch pairs and verifies on the driver** (band rows at
   most ``config.DRIVER_MAX_ROWS``, exact evidence): its band rows and the
   touched index rows are collected, paired by ``driver_bucket_pairs`` and
-  scored by ``driver_accept_edges`` — the same rules, without building the
-  pairing and verify plans that were most of a 100-doc trigger's cost. Spark
-  still runs every scan and store write. A hot bucket, an overflowing probe
-  or too many endpoints send the batch to the Spark plans above;
+  scored by ``driver_score_pairs`` / ``driver_accept`` — the same rules,
+  without building the pairing and verify plans that were most of a 100-doc
+  trigger's cost. Spark still runs every scan and store write. A hot
+  bucket, an overflowing probe or too many endpoints send the batch to the
+  Spark plans above;
 - the band/signature stores are **tier-compacted**: every ``compact_every``
   small per-batch parts fold into one tier (write work bounded by those
   parts, not the store), and tiers themselves merge once ``compact_every`` of
@@ -71,8 +72,10 @@ from cqaduplicatefind_spark.operators.candidates import (
     explode_bands,
 )
 from cqaduplicatefind_spark.operators.verify import (
+    EDGE_SCHEMA,
     accept_edges,
-    driver_accept_edges,
+    driver_accept,
+    driver_score_pairs,
     score_pairs,
 )
 from cqaduplicatefind_spark.session import (
@@ -81,7 +84,6 @@ from cqaduplicatefind_spark.session import (
     small_plans,
 )
 from cqaduplicatefind_spark.streaming.store import (  # noqa: F401 (re-export)
-    EDGE_SCHEMA,
     SIG_STORE_SCHEMA,
     open_stores,
     store_roots,
@@ -461,7 +463,9 @@ class IncrementalDedup:
         for i, u in enumerate(payload["url"].to_pylist()):
             first.setdefault(u, i)  # compaction crash-window tolerance
         payload = payload.take(list(first.values()))
-        edges = driver_accept_edges(pairs, payload, self.cfg)
+        scored = driver_score_pairs(pairs, payload, self.cfg)
+        keep = driver_accept(scored, self.cfg)
+        edges = {c: v[keep] for c, v in scored.items()}
         return arrow_frame(self.spark, EDGE_SCHEMA, edges), payload.num_rows
 
     def matches(self) -> DataFrame:

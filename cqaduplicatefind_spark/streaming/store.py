@@ -50,16 +50,12 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DataType
 
+from cqaduplicatefind_spark.operators.verify import EDGE_SCHEMA
+
 BAND_STORE_SCHEMA = "id string, band int, bh long, src_batch long"
 SIG_STORE_SCHEMA = (
     "url string, minhash array<long>, simhash long, n_tokens int, "
     "n_shingles int, shingles array<long>"
-)
-# accept_edges output schema — the empty-matches frame and any caller
-# synthesizing an edge frame must stay in lockstep with score_pairs/accept_edges
-EDGE_SCHEMA = (
-    "id_a string, id_b string, jaccard double, est_jaccard double, "
-    "hamming int, containment double"
 )
 
 BAND_ROWS_PER_FILE = 4_000_000  # ~50B/row -> ~200MB files

@@ -1,0 +1,221 @@
+"""A pipeline pass whose band rows fit ``config.DRIVER_MAX_ROWS`` pairs and
+verifies on the driver (``plans.pipeline.driver_pair_stage``). The driver
+path must give exactly the Spark path's candidates, scores, edges, span edges
+and clusters, run a pinned number of jobs, build no candidate or score plan,
+and hand every pass it cannot take to the unchanged Spark plans."""
+
+from __future__ import annotations
+
+import pytest
+from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
+
+from cqaduplicatefind_spark import config
+from cqaduplicatefind_spark.config import DedupConfig
+from cqaduplicatefind_spark.plans import pipeline
+
+CFG = DedupConfig(shingle_k=3, jaccard_threshold=0.7, min_overlap_span=40,
+                  shuffle_partitions=4, signature_partitions=4)
+
+
+def _words(tag, n):
+    return " ".join(f"{tag}w{j}" for j in range(n))
+
+
+def _signed(x):
+    return x - (1 << 64) if x >= 1 << 63 else x
+
+
+@st.composite
+def _corpora(draw, variant):
+    """Pages (url, text, grp) plus SimHash overrides (url -> value).
+
+    - planted families of 2-4 near-duplicates;
+    - a containment shell around a family's content, so the span pass
+      yields an edge;
+    - ``sa``/``sb``: unrelated texts whose SimHashes differ in 1-3 bits (a
+      SimHash-only pair); ``sc``: shares ``sa``'s lowest piece but differs in
+      five other bits (a piece collision the Hamming gate drops);
+    - 2-3 zero-shingle docs;
+    - ``grouped``: docs spread over groups g0, g1 and NULL, one family split
+      across g0 and NULL, one inside NULL;
+    - ``hot``: a family of ``max_band_group + 2`` copies;
+    - ``dup_url``: a second row for one url."""
+    grouped = variant == "grouped"
+    groups = ["g0", "g1", None] if grouped else [None]
+    rows = []
+
+    def add(url, text, *group):
+        rows.append((url, text, *(group or [draw(st.sampled_from(groups))])))
+
+    for f, size in enumerate(draw(st.lists(st.integers(2, 4), min_size=1,
+                                           max_size=3))):
+        base = _words(f"fam{f}", 40)
+        for m in range(size):
+            add(f"fam{f}m{m}", f"{base} tail{m}")
+    content = _words("story", 50)
+    shell = _words("boiler", 60)
+    # each trio shares one group: the span edge and the SimHash-only edge
+    # must form on both paths
+    g = draw(st.sampled_from(groups))
+    add("page", content, g)
+    add("page-copy", content + " tail", g)
+    add("shellpage", f"{shell} {content} {shell}", g)
+    g = draw(st.sampled_from(groups))
+    for u in ("sa", "sb", "sc"):
+        add(u, _words(u, 30), g)
+    for i in range(draw(st.integers(2, 3))):
+        add(f"short{i}", f"zq{i}")
+    for i in range(draw(st.integers(0, 2))):
+        add(f"noise{i}", _words(f"noise{i}", 30))
+    if grouped:
+        base = _words("cross", 40)
+        rows += [("cross0", base, "g0"), ("cross1", base + " tail", None),
+                 ("null0", _words("nul", 40), None),
+                 ("null1", _words("nul", 40) + " tail", None)]
+    if variant == "hot":
+        rows += [(f"hot{i}", _words("hot", 40), None)
+                 for i in range(CFG.max_band_group + 2)]
+    if variant == "dup_url":
+        rows.append(("fam0m0", _words("other", 40), None))
+
+    x = draw(st.integers(0, (1 << 64) - 1))
+    flips = draw(st.sets(st.integers(0, 63), min_size=1, max_size=3))
+    decoy = draw(st.sets(st.integers(16, 63), min_size=5, max_size=5))
+    sims = {
+        "sa": x,
+        "sb": x ^ sum(1 << b for b in flips),
+        "sc": x ^ sum(1 << b for b in decoy),
+    }
+    return rows, {u: _signed(v) for u, v in sims.items()}
+
+
+def _with_simhashes(monkeypatch, sims):
+    real = pipeline.signature_stage
+
+    def stage(normalized, cfg, group_col=None):
+        sigs = real(normalized, cfg, group_col)
+        sim = F.col("simhash")
+        for u, v in sims.items():
+            sim = F.when(F.col("url") == u, F.lit(v)).otherwise(sim)
+        return sigs.withColumn("simhash", sim)
+
+    monkeypatch.setattr(pipeline, "signature_stage", stage)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _run(spark, pages, group_col):
+    result = pipeline.run_pipeline(spark, pages, CFG, group_col=group_col)
+    try:
+        return result.path, {
+            name: _rows(getattr(result, name))
+            for name in ("candidates", "scored", "edges", "overlap_edges",
+                         "clusters")
+        }
+    finally:
+        result.release()
+
+
+@pytest.mark.parametrize("variant, path", [
+    ("plain", "driver"),
+    ("grouped", "driver"),
+    ("hot", "spark"),
+    ("dup_url", "spark"),
+])
+@settings(max_examples=2, deadline=None, derandomize=True)
+@given(data=st.data())
+def test_driver_path_equals_spark_path(spark, variant, path, data):
+    """Differential: the same pages, once on the default path and once with
+    the Spark path forced (the bound below every pass), give identical
+    candidates, scored pairs and edges (all columns, exact doubles), span
+    edges and clusters. A hot bucket or a repeated url falls back."""
+    rows, sims = data.draw(_corpora(variant))
+    pages = spark.createDataFrame(rows, "url string, text string, grp string")
+    group_col = "grp" if variant == "grouped" else None
+    with pytest.MonkeyPatch.context() as mp:
+        _with_simhashes(mp, sims)
+        got_path, got = _run(spark, pages, group_col)
+        mp.setattr(config, "DRIVER_MAX_ROWS", -1)
+        forced_path, forced = _run(spark, pages, group_col)
+    assert (got_path, forced_path) == (path, "spark")
+    for name in got:
+        assert got[name] == forced[name], name
+    # the corpus shapes were live: a span edge, a SimHash-only edge
+    assert got["overlap_edges"]
+    sa_sb = [e for e in got["edges"] if e[:2] == ("sa", "sb")]
+    assert sa_sb and sa_sb[0][2] < CFG.jaccard_threshold
+
+
+def _pages(spark, rows):
+    return spark.createDataFrame(rows, "url string, text string")
+
+
+FAMILY = [("fam0", _words("fam", 40)), ("fam1", _words("fam", 40) + " tail"),
+          ("noise", _words("noise", 30))]
+
+
+@pytest.fixture
+def plan_calls(monkeypatch):
+    """Names of the Spark candidate and score plans run_pipeline builds."""
+    calls: list[str] = []
+    for name in ("candidate_stage", "score_pairs"):
+        real = getattr(pipeline, name)
+
+        def spy(*a, _real=real, _name=name, **kw):
+            calls.append(_name)
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(pipeline, name, spy)
+    return calls
+
+
+def test_driver_pass_job_count_is_pinned(spark, plan_calls):
+    """A below-bound, span-free pass on the driver path runs 3 jobs: the
+    signature count that fills the cache, the one signature collect, and the
+    bounded edge collect of components. It builds no candidate or score
+    plan."""
+    cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.7, span_pass=False,
+                      shuffle_partitions=4, signature_partitions=4)
+    pages = _pages(spark, FAMILY)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("driver-pass", "driver-pass")
+    try:
+        result = pipeline.run_pipeline(spark, pages, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    try:
+        assert result.path == "driver"
+        assert plan_calls == []
+        assert len(tracker.getJobIdsForGroup("driver-pass")) == 3
+        assert _rows(result.edges.select("id_a", "id_b")) == [("fam0", "fam1")]
+    finally:
+        result.release()
+
+
+@pytest.mark.parametrize("case", ["hot", "estimate", "dup_url", "above_bound"])
+def test_fallback_runs_the_spark_plans(spark, monkeypatch, plan_calls, case):
+    rows, cfg = list(FAMILY), CFG
+    if case == "hot":
+        rows += [(f"hot{i}", _words("hot", 40))
+                 for i in range(cfg.max_band_group + 1)]
+    elif case == "estimate":
+        cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.7,
+                          verify_evidence="both", shuffle_partitions=4,
+                          signature_partitions=4)
+    elif case == "dup_url":
+        rows.append(("noise", _words("other", 30)))
+    else:
+        # three docs x 16 bands = 48 band rows: over a bound of 47
+        monkeypatch.setattr(config, "DRIVER_MAX_ROWS", 3 * cfg.bands - 1)
+    result = pipeline.run_pipeline(spark, _pages(spark, rows), cfg)
+    try:
+        assert result.path == "spark"
+        assert "candidate_stage" in plan_calls and "score_pairs" in plan_calls
+        assert ("fam0", "fam1") in _rows(result.edges.select("id_a", "id_b"))
+    finally:
+        result.release()

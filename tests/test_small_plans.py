@@ -219,6 +219,10 @@ def test_batch_from_another_session_scopes_both(spark, tmp_path, monkeypatch):
 
 
 def _spy_candidates(monkeypatch) -> list[str]:
+    """Root plan nodes of the candidate frames run_pipeline builds. Pins the
+    pass to the Spark path: below the bound, ``driver_pair_stage`` would
+    otherwise pair on the driver and build no candidate plan."""
+    monkeypatch.setattr(pipeline, "driver_pair_stage", lambda *a, **kw: None)
     roots: list[str] = []
     real = pipeline.candidate_stage
 
@@ -262,7 +266,22 @@ def test_run_pipeline_restores_conf_when_a_stage_raises(
         assert spark.conf.get(AQE) == "false"
         raise RuntimeError("injected failure: candidates")
 
+    # pinned to the Spark path, whose candidate stage raises
+    monkeypatch.setattr(pipeline, "driver_pair_stage", lambda *a, **kw: None)
     monkeypatch.setattr(pipeline, "candidate_stage", explode)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        pipeline.run_pipeline(spark, tiny_fixture[0], cfg)
+    assert spark.conf.get(AQE) == "true"
+
+
+def test_run_pipeline_restores_conf_when_the_driver_stage_raises(
+    spark, cfg, tiny_fixture, monkeypatch
+):
+    def explode(*a, **kw):
+        assert spark.conf.get(AQE) == "false"
+        raise RuntimeError("injected failure: driver pairs")
+
+    monkeypatch.setattr(pipeline, "driver_pair_stage", explode)
     with pytest.raises(RuntimeError, match="injected failure"):
         pipeline.run_pipeline(spark, tiny_fixture[0], cfg)
     assert spark.conf.get(AQE) == "true"
