@@ -21,14 +21,13 @@ MERSENNE_PRIME_61 = (1 << 61) - 1
 
 # Row bound for work that runs on (or ships through) the driver instead of a
 # distributed plan: connected components union-finds edge sets of at most
-# this many rows in driver Python (``connected_components(driver_max_edges=)``),
-# the exact-span pass broadcasts candidate-pair sets up to it, and
-# ``IncrementalDedup.process_batch`` pairs and verifies a micro-batch of at
-# most this many band rows on the driver. That path holds at most the new
-# band rows, as many touched index rows and the payloads of
-# ``DRIVER_MAX_ROWS // bands`` candidate endpoints. At the bound, with
-# ~65-byte URL ids and 2000-token pages (1996 shingles each, as in
-# dedupbench's batch_lowdup), that is 15 + 15 MB of band rows as Arrow,
+# this many rows in driver Python, the exact-span pass broadcasts
+# candidate-pair sets up to it, and ``IncrementalDedup.process_batch`` pairs
+# and verifies a micro-batch of at most this many band rows on the driver.
+# That path holds at most the new band rows, as many touched index rows and
+# the payloads of ``DRIVER_MAX_ROWS // bands`` candidate endpoints. At the
+# bound, with ~65-byte URL ids and 2000-token pages (1996 shingles each, as
+# in dedupbench's batch_lowdup), that is 15 + 15 MB of band rows as Arrow,
 # 191 MB of payload as Arrow and 190 MB of per-doc shingle sets in numpy:
 # about 0.4 GB, and about 0.3 s of pairing plus 1.2 s of scoring in driver
 # Python on a 4-vCPU host (synthetic rows: one shared band per new doc).
@@ -38,7 +37,8 @@ MERSENNE_PRIME_61 = (1 << 61) - 1
 # the bound, with the pages above, that is 202 MB of Arrow plus the bucket
 # rows (~20 MB) and the endpoints' shingle sets, and 1.6-1.8 s warm in driver
 # Python on a 4-vCPU host (synthetic docs: 2,500 near-duplicate pairs among
-# 12,500).
+# 12,500). Every user reads ``config.DRIVER_MAX_ROWS`` when called, never a
+# copy bound at import, so one raised (or monkeypatched) value moves them all.
 #
 # Set by driver memory, not by a speed crossover: no crossover showed up in
 # the sizes measured. On a 4-vCPU host (local[4]), dedup-shaped graphs

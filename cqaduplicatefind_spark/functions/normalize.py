@@ -99,9 +99,3 @@ def with_normalized_text(df, text_col: str = "text", out_col: str = "norm_text")
     """pages(text) -> pages + normalized text. Narrow map, no shuffle."""
     return df.withColumn(out_col, normalize_udf(F.col(text_col)))
 
-
-def tokens_col(col):
-    """Normalized text -> token array (normalization guarantees single spaces, so a
-    plain split is exact; reference tokenizes with ``doc.split(" ")`` at
-    ``src/BM25DuplicateRetriever.py:46``). Pure Catalyst expression — JVM-side."""
-    return F.split(col, " ")

@@ -1,9 +1,9 @@
 """Connected components over the candidate-edge DataFrame, on one of two paths
 that give identical assignments:
 
-- **Driver path** (edge sets of at most ``driver_max_edges`` rows, default
-  ``config.DRIVER_MAX_ROWS``): one bounded collect job brings the canonical
-  edges to the driver as Arrow, a union-find with min-id roots labels them in
+- **Driver path** (edge sets of at most ``config.DRIVER_MAX_ROWS`` rows, read
+  when called): one bounded collect job brings the canonical edges to the
+  driver as Arrow, a union-find with min-id roots labels them in
   Python, and the assignment comes back as an Arrow-built frame. Verification
   can leave a small accepted edge set (the ``batch_lowdup`` benchmark workload:
   28 pairs over 200 docs), where the star loop below is pure fixed cost: a
@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructField, StructType
 
-from cqaduplicatefind_spark.config import DRIVER_MAX_ROWS
+from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.session import arrow_frame
 
 
@@ -180,21 +180,20 @@ def connected_components(
     assume_unconverged: bool = False,
     input_distinct: bool = False,
     persisted: list | None = None,
-    driver_max_edges: int = DRIVER_MAX_ROWS,
     stats: dict | None = None,
 ) -> DataFrame:
     """edges(id_a, id_b) -> assignments(id, cluster_id) for every node that appears
     in an edge. cluster_id = min node id in the component. Callers attach singletons
     with a left join + coalesce (see ``plans.pipeline``).
 
-    ``driver_max_edges`` bounds the driver path: a canonical edge set (oriented,
-    self-loops dropped, duplicates NOT yet dropped) of at most that many rows is
-    collected in one ``limit``-bounded job and union-found in driver Python;
-    the assignment comes back as an Arrow-built frame, with no checkpoint and
+    ``config.DRIVER_MAX_ROWS``, read when called, bounds the driver path: a
+    canonical edge set (oriented, self-loops dropped, duplicates NOT yet
+    dropped) of at most that many rows is collected in one ``limit``-bounded
+    job and union-found in driver Python; the assignment comes back as an Arrow-built frame, with no checkpoint and
     nothing persisted. A larger set pays that one bounded probe job (at most
-    ``driver_max_edges + 1`` rows reach the driver) and then runs the star
+    ``DRIVER_MAX_ROWS + 1`` rows reach the driver) and then runs the star
     loop unchanged, which reads ``edges`` a second time: persist an
-    ``edges`` plan that is costly to re-run. ``driver_max_edges=0`` forces
+    ``edges`` plan that is costly to re-run. A bound of 0 or below forces
     the star loop. Both paths label by min id, so ids must order the same in
     Python and Spark: strings (UTF-8 byte order is code-point order) and
     integers do. On the driver path ``stats`` (a dict) receives ``nodes``,
@@ -237,12 +236,13 @@ def connected_components(
         )
         .where(F.col("id_a") != F.col("id_b"))
     )
-    if driver_max_edges > 0:
+    bound = config.DRIVER_MAX_ROWS
+    if bound > 0:
         # limit + toArrow is ONE job (a plain collect of a limit scans the
         # partitions in escalating waves); duplicates are harmless to
         # union-find, so the bound needs no dedup shuffle first
-        table = cur.limit(driver_max_edges + 1).toArrow()
-        if table.num_rows <= driver_max_edges:
+        table = cur.limit(bound + 1).toArrow()
+        if table.num_rows <= bound:
             ids, labels = _min_root_components(
                 table.column("id_a").to_pylist(), table.column("id_b").to_pylist()
             )

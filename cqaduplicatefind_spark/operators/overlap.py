@@ -42,7 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from cqaduplicatefind_spark.config import DRIVER_MAX_ROWS, DedupConfig
+from cqaduplicatefind_spark import config
+from cqaduplicatefind_spark.config import DedupConfig
 from cqaduplicatefind_spark.functions.hashing import (  # noqa: F401 (re-exports)
     RollingHash,
     TokenHasher,
@@ -430,7 +431,7 @@ def exact_span_edges(
     # few candidates (the usual case after same-cluster pruning): broadcast the
     # pair side so the doc joins stay exchange-free for the corpus table — the
     # driver-side analog of AQE's SMJ->BHJ rewrite, decided on the actual count
-    pairs = F.broadcast(cands) if n <= DRIVER_MAX_ROWS else cands
+    pairs = F.broadcast(cands) if n <= config.DRIVER_MAX_ROWS else cands
     spans = overlap_spans(pairs, normalized, id_col, text_col)
     return spans.where(F.col("overlap_span") >= cfg.min_overlap_span)
 

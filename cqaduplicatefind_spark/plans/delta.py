@@ -7,7 +7,7 @@ one signature scan plus two parquet writes, never a self-join (and zero corpus
 work when the store already exists from a previous increment or a streaming
 run). Each increment then pays pairing work bounded by the LSH buckets it
 actually touches (``IncrementalDedup``'s touched-bucket semi-join — broadcast
-while the increment's distinct key set fits ``broadcast_touched_max``, plain
+while the increment's distinct key set fits ``BROADCAST_TOUCHED_MAX``, plain
 shuffle semi-join beyond that, where an increment touching most buckets makes
 the wide join the right plan anyway), never O(corpus). The per-increment
 O(index) stats recovery count the streaming path pays once per stream is

@@ -542,20 +542,6 @@ def _spark_pairs(
     return candidates, scored, edges, rescue_edges is not None
 
 
-def dedup_clusters_df(spark: SparkSession, pages: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Convenience: pages -> (url, cluster_id), leak-free. run_pipeline is
-    EAGER (orphan probe, CC rounds) and caches several intermediates whose
-    release handle lives on the PipelineResult — discarding that result would
-    strand the caches for the session lifetime, so this wrapper materializes
-    the clusters into a localCheckpoint (decoupling them from the caches) and
-    releases everything before returning. Callers wanting the lazy
-    intermediates use run_pipeline directly and call .release() themselves."""
-    result = run_pipeline(spark, pages, cfg)
-    clusters = result.clusters.localCheckpoint()
-    result.release()
-    return clusters
-
-
 def retrieval_scored_pairs(result: PipelineResult, cfg: DedupConfig) -> DataFrame:
     """Scored pairs for the retrieval API: direct candidates UNION pairs implied by
     the final clusters (transitive closure). Sibling docs connected only through a

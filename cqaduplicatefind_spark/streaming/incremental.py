@@ -91,6 +91,13 @@ from cqaduplicatefind_spark.streaming.store import (  # noqa: F401 (re-export)
 
 SIG_COLS = ("url", "minhash", "simhash", "n_tokens", "n_shingles", "shingles")
 
+# Bound on the touched-(band, bh)-key broadcast and the candidate-endpoint
+# broadcast: a streaming micro-batch's key set is tiny, but a huge batch
+# increment (10^9 docs x bands keys) must fall back to a plain shuffle
+# semi-join instead of OOMing the driver. At that size the increment touches
+# most buckets anyway, so the wide join is the right plan, not a regression.
+BROADCAST_TOUCHED_MAX = 4_000_000
+
 
 def stream_signatures(pages_stream: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Streaming pages(url, text, ...) -> streaming signatures. Stateless."""
@@ -131,8 +138,7 @@ class IncrementalDedup:
     def __init__(self, spark: SparkSession, cfg: DedupConfig,
                  bands_dir: str, sigs_dir: str, matches_dir: str,
                  compact_every: int = 16,
-                 count_index_stats: bool = True,
-                 broadcast_touched_max: int = 4_000_000) -> None:
+                 count_index_stats: bool = True) -> None:
         self.spark = spark
         self.cfg = cfg
         self.bands_dir = bands_dir
@@ -144,14 +150,8 @@ class IncrementalDedup:
         # dropDuplicates+count shuffle over the WHOLE band store — fine once
         # per long-running stream, O(index) PER INCREMENT for the batch
         # delta path, which constructs a processor per call); stats then
-        # report n_index_band_rows=None. broadcast_touched_max bounds the
-        # touched-(band,bh)-key broadcast: a streaming micro-batch's key set
-        # is tiny, but a huge batch increment (10^9 docs x bands keys) must
-        # fall back to a plain shuffle semi-join instead of OOMing the
-        # driver — at that size the increment touches most buckets anyway,
-        # so the wide join is the right plan, not a regression.
+        # report n_index_band_rows=None.
         self.count_index_stats = count_index_stats
-        self.broadcast_touched_max = broadcast_touched_max
         self.batch_stats: list[dict] = []
         # wall-clock per phase of each processed batch (read/pair/score/write/
         # compact) — the profiling evidence the bench-leg optimization work
@@ -234,7 +234,7 @@ class IncrementalDedup:
                 # kernel's windows + self-join never shuffle the rest of the
                 # index. The touched-key set is O(batch x bands) — broadcast
                 # when it fits (the streaming case), plain shuffle semi-join
-                # when a huge batch increment exceeds broadcast_touched_max
+                # when a huge batch increment exceeds BROADCAST_TOUCHED_MAX
                 # (such an increment touches most buckets anyway, so the wide
                 # join is the right plan there). The decision uses the free
                 # upper bound n_new*bands (distinct keys can only be fewer)
@@ -242,7 +242,7 @@ class IncrementalDedup:
                 touched = new_bands.select("band", "bh").distinct()
                 probe = (
                     F.broadcast(touched)
-                    if n_new * cfg.bands <= self.broadcast_touched_max
+                    if n_new * cfg.bands <= BROADCAST_TOUCHED_MAX
                     else touched
                 )
                 idx_touched = idx_bands.join(probe, ["band", "bh"], "left_semi")
@@ -321,7 +321,7 @@ class IncrementalDedup:
                         .unionByName(cand.select(F.col("id_b").alias("url")))
                         .distinct()
                     )
-                    if 2 * n_cand <= self.broadcast_touched_max:
+                    if 2 * n_cand <= BROADCAST_TOUCHED_MAX:
                         # candidate endpoints are a tiny set in the streaming
                         # case: broadcasting them keeps the store scan shuffle-
                         # free for the semi-join (the same bound-based decision

@@ -2,7 +2,7 @@
 shapes (long paths stress iteration count; stars/cliques stress the star ops) and
 random graphs, plus partitioning-invariance. Every case runs on BOTH paths: the
 driver-side union-find (test-sized graphs take it by default) and the star loop
-(forced with ``driver_max_edges=0``)."""
+(forced with ``config.DRIVER_MAX_ROWS = 0``)."""
 
 import random
 
@@ -10,25 +10,26 @@ import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.operators.connected_components import (
     _persistent_rdd_ids,
     attach_singletons,
     connected_components,
 )
 
-# driver_max_edges per path: the default bound, and 0 (star loop only)
+# config.DRIVER_MAX_ROWS per path: the default bound, and 0 (star loop only)
 PATHS = {"driver": None, "star": 0}
 
 
 def _cc(df, path, persisted=None, **kw):
     """Run one path and check it was the one taken: only the star loop hands
     out a checkpoint handle, only the driver path reports the node count."""
-    bound = PATHS[path]
-    if bound is not None:
-        kw["driver_max_edges"] = bound
     persisted = [] if persisted is None else persisted
     stats: dict = {}
-    out = connected_components(df, persisted=persisted, stats=stats, **kw)
+    with pytest.MonkeyPatch.context() as mp:
+        if PATHS[path] is not None:
+            mp.setattr(config, "DRIVER_MAX_ROWS", PATHS[path])
+        out = connected_components(df, persisted=persisted, stats=stats, **kw)
     assert bool(persisted) == (path == "star") == ("nodes" not in stats)
     return out, stats
 
@@ -201,9 +202,9 @@ def test_graphs_above_the_bound_run_the_star_loop(spark):
     df = spark.createDataFrame(edges, "id_a string, id_b string")
     persisted: list = []
     stats: dict = {}
-    out = connected_components(
-        df, driver_max_edges=len(edges) - 1, persisted=persisted, stats=stats
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(config, "DRIVER_MAX_ROWS", len(edges) - 1)
+        out = connected_components(df, persisted=persisted, stats=stats)
     assert len(persisted) == 1 and stats == {}
     got = {r.id: r.cluster_id for r in out.collect()}
     assert got == _oracle(edges, {n for e in edges for n in e})

@@ -10,6 +10,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.config import DedupConfig
 
 from cqaduplicatefind_spark.operators.candidates import all_pairs
@@ -98,11 +99,9 @@ def test_cluster_summary_shape(tiny_run):
 def test_star_loop_clusters_match_driver_path(spark, tiny_run, cfg, monkeypatch):
     """Every components call forced onto the star loop (driver bound 0) gives
     the default run's clusters — on the tiny fixture, and on a corpus with a
-    containment shell whose span edges run the second components job."""
-    from functools import partial
-
-    from cqaduplicatefind_spark.plans import pipeline as pipeline_mod
-
+    containment shell whose span edges run the second components job. The
+    bound of 0 also puts the pair stage and the span pass on their Spark
+    plans."""
     content = " ".join(f"story{j} word{j}" for j in range(25))
     shell = " ".join(f"boiler{j} nav{j}" for j in range(60))
     shell_pages = spark.createDataFrame(
@@ -122,10 +121,7 @@ def test_star_loop_clusters_match_driver_path(spark, tiny_run, cfg, monkeypatch)
     assert shell_result.overlap_edges.count() > 0
     default = [(tiny_result, tiny_pages, cfg), (shell_result, shell_pages, shell_cfg)]
 
-    monkeypatch.setattr(
-        pipeline_mod, "connected_components",
-        partial(pipeline_mod.connected_components, driver_max_edges=0),
-    )
+    monkeypatch.setattr(config, "DRIVER_MAX_ROWS", 0)
     for result, pages, run_cfg in default:
         star = run_pipeline(spark, pages, run_cfg)
         try:

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.config import DedupConfig
+from cqaduplicatefind_spark.operators.connected_components import CheckpointHandle
 from cqaduplicatefind_spark.plans import pipeline
 
 CFG = DedupConfig(shingle_k=3, jaccard_threshold=0.7, min_overlap_span=40,
@@ -108,9 +109,12 @@ def _rows(df):
 
 
 def _run(spark, pages, group_col):
+    """The pass's path, its frames' rows, and how many checkpoint handles it
+    left (one per star-loop components run and per non-empty span pass)."""
     result = pipeline.run_pipeline(spark, pages, CFG, group_col=group_col)
     try:
-        return result.path, {
+        handles = sum(isinstance(p, CheckpointHandle) for p in result.persisted)
+        return result.path, handles, {
             name: _rows(getattr(result, name))
             for name in ("candidates", "scored", "edges", "overlap_edges",
                          "clusters")
@@ -131,16 +135,19 @@ def test_driver_path_equals_spark_path(spark, variant, path, data):
     """Differential: the same pages, once on the default path and once with
     the Spark path forced (the bound below every pass), give identical
     candidates, scored pairs and edges (all columns, exact doubles), span
-    edges and clusters. A hot bucket or a repeated url falls back."""
+    edges and clusters. A hot bucket or a repeated url falls back. The
+    forced side's components run the star loop too: both of its components
+    runs hand out a checkpoint handle on top of the span pass's."""
     rows, sims = data.draw(_corpora(variant))
     pages = spark.createDataFrame(rows, "url string, text string, grp string")
     group_col = "grp" if variant == "grouped" else None
     with pytest.MonkeyPatch.context() as mp:
         _with_simhashes(mp, sims)
-        got_path, got = _run(spark, pages, group_col)
+        got_path, got_handles, got = _run(spark, pages, group_col)
         mp.setattr(config, "DRIVER_MAX_ROWS", -1)
-        forced_path, forced = _run(spark, pages, group_col)
+        forced_path, forced_handles, forced = _run(spark, pages, group_col)
     assert (got_path, forced_path) == (path, "spark")
+    assert forced_handles == got_handles + 2
     for name in got:
         assert got[name] == forced[name], name
     # the corpus shapes were live: a span edge, a SimHash-only edge

@@ -3,6 +3,7 @@
 import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from cqaduplicatefind_spark import config
@@ -67,11 +68,11 @@ def test_incremental_dedup_file_source(spark, tmp_path):
 
 
 def test_touched_bucket_gate_shuffle_fallback(spark, tmp_path, monkeypatch):
-    """With broadcast_touched_max=0 the touched-key probe falls back to a plain
+    """With BROADCAST_TOUCHED_MAX=0 the touched-key probe falls back to a plain
     shuffle semi-join (the huge-increment path that must not OOM the driver by
     broadcasting O(batch x bands) keys) and produces IDENTICAL matches, on
     the Spark path (the bucket_candidates kernel) and on the driver path."""
-    from cqaduplicatefind_spark.streaming.incremental import IncrementalDedup
+    from cqaduplicatefind_spark.streaming import incremental
     from cqaduplicatefind_spark.plans.delta import signature_frame
 
     cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.7, shuffle_partitions=4)
@@ -86,14 +87,15 @@ def test_touched_bucket_gate_shuffle_fallback(spark, tmp_path, monkeypatch):
 
     def run(max_bc):
         work = str(tmp_path / f"w{max_bc}-{config.DRIVER_MAX_ROWS}")
-        d = IncrementalDedup(
+        d = incremental.IncrementalDedup(
             spark, cfg,
             os.path.join(work, "bands"), os.path.join(work, "sigs"),
             os.path.join(work, "matches"),
-            broadcast_touched_max=max_bc,
         )
-        d.process_batch(signature_frame(b1, cfg), 0)
-        d.process_batch(signature_frame(b2, cfg), 1)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(incremental, "BROADCAST_TOUCHED_MAX", max_bc)
+            d.process_batch(signature_frame(b1, cfg), 0)
+            d.process_batch(signature_frame(b2, cfg), 1)
         paths.update(d.batch_paths)
         return {(r.id_a, r.id_b) for r in d.matches().collect()}
 
