@@ -80,7 +80,6 @@ def make_pages(spark, sf_dir: str, replicate: int = 20):
 def bench_pipeline(spark, sf_dir: str) -> dict[str, float]:
     from cqaduplicatefind_spark.plans.pipeline import (
         candidate_stage,
-        normalize_stage,
         run_pipeline,
         signature_stage,
     )
@@ -93,7 +92,7 @@ def bench_pipeline(spark, sf_dir: str) -> dict[str, float]:
 
     def _sig():
         return (
-            signature_stage(normalize_stage(pages, cfg), cfg)
+            signature_stage(pages, cfg)
             .select(F.sum(F.size("minhash")))
             .collect()
         )
@@ -107,7 +106,7 @@ def bench_pipeline(spark, sf_dir: str) -> dict[str, float]:
     sig_runs = [_cooled(_sig)[0] for _ in range(3)]
     times["signatures"] = min(sig_runs)
 
-    signatures = signature_stage(normalize_stage(pages, cfg), cfg).cache()
+    signatures = signature_stage(pages, cfg).cache()
     signatures.count()
 
     cand_runs = []

@@ -37,8 +37,13 @@ MERSENNE_PRIME_61 = (1 << 61) - 1
 # the bound, with the pages above, that is 202 MB of Arrow plus the bucket
 # rows (~20 MB) and the endpoints' shingle sets, and 1.6-1.8 s warm in driver
 # Python on a 4-vCPU host (synthetic docs: 2,500 near-duplicate pairs among
-# 12,500). Every user reads ``config.DRIVER_MAX_ROWS`` when called, never a
-# copy bound at import, so one raised (or monkeypatched) value moves them all.
+# 12,500). With the span pass on, the collect also carries each doc's
+# ``n_tokens`` and winnowed ``span_fps`` for the driver-side span gate: 326
+# fingerprints (2.6 KB) per 2000-token page at the default
+# ``min_overlap_span`` of 50, so 33 MB more at the bound (measured with the
+# package's kernel on 2000-token pages of distinct tokens). Every user reads
+# ``config.DRIVER_MAX_ROWS`` when called, never a copy bound at import, so
+# one raised (or monkeypatched) value moves them all.
 #
 # Set by driver memory, not by a speed crossover: no crossover showed up in
 # the sizes measured. On a 4-vCPU host (local[4]), dedup-shaped graphs

@@ -46,19 +46,20 @@ def strip_tags(html: str) -> str:
     return s.get_data()
 
 
+def strip_value(v: object) -> str | None:
+    """strip_tags over one column value: binary (UTF-8 HTML bytes per the
+    ``input_hint`` schema) or string; NULL stays NULL."""
+    if v is None:
+        return None
+    if isinstance(v, (bytes, bytearray)):
+        v = bytes(v).decode("utf-8", errors="replace")
+    return strip_tags(v)
+
+
 @F.pandas_udf(StringType())
 def strip_tags_udf(html: pd.Series) -> pd.Series:
-    """Arrow-batched strip_tags. Input may be binary (UTF-8 HTML bytes per the
-    ``input_hint`` schema) or string; output is the extracted text string."""
-
-    def _one(v: object) -> str | None:
-        if v is None:
-            return None
-        if isinstance(v, (bytes, bytearray)):
-            v = bytes(v).decode("utf-8", errors="replace")
-        return strip_tags(v)
-
-    return html.map(_one)
+    """Arrow-batched strip_tags; output is the extracted text string."""
+    return html.map(strip_value)
 
 
 def with_extracted_text(df, html_col: str = "html", out_col: str = "text"):

@@ -19,6 +19,7 @@ map: zero shuffle; at cluster scale it parallelizes over input file splits.
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Iterator
 
 import numpy as np
@@ -28,6 +29,7 @@ from pyspark.sql.types import (
     ArrayType,
     IntegerType,
     LongType,
+    StringType,
     StructField,
     StructType,
 )
@@ -43,6 +45,8 @@ from cqaduplicatefind_spark.functions.hashing import (
     winnow_kernel,
     winnow_params,
 )
+from cqaduplicatefind_spark.functions.html_strip import strip_value
+from cqaduplicatefind_spark.functions.normalize import _normalize_memo
 
 _U64 = np.uint64
 _MAX_U64 = np.uint64(0xFFFFFFFFFFFFFFFF)
@@ -224,31 +228,62 @@ def _compute_chunk(
     )
 
 
-def make_signature_udf(cfg: DedupConfig):
-    """Build the signature pandas UDF bound to a frozen config (config travels by
-    closure → identical on every executor; no global state)."""
+def make_sign_udf(cfg: DedupConfig, use_html: bool = False):
+    """The sign stage as one iterator pandas UDF bound to a frozen config (it
+    travels by closure: identical on every executor, no global state): page
+    text, or UTF-8 HTML when ``use_html``, is stripped, normalized (unless
+    ``cfg.normalize_input`` is False) and signed in the same worker pass, so
+    the document crosses the Arrow boundary once. The normalize memo and the
+    ``TokenHasher`` are per worker. The struct carries ``span_fps`` and
+    ``norm_text`` only when the span pass is on; nothing else reads them."""
+    span = cfg.span_pass and cfg.min_overlap_span > 0
+    fields = [f for f in SIGNATURE_FIELDS.fields if span or f.name != "span_fps"]
+    if span:
+        fields.append(StructField("norm_text", StringType(), True))
 
-    @F.pandas_udf(SIGNATURE_FIELDS)
-    def signature_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    @F.pandas_udf(StructType(fields))
+    def sign_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         hasher = TokenHasher(cfg.minhash_seed)  # per-process token-hash cache
-        for batch in it:
-            yield compute_signatures_pdf(batch, cfg, hasher)
+        for text in it:
+            if use_html:
+                text = text.map(strip_value)
+            if cfg.normalize_input:
+                text = text.map(_normalize_memo)
+            sig = compute_signatures_pdf(text, cfg, hasher)
+            if span:
+                sig["norm_text"] = text.to_numpy()
+            else:
+                del sig["span_fps"]
+            yield sig
 
-    return signature_udf
+    # deterministic, but marked otherwise so the optimizer can neither push a
+    # filter on its output below it nor inline it into several expressions:
+    # either would evaluate the whole sign stage a second time
+    return sign_udf.asNondeterministic()
+
+
+def sign_pages(
+    pages: DataFrame,
+    cfg: DedupConfig,
+    source: str = "text",
+    use_html: bool = False,
+    keep: tuple[str, ...] = ("url",),
+) -> DataFrame:
+    """pages -> ``keep`` + the sign UDF's columns (minhash, simhash, n_tokens,
+    n_shingles, shingles[, span_fps, norm_text]) from one Python eval over
+    ``source``. Narrow map, no shuffle."""
+    sign = make_sign_udf(cfg, use_html)
+    return pages.select(*keep, sign(F.col(source)).alias("_sig")).select(
+        *keep, "_sig.*"
+    )
 
 
 def with_signatures(
     df: DataFrame, cfg: DedupConfig, norm_col: str = "norm_text"
 ) -> DataFrame:
-    """docs(norm_text) -> docs + minhash/simhash/n_tokens/n_shingles columns."""
-    sig = make_signature_udf(cfg)
-    out = df.withColumn("_sig", sig(F.col(norm_col)))
-    return (
-        out.withColumn("minhash", F.col("_sig.minhash"))
-        .withColumn("simhash", F.col("_sig.simhash"))
-        .withColumn("n_tokens", F.col("_sig.n_tokens"))
-        .withColumn("n_shingles", F.col("_sig.n_shingles"))
-        .withColumn("shingles", F.col("_sig.shingles"))
-        .withColumn("span_fps", F.col("_sig.span_fps"))
-        .drop("_sig")
+    """docs(already-normalized ``norm_col``) -> docs + minhash/simhash/n_tokens/
+    n_shingles/shingles columns."""
+    return sign_pages(
+        df, replace(cfg, normalize_input=False, span_pass=False), norm_col,
+        keep=tuple(df.columns),
     )

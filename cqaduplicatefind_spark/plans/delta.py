@@ -48,21 +48,18 @@ re-paired at all.
 
 from __future__ import annotations
 
+from dataclasses import replace
 from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cqaduplicatefind_spark.config import DedupConfig
-from cqaduplicatefind_spark.functions.normalize import with_normalized_text
-from cqaduplicatefind_spark.functions.signatures import with_signatures
+from cqaduplicatefind_spark.functions.signatures import sign_pages
 from cqaduplicatefind_spark.operators.candidates import explode_bands
 from cqaduplicatefind_spark.operators.connected_components import (
     connected_components,
 )
-from cqaduplicatefind_spark.streaming.incremental import (
-    SIG_COLS,
-    IncrementalDedup,
-)
+from cqaduplicatefind_spark.streaming.incremental import IncrementalDedup
 from cqaduplicatefind_spark.streaming.store import open_stores, store_roots
 
 
@@ -110,23 +107,19 @@ def signature_frame(
     id_col: str = "url",
     text_col: str = "text",
 ) -> DataFrame:
-    """pages -> (url, minhash, simhash, n_tokens, n_shingles, shingles),
-    honoring ``cfg.normalize_input`` exactly like ``plans.pipeline`` (so an
-    index seeded here matches signatures the flagship or the streaming path
-    would compute for the same text). Docs with zero shingles are dropped —
-    they can never pair and the stores stay slim (callers that need them,
-    e.g. survivor selection, keep their own id frame)."""
+    """pages -> (url, minhash, simhash, n_tokens, n_shingles, shingles) from
+    the pipeline's one-eval sign UDF, honoring ``cfg.normalize_input``
+    exactly like ``plans.pipeline`` (so an index seeded here matches
+    signatures the flagship or the streaming path would compute for the same
+    text). Docs with zero shingles are dropped — they can never pair and the
+    stores stay slim (callers that need them, e.g. survivor selection, keep
+    their own id frame)."""
     df = pages.select(
         F.col(id_col).cast("string").alias("url"), F.col(text_col).alias("text")
     )
-    if cfg.normalize_input:
-        df = with_normalized_text(df, "text", "norm_text")
-    else:
-        df = df.withColumn("norm_text", F.col("text"))
-    return (
-        with_signatures(df, cfg, "norm_text")
-        .select(*SIG_COLS)
-        .where(F.col("n_shingles") > 0)
+    # the stores hold no span columns: the UDF skips the winnowing
+    return sign_pages(df, replace(cfg, span_pass=False)).where(
+        F.col("n_shingles") > 0
     )
 
 

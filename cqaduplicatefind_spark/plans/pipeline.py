@@ -9,9 +9,10 @@ checkpointed to a warehouse stage table so any stage resumes idempotently
 (north_rule).
 
 Shuffle budget (the plan you'd want at 10^12 docs):
-  1. normalize+sign: narrow maps over the scan — ZERO shuffle; partition count
-     follows the input splits (``cfg.signature_partitions`` repartition only when
-     the source is pathologically skewed).
+  1. strip+normalize+sign: one Python eval (``signature_stage``) over the
+     scan — ZERO shuffle, and each document crosses the Arrow boundary once;
+     partition count follows the input splits (``cfg.signature_partitions``
+     repartition only when the source is narrower).
   2. candidates: one shuffle on band key (+ one on simhash piece key), one on the
      pair key for dedup.
   3. verify: two id-key shuffles (attach signature evidence to each pair side).
@@ -23,6 +24,10 @@ Shuffle budget (the plan you'd want at 10^12 docs):
      ``config.DRIVER_MAX_ROWS`` edges it is collected in one job and
      union-found on the driver (no shuffle); larger sets run O(log n)
      large-star/small-star rounds (``operators/connected_components.py``).
+     After ``driver_pair_stage`` the edges are already on the driver: they
+     are union-found there, the span pass's heterogeneous-bucket gate runs
+     on the collected fingerprints, and ``clusters`` is built there too (no
+     job), unless a fingerprint bucket holds two clusters.
   5. metrics: counts on edges/clusters — negligible.
 Every stage's output is columnar-prunable; nothing materializes O(n^2).
 """
@@ -36,17 +41,19 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructField, StructType
 
 from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.config import DedupConfig
 from cqaduplicatefind_spark.functions.html_strip import with_extracted_text
 from cqaduplicatefind_spark.functions.normalize import with_normalized_text
-from cqaduplicatefind_spark.functions.signatures import with_signatures
+from cqaduplicatefind_spark.functions.signatures import sign_pages
 from cqaduplicatefind_spark.operators.candidates import (
     band_keys, bit_count, driver_bucket_pairs, driver_piece_keys,
     minhash_lsh_candidates, null_safe_group, simhash_candidates,
 )
 from cqaduplicatefind_spark.operators.connected_components import (
+    _min_root_components,
     attach_singletons,
     connected_components,
 )
@@ -79,6 +86,28 @@ class PipelineResult:
         self.persisted.clear()
 
 
+def _spread(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """``pages`` hash-partitioned on url to ``cfg.signature_partitions`` when
+    the input is narrower. Pandas-UDF stages parallelize over partitions; a
+    small input (one parquet file -> one split) would otherwise run the whole
+    sign stage on a single core. Hash partitioning is deterministic under
+    retries, unlike round-robin. The width probe uses the scan's file listing
+    first (free for the parquet/Iceberg scans this stage sees in production —
+    no RDD conversion); only file-less in-memory frames (tests, bench
+    fixtures) pay the driver-side df.rdd probe, which avoids re-shuffling an
+    input that is already wide. At cluster scale input files >> target and
+    this is a no-op."""
+    try:
+        n_input = len(pages.inputFiles())
+    except Exception:
+        n_input = 0
+    if n_input == 0:
+        n_input = pages.rdd.getNumPartitions()
+    if n_input < cfg.signature_partitions:
+        return pages.repartition(cfg.signature_partitions, "url")
+    return pages
+
+
 def normalize_stage(
     pages: DataFrame,
     cfg: DedupConfig,
@@ -88,24 +117,9 @@ def normalize_stage(
     """pages(url, [html], text, lang) -> (url, [group], norm_text). If ``use_html``
     the text column is re-extracted from html (byte-identical invariant); default
     trusts the provided text column (it must equal strip_tags(html) — verified by
-    tests)."""
-    df = pages
-    # pandas-UDF stages parallelize over partitions; a small input (one parquet
-    # file -> one split) would otherwise run the whole normalize+signature chain
-    # on a single core. Hash-partition on url (deterministic under retries, unlike
-    # round-robin). The width probe uses the scan's file listing first (free for
-    # the parquet/Iceberg scans this stage sees in production — no RDD
-    # conversion); only file-less in-memory frames (tests, bench fixtures) pay
-    # the driver-side df.rdd probe, which avoids re-shuffling an input that is
-    # already wide. At cluster scale input files >> target and this is a no-op.
-    try:
-        n_input = len(df.inputFiles())
-    except Exception:
-        n_input = 0
-    if n_input == 0:
-        n_input = df.rdd.getNumPartitions()
-    if n_input < cfg.signature_partitions:
-        df = df.repartition(cfg.signature_partitions, "url")
+    tests). For callers that want ``norm_text`` alone: ``signature_stage``
+    normalizes in its own Python pass."""
+    df = _spread(pages, cfg)
     if use_html:
         df = with_extracted_text(df, "html", "text")
     keep = ["url"] + ([group_col] if group_col else []) + ["norm_text"]
@@ -117,22 +131,28 @@ def normalize_stage(
 
 
 def signature_stage(
-    normalized: DataFrame, cfg: DedupConfig, group_col: str | None = None
+    pages: DataFrame,
+    cfg: DedupConfig,
+    use_html: bool = False,
+    group_col: str | None = None,
 ) -> DataFrame:
-    # norm_text + span_fps ride along for the exact-span pass (fingerprint
-    # explode + span verify read them from the signatures stage table); every
-    # other consumer prunes them at the scan via explicit selects. With the
-    # span pass OFF nobody ever reads them, and keeping norm_text (the full
-    # normalized document — the widest column in the frame) would still
-    # materialize it into the persisted stage cache: column pruning happens at
-    # cache READS, not at the cache build (r6 optimization; the span-free and
-    # html bench flavors build a signature cache ~2x slimmer).
-    keep = ["url"] + ([group_col] if group_col else []) + [
-        "minhash", "simhash", "n_tokens", "n_shingles", "shingles",
-    ]
-    if cfg.span_pass and cfg.min_overlap_span > 0:
-        keep += ["span_fps", "norm_text"]
-    return with_signatures(normalized, cfg, "norm_text").select(*keep)
+    """pages(url, [group], html or text) -> (url, [group], minhash, simhash,
+    n_tokens, n_shingles, shingles[, span_fps, norm_text]): strip (when
+    ``use_html``), normalize (unless ``cfg.normalize_input`` is False) and
+    sign in one Python eval per document (``sign_pages``).
+
+    norm_text + span_fps ride along for the exact-span pass (fingerprint
+    explode + span verify read them from the signatures stage table); every
+    other consumer prunes them at the scan via explicit selects. With the
+    span pass OFF the UDF does not return them: keeping norm_text (the full
+    normalized document — the widest column in the frame) would still
+    materialize it into the persisted stage cache, since column pruning
+    happens at cache READS, not at the cache build."""
+    g = (group_col,) if group_col else ()
+    return sign_pages(
+        _spread(pages, cfg), cfg, "html" if use_html else "text", use_html,
+        keep=("url", *g),
+    )
 
 
 def candidate_stage(
@@ -179,27 +199,30 @@ def candidate_stage(
 
 def driver_pair_stage(
     signatures: DataFrame, cfg: DedupConfig, group_col: str | None = None
-) -> tuple[dict[str, np.ndarray], np.ndarray] | None:
+) -> tuple[dict[str, np.ndarray], np.ndarray, pa.Table] | None:
     """``candidate_stage(mode="base")`` and ``score_pairs(evidence="exact")``
     on the driver, for signatures whose band rows fit
     ``config.DRIVER_MAX_ROWS``: one collect, the stream path's bucket pairing
     (``driver_bucket_pairs``) over the band keys and the SimHash pieces, the
     Hamming gate on piece pairs, and the stream path's scorer. Returns the
-    scored columns of every candidate pair and the ``accept_condition``
-    mask. None sends the pass to the Spark plans: a bucket holds more than
+    scored columns of every candidate pair, the ``accept_condition`` mask
+    and the collected table (one row per signature row; with the span pass
+    on it carries ``n_tokens`` and ``span_fps`` for ``_driver_spans_empty``).
+    None sends the pass to the Spark plans: a bucket holds more than
     ``max_band_group`` rows (stars and the rescue round are the Spark
     kernel's), or a url repeats (the Spark joins would repeat its rows)."""
     g = [group_col] if group_col else []
-    docs = null_safe_group(signatures, group_col).select(
+    span = ["n_tokens", "span_fps"] if _span_on(cfg) else []
+    signed = null_safe_group(signatures, group_col).select(
         "url", *g,
         # band_keys' JVM-side hashes: the Spark path's keys, bit for bit
         F.array(*[k.getField("bh") for k in band_keys(cfg)]).alias("bh"),
-        "simhash", "n_shingles", "shingles",
+        "simhash", "n_shingles", "shingles", *span,
     ).toArrow()
-    if pc.count_distinct(docs["url"], mode="all").as_py() < docs.num_rows:
+    if pc.count_distinct(signed["url"], mode="all").as_py() < signed.num_rows:
         return None
     # zero-shingle docs share the sentinel signature: never candidates
-    docs = docs.filter(pc.greater(docs["n_shingles"], 0))
+    docs = signed.filter(pc.greater(signed["n_shingles"], 0))
     n = docs.num_rows
     group = (
         docs[group_col].combine_chunks().dictionary_encode().indices.to_numpy()
@@ -229,7 +252,41 @@ def driver_pair_stage(
     near = bit_count(sim[ia] ^ sim[ib]) <= cfg.hamming_k
     pairs = set(lsh).union(p for p, ok in zip(piece, near) if ok)
     scored = driver_score_pairs(sorted(pairs), docs, cfg)
-    return scored, driver_accept(scored, cfg)
+    return scored, driver_accept(scored, cfg), signed
+
+
+def _span_on(cfg: DedupConfig) -> bool:
+    return cfg.span_pass and cfg.min_overlap_span > 0
+
+
+def _driver_spans_empty(
+    signed: pa.Table, cluster: dict, cfg: DedupConfig, group_col: str | None
+) -> bool:
+    """The span pass's heterogeneous-bucket gate (``overlap._span_candidates``)
+    on the driver: True when no (group, fingerprint) bucket of the docs with
+    at least ``min_overlap_span`` tokens holds two clusters. ``cluster`` maps
+    a url to its components label; an unlabelled url is its own cluster. By
+    the winnowing bound, a pair sharing a run of ``min_overlap_span`` tokens
+    shares a fingerprint, so True means ``exact_span_edges`` would return no
+    edge. The group key is ``null_safe_group``'s, as collected."""
+    docs = signed.filter(
+        pc.greater_equal(signed["n_tokens"], cfg.min_overlap_span)
+    )
+    fps = docs["span_fps"].combine_chunks()
+    per_doc = pc.list_value_length(fps).fill_null(0).to_numpy()
+    labels = pa.array([cluster.get(u, u) for u in docs["url"].to_pylist()])
+
+    def codes(col) -> np.ndarray:
+        enc = col.dictionary_encode(null_encoding="encode")
+        return np.repeat(enc.indices.to_numpy(), per_doc)
+
+    cl = codes(labels)
+    grp = codes(docs[group_col].combine_chunks()) if group_col else 0 * cl
+    fp = fps.flatten().to_numpy()
+    o = np.lexsort((cl, fp, grp))
+    cl, fp, grp = cl[o], fp[o], grp[o]
+    same_bucket = (fp[1:] == fp[:-1]) & (grp[1:] == grp[:-1])
+    return not np.any(same_bucket & (cl[1:] != cl[:-1]))
 
 
 def run_pipeline(
@@ -276,9 +333,7 @@ def run_pipeline(
 
     signatures = stage(
         "signatures",
-        lambda: signature_stage(
-            normalize_stage(pages, cfg, use_html, group_col), cfg, group_col
-        ),
+        lambda: signature_stage(pages, cfg, use_html, group_col),
         reused=True,
     )
     # it materializes the signature cache every later stage reads anyway,
@@ -304,22 +359,28 @@ def _pair_and_cluster(
     stage,
     persisted: list,
     signatures: DataFrame,
-    driver: tuple[dict, np.ndarray] | None,
+    driver: tuple[dict, np.ndarray, pa.Table] | None,
 ) -> PipelineResult:
     """``run_pipeline`` after the signature stage: candidates, verify, the
     rescue round, the span pass and clustering. ``driver`` is
-    ``driver_pair_stage``'s result, if any: it has no stars to rescue."""
+    ``driver_pair_stage``'s result, if any: it has no stars to rescue, and
+    the pass finishes on the driver with no further Spark job. It union-finds
+    the accepted edges and builds ``clusters`` over every signature row,
+    unless a fingerprint bucket holds two clusters (``_driver_spans_empty``):
+    then the span pass runs its Spark plans, fed the driver assignment."""
+    spark = signatures.sparkSession
     rescued = False
+    cluster = None  # url -> components label (min id), on the driver path
     if driver is None:
         candidates, scored, edges, rescued = _spark_pairs(
             cfg, group_col, stage, signatures
         )
     else:
-        cols, accept = driver
+        cols, accept, signed = driver
         cols["is_star"] = np.zeros(len(accept), dtype=bool)
 
         def frame(schema: str, columns: dict):
-            return lambda: arrow_frame(signatures.sparkSession, schema, columns)
+            return lambda: arrow_frame(spark, schema, columns)
 
         candidates = stage(
             "candidate_pairs",
@@ -329,6 +390,19 @@ def _pair_and_cluster(
         edges = stage(
             "dup_edges", frame(EDGE_SCHEMA, {c: v[accept] for c, v in cols.items()})
         )
+        cluster = dict(zip(*_min_root_components(
+            cols["id_a"][accept].tolist(), cols["id_b"][accept].tolist()
+        )))
+        id_type = signatures.schema["url"].dataType
+
+        def labelled(names: tuple[str, str], ids: list):
+            schema = StructType([StructField(n, id_type) for n in names])
+            return lambda: arrow_frame(spark, schema, {
+                names[0]: ids, names[1]: [cluster.get(u, u) for u in ids],
+            })
+
+        # every signature row: singletons label themselves
+        driver_clusters = labelled(("url", "cluster_id"), signed["url"].to_pylist())
 
     # the suffix-array-analog stage (north_star): exact-span edges for pairs
     # sharing a contiguous run >= min_overlap_span tokens, discovered corpus-wide
@@ -341,23 +415,32 @@ def _pair_and_cluster(
     # the new span edges — the assignment graph is already near-converged, so
     # the second components job finishes in O(1) rounds.
     overlap_edges = None
-    if cfg.span_pass and cfg.min_overlap_span > 0:
-        from cqaduplicatefind_spark.operators.overlap import exact_span_edges
+    if _span_on(cfg):
+        from cqaduplicatefind_spark.operators.overlap import (
+            SPAN_EDGE_SCHEMA,
+            exact_span_edges,
+        )
 
         # accept_edges output is one row per undirected pair (candidate dedup)
         # and a fresh pairing graph is never a converged star forest: skip the
         # initial dedup shuffle and the first fixed-point probe
         cc_stats: dict = {}
-        pre_assign = stage(
-            "pre_clusters",
-            lambda: connected_components(
-                edges.select("id_a", "id_b"),
-                assume_unconverged=True, input_distinct=True,
-                persisted=persisted, stats=cc_stats,
-            ),
-        )
+        if cluster is None:
+            pre_assign = stage(
+                "pre_clusters",
+                lambda: connected_components(
+                    edges.select("id_a", "id_b"),
+                    assume_unconverged=True, input_distinct=True,
+                    persisted=persisted, stats=cc_stats,
+                ),
+            )
+        else:
+            pre_assign = stage(
+                "pre_clusters", labelled(("id", "cluster_id"), list(cluster))
+            )
+            cc_stats["nodes"] = len(cluster)
         # the span stage's broadcast-vs-shuffle gate needs the assignment
-        # count. The driver path knows it, and its Arrow-built frame is
+        # count. The driver paths know it, and their Arrow-built frame is
         # driver-side data that every read scans as cheaply as a cache.
         n_assign = cc_stats.get("nodes")
         if n_assign is None:
@@ -374,21 +457,28 @@ def _pair_and_cluster(
             # re-derivation inside attach_singletons, so it is common-path work
             n_assign = pre_assign.count()
         _span_t0 = time.perf_counter()
+        # on the tail no fingerprint bucket holds two clusters: no span edge
+        tail = cluster is not None and _driver_spans_empty(
+            signed, cluster, cfg, group_col
+        )
         overlap_edges = stage(
             "overlap_edges",
+            (lambda: arrow_frame(spark, SPAN_EDGE_SCHEMA)) if tail else
             lambda: exact_span_edges(
                 signatures, cfg, exclude_assignments=pre_assign,
                 group_col=group_col, persisted=persisted,
                 assignments_count=n_assign,
             ),
-            reused=True,  # probed for emptiness below, then unioned/returned
+            reused=not tail,  # probed for emptiness below, then unioned/returned
         )
         # count, not isEmpty: the frame is persisted and consumed in full either
         # way, and on the (common) empty result take(1) runs its partition scan
         # in several escalating waves while count() is one wave + a scalar agg.
         # The empty result is an Arrow-built frame, so this count starts no
         # Python worker.
-        if overlap_edges.count() == 0:
+        if tail:
+            clusters = stage("clusters", driver_clusters)
+        elif overlap_edges.count() == 0:
             # nothing new beyond the LSH clustering: skip the second components
             # job entirely (the common case on corpora without shell-containment)
             clusters = stage(
@@ -413,17 +503,20 @@ def _pair_and_cluster(
                 ),
             )
         if timings is not None:
-            # everything since _span_t0 is span-specific: the het-aggregate
-            # discovery job, candidate verify, the emptiness probe, and the
-            # second CC when spans exist. The pre_assign assignment is fully
-            # built before the window on both components paths (the star
-            # loop's cache by the n_assign count above, the driver path's
-            # frame on the driver), so the window only reads it — the
-            # span-free branch pays the same CC-output re-derivation inside
-            # attach_singletons, so it is common-path work. The clusters stage
-            # itself is lazy in the empty case, eager (the second components
-            # run) otherwise — both correctly charged.
+            # everything since _span_t0 is span-specific: the driver-side
+            # gate, the het-aggregate discovery job, candidate verify, the
+            # emptiness probe, and the second CC when spans exist. The
+            # pre_assign assignment is fully built before the window on both
+            # components paths (the star loop's cache by the n_assign count
+            # above, the driver path's frame on the driver), so the window
+            # only reads it — the span-free branch pays the same CC-output
+            # re-derivation inside attach_singletons, so it is common-path
+            # work. The clusters stage itself is lazy in the empty case,
+            # eager (the second components run) otherwise — both correctly
+            # charged.
             timings["span_extra_sec"] = time.perf_counter() - _span_t0
+    elif cluster is not None:
+        clusters = stage("clusters", driver_clusters)
     else:
         clusters = stage(
             "clusters",

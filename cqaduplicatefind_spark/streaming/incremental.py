@@ -57,6 +57,7 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import ExitStack
+from dataclasses import replace
 
 from py4j.protocol import Py4JJavaError
 from pyspark import inheritable_thread_target
@@ -64,8 +65,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.config import DedupConfig
-from cqaduplicatefind_spark.functions.normalize import with_normalized_text
-from cqaduplicatefind_spark.functions.signatures import with_signatures
+from cqaduplicatefind_spark.functions.signatures import sign_pages
 from cqaduplicatefind_spark.operators.candidates import (
     bucket_candidates,
     driver_bucket_pairs,
@@ -100,9 +100,9 @@ BROADCAST_TOUCHED_MAX = 4_000_000
 
 
 def stream_signatures(pages_stream: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Streaming pages(url, text, ...) -> streaming signatures. Stateless."""
-    norm = with_normalized_text(pages_stream, "text", "norm_text")
-    return with_signatures(norm, cfg, "norm_text").select(*SIG_COLS)
+    """Streaming pages(url, text, ...) -> streaming signatures (``SIG_COLS``)
+    from the pipeline's one-eval sign UDF. Stateless."""
+    return sign_pages(pages_stream, replace(cfg, span_pass=False))
 
 
 def _observed_rows(obs: Observation, df: DataFrame) -> int:

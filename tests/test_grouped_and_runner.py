@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from cqaduplicatefind_spark.config import DedupConfig
 from cqaduplicatefind_spark.plans.pipeline import (
     candidate_stage,
-    normalize_stage,
     run_pipeline,
     signature_stage,
 )
@@ -42,9 +41,7 @@ def _cfg():
 
 def test_grouped_candidates_never_cross_groups(spark, grouped_pages):
     cfg = _cfg()
-    sigs = signature_stage(
-        normalize_stage(grouped_pages, cfg, group_col="group"), cfg, group_col="group"
-    )
+    sigs = signature_stage(grouped_pages, cfg, group_col="group")
     pairs = candidate_stage(sigs, cfg, group_col="group")
     side = grouped_pages.select("url", "group")
     crossed = (
@@ -57,8 +54,7 @@ def test_grouped_candidates_never_cross_groups(spark, grouped_pages):
     assert pairs.count() > 0  # within-group dups still found
 
     # the combined ("full corpus") run DOES link identical docs across groups
-    combined = candidate_stage(signature_stage(
-        normalize_stage(grouped_pages, cfg), cfg), cfg)
+    combined = candidate_stage(signature_stage(grouped_pages, cfg), cfg)
     crossed_combined = (
         combined.join(side.withColumnsRenamed({"url": "id_a", "group": "ga"}), "id_a")
         .join(side.withColumnsRenamed({"url": "id_b", "group": "gb"}), "id_b")

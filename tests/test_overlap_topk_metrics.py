@@ -237,7 +237,7 @@ def test_extra_scorer_reranks_retrieval(spark, cfg):
     'alternative classifier' capability, src/NBAndXGBCountVectorClassifier.py)
     must add a score column usable as the ranking key in retrieve_duplicates."""
     from cqaduplicatefind_spark.operators.verify import score_pairs
-    from cqaduplicatefind_spark.plans.pipeline import normalize_stage, signature_stage
+    from cqaduplicatefind_spark.plans.pipeline import signature_stage
 
     pages = spark.createDataFrame(
         [
@@ -249,7 +249,7 @@ def test_extra_scorer_reranks_retrieval(spark, cfg):
         ],
         "url string, text string",
     )
-    sigs = signature_stage(normalize_stage(pages, cfg), cfg)
+    sigs = signature_stage(pages, cfg)
     pairs = spark.createDataFrame(
         [("c1", "q"), ("c2", "q")], "id_a string, id_b string"
     )

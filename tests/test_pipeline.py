@@ -22,7 +22,6 @@ from cqaduplicatefind_spark.operators.metrics import (
 from cqaduplicatefind_spark.operators.verify import score_pairs
 from cqaduplicatefind_spark.plans.pipeline import (
     cluster_summary,
-    normalize_stage,
     run_pipeline,
     signature_stage,
 )
@@ -66,7 +65,7 @@ def test_lsh_candidates_vs_bruteforce_oracle(spark, tiny_fixture, cfg):
     """Every pair with exact Jaccard >= threshold must be produced as a candidate
     (LSH probabilistic recall at this (b, r) and J >= 0.8 is ~1-1e-7 per pair)."""
     pages, _, _ = tiny_fixture
-    signatures = signature_stage(normalize_stage(pages, cfg), cfg).cache()
+    signatures = signature_stage(pages, cfg).cache()
     brute = all_pairs(signatures)
     brute_scored = score_pairs(brute, signatures, cfg, prefilter_margin=1.0)
     truly_dup = brute_scored.where(F.col("jaccard") >= cfg.jaccard_threshold)

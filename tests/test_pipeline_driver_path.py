@@ -6,12 +6,18 @@ and hand every pass it cannot take to the unchanged Spark plans."""
 
 from __future__ import annotations
 
+import itertools
+
+import pandas as pd
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.config import DedupConfig
+from cqaduplicatefind_spark.functions.hashing import TokenHasher
+from cqaduplicatefind_spark.functions.normalize import review_to_wordlist
+from cqaduplicatefind_spark.functions.signatures import compute_signatures_pdf
 from cqaduplicatefind_spark.operators.connected_components import CheckpointHandle
 from cqaduplicatefind_spark.plans import pipeline
 
@@ -94,8 +100,8 @@ def _corpora(draw, variant):
 def _with_simhashes(monkeypatch, sims):
     real = pipeline.signature_stage
 
-    def stage(normalized, cfg, group_col=None):
-        sigs = real(normalized, cfg, group_col)
+    def stage(*a, **kw):
+        sigs = real(*a, **kw)
         sim = F.col("simhash")
         for u, v in sims.items():
             sim = F.when(F.col("url") == u, F.lit(v)).otherwise(sim)
@@ -179,29 +185,170 @@ def plan_calls(monkeypatch):
     return calls
 
 
-def test_driver_pass_job_count_is_pinned(spark, plan_calls):
-    """A below-bound, span-free pass on the driver path runs 3 jobs: the
-    signature count that fills the cache, the one signature collect, and the
-    bounded edge collect of components. It builds no candidate or score
-    plan."""
-    cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.7, span_pass=False,
-                      shuffle_partitions=4, signature_partitions=4)
-    pages = _pages(spark, FAMILY)
+_PASSES = itertools.count()
+
+
+def _pass_jobs(spark, pages, cfg):
+    """run_pipeline's result and the number of Spark jobs it ran."""
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    sc.setJobGroup("driver-pass", "driver-pass")
+    group = f"driver-pass-{next(_PASSES)}"  # the tracker keeps every group's jobs
+    sc.setJobGroup(group, group)
     try:
         result = pipeline.run_pipeline(spark, pages, cfg)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return result, jobs
+
+
+def test_driver_pass_job_count_is_pinned(spark, plan_calls):
+    """A below-bound, span-free pass on the driver path runs 2 jobs: the
+    signature count that fills the cache and the one signature collect.
+    Components and clusters are built on the driver. It builds no candidate
+    or score plan."""
+    cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.7, span_pass=False,
+                      shuffle_partitions=4, signature_partitions=4)
+    result, jobs = _pass_jobs(spark, _pages(spark, FAMILY), cfg)
     try:
         assert result.path == "driver"
         assert plan_calls == []
-        assert len(tracker.getJobIdsForGroup("driver-pass")) == 3
+        assert jobs == 2
         assert _rows(result.edges.select("id_a", "id_b")) == [("fam0", "fam1")]
     finally:
         result.release()
+
+
+def test_span_on_driver_pass_runs_no_more_jobs(spark, plan_calls):
+    """With the span pass on and every fingerprint bucket inside one cluster,
+    the driver pass runs the span-free pass's 2 jobs: the gate reads the
+    collected span fingerprints, and no emptiness probe of the span edges
+    runs."""
+    result, jobs = _pass_jobs(spark, _pages(spark, FAMILY), CFG)
+    try:
+        assert result.path == "driver"
+        assert plan_calls == []
+        assert jobs == 2
+        assert _rows(result.overlap_edges) == []
+        assert _rows(result.clusters) == [
+            ("fam0", "fam0"), ("fam1", "fam0"), ("noise", "noise")
+        ]
+    finally:
+        result.release()
+
+
+FAM0 = _words("fam0", 120)
+SHORT = " ".join(FAM0.split(" ")[20:57] + ["sx", "sy"])
+
+
+def _shares_fingerprint(a: str, b: str) -> bool:
+    """Whether two texts' span fingerprints intersect, from the package's
+    own normalize and signature kernels."""
+    texts = pd.Series([review_to_wordlist(a), review_to_wordlist(b)])
+    fps = compute_signatures_pdf(texts, CFG, TokenHasher(CFG.minhash_seed)).span_fps
+    return bool(set(fps[0]) & set(fps[1]))
+
+
+@st.composite
+def _tail_corpora(draw, variant):
+    """Pages (url, text, grp) for the driver tail. Every variant but ``pure``
+    and ``prefix`` spreads its docs over groups g0, g1 and NULL.
+
+    - families of 2-3 near-duplicates of 120 words;
+    - ``short``: 37 words from inside a family's text and 2 of its own:
+      under ``min_overlap_span`` tokens, so the span pass drops it, though
+      it shares a fingerprint with the family (``_shares_fingerprint``);
+    - 1-2 zero-shingle docs and 0-2 noise docs;
+    - ``pure*``: no fingerprint bucket holds two clusters, so the tail is
+      taken; ``pure_grouped`` puts a prefix copy (below) in another group
+      than its source;
+    - ``shell``: a page inside a boilerplate shell; ``shell_null`` puts the
+      trio in the NULL group; ``prefix``: a doc whose first 60 words are a
+      family's, then 100 of its own. These three must fall back."""
+    groups = [None] if variant in ("pure", "prefix") else ["g0", "g1", None]
+    rows = []
+
+    def add(url, text, group="draw"):
+        if group == "draw":
+            group = draw(st.sampled_from(groups))
+        rows.append((url, text, group))
+
+    for f, size in enumerate(draw(st.lists(st.integers(2, 3), min_size=1,
+                                           max_size=3))):
+        base = FAM0 if f == 0 else _words(f"fam{f}", 120)
+        g = draw(st.sampled_from(groups))
+        for m in range(size):
+            add(f"fam{f}m{m}", f"{base} tail{m}", g)
+    add("short", SHORT)
+    for i in range(draw(st.integers(1, 2))):
+        add(f"zero{i}", f"zq{i}")
+    for i in range(draw(st.integers(0, 2))):
+        add(f"noise{i}", _words(f"noise{i}", 50))
+    prefix = " ".join(FAM0.split(" ")[:60]) + " " + _words("own", 100)
+    if variant == "pure_grouped":
+        add("prefix", prefix, "g1" if rows[0][2] != "g1" else "g0")
+    elif variant == "prefix":
+        add("prefix", prefix, rows[0][2])
+    elif variant.startswith("shell"):
+        g = None if variant == "shell_null" else draw(st.sampled_from(groups))
+        content = _words("story", 50)
+        shell = _words("boiler", 60)
+        add("page", content, g)
+        add("page-copy", content + " tail", g)
+        add("shellpage", f"{shell} {content} {shell}", g)
+    return rows
+
+
+def _spy_tail(mp) -> list[str]:
+    """Names of the span and components plans the pass builds."""
+    from cqaduplicatefind_spark.operators import overlap
+
+    calls: list[str] = []
+    for mod, name in ((overlap, "exact_span_edges"),
+                      (pipeline, "connected_components")):
+        real = getattr(mod, name)
+
+        def spy(*a, _real=real, _name=name, **kw):
+            calls.append(_name)
+            return _real(*a, **kw)
+
+        mp.setattr(mod, name, spy)
+    return calls
+
+
+@pytest.mark.parametrize("variant, tail", [
+    ("pure", True),
+    ("pure_grouped", True),
+    ("shell", False),
+    ("shell_null", False),
+    ("prefix", False),
+])
+@settings(max_examples=2, deadline=None, derandomize=True)
+@given(data=st.data())
+def test_driver_tail_equals_spark_path(spark, variant, tail, data):
+    """Differential: a driver-path pass finishes on the driver (no span or
+    components plan) exactly when no fingerprint bucket holds two clusters,
+    and either way gives the forced Spark path's edges, span edges and
+    clusters."""
+    rows = data.draw(_tail_corpora(variant))
+    pages = spark.createDataFrame(rows, "url string, text string, grp string")
+    group_col = "grp" if variant != "pure" else None
+    with pytest.MonkeyPatch.context() as mp:
+        calls = _spy_tail(mp)
+        got_path, _, got = _run(spark, pages, group_col)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(config, "DRIVER_MAX_ROWS", -1)
+        _, _, forced = _run(spark, pages, group_col)
+    assert got_path == "driver"
+    # a fallback's span edges go through the second components run
+    assert calls == ([] if tail else ["exact_span_edges", "connected_components"])
+    for name in ("edges", "overlap_edges", "clusters"):
+        assert got[name] == forced[name], name
+    assert bool(got["overlap_edges"]) != tail
+    assert len(got["clusters"]) == len(rows)
+    # the corpus shape was live: the short doc is its own cluster
+    assert _shares_fingerprint(FAM0, SHORT)
+    assert ("short", "short") in got["clusters"]
 
 
 @pytest.mark.parametrize("case", ["hot", "estimate", "dup_url", "above_bound"])

@@ -68,13 +68,13 @@ def test_signature_stage_is_shuffle_free(spark, cfg):
     """normalize+signature is a narrow map: after the one input repartition the
     plan must contain NO other Exchange — at 10^12 docs an accidental shuffle
     of raw text dominates everything."""
-    from cqaduplicatefind_spark.plans.pipeline import normalize_stage, signature_stage
+    from cqaduplicatefind_spark.plans.pipeline import signature_stage
 
     pages = spark.createDataFrame(
         [(f"u{i}", f"some text tokens here number {i}") for i in range(100)],
         "url string, text string",
     )
-    sigs = signature_stage(normalize_stage(pages, cfg), cfg)
+    sigs = signature_stage(pages, cfg)
     plan = plan_of(sigs, "simple")
     assert plan.count("Exchange") <= 1, plan
     # signatures are computed by one Arrow-batched python stage, not per-row
@@ -82,6 +82,52 @@ def test_signature_stage_is_shuffle_free(spark, cfg):
     # BatchEvalPython — the exact per-row operator this test exists to ban.)
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan, plan
     assert "BatchEvalPython" not in plan, plan
+
+
+def _python_evals(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count(
+        "ArrowEvalPython"
+    )
+
+
+@pytest.mark.parametrize("use_html", [False, True])
+@pytest.mark.parametrize("span_pass", [False, True])
+def test_sign_stage_is_one_python_eval(spark, monkeypatch, use_html, span_pass):
+    """Strip, normalize and sign run in one Python eval: the executed plan of
+    run_pipeline's sign stage has exactly one ArrowEvalPython node, so each
+    document crosses the Arrow boundary once (and norm_text never returns
+    to the JVM only to be shipped out again)."""
+    from cqaduplicatefind_spark.config import DedupConfig
+    from cqaduplicatefind_spark.plans import pipeline
+
+    evals: list[int] = []
+    real = pipeline.signature_stage
+
+    def spy(*a, **kw):
+        df = real(*a, **kw)
+        evals.append(_python_evals(df))
+        return df
+
+    monkeypatch.setattr(pipeline, "signature_stage", spy)
+    pages = spark.createDataFrame(
+        [(f"u{i}", f"<p>some text tokens {i}</p>".encode(),
+          f"some text tokens {i}") for i in range(20)],
+        "url string, html binary, text string",
+    )
+    cfg = DedupConfig(shingle_k=3, span_pass=span_pass, shuffle_partitions=4,
+                      signature_partitions=4)
+    pipeline.run_pipeline(spark, pages, cfg, use_html=use_html).release()
+    assert evals == [1]
+
+
+def test_signature_frame_is_one_python_eval(spark, cfg):
+    from cqaduplicatefind_spark.plans.delta import signature_frame
+
+    pages = spark.createDataFrame(
+        [(f"u{i}", f"some text tokens {i}") for i in range(20)],
+        "url string, text string",
+    )
+    assert _python_evals(signature_frame(pages, cfg)) == 1
 
 
 def test_candidate_stage_shuffle_budget(spark, cfg):
@@ -95,7 +141,6 @@ def test_candidate_stage_shuffle_budget(spark, cfg):
 
     from cqaduplicatefind_spark.plans.pipeline import (
         candidate_stage,
-        normalize_stage,
         signature_stage,
     )
 
@@ -105,7 +150,7 @@ def test_candidate_stage_shuffle_budget(spark, cfg):
     )
     # mirror run_pipeline: signatures are persisted, cutting the UDF chain out of
     # the candidate plan (each branch reads the cache, not a recompute)
-    sigs = signature_stage(normalize_stage(pages, cfg), cfg).persist()
+    sigs = signature_stage(pages, cfg).persist()
     sigs.count()
     try:
         plan = plan_of(candidate_stage(sigs, cfg), "simple")

@@ -10,7 +10,6 @@ from cqaduplicatefind_spark.config import DedupConfig
 from cqaduplicatefind_spark.operators.verify import accept_edges, score_pairs
 from cqaduplicatefind_spark.plans.pipeline import (
     candidate_stage,
-    normalize_stage,
     run_pipeline,
     signature_stage,
 )
@@ -38,7 +37,7 @@ def test_hot_band_emits_linear_pairs_not_quadratic(spark):
         [(f"u{i:04d}", text) for i in range(m)], "url string, text string"
     )
     cfg = _cfg(max_band_group=4)
-    sigs = signature_stage(normalize_stage(pages, cfg), cfg).persist()
+    sigs = signature_stage(pages, cfg).persist()
     try:
         pairs = candidate_stage(sigs, cfg)
         n_pairs = pairs.count()
@@ -156,7 +155,7 @@ def test_verify_evidence_modes_agree_on_accepted_edges(spark, tiny_fixture):
     accept a superset-compatible edge set at the same threshold."""
     pages, gold_edges, _ = tiny_fixture
     cfg = _cfg()
-    sigs = signature_stage(normalize_stage(pages, cfg), cfg).persist()
+    sigs = signature_stage(pages, cfg).persist()
     try:
         cand = candidate_stage(sigs, cfg).persist()
         exact = accept_edges(

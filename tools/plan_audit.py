@@ -48,7 +48,6 @@ def main():
     from cqaduplicatefind_spark.config import DedupConfig
     from cqaduplicatefind_spark.plans.pipeline import (
         candidate_stage,
-        normalize_stage,
         signature_stage,
     )
     from cqaduplicatefind_spark.session import build_session
@@ -78,7 +77,7 @@ def main():
     pages = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
         "cast(doc_id as string) as url", "text"
     )
-    sigs = signature_stage(normalize_stage(pages, cfg), cfg)
+    sigs = signature_stage(pages, cfg)
     sections.append(
         "\n## pipeline: normalize + signatures (narrow map — one input "
         "repartition, zero other exchanges)\n\n```\n"
