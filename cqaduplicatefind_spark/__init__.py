@@ -21,7 +21,14 @@ Everything is DataFrame-declarative so Catalyst handles pruning/pushdown; the on
 Python on the hot path is Arrow-batched (no per-row Python UDFs).
 """
 
+from pyspark import TaskContext
+
 from cqaduplicatefind_spark.config import DedupConfig
+
+if TaskContext.get() is not None:  # imported inside a Python worker
+    from cqaduplicatefind_spark import worker
+
+    worker.install()
 
 __all__ = ["DedupConfig"]
 __version__ = "0.1.0"

@@ -233,9 +233,10 @@ def make_sign_udf(cfg: DedupConfig, use_html: bool = False):
     travels by closure: identical on every executor, no global state): page
     text, or UTF-8 HTML when ``use_html``, is stripped, normalized (unless
     ``cfg.normalize_input`` is False) and signed in the same worker pass, so
-    the document crosses the Arrow boundary once. The normalize memo and the
-    ``TokenHasher`` are per worker. The struct carries ``span_fps`` and
-    ``norm_text`` only when the span pass is on; nothing else reads them."""
+    the document crosses the Arrow boundary once. The normalize memo is per
+    worker process; the ``TokenHasher`` is built once per task. The struct
+    carries ``span_fps`` and ``norm_text`` only when the span pass is on;
+    nothing else reads them."""
     span = cfg.span_pass and cfg.min_overlap_span > 0
     fields = [f for f in SIGNATURE_FIELDS.fields if span or f.name != "span_fps"]
     if span:
@@ -243,7 +244,7 @@ def make_sign_udf(cfg: DedupConfig, use_html: bool = False):
 
     @F.pandas_udf(StructType(fields))
     def sign_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        hasher = TokenHasher(cfg.minhash_seed)  # per-process token-hash cache
+        hasher = TokenHasher(cfg.minhash_seed)  # token-hash cache, one per task
         for text in it:
             if use_html:
                 text = text.map(strip_value)

@@ -288,16 +288,18 @@ def null_safe_group(df: DataFrame, group_col: str | None) -> DataFrame:
 
 
 def band_keys(cfg: DedupConfig, minhash_col: str = "minhash"):
-    """JVM-side LSH band hash per band: xxhash64 over the band's signature slice.
-    Returns a list of (band_idx, hash) struct columns."""
+    """JVM-side LSH band hash per band: xxhash64 over the band's signature
+    slice. Returns one ``array<struct<band:int, bh:bigint>>`` column, parsed
+    from a single SQL expression: building it term by term costs a py4j
+    round trip per function, literal and alias (about 110 at 16 bands). No
+    ``transform()`` lambda: higher-order functions are interpreted, and these
+    terms are code-generated."""
     r = cfg.rows_per_band
-    return [
-        F.struct(
-            F.lit(i).alias("band"),
-            F.xxhash64(F.slice(F.col(minhash_col), i * r + 1, r)).alias("bh"),
-        )
+    return F.expr("array({})".format(", ".join(
+        f"named_struct('band', {i}, 'bh', "
+        f"xxhash64(slice(`{minhash_col}`, {i * r + 1}, {r})))"
         for i in range(cfg.bands)
-    ]
+    )))
 
 
 def explode_bands(
@@ -310,11 +312,7 @@ def explode_bands(
     explode. ``extra_cols`` ride along into the bucket key (e.g. a group column
     for per-forum-scoped dedup)."""
     return signatures.select(
-        F.col(id_col).alias("id"),
-        *extra_cols,
-        F.explode(F.array(*band_keys(cfg))).alias("bk"),
-    ).select(
-        "id", *extra_cols, F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh")
+        F.col(id_col).alias("id"), *extra_cols, F.inline(band_keys(cfg))
     )
 
 

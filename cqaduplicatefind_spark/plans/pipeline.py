@@ -216,7 +216,7 @@ def driver_pair_stage(
     signed = null_safe_group(signatures, group_col).select(
         "url", *g,
         # band_keys' JVM-side hashes: the Spark path's keys, bit for bit
-        F.array(*[k.getField("bh") for k in band_keys(cfg)]).alias("bh"),
+        band_keys(cfg).getField("bh").alias("bh"),
         "simhash", "n_shingles", "shingles", *span,
     ).toArrow()
     if pc.count_distinct(signed["url"], mode="all").as_py() < signed.num_rows:

@@ -7,13 +7,18 @@
 - determinism: identical clusters under different input partitioning
 """
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.config import DedupConfig
 
-from cqaduplicatefind_spark.operators.candidates import all_pairs
+from cqaduplicatefind_spark.operators.candidates import (
+    all_pairs,
+    band_keys,
+    explode_bands,
+)
 from cqaduplicatefind_spark.operators.metrics import (
     cluster_exact_match,
     clusters_to_pairs,
@@ -128,3 +133,39 @@ def test_star_loop_clusters_match_driver_path(spark, tiny_run, cfg, monkeypatch)
         finally:
             star.release()
     shell_result.release()
+
+
+def test_band_keys_expression_equals_struct_columns(spark, cfg):
+    """``band_keys``' one SQL expression gives the band rows, the per-doc
+    key arrays and the schemas of the per-band ``F.struct`` construction it
+    replaced, over random MinHash arrays that include INT64 min and max."""
+    rng = np.random.default_rng(13)
+    lo, hi = np.iinfo(np.int64).min, np.iinfo(np.int64).max
+    sigs = [rng.integers(lo, hi, cfg.num_perms, endpoint=True) for _ in range(40)]
+    sigs += [np.full(cfg.num_perms, lo), np.full(cfg.num_perms, hi),
+             np.resize([lo, hi, 0, -1], cfg.num_perms)]
+    signatures = spark.createDataFrame(
+        [(f"d{i}", [int(v) for v in s]) for i, s in enumerate(sigs)],
+        "url string, minhash array<bigint>",
+    )
+    r = cfg.rows_per_band
+    structs = F.array(*[
+        F.struct(
+            F.lit(i).alias("band"),
+            F.xxhash64(F.slice(F.col("minhash"), i * r + 1, r)).alias("bh"),
+        )
+        for i in range(cfg.bands)
+    ])
+    want = signatures.select(
+        F.col("url").alias("id"), F.explode(structs).alias("bk")
+    ).select("id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
+    got = explode_bands(signatures, cfg)
+    assert got.schema == want.schema
+    rows = sorted(got.collect())
+    assert len(rows) == len(sigs) * cfg.bands
+    assert rows == sorted(want.collect())
+    # driver_pair_stage's per-doc key array
+    got_bh = signatures.select("url", band_keys(cfg).getField("bh").alias("bh"))
+    want_bh = signatures.select("url", structs.getField("bh").alias("bh"))
+    assert got_bh.schema == want_bh.schema
+    assert sorted(got_bh.collect()) == sorted(want_bh.collect())
