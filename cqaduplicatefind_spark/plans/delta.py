@@ -146,7 +146,9 @@ def seed_index(
             f"seed batch_id must be negative (got {batch_id}); non-negative "
             "ids are reserved for increments and streaming micro-batches"
         )
-    band_store, sig_store, _ = open_stores(spark, *store_roots(work_dir))
+    band_store, sig_store, _ = open_stores(
+        spark, *store_roots(work_dir), bands=cfg.bands
+    )
     sig = signature_frame(corpus_pages, cfg, id_col, text_col).persist()
     try:
         # count FIRST: it materializes the signature cache at full input

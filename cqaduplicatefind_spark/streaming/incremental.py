@@ -30,14 +30,17 @@ Design (the part that must stay sub-linear per batch at 10^12 docs):
   new row — index rows in untouched buckets can never contribute. Without this
   the pairing window re-shuffled the ENTIRE index every micro-batch (O(index)
   per trigger — the round-2 scale hazard);
-- **a small micro-batch pairs and verifies on the driver** (band rows at
-  most ``config.DRIVER_MAX_ROWS``, exact evidence): its band rows and the
-  touched index rows are collected, paired by ``driver_bucket_pairs`` and
-  scored by ``driver_score_pairs`` / ``driver_accept`` — the same rules,
+- **a small micro-batch pairs, verifies and writes on the driver** (band
+  rows at most ``config.DRIVER_MAX_ROWS``, exact evidence): one collect
+  brings the batch's payloads and band hashes, one bounded collect the
+  touched index rows; ``driver_bucket_pairs`` pairs them and
+  ``driver_score_pairs`` / ``driver_accept`` score them — the same rules,
   without building the pairing and verify plans that were most of a 100-doc
-  trigger's cost. Spark still runs every scan and store write. A hot
-  bucket, an overflowing probe or too many endpoints send the batch to the
-  Spark plans above;
+  trigger's cost. Spark runs only the scans of the band and sig stores;
+  the batch's band, sig and match parts are written by pyarrow from the
+  collected table, and folds below the bound run on the driver too
+  (``streaming/store.py``). A hot bucket, an overflowing probe or too many
+  endpoints send the batch to the Spark plans and writes above;
 - the band/signature stores are **tier-compacted**: every ``compact_every``
   small per-batch parts fold into one tier (write work bounded by those
   parts, not the store), and tiers themselves merge once ``compact_every`` of
@@ -59,6 +62,9 @@ from concurrent.futures import ThreadPoolExecutor
 from contextlib import ExitStack
 from dataclasses import replace
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from py4j.protocol import Py4JJavaError
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
@@ -67,6 +73,7 @@ from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.config import DedupConfig
 from cqaduplicatefind_spark.functions.signatures import sign_pages
 from cqaduplicatefind_spark.operators.candidates import (
+    band_keys,
     bucket_candidates,
     driver_bucket_pairs,
     explode_bands,
@@ -169,7 +176,7 @@ class IncrementalDedup:
         self._band_rows_base: int | None = None
         self._band_rows_by_batch: dict[int, int] = {}
         self.band_store, self.sig_store, self.match_store = open_stores(
-            spark, bands_dir, sigs_dir, matches_dir, compact_every
+            spark, bands_dir, sigs_dir, matches_dir, compact_every, cfg.bands
         )
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -204,58 +211,75 @@ class IncrementalDedup:
             for session in sessions.values():
                 scope.enter_context(small_plans(session, n_band_rows))
             _mark("batch_count")
-            new_bands = explode_bands(batch_df, cfg).withColumn(
-                "is_new", F.lit(True)
-            ).persist()
-            held.append(new_bands)
             # exact replay exclusion (see PartStore.read): rows this batch
             # appended before a crash are not "index"
             idx_bands = self.band_store.read(int(batch_id))
             _mark("read_band_store")
-            idx_touched = None
             if idx_bands is None:
                 self._band_rows_base = 0
-            else:
-                if self._band_rows_base is None and self.count_index_stats:
-                    # restart over an existing store: one-time recovery count;
-                    # every later batch maintains the total arithmetically.
-                    # idx_bands already excludes the replaying batch's own
-                    # pre-crash append (src_batch row tag, see PartStore.read),
-                    # so the base is the index as it stood BEFORE this batch —
-                    # and the count is LOGICAL (dedup over the key), so
-                    # physical duplicates a crash-interrupted compaction left
-                    # behind don't inflate it either.
-                    self._band_rows_base = idx_bands.dropDuplicates(
-                        ["id", "band", "bh"]
-                    ).count()
-                # bound per-batch pairing work by TOUCHED buckets: only index
-                # rows whose (band, bh) bucket also contains a new row can ever
-                # pair (every pair must involve a new doc), so the pairing
-                # kernel's windows + self-join never shuffle the rest of the
-                # index. The touched-key set is O(batch x bands) — broadcast
-                # when it fits (the streaming case), plain shuffle semi-join
-                # when a huge batch increment exceeds BROADCAST_TOUCHED_MAX
-                # (such an increment touches most buckets anyway, so the wide
-                # join is the right plan there). The decision uses the free
-                # upper bound n_new*bands (distinct keys can only be fewer)
-                # instead of paying a count job to learn the exact size.
-                touched = new_bands.select("band", "bh").distinct()
-                probe = (
-                    F.broadcast(touched)
-                    if n_new * cfg.bands <= BROADCAST_TOUCHED_MAX
-                    else touched
-                )
-                idx_touched = idx_bands.join(probe, ["band", "bh"], "left_semi")
+            elif self._band_rows_base is None and self.count_index_stats:
+                # restart over an existing store: one-time recovery count;
+                # every later batch maintains the total arithmetically.
+                # idx_bands already excludes the replaying batch's own
+                # pre-crash append (src_batch row tag, see PartStore.read),
+                # so the base is the index as it stood BEFORE this batch —
+                # and the count is LOGICAL (dedup over the key), so
+                # physical duplicates a crash-interrupted compaction left
+                # behind don't inflate it either.
+                self._band_rows_base = idx_bands.dropDuplicates(
+                    ["id", "band", "bh"]
+                ).count()
 
-            # a batch whose band rows fit the driver bound pairs and verifies
-            # on the driver; _pairs_on_driver says when it falls back
-            on_driver = None
+            def touched_rows(keys: DataFrame) -> DataFrame | None:
+                # bound per-batch pairing work by TOUCHED buckets: only index
+                # rows whose (band, bh) bucket also contains a new row can
+                # ever pair (every pair must involve a new doc), so the
+                # pairing never reads the rest of the index
+                if idx_bands is None:
+                    return None
+                return idx_bands.join(keys, ["band", "bh"], "left_semi")
+
+            # a batch whose band rows fit the driver bound is collected once
+            # (payload columns and band hashes): that one table feeds the
+            # pairing, the new docs' payloads and both store appends.
+            # _pairs_on_driver says when the batch falls back to Spark.
+            signed = on_driver = idx_touched = None
             if n_band_rows <= config.DRIVER_MAX_ROWS and cfg.verify_evidence == "exact":
-                on_driver = self._pairs_on_driver(new_bands, idx_touched)
+                signed = batch_df.select(
+                    *SIG_COLS, band_keys(cfg).getField("bh").alias("bh")
+                ).toArrow()
+                new = _band_table(signed, cfg.bands)
+                keys = np.unique(np.stack(
+                    [new["band"].to_numpy(), new["bh"].to_numpy()], axis=1
+                ), axis=0)
+                idx_touched = touched_rows(F.broadcast(arrow_frame(
+                    self.spark, "band int, bh long",
+                    {"band": keys[:, 0].astype(np.int32), "bh": keys[:, 1]},
+                )))
+                on_driver = self._pairs_on_driver(new, idx_touched)
             if on_driver is not None:
                 pairs, n_idx_joined = on_driver
                 n_cand = len(pairs)
             else:
+                new_bands = explode_bands(batch_df, cfg).withColumn(
+                    "is_new", F.lit(True)
+                ).persist()
+                held.append(new_bands)
+                if signed is None:
+                    # the touched-key set is O(batch x bands) — broadcast
+                    # when it fits (the streaming case), plain shuffle
+                    # semi-join when a huge batch increment exceeds
+                    # BROADCAST_TOUCHED_MAX (such an increment touches most
+                    # buckets anyway, so the wide join is the right plan
+                    # there). The decision uses the free upper bound
+                    # n_new*bands (distinct keys can only be fewer) instead
+                    # of paying a count job to learn the exact size.
+                    touched = new_bands.select("band", "bh").distinct()
+                    idx_touched = touched_rows(
+                        F.broadcast(touched)
+                        if n_band_rows <= BROADCAST_TOUCHED_MAX
+                        else touched
+                    )
                 # stats row counts observed by the jobs that build the
                 # caches. Spark keeps one observation registry per session,
                 # not a listener per observation; a batch that fails before
@@ -310,7 +334,7 @@ class IncrementalDedup:
             # + write), and the stats row count rides along as an observed
             # metric.
             if on_driver is not None:
-                edges, n_payload = self._edges_on_driver(pairs, batch_df, batch_id)
+                edges, n_payload = self._edges_on_driver(pairs, signed, batch_id)
             else:
                 if n_cand == 0:
                     needed = batch_df.select(*SIG_COLS).limit(0)
@@ -346,25 +370,34 @@ class IncrementalDedup:
                     cfg,
                 )
 
-            # the three per-batch writes are mutually independent (distinct
-            # dirs, distinct cached sources) and every one is idempotent per
-            # batch_id — overwrite-by-subdir — so ANY interleaving/crash
-            # prefix replays correctly (the same exactly-once argument as the
-            # serial order). Overlapping them fills each job's straggler tail
-            # with the next job's tasks (guide §2.6) instead of paying three
-            # serial job latencies. The pooled appends run under the caller's
-            # Spark job group and local properties.
-            inherit = inheritable_thread_target(self.spark)
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_bands = pool.submit(
-                    inherit(self.band_store.append), batch_id, new_bands, n_band_rows
-                )
-                f_sigs = pool.submit(
-                    inherit(self.sig_store.append), batch_id, batch_df, n_new
-                )
+            if on_driver is not None:
+                # the driver holds the batch, its band rows and its edges:
+                # pyarrow writes the three parts, each marked committed last
+                self.band_store.append(batch_id, new)
+                self.sig_store.append(batch_id, signed)
                 self.match_store.append(batch_id, edges)
-                f_bands.result()
-                f_sigs.result()
+            else:
+                # the three per-batch writes are mutually independent
+                # (distinct dirs, distinct cached sources) and every one is
+                # idempotent per batch_id — overwrite-by-subdir — so ANY
+                # interleaving/crash prefix replays correctly (the same
+                # exactly-once argument as the serial order). Overlapping
+                # them fills each job's straggler tail with the next job's
+                # tasks (guide §2.6) instead of paying three serial job
+                # latencies. The pooled appends run under the caller's Spark
+                # job group and local properties.
+                inherit = inheritable_thread_target(self.spark)
+                with ThreadPoolExecutor(max_workers=2) as pool:
+                    f_bands = pool.submit(
+                        inherit(self.band_store.append),
+                        batch_id, new_bands, n_band_rows,
+                    )
+                    f_sigs = pool.submit(
+                        inherit(self.sig_store.append), batch_id, batch_df, n_new
+                    )
+                    self.match_store.append(batch_id, edges)
+                    f_bands.result()
+                    f_sigs.result()
             if on_driver is None and n_cand > 0:
                 n_payload = _observed_rows(payload_rows, needed)
             _mark("score_write")
@@ -396,17 +429,18 @@ class IncrementalDedup:
             self.batch_paths.append("spark" if on_driver is None else "driver")
             _mark("stats_count")
 
-            # index append bookkeeping: the writes themselves ran overlapped
-            # with the matches write above (src_batch rides every band row so
-            # replay exclusion stays exact after compaction renames the row's
-            # home dir — see PartStore.read); both writers read hot caches
+            # index append bookkeeping: the writes themselves ran above
+            # (src_batch rides every band row so replay exclusion stays exact
+            # after compaction renames the row's home dir — see
+            # PartStore.read); on the Spark path both writers read hot caches
             # materialized by the pairing job, and coalesce merges cached
             # partitions — no shuffle, no recompute — into size-targeted
             # files instead of one tiny file per upstream partition.
             self._band_rows_by_batch[int(batch_id)] = n_band_rows
-            # compaction stays SERIAL (unlike the writes above): the merge
-            # crash-window tests pin per-dir fault sequencing, and an A/B of
-            # overlapping the two folds broke that pinned contract for ~0.5s
+            # compaction stays SERIAL (unlike the Spark writes above): the
+            # merge crash-window tests pin per-dir fault sequencing, and an
+            # A/B of overlapping the two folds broke that pinned contract for
+            # ~0.5s. Folds below the driver bound run on the driver.
             self.band_store.compact(int(batch_id))
             self.sig_store.compact(int(batch_id))
             _mark("compact")
@@ -417,23 +451,21 @@ class IncrementalDedup:
             self.phase_times.append(phases)
 
     def _pairs_on_driver(
-        self, new_bands: DataFrame, idx_touched: DataFrame | None
+        self, new: pa.Table, idx_touched: DataFrame | None
     ) -> tuple[list[tuple[str, str]], int] | None:
-        """The driver path's pairs and index rows joined: one collect of the
-        batch's bands (filling the cache the band-store append reads), one
-        bounded collect of the touched index rows. None sends the batch to
-        the Spark path: the touched rows overflow, a bucket is hot, or the
-        endpoints, whose payloads come next, exceed ``DRIVER_MAX_ROWS //
-        bands`` docs."""
+        """The driver path's pairs and index rows joined, for the batch's
+        (id, band, bh) rows ``new``: one bounded collect of the touched index
+        rows. None sends the batch to the Spark path: the touched rows
+        overflow, a bucket is hot, or the endpoints, whose payloads come
+        next, exceed ``DRIVER_MAX_ROWS // bands`` docs."""
         cfg = self.cfg
-        new = new_bands.select("id", "band", "bh").toArrow()
         idx = new.slice(0, 0)
         if idx_touched is not None:
             idx = idx_touched.limit(config.DRIVER_MAX_ROWS + 1).toArrow()
             if idx.num_rows > config.DRIVER_MAX_ROWS:
                 return None
             # compaction crash-window tolerance, as on the Spark path
-            idx = idx.group_by(["id", "band", "bh"]).aggregate([])
+            idx = idx.take(_first_rows(idx))
         pairs = driver_bucket_pairs(new, idx, cfg.max_band_group)
         ends = {u for p in pairs or () for u in p}
         if pairs is None or len(ends) > config.DRIVER_MAX_ROWS // cfg.bands:
@@ -441,38 +473,68 @@ class IncrementalDedup:
         return pairs, idx.num_rows
 
     def _edges_on_driver(
-        self, pairs: list[tuple[str, str]], batch_df: DataFrame, batch_id: int
-    ) -> tuple[DataFrame, int]:
-        """The accepted edges and the payload rows fetched: the endpoints'
-        only, in one semi-join against an Arrow-built id frame (no ``isin``
-        literals: ~1 s of py4j calls per 1.6k keys)."""
+        self, pairs: list[tuple[str, str]], signed: pa.Table, batch_id: int
+    ) -> tuple[pa.Table, int]:
+        """The accepted edges and the payload rows fetched. The endpoints'
+        index payloads come from one semi-join against an Arrow-built id
+        frame (no ``isin`` literals: ~1 s of py4j calls per 1.6k keys), the
+        batch's own from ``signed``. A url in both keeps its index row, as in
+        the Spark path's ``index ∪ batch`` first-occurrence rule."""
         if not pairs:
-            return arrow_frame(self.spark, EDGE_SCHEMA), 0
-        ends = list({u for p in pairs for u in p})
-        ids = arrow_frame(self.spark, "url string", {"url": ends})
-        store = batch_df.select(*SIG_COLS)
+            return self.match_store.arrow_schema.empty_table(), 0
+        cols = ["url", "simhash", "n_shingles", "shingles"]
+        ends = pa.array(list({u for p in pairs for u in p}), pa.string())
+        found = []
         idx_sigs = self.sig_store.read(int(batch_id))
         if idx_sigs is not None:
-            store = idx_sigs.unionByName(store)
-        payload = (
-            store.join(F.broadcast(ids), "url", "left_semi")
-            .select("url", "simhash", "n_shingles", "shingles")
-            .toArrow()
-        )
+            ids = arrow_frame(self.spark, "url string", {"url": ends})
+            found.append(
+                idx_sigs.join(F.broadcast(ids), "url", "left_semi")
+                .select(*cols).toArrow()
+            )
+        found.append(signed.select(cols).filter(
+            pc.is_in(signed["url"], value_set=ends)
+        ))
+        payload = pa.concat_tables(found, promote_options="permissive")
         first: dict[str, int] = {}
         for i, u in enumerate(payload["url"].to_pylist()):
             first.setdefault(u, i)  # compaction crash-window tolerance
         payload = payload.take(list(first.values()))
         scored = driver_score_pairs(pairs, payload, self.cfg)
         keep = driver_accept(scored, self.cfg)
-        edges = {c: v[keep] for c, v in scored.items()}
-        return arrow_frame(self.spark, EDGE_SCHEMA, edges), payload.num_rows
+        return pa.table({c: v[keep] for c, v in scored.items()}), payload.num_rows
 
     def matches(self) -> DataFrame:
         m = self.match_store.read()
         if m is None:
             return arrow_frame(self.spark, EDGE_SCHEMA)
         return m
+
+
+def _band_table(signed: pa.Table, bands: int) -> pa.Table:
+    """``explode_bands``' (id, band, bh) rows from a collected batch whose
+    ``bh`` column holds each doc's ``band_keys`` hashes."""
+    n = signed.num_rows
+    return pa.table({
+        "id": signed["url"].take(np.repeat(np.arange(n), bands)),
+        "band": np.tile(np.arange(bands, dtype=np.int32), n),
+        "bh": signed["bh"].combine_chunks().flatten(),
+    })
+
+
+def _first_rows(t: pa.Table) -> np.ndarray:
+    """The positions of each distinct (id, band, bh) row's first copy, in
+    order. numpy, not an Arrow ``group_by``: a process's first Acero call
+    costs ~0.35 s, and a stream's first timed trigger would pay it."""
+    if not t.num_rows:
+        return np.arange(0)
+    ids = t["id"].combine_chunks().dictionary_encode(null_encoding="encode")
+    keys = np.stack([
+        ids.indices.to_numpy().astype(np.int64),
+        t["band"].to_numpy().astype(np.int64),
+        t["bh"].to_numpy(),
+    ], axis=1)
+    return np.sort(np.unique(keys, axis=0, return_index=True)[1])
 
 
 def run_incremental_dedup(

@@ -16,6 +16,19 @@ when it commits, so a write killed mid-job leaves a part dir holding some
 part files and no marker. Readers and merges skip it, and a replay of the
 batch id overwrites it.
 
+Writers: Spark or the driver, by the one row bound
+(``config.DRIVER_MAX_ROWS``, read at call time). An append of a Spark
+frame is a Spark job; an append of a ``pyarrow.Table`` (the incremental
+matcher's driver path already holds the micro-batch and its edges) is
+written by pyarrow on the driver. A merge whose sources' footer rows fit the
+bound folds on the driver too; above it, Spark folds. The bound counts band
+rows: a band-store row is one, a sig-store row (one doc) is ``bands`` of
+them, the same ``DRIVER_MAX_ROWS // bands`` docs the driver path's payload
+collect is held to. At stream scale each of those Spark jobs was a fixed
+cost larger than its few kilobytes of work. Both writers cut the same files
+(``_n_files``) and write ``_SUCCESS`` last, after every part file, so the
+marker means the same thing whoever wrote the dir.
+
 Schema: each store is read with its declared schema, so no parquet footer is
 opened for schema inference on the read path (a schema-merging read opened
 every footer in the store on every trigger — ~0.5s/trigger on a 4-batch sf0.1
@@ -46,10 +59,15 @@ from __future__ import annotations
 import os
 import shutil
 
+import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType
 
+from cqaduplicatefind_spark import config
+from cqaduplicatefind_spark.config import DedupConfig
 from cqaduplicatefind_spark.operators.verify import EDGE_SCHEMA
 
 BAND_STORE_SCHEMA = "id string, band int, bh long, src_batch long"
@@ -73,33 +91,39 @@ def store_roots(work_dir: str) -> tuple[str, str, str]:
 
 def open_stores(
     spark: SparkSession, bands_dir: str, sigs_dir: str, matches_dir: str,
-    compact_every: int = 16,
+    compact_every: int = 16, bands: int = DedupConfig.bands,
 ) -> tuple[PartStore, PartStore, PartStore]:
     """The band, signature and match stores. Matches are never compacted and
     keep the partitioning of the job that computes them (their row count is
-    known only after that job ran)."""
+    known only after that job ran); a driver-written match part is one file.
+    ``bands`` (the config's) weighs a sig-store row against the driver
+    bound."""
     return (
         PartStore(spark, bands_dir, BAND_STORE_SCHEMA, BAND_ROWS_PER_FILE,
                   compact_every),
         PartStore(spark, sigs_dir, SIG_STORE_SCHEMA, SIG_ROWS_PER_FILE,
-                  compact_every),
+                  compact_every, row_weight=bands),
         PartStore(spark, matches_dir, EDGE_SCHEMA),
     )
 
 
 class PartStore:
     """One store root: ``batch=<id>`` parts folded into ``compacted=`` tiers,
-    read with the declared ``schema``."""
+    read with the declared ``schema``. ``row_weight`` is one row's count
+    against the driver bound, in band rows."""
 
     def __init__(self, spark: SparkSession, root: str, schema: str,
                  rows_per_file: int | None = None,
-                 compact_every: int = 16) -> None:
+                 compact_every: int = 16, row_weight: int = 1) -> None:
         self.spark = spark
         self.root = root
         self.schema = schema
         self.rows_per_file = rows_per_file
         self.compact_every = compact_every
-        self.columns = DataType.fromDDL(schema).names
+        self.row_weight = row_weight
+        struct = DataType.fromDDL(schema)
+        self.columns = struct.names
+        self.arrow_schema = to_arrow_schema(struct)
         self.tagged = "src_batch" in self.columns
         os.makedirs(root, exist_ok=True)
 
@@ -147,19 +171,51 @@ class PartStore:
             os.path.join(self.root, f"batch={batch_id}")
         ).drop("src_batch")
 
-    def append(self, batch_id: int, frame: DataFrame,
+    def append(self, batch_id: int, frame: DataFrame | pa.Table,
                n_rows: int | None = None) -> None:
         """Write ``frame`` as ``batch=<batch_id>``, replacing a previous write
-        of the same id. ``n_rows`` sizes the files (a shuffle-free coalesce of
-        the frame's partitions); without it the frame keeps its partitioning."""
+        of the same id. ``n_rows`` sizes a Spark frame's files (a
+        shuffle-free coalesce of its partitions); without it the frame keeps
+        its partitioning. A ``pyarrow.Table`` is written on the driver, sized
+        by its own row count (one file when the store sets no size)."""
+        path = os.path.join(self.root, f"batch={batch_id}")
+        if isinstance(frame, pa.Table):
+            self._write(path, self._conform(frame, batch_id))
+            return
         out = frame.select(*[c for c in self.columns if c != "src_batch"])
         if self.tagged:
             out = out.withColumn("src_batch", F.lit(int(batch_id)).cast("long"))
         if n_rows is not None:
             out = out.coalesce(_n_files(n_rows, self.rows_per_file))
-        out.write.mode("overwrite").parquet(
-            os.path.join(self.root, f"batch={batch_id}")
-        )
+        out.write.mode("overwrite").parquet(path)
+
+    def _conform(self, table: pa.Table, batch_id: int | None = None) -> pa.Table:
+        """``table`` in the declared Arrow schema: each column cast to its
+        declared type, a missing one null (as Spark's schema'd read fills
+        it). ``batch_id`` tags every row of a tagged store with it."""
+        cols = []
+        for field in self.arrow_schema:
+            if field.name == "src_batch" and batch_id is not None:
+                col = pa.array(np.full(table.num_rows, batch_id, np.int64))
+            elif field.name in table.column_names:
+                col = table[field.name].cast(field.type)
+            else:
+                col = pa.nulls(table.num_rows, field.type)
+            cols.append(col)
+        return pa.Table.from_arrays(cols, schema=self.arrow_schema)
+
+    def _write(self, path: str, table: pa.Table) -> None:
+        """Spark's overwrite, on the driver: replace ``path`` by ``table`` cut
+        into ``_n_files`` files, then mark it committed with ``_SUCCESS``."""
+        if os.path.exists(path):
+            shutil.rmtree(path)
+        os.makedirs(path)
+        n = _n_files(table.num_rows, self.rows_per_file) if self.rows_per_file else 1
+        step = -(-table.num_rows // n)
+        for i in range(n):
+            pq.write_table(table.slice(i * step, step),
+                           os.path.join(path, f"part-{i:05d}.parquet"))
+        open(os.path.join(path, "_SUCCESS"), "w").close()
 
     def compact(self, batch_id: int) -> None:
         """TIERED compaction: once ``compact_every`` small ``batch=*`` parts
@@ -182,23 +238,19 @@ class PartStore:
                 self._merge(sources, os.path.join(
                     self.root, f"compacted={batch_id}{suffix}"))
 
-    def _footer_rows(self, sources: list[str]) -> int:
-        """Summed footer row counts of ``sources``; raises on a file holding a
+    def _footer_rows(self, files: list[str]) -> int:
+        """Summed footer row counts of ``files``; raises on a file holding a
         column the declared schema lacks (a missing column reads as null)."""
         n = 0
-        for p in sources:
-            for f in os.listdir(p):
-                if not f.endswith(".parquet"):
-                    continue
-                meta = pq.read_metadata(os.path.join(p, f))
-                extra = set(meta.schema.to_arrow_schema().names) - set(self.columns)
-                if extra:
-                    raise ValueError(
-                        f"{os.path.join(p, f)} holds columns {sorted(extra)} "
-                        f"the store schema lacks ({self.schema}); refusing to "
-                        "compact them away"
-                    )
-                n += meta.num_rows
+        for f in files:
+            meta = pq.read_metadata(f)
+            extra = set(meta.schema.to_arrow_schema().names) - set(self.columns)
+            if extra:
+                raise ValueError(
+                    f"{f} holds columns {sorted(extra)} the store schema "
+                    f"lacks ({self.schema}); refusing to compact them away"
+                )
+            n += meta.num_rows
         return n
 
     def _merge(self, sources: list[str], final: str) -> None:
@@ -213,12 +265,25 @@ class PartStore:
         ``.old`` dirs self-heal by re-entering the next merge as sources.
         The fold reads the raw parts (tags included, so a mixed store's
         untagged rows keep a null tag) and writes size-targeted files — a tier
-        must not multiply the file count it replaces."""
-        n_rows = self._footer_rows(sources)
+        must not multiply the file count it replaces. Sources whose rows fit
+        the driver bound fold on the driver (pyarrow, read file by file into
+        the declared schema); larger ones fold in one Spark job."""
+        files = [
+            os.path.join(p, f) for p in sources for f in sorted(os.listdir(p))
+            if f.endswith(".parquet")
+        ]
+        n_rows = self._footer_rows(files)
         tmp = os.path.join(self.root, "_compact_tmp")
-        self.spark.read.schema(self.schema).parquet(*sources).coalesce(
-            _n_files(n_rows, self.rows_per_file)
-        ).write.mode("overwrite").parquet(tmp)
+        if n_rows * self.row_weight <= config.DRIVER_MAX_ROWS:
+            tables = [self.arrow_schema.empty_table()]
+            for f in files:
+                with pq.ParquetFile(f) as part:
+                    tables.append(self._conform(part.read()))
+            self._write(tmp, pa.concat_tables(tables))
+        else:
+            self.spark.read.schema(self.schema).parquet(*sources).coalesce(
+                _n_files(n_rows, self.rows_per_file)
+            ).write.mode("overwrite").parquet(tmp)
         old = final + ".old"
         if os.path.exists(final):
             if os.path.exists(old):

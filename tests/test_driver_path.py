@@ -83,7 +83,20 @@ def _stream(spark, work, name, sigs, seed, batches, compact_every):
     for k, batch in enumerate(batches):
         dedup.process_batch(sigs.where(F.col("url").isin([u for u, _ in batch])), k)
     rows = sorted(tuple(r) for r in dedup.matches().collect())
-    return rows, dedup.batch_stats, dedup.batch_paths
+    return rows, dedup.batch_stats, dedup.batch_paths, _store_contents(spark, dedup)
+
+
+def _store_contents(spark, dedup):
+    """Per store: its sorted raw rows (the band store's ``src_batch`` tag
+    included) and its part-dir names, asserting each dir is committed."""
+    out = {}
+    for s in (dedup.band_store, dedup.sig_store, dedup.match_store):
+        dirs = sorted(os.listdir(s.root))
+        assert all(os.path.exists(os.path.join(s.root, d, "_SUCCESS"))
+                   for d in dirs), dirs
+        rows = spark.read.schema(s.schema).parquet(*s.parts()).collect()
+        out[os.path.basename(s.root)] = (dirs, sorted(tuple(r) for r in rows))
+    return out
 
 
 @settings(max_examples=4, deadline=None, derandomize=True)
@@ -92,7 +105,10 @@ def test_driver_path_equals_spark_path(spark, corpus):
     """Differential: the same seeded store and batches, once on the driver
     path and once with the Spark path forced (the bound below every batch),
     give identical match rows (all six columns, exact doubles, duplicates
-    counted) and identical batch stats."""
+    counted), identical batch stats, and identical store contents: the
+    same committed part dirs and the same rows in each store, the band
+    store's batch tags included. The driver side writes its parts and folds
+    its tiers with pyarrow, the forced side with Spark."""
     seed, batches, compact_every = corpus
     pages = spark.createDataFrame(
         seed + [d for b in batches for d in b], "url string, text string"
@@ -108,9 +124,10 @@ def test_driver_path_equals_spark_path(spark, corpus):
         sigs.unpersist()
         shutil.rmtree(work, ignore_errors=True)
 
-    rows, stats, paths = driver
+    rows, stats, paths, contents = driver
     assert rows == forced[0]
     assert stats == forced[1]
+    assert contents == forced[3]
     assert forced[2] == ["spark"] * len(batches)
     # the hot family's last batch falls back; the quiet batch stays
     assert "spark" in paths and paths[-1] == "driver"
@@ -165,11 +182,12 @@ def kernel_calls(monkeypatch):
 
 def test_driver_batch_job_count_is_pinned(spark, tmp_path, kernel_calls):
     """A below-bound, non-compacting micro-batch with index rows and
-    candidates runs 9 jobs: the batch count, the new-band collect, the
-    touched-key broadcast and the bounded touched-row collect, the endpoint
-    broadcast and the payload collect, and the three store writes. Every one
-    carries the caller's job group, the pooled writes included, and no
-    bucket_candidates/score_pairs plan is built."""
+    candidates runs 6 jobs: the batch count, the batch collect (payload
+    columns and band hashes), the touched-key broadcast and the bounded
+    touched-row collect, the endpoint broadcast and the index-payload
+    collect. The three store writes run on the driver. Every job carries the
+    caller's job group, and no bucket_candidates/score_pairs plan is
+    built."""
     dedup = IncrementalDedup(spark, CFG, *store.store_roots(str(tmp_path)))
     dedup.process_batch(_sigs(spark, _fam(0)), 0)
     batch = _sigs(spark, _fam(1))
@@ -180,7 +198,7 @@ def test_driver_batch_job_count_is_pinned(spark, tmp_path, kernel_calls):
     assert dedup.batch_stats[-1]["n_candidates"] == 1
     assert kernel_calls == []
     assert not ungrouped
-    assert len(jobs) == 9
+    assert len(jobs) == 6
     assert {(r.id_a, r.id_b) for r in dedup.matches().collect()} == {
         ("fam0", "fam1")
     }

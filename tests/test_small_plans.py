@@ -6,7 +6,9 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pytest
+from pyspark.sql.classic.dataframe import DataFrame
 
 from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.config import DedupConfig
@@ -50,17 +52,41 @@ def caller_aqe(spark, request):
 @pytest.fixture
 def match_writes(monkeypatch):
     """Spy on the matches store's appends: per write, the caller session's
-    AQE setting and the root node of the edge frame's executed plan."""
+    AQE setting and the root node of the edge frame's executed plan
+    (``"pyarrow"`` for an Arrow table the driver path writes)."""
     seen: list[tuple[str, str]] = []
     real = PartStore.append
 
     def spy(self, batch_id, frame, n_rows=None):
         if os.path.basename(self.root) == "matches":
-            seen.append((self.spark.conf.get(AQE), _root_node(frame)))
+            root = "pyarrow" if isinstance(frame, pa.Table) else _root_node(frame)
+            seen.append((self.spark.conf.get(AQE), root))
         return real(self, batch_id, frame, n_rows)
 
     monkeypatch.setattr(PartStore, "append", spy)
     return seen
+
+
+@pytest.fixture
+def collects(monkeypatch):
+    """Spy on ``DataFrame.toArrow``, the driver path's collects: per
+    collect, the frame's session AQE setting and its executed plan's root
+    node."""
+    seen: list[tuple[str, str]] = []
+    real = DataFrame.toArrow
+
+    def spy(self):
+        seen.append((self.sparkSession.conf.get(AQE), _root_node(self)))
+        return real(self)
+
+    monkeypatch.setattr(DataFrame, "toArrow", spy)
+    return seen
+
+
+def _non_adaptive(plans) -> bool:
+    return bool(plans) and all(
+        aqe == "false" and "Adaptive" not in root for aqe, root in plans
+    )
 
 
 def test_scope_follows_the_bound_and_restores(spark):
@@ -117,13 +143,14 @@ def test_missing_observed_metric_falls_back_to_the_count(spark):
 
 @pytest.mark.parametrize("caller_aqe", ["true", "false"], indirect=True)
 def test_process_batch_below_bound_runs_non_adaptive(
-    spark, tmp_path, caller_aqe, match_writes
+    spark, tmp_path, caller_aqe, match_writes, collects
 ):
     dedup = IncrementalDedup(spark, CFG, *store_roots(str(tmp_path)))
     for i in range(2):
         dedup.process_batch(signature_frame(_pages(spark, i), CFG), i)
     assert [aqe for aqe, _ in match_writes] == ["false", "false"]
     assert not any("Adaptive" in root for _, root in match_writes)
+    assert _non_adaptive(collects)
     assert spark.conf.get(AQE) == caller_aqe
     assert {(r.id_a, r.id_b) for r in dedup.matches().collect()} == {
         ("fam0", "fam1")
@@ -177,7 +204,9 @@ def test_delta_dedup_restores_conf(spark, tmp_path, monkeypatch, caller_aqe):
     assert spark.conf.get(AQE) == caller_aqe
 
 
-def test_foreach_batch_path_runs_non_adaptive(spark, tmp_path, match_writes):
+def test_foreach_batch_path_runs_non_adaptive(
+    spark, tmp_path, match_writes, collects
+):
     src = str(tmp_path / "incoming")
     for i in range(2):
         _pages(spark, i).write.mode("append").parquet(src)
@@ -187,9 +216,8 @@ def test_foreach_batch_path_runs_non_adaptive(spark, tmp_path, match_writes):
     )
     q.awaitTermination(120)
     assert q.exception() is None
-    assert match_writes and all(
-        aqe == "false" and "Adaptive" not in root for aqe, root in match_writes
-    )
+    assert _non_adaptive(match_writes)
+    assert _non_adaptive(collects)
     assert spark.conf.get(AQE) == "true"
     assert {(r.id_a, r.id_b) for r in dedup.matches().collect()} == {
         ("fam0", "fam1")

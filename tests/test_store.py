@@ -5,6 +5,7 @@ increment."""
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import tempfile
 
@@ -33,21 +34,48 @@ def _band_rows(spark, n, start=0):
     )
 
 
-def test_appends_and_merges_share_one_file_size_rule(spark, tmp_path, monkeypatch):
+def _written_by(path):
+    """"driver" when pyarrow wrote every part file of ``path`` (its
+    ``part-<n>.parquet`` names), else "spark"."""
+    names = _parquet_files(path)
+    driver = all(re.fullmatch(r"part-\d{5}\.parquet", f) for f in names)
+    return "driver" if driver else "spark"
+
+
+@pytest.mark.parametrize("writer", ["driver", "spark"])
+def test_appends_and_merges_share_one_file_size_rule(
+    spark, tmp_path, monkeypatch, writer
+):
     """An append of N rows writes ceil(N / rows_per_file) files, and a merge
-    sizes its tier the same way from the summed footer row counts."""
+    sizes its tier the same way from the summed footer row counts, whoever
+    writes: an Arrow-table append and a fold below the driver bound, or a
+    Spark append and a Spark fold (the bound below every fold)."""
     monkeypatch.setattr(store, "BAND_ROWS_PER_FILE", 40)
+    if writer == "spark":
+        monkeypatch.setattr(config, "DRIVER_MAX_ROWS", -1)
     bands, _, _ = store.open_stores(
         spark, *store.store_roots(str(tmp_path)), compact_every=2
     )
-    bands.append(0, _band_rows(spark, 50), 50)
-    assert len(_parquet_files(os.path.join(bands.root, "batch=0"))) == 2
-    bands.append(1, _band_rows(spark, 50, start=50), 50)
+
+    def rows(start):
+        frame = _band_rows(spark, 50, start)
+        return frame.toArrow() if writer == "driver" else frame
+
+    bands.append(0, rows(0), 50)
+    part = os.path.join(bands.root, "batch=0")
+    assert len(_parquet_files(part)) == 2
+    assert _written_by(part) == writer
+    bands.append(1, rows(50), 50)
     bands.compact(1)
     (tier,) = bands.parts()
     assert os.path.basename(tier) == "compacted=1"
     assert len(_parquet_files(tier)) == 3  # ceil(100 / 40)
-    assert bands.read().count() == 100
+    assert _written_by(tier) == writer
+    assert sorted(os.listdir(bands.root)) == ["compacted=1"]
+    tagged = bands.spark.read.schema(bands.schema).parquet(tier)
+    assert sorted(
+        (int(r.id), r.src_batch) for r in tagged.collect()
+    ) == [(i, i // 50) for i in range(100)]
 
 
 def test_compaction_refuses_a_part_with_an_undeclared_column(spark, tmp_path):
@@ -128,6 +156,62 @@ def test_uncommitted_part_stays_hidden_until_replayed(spark, tmp_path):
     for root in roots:
         assert os.path.exists(os.path.join(root, "batch=1", "_SUCCESS"))
     assert matches(fresh) == pairs(0, 1, 2, 3)
+
+
+def test_failed_driver_append_stays_hidden_until_replayed(
+    spark, tmp_path, monkeypatch
+):
+    """A driver append that dies after the first file of a multi-file part
+    leaves the part without ``_SUCCESS``, and the batch's sig and match
+    parts unwritten. A fresh matcher never reads it: its matches and band
+    index leave the batch out. A replay of the batch id overwrites it with a
+    committed part."""
+    monkeypatch.setattr(store, "BAND_ROWS_PER_FILE", CFG.bands)  # a file a doc
+    monkeypatch.setattr(store, "SIG_ROWS_PER_FILE", 1)
+    roots = store.store_roots(str(tmp_path))
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
+
+    def sigs_for(i):
+        rows = [(f"fam{i}", base + f"tail{i}"), (f"noise{i}", f"zz{i} qq " * 30)]
+        return signature_frame(
+            spark.createDataFrame(rows, "url string, text string"), CFG
+        )
+
+    def matches(d):
+        return {(r.id_a, r.id_b) for r in d.matches().collect()}
+
+    dedup = IncrementalDedup(spark, CFG, *roots)
+    dedup.process_batch(sigs_for(0), 0)
+    write_table = store.pq.write_table
+    written = []
+
+    def dies_after_one(table, where, **kw):
+        if written:
+            raise OSError("disk full")
+        written.append(where)
+        write_table(table, where, **kw)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(store.pq, "write_table", dies_after_one)
+        with pytest.raises(OSError, match="disk full"):
+            dedup.process_batch(sigs_for(1), 1)
+    part = os.path.join(dedup.bands_dir, "batch=1")
+    assert sorted(os.listdir(part)) == ["part-00000.parquet"]
+    for root in roots[1:]:
+        assert not os.path.exists(os.path.join(root, "batch=1"))
+
+    fresh = IncrementalDedup(spark, CFG, *roots)
+    assert matches(fresh) == set()
+    fresh.process_batch(sigs_for(2), 2)
+    assert fresh.batch_paths == ["driver"]
+    assert matches(fresh) == {("fam0", "fam2")}
+    assert "fam1" not in {r.id for r in fresh.band_store.read().collect()}
+
+    fresh.process_batch(sigs_for(1), 1)  # the replay
+    assert len(_parquet_files(part)) == 2
+    for root in roots:
+        assert os.path.exists(os.path.join(root, "batch=1", "_SUCCESS"))
+    assert matches(fresh) == {("fam0", "fam1"), ("fam0", "fam2"), ("fam1", "fam2")}
 
 
 def _doc(words):
