@@ -1850,7 +1850,6 @@ def _edge_oracle_config() -> DedupConfig:
         accept_hamming=False,
         containment_accept=None,
         span_pass=False,
-        verify_evidence="exact",
     )
 
 

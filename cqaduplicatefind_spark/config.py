@@ -11,13 +11,17 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 # Mersenne prime 2^61 - 1: modulus for the universal-hash MinHash permutations.
 # Classic (a*x + b) mod p construction (Broder 1997, "On the resemblance and
 # containment of documents").
 MERSENNE_PRIME_61 = (1 << 61) - 1
+
+# SimHash width: one signed 64-bit lane per doc (Spark ``bigint``), split into
+# ``hamming_k + 1`` pigeonhole pieces for candidate generation.
+SIMHASH_BITS = 64
 
 # Row bound for work that runs on (or ships through) the driver instead of a
 # distributed plan: connected components union-finds edge sets of at most
@@ -80,7 +84,6 @@ class DedupConfig:
 
     # --- shingling ---
     shingle_k: int = 5           # tokens per shingle (w-shingling over normalized tokens)
-    lowercase: bool = True
     # False = trust the input text column as ALREADY normalized (tokenized,
     # single-spaced) and skip the reference normalization pass — for corpora
     # pre-cleaned upstream, and for oracle queries whose SQL twin cannot
@@ -96,11 +99,10 @@ class DedupConfig:
     rows_per_band: int = 8
 
     # --- SimHash ---
-    simhash_bits: int = 64
     simhash_seed: int = 7
     hamming_k: int = 3           # match if Hamming distance <= k (pigeonhole: k+1 pieces)
 
-    # --- verification ---
+    # --- verification: every candidate pair is exactly verified ---
     jaccard_threshold: float = 0.8   # exact-verify cutoff for an edge
     # accept-arm toggles (accept_edges): an edge is accepted on exact Jaccard >=
     # jaccard_threshold, OR (accept_hamming) SimHash Hamming <= hamming_k, OR
@@ -115,12 +117,6 @@ class DedupConfig:
     # below the LSH collision curve (page embedded in a boilerplate shell), each
     # pair exactly verified; edges union into clustering
     span_pass: bool = True
-    # what the verify joins ship per doc (the pipeline's dominant shuffle volume):
-    # "exact" (shingle sets only; every candidate exactly verified — right for the
-    # recall>=0.99 gate and short docs), "estimate" (fixed-width minhash only;
-    # right for multi-KB shingle sets where exact verification is a later targeted
-    # pass), or "both" (minhash prefilter + exact set ops on survivors)
-    verify_evidence: str = "exact"
 
     # --- skew handling ---
     # band groups larger than this emit O(m) star edges + salted sub-bucket pairs
@@ -142,29 +138,17 @@ class DedupConfig:
     shuffle_partitions: int = 32
     signature_partitions: int = 32   # repartition width for the signature stage
 
-    extra: dict = field(default_factory=dict, compare=False)
-
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perms:
             raise ValueError(
                 f"bands*rows_per_band must equal num_perms "
                 f"({self.bands}*{self.rows_per_band} != {self.num_perms})"
             )
-        if self.simhash_bits not in (32, 64):
-            raise ValueError("simhash_bits must be 32 or 64")
-        # fail at config construction, not hours later when the scored_pairs
-        # stage's evidence-column lookup finally reads the knob (the
-        # normalize/signature/candidate stages would already have run)
-        if self.verify_evidence not in ("exact", "estimate", "both"):
-            raise ValueError(
-                "verify_evidence must be 'exact', 'estimate', or 'both' "
-                f"(got {self.verify_evidence!r})"
-            )
 
     # knobs that tune EXECUTION, not duplicate semantics: changing parallelism must
     # not invalidate checkpoints (results are parallelism-independent — proven by
     # the scaling bench's cross-level cluster checksum)
-    _EXECUTION_KNOBS = ("shuffle_partitions", "signature_partitions", "extra")
+    _EXECUTION_KNOBS = ("shuffle_partitions", "signature_partitions")
 
     def fingerprint(self) -> str:
         """Stable hash of duplicate semantics — stamped into checkpoint lineage so a

@@ -34,7 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from cqaduplicatefind_spark.config import DedupConfig
+from cqaduplicatefind_spark.config import SIMHASH_BITS, DedupConfig
 from cqaduplicatefind_spark.functions.hashing import (
     _SM_GAMMA,
     TokenHasher,
@@ -195,7 +195,7 @@ def _compute_chunk(
     sim = simhash_vector(
         splitmix64(all_shingles ^ _U64(cfg.simhash_seed)),
         shingle_offsets,
-        cfg.simhash_bits,
+        SIMHASH_BITS,
     )
 
     distinct_shingles = [

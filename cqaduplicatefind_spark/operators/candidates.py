@@ -51,9 +51,11 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from cqaduplicatefind_spark.config import DedupConfig
+from cqaduplicatefind_spark.config import SIMHASH_BITS, DedupConfig
 
 PAIR_COLS = ("id_a", "id_b")
+# xxhash64 seed of the hot-bucket sub-bucket salt
+SALT_SEED = 17
 
 
 def canonical_pairs(df: DataFrame, a: str = "id_a", b: str = "id_b", dedup: bool = True) -> DataFrame:
@@ -79,7 +81,6 @@ def bucket_candidates(
     carry_cols: tuple[str, ...] = (),
     pair_filter=None,
     salt_cap: int = 8,
-    salt_seed: int = 17,
     mode: str = "all",
     star_flag: bool = True,
 ) -> DataFrame:
@@ -156,7 +157,7 @@ def bucket_candidates(
     if salt_cap > 0 and mode in ("all", "rescue"):
         n_sub = F.ceil(F.col("_n") / F.lit(max_group))
         hot_salt = F.pmod(
-            F.xxhash64(F.col("id"), *[F.col(k) for k in keys], F.lit(salt_seed)),
+            F.xxhash64(F.col("id"), *[F.col(k) for k in keys], F.lit(SALT_SEED)),
             n_sub,
         )
     else:
@@ -381,7 +382,7 @@ def simhash_piece_keys(cfg: DedupConfig, simhash_col: str = "simhash"):
     """Pigeonhole pieces: to find all pairs with Hamming distance <= k, split the
     signature into k+1 pieces — any matching pair agrees exactly on >= 1 piece."""
     n_pieces = cfg.hamming_k + 1
-    width = cfg.simhash_bits // n_pieces
+    width = SIMHASH_BITS // n_pieces
     mask = (1 << width) - 1
     return [
         F.struct(
@@ -398,7 +399,7 @@ def driver_piece_keys(simhash: np.ndarray, cfg: DedupConfig) -> np.ndarray:
     """``simhash_piece_keys``' piece values in numpy: (docs, k+1) int64, the
     same arithmetic shift and mask."""
     n_pieces = cfg.hamming_k + 1
-    width = cfg.simhash_bits // n_pieces
+    width = SIMHASH_BITS // n_pieces
     shifts = np.arange(n_pieces, dtype=np.int64) * width
     return (simhash.astype(np.int64)[:, None] >> shifts) & ((1 << width) - 1)
 

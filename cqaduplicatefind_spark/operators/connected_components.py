@@ -38,6 +38,10 @@ from pyspark.sql.types import StructField, StructType
 from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.session import arrow_frame
 
+# star-loop round cap: the loop runs O(log n) rounds (module docstring), so
+# reaching it means the loop is not converging
+MAX_ITERATIONS = 50
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """For each node u: connect every strictly-larger neighbor to min(N(u) ∪ {u})."""
@@ -176,7 +180,6 @@ def _min_root_components(id_a: list, id_b: list) -> tuple[list, list]:
 
 def connected_components(
     edges: DataFrame,
-    max_iterations: int = 50,
     assume_unconverged: bool = False,
     input_distinct: bool = False,
     persisted: list | None = None,
@@ -267,9 +270,9 @@ def connected_components(
     first_probe_skipped = assume_unconverged
     while first_probe_skipped or not _is_star_forest(cur):
         first_probe_skipped = False
-        if rounds >= max_iterations:
+        if rounds >= MAX_ITERATIONS:
             raise RuntimeError(
-                f"connected_components did not converge in {max_iterations} rounds"
+                f"connected_components did not converge in {MAX_ITERATIONS} rounds"
             )
         pre = _persistent_rdd_ids(spark)
         cur = _small_star(_large_star(cur)).localCheckpoint()

@@ -25,7 +25,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from cqaduplicatefind_spark.config import DedupConfig
+from cqaduplicatefind_spark.config import SIMHASH_BITS, DedupConfig
 from cqaduplicatefind_spark.operators.candidates import bit_count
 
 # score_pairs / accept_edges output schemas: frames built on the driver (the
@@ -74,10 +74,8 @@ def score_pairs(
     """(id_a, id_b) -> scored pairs.
 
     Output columns: id_a, id_b, est_jaccard, hamming, jaccard, containment
-    (+ one column per ``extra_scorers`` entry).
-    ``jaccard``/``containment`` are exact iff the signature table carries the
-    ``shingles`` column; the MinHash estimate pre-filters pairs more than
-    ``prefilter_margin`` below the threshold so exact set ops run on survivors only.
+    (+ one column per ``extra_scorers`` entry). ``jaccard``/``containment`` are
+    exact set measures over the signature table's ``shingles`` column.
 
     ``extra_scorers`` is the pluggable per-pair scorer seam (the capability analog
     of the reference's alternative classifiers, e.g.
@@ -90,18 +88,15 @@ def score_pairs(
 
     ``evidence`` picks what the two verify joins ship per doc — the dominant
     shuffle volume of the whole pipeline:
-    - ``"both"``: minhash estimate prefilter + exact shingle set ops;
-    - ``"exact"``: shingles only — skips the 1KB/doc minhash column. Right when
-      shingle sets are small relative to the 128-lane signature (short docs) or
-      when every candidate must be exactly verified anyway (recall>=0.99 gate);
-    - ``"estimate"``: minhash only — fixed 1KB/doc regardless of document length,
-      est_jaccard doubles as jaccard. Right for long web pages (multi-KB shingle
-      sets) where exact verification runs as a later targeted pass.
+    - ``"both"``: the MinHash estimate pre-filters pairs more than
+      ``prefilter_margin`` below the threshold, so the exact set ops run on
+      survivors only;
+    - ``"exact"``: shingles only — skips the 1KB/doc minhash column; every
+      candidate is exactly verified and ``est_jaccard`` is the exact value.
     """
     evidence_carry = {
         "both": ("minhash", "simhash", "n_shingles", "shingles"),
         "exact": ("simhash", "n_shingles", "shingles"),
-        "estimate": ("minhash", "simhash", "n_shingles"),
     }
     if evidence not in evidence_carry:
         raise ValueError(
@@ -128,7 +123,7 @@ def score_pairs(
         F.when(
             valid_sim,
             F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
-        ).otherwise(F.lit(cfg.simhash_bits)),
+        ).otherwise(F.lit(SIMHASH_BITS)),
     )
 
     if "minhash_a" in scored.columns:
@@ -152,28 +147,23 @@ def score_pairs(
             | (F.col("hamming") <= F.lit(cfg.hamming_k))
         )
 
-    if "shingles_a" in scored.columns:
-        inter = F.size(F.array_intersect("shingles_a", "shingles_b"))
-        union = F.size(F.array_union("shingles_a", "shingles_b"))
-        min_sz = F.least(F.size("shingles_a"), F.size("shingles_b"))
-        scored = (
-            scored.withColumn(
-                "jaccard",
-                F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(
-                    F.lit(0.0)
-                ),
-            )
-            .withColumn(
-                "containment",
-                F.when(min_sz > 0, inter.cast("double") / min_sz.cast("double")).otherwise(
-                    F.lit(0.0)
-                ),
-            )
+    inter = F.size(F.array_intersect("shingles_a", "shingles_b"))
+    union = F.size(F.array_union("shingles_a", "shingles_b"))
+    min_sz = F.least(F.size("shingles_a"), F.size("shingles_b"))
+    scored = (
+        scored.withColumn(
+            "jaccard",
+            F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(
+                F.lit(0.0)
+            ),
         )
-    else:
-        scored = scored.withColumn("jaccard", F.col("est_jaccard")).withColumn(
-            "containment", F.col("est_jaccard")
+        .withColumn(
+            "containment",
+            F.when(min_sz > 0, inter.cast("double") / min_sz.cast("double")).otherwise(
+                F.lit(0.0)
+            ),
         )
+    )
     if "est_jaccard" not in scored.columns:  # evidence="exact": exact IS the estimate
         scored = scored.withColumn("est_jaccard", F.col("jaccard"))
 
@@ -220,7 +210,7 @@ def driver_score_pairs(
     # empty-shingle docs share simhash=0: the SimHash route never links them
     hamming = np.where(
         (n_sh[ia] > 0) & (n_sh[ib] > 0), bit_count(sim[ia] ^ sim[ib]),
-        cfg.simhash_bits,
+        SIMHASH_BITS,
     ).astype(np.int32)
 
     shingles = payload["shingles"].combine_chunks()

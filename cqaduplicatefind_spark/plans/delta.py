@@ -9,10 +9,11 @@ run). Each increment then pays pairing work bounded by the LSH buckets it
 actually touches (``IncrementalDedup``'s touched-bucket semi-join — broadcast
 while the increment's distinct key set fits ``BROADCAST_TOUCHED_MAX``, plain
 shuffle semi-join beyond that, where an increment touching most buckets makes
-the wide join the right plan anyway), never O(corpus). The per-increment
-O(index) stats recovery count the streaming path pays once per stream is
-skipped here (``count_index_stats=False`` — a fresh processor per increment
-would otherwise re-pay it every month).
+the wide join the right plan anyway), never O(corpus). The O(index) stats
+recovery count the streaming path pays once per stream is never paid here
+(``count_index_stats=False``: a fresh processor per increment would re-pay
+it every month), so an increment over an existing store reports
+``n_index_band_rows`` as None.
 
 The store (``bands/`` ``sigs/`` ``matches/`` under one work dir) is the
 streaming matcher's: ``streaming/store.py`` owns its layout, file sizing,
@@ -75,8 +76,8 @@ class DeltaResult:
     probes) an edges-only consumer should never pay. ``stats`` is the
     increment's ``IncrementalDedup`` batch-stats row (index rows joined,
     candidates, payload rows fetched — the per-increment work bound evidence;
-    ``n_index_band_rows`` is None unless ``index_stats=True`` paid the
-    O(index) recovery count). ``path`` is the matcher path the increment
+    ``n_index_band_rows`` is None over an existing store: the O(index)
+    recovery count is never paid). ``path`` is the matcher path the increment
     took: ``"driver"`` or ``"spark"`` (``IncrementalDedup.batch_paths``)."""
 
     def __init__(self, edges: DataFrame, new_ids: DataFrame, stats: dict,
@@ -208,7 +209,6 @@ def delta_dedup(
     id_col: str = "url",
     text_col: str = "text",
     compact_every: int = 16,
-    index_stats: bool = False,
 ) -> DeltaResult:
     """Dedup one increment against the store under ``work_dir`` (seeded by
     ``seed_index`` and/or grown by previous increments / streaming batches),
@@ -216,9 +216,7 @@ def delta_dedup(
     sees it as index. ``batch_id`` must be a unique non-negative int per
     increment, disjoint from any streaming micro-batch ids sharing the store
     (replays of the same id are idempotent — they overwrite their own
-    subdirs). ``index_stats=True`` additionally reports the logical index
-    size in ``stats`` at the cost of an O(index) count — off by default so a
-    processor-per-increment never scales with the corpus."""
+    subdirs)."""
     batch_id = int(batch_id)
     if batch_id < 0:
         raise ValueError(
@@ -228,7 +226,7 @@ def delta_dedup(
     dedup = IncrementalDedup(
         spark, cfg, *store_roots(work_dir),
         compact_every=compact_every,
-        count_index_stats=index_stats,
+        count_index_stats=False,
     )
     sig = signature_frame(new_pages, cfg, id_col, text_col)
     dedup.process_batch(sig, batch_id)

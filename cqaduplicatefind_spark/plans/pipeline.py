@@ -17,9 +17,8 @@ Shuffle budget (the plan you'd want at 10^12 docs):
      pair key for dedup.
   3. verify: two id-key shuffles (attach signature evidence to each pair side).
   Items 2-3 hold above ``config.DRIVER_MAX_ROWS`` band rows only. Below it,
-  with exact evidence, ``driver_pair_stage`` collects the signatures once and
-  pairs and scores them on the driver (no shuffle), unless a bucket is hot
-  or a url repeats.
+  ``driver_pair_stage`` collects the signatures once and pairs and scores
+  them on the driver (no shuffle), unless a bucket is hot or a url repeats.
   4. clustering: the accepted-edge set is usually tiny, and up to
      ``config.DRIVER_MAX_ROWS`` edges it is collected in one job and
      union-found on the driver (no shuffle); larger sets run O(log n)
@@ -58,8 +57,8 @@ from cqaduplicatefind_spark.operators.connected_components import (
     connected_components,
 )
 from cqaduplicatefind_spark.operators.verify import (
-    EDGE_SCHEMA, SCORED_SCHEMA, accept_edges, driver_accept, driver_score_pairs,
-    score_pairs,
+    EDGE_SCHEMA, SCORED_SCHEMA, accept_condition, accept_edges, driver_accept,
+    driver_score_pairs, score_pairs,
 )
 from cqaduplicatefind_spark.session import arrow_frame, non_adaptive_count, small_plans
 from cqaduplicatefind_spark.sources.warehouse import Warehouse
@@ -175,7 +174,7 @@ def candidate_stage(
     # docs with zero shingles (fewer than shingle_k tokens) carry the all-MAX_U64
     # sentinel MinHash and simhash=0 — identical signatures for UNRELATED docs.
     # They must be excluded from BOTH bucket explodes or every pair of short docs
-    # becomes a candidate (and, in verify_evidence="estimate" mode, a false edge).
+    # becomes a candidate.
     signed = signatures.where(F.col("n_shingles") > 0)
     mh = minhash_lsh_candidates(
         signed.select("url", *g, "minhash"), cfg, dedup=False, group_col=group_col,
@@ -314,9 +313,9 @@ def run_pipeline(
 
     A corpus of at most ``config.DRIVER_MAX_ROWS`` band rows runs every stage
     after the signatures non-adaptive (``session.small_plans``); frames the
-    result leaves lazy plan under the caller's setting when acted on. With
-    exact evidence it also pairs and verifies on the driver
-    (``driver_pair_stage``; ``PipelineResult.path`` says which path ran)."""
+    result leaves lazy plan under the caller's setting when acted on. It also
+    pairs and verifies on the driver (``driver_pair_stage``;
+    ``PipelineResult.path`` says which path ran)."""
 
     persisted: list = []
 
@@ -341,8 +340,7 @@ def run_pipeline(
     n_sig = non_adaptive_count(signatures)
     with small_plans(spark, n_sig * cfg.bands):
         driver = None
-        if (n_sig * cfg.bands <= config.DRIVER_MAX_ROWS
-                and cfg.verify_evidence == "exact"):
+        if n_sig * cfg.bands <= config.DRIVER_MAX_ROWS:
             driver = driver_pair_stage(signatures, cfg, group_col)
         return _pair_and_cluster(
             pages, cfg, warehouse, group_col, timings, stage, persisted,
@@ -564,10 +562,9 @@ def _spark_pairs(
     scored = stage(
         "scored_pairs",
         lambda: score_pairs(
-            candidates, signatures, cfg, evidence=cfg.verify_evidence,
-            keep_cols=("is_star",),
+            candidates, signatures, cfg, evidence="exact", keep_cols=("is_star",),
         ),
-        reused=cfg.verify_evidence == "exact",  # edges + orphan probe
+        reused=True,  # edges + orphan probe
     )
     edges = stage("dup_edges", lambda: accept_edges(scored, cfg), reused=True)
 
@@ -580,28 +577,16 @@ def _spark_pairs(
     # On homogeneous corpora (hot bands = one dup family, stars all pass) the
     # orphan set is empty and the round is skipped: the pipeline pays O(m) per
     # hot bucket, never C(m,2)/n_sub, unless verify proves a band heterogeneous.
+    # Exact evidence has no estimate prefilter, so EVERY candidate pair
+    # reaches the scored frame and a rejected star edge is simply a scored
+    # row failing the accept condition: one filter over the persisted scored
+    # cache, no join.
     rescue_edges = None
-    if cfg.verify_evidence == "exact":
-        # evidence="exact" has no estimate prefilter, so EVERY candidate
-        # pair reaches the scored frame and a rejected star edge is simply
-        # a scored row failing the accept condition — one filter over the
-        # persisted scored cache, no join. ("both"/"estimate" drop
-        # implausible pairs before scoring; a prefiltered-away star edge is
-        # also a rejection, so those modes keep the anti-join below.)
-        from cqaduplicatefind_spark.operators.verify import accept_condition
-
-        orphans = (
-            scored.where(F.col("is_star") & ~accept_condition(cfg))
-            .select(F.explode(F.array("id_a", "id_b")).alias("id"))
-            .distinct()
-        )
-    else:
-        orphans = (
-            candidates.where(F.col("is_star"))
-            .join(edges.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
-            .select(F.explode(F.array("id_a", "id_b")).alias("id"))
-            .distinct()
-        )
+    orphans = (
+        scored.where(F.col("is_star") & ~accept_condition(cfg))
+        .select(F.explode(F.array("id_a", "id_b")).alias("id"))
+        .distinct()
+    )
     # count, not isEmpty: orphans is usually EMPTY (homogeneous corpora),
     # and take(1) on an empty frame runs its scan in several escalating
     # waves — each wave re-driving the candidate+verify mega-job's final
@@ -619,9 +604,7 @@ def _spark_pairs(
         rescue_edges = stage(
             "rescue_edges",
             lambda: accept_edges(
-                score_pairs(
-                    rescue_cands, signatures, cfg, evidence=cfg.verify_evidence
-                ),
+                score_pairs(rescue_cands, signatures, cfg, evidence="exact"),
                 cfg,
             ),
             # components reads the union twice when it is larger than the

@@ -31,7 +31,7 @@ Design (the part that must stay sub-linear per batch at 10^12 docs):
   the pairing window re-shuffled the ENTIRE index every micro-batch (O(index)
   per trigger — the round-2 scale hazard);
 - **a small micro-batch pairs, verifies and writes on the driver** (band
-  rows at most ``config.DRIVER_MAX_ROWS``, exact evidence): one collect
+  rows at most ``config.DRIVER_MAX_ROWS``): one collect
   brings the batch's payloads and band hashes, one bounded collect the
   touched index rows; ``driver_bucket_pairs`` pairs them and
   ``driver_score_pairs`` / ``driver_accept`` score them — the same rules,
@@ -244,7 +244,7 @@ class IncrementalDedup:
             # pairing, the new docs' payloads and both store appends.
             # _pairs_on_driver says when the batch falls back to Spark.
             signed = on_driver = idx_touched = None
-            if n_band_rows <= config.DRIVER_MAX_ROWS and cfg.verify_evidence == "exact":
+            if n_band_rows <= config.DRIVER_MAX_ROWS:
                 signed = batch_df.select(
                     *SIG_COLS, band_keys(cfg).getField("bh").alias("bh")
                 ).toArrow()
@@ -366,7 +366,7 @@ class IncrementalDedup:
                     )
                     held.append(needed)
                 edges = accept_edges(
-                    score_pairs(cand, needed, cfg, evidence=cfg.verify_evidence),
+                    score_pairs(cand, needed, cfg, evidence="exact"),
                     cfg,
                 )
 

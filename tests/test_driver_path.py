@@ -136,7 +136,7 @@ def test_driver_path_equals_spark_path(spark, corpus):
     # Hamming, fam1's seed member pairs with nothing
     ids = {u for r in rows for u in r[:2]}
     assert "fam1m0" not in ids
-    assert all(r[4] == CFG.simhash_bits for r in rows if r[0] == "fam0m0")
+    assert all(r[4] == config.SIMHASH_BITS for r in rows if r[0] == "fam0m0")
 
 
 def _sigs(spark, rows):
@@ -243,15 +243,6 @@ def test_hot_bucket_batch_falls_back(spark, tmp_path, kernel_calls):
     assert dedup.batch_paths == ["driver", "spark"]
     assert kernel_calls == ["bucket_candidates", "score_pairs"]
     assert {"hot0", "hot1"} <= {u for p in got for u in p}
-
-
-def test_non_exact_evidence_runs_the_spark_plans(spark, tmp_path, kernel_calls):
-    cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.7, shuffle_partitions=4,
-                      verify_evidence="both")
-    dedup, got = _run(spark, tmp_path, cfg, [_fam(0), _fam(1)])
-    assert dedup.batch_paths == ["spark", "spark"]
-    assert kernel_calls.count("score_pairs") == 2
-    assert got == {("fam0", "fam1")}
 
 
 @pytest.mark.parametrize("n_indexed, paths", [

@@ -351,16 +351,12 @@ def test_driver_tail_equals_spark_path(spark, variant, tail, data):
     assert ("short", "short") in got["clusters"]
 
 
-@pytest.mark.parametrize("case", ["hot", "estimate", "dup_url", "above_bound"])
+@pytest.mark.parametrize("case", ["hot", "dup_url", "above_bound"])
 def test_fallback_runs_the_spark_plans(spark, monkeypatch, plan_calls, case):
     rows, cfg = list(FAMILY), CFG
     if case == "hot":
         rows += [(f"hot{i}", _words("hot", 40))
                  for i in range(cfg.max_band_group + 1)]
-    elif case == "estimate":
-        cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.7,
-                          verify_evidence="both", shuffle_partitions=4,
-                          signature_partitions=4)
     elif case == "dup_url":
         rows.append(("noise", _words("other", 30)))
     else:

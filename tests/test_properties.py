@@ -190,7 +190,7 @@ def test_config_fingerprint_tracks_semantics():
     assert DedupConfig(shingle_k=7).fingerprint() != base.fingerprint()
     assert DedupConfig(jaccard_threshold=0.9).fingerprint() != base.fingerprint()
     assert DedupConfig(minhash_seed=1).fingerprint() != base.fingerprint()
-    # shuffle width is execution tuning, not semantics... but it IS part of the
-    # dataclass; assert current behavior explicitly so a future split is deliberate
-    same_sem = DedupConfig(extra={"note": "x"})
+    # shuffle width is execution tuning, not semantics: a resume at another
+    # parallelism reuses the same stage tables
+    same_sem = DedupConfig(shuffle_partitions=7, signature_partitions=9)
     assert same_sem.fingerprint() == base.fingerprint()

@@ -169,8 +169,8 @@ def test_streaming_edges_equal_batch_edges(spark):
     """The driver's streaming query (documents fed through IncrementalDedup as
     four hash-split micro-batches, store compaction mid-run) emits EXACTLY the
     batch flagship's accepted edge set, jaccard values included — match results
-    are independent of micro-batch boundaries, each pair reported once, and the
-    ``verify_evidence`` config reaches the streaming score path."""
+    are independent of micro-batch boundaries and each pair is reported
+    once."""
     import __spark_entry__ as entry
 
     sf = "/root/testdata/sf0.001"

@@ -3,7 +3,8 @@ reach into ``cqaduplicatefind_spark`` by name, and dedupbench's traced run
 wraps the functions listed in ``TracedPipeline.TARGETS`` with
 ``getattr``/``setattr``. A refactor that drops one of those names breaks the
 script only when it runs (``--trace 1`` crashes on a missing
-``plans.pipeline.accept_edges``). This test resolves every such reference from
+``plans.pipeline.accept_edges``). The same holds for a ``DedupConfig`` field
+a script passes by keyword. These tests resolve every such reference from
 source with ``ast``: no Spark, and no script is imported."""
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ SCRIPTS = sorted(
     for p in [REPO / "bench.py", *(REPO / "tools").glob("*.py"),
               *(REPO / "dedupbench").glob("*.py")]
 )
+# every caller that builds a DedupConfig outside the package's library code
+CONFIG_CALLERS = sorted([*SCRIPTS, "__spark_entry__.py", f"{PKG}/run.py"])
 
 
 def _module_file(dotted: str) -> Path | None:
@@ -118,3 +121,45 @@ def test_traced_pipeline_targets_resolve():
     assert (f"{PKG}.plans.pipeline", "accept_edges") in targets
     missing = [t for t in targets if not _resolves(*t)]
     assert not missing, missing
+
+
+@cache
+def _config_fields() -> frozenset[str]:
+    """The annotated fields of ``config.DedupConfig``."""
+    tree = ast.parse((REPO / PKG / "config.py").read_text())
+    cls = next(n for n in tree.body
+               if isinstance(n, ast.ClassDef) and n.name == "DedupConfig")
+    return frozenset(n.target.id for n in cls.body if isinstance(n, ast.AnnAssign))
+
+
+def _config_keywords(source: str) -> list[str]:
+    """Keywords passed to ``DedupConfig(...)`` calls, including those in a
+    string constant that parses as Python (a child-process script)."""
+    kws: list[str] = []
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.Call) and "DedupConfig" in (
+            getattr(node.func, "id", None), getattr(node.func, "attr", None)
+        ):
+            kws += [k.arg for k in node.keywords if k.arg is not None]
+        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+              and "DedupConfig(" in node.value):
+            try:
+                kws += _config_keywords(node.value)
+            except SyntaxError:
+                pass
+    return kws
+
+
+def test_config_keyword_check_rejects_unknown_fields():
+    assert {"shingle_k", "shuffle_partitions"} <= _config_fields()
+    assert "_EXECUTION_KNOBS" not in _config_fields()
+    src = "cfg = config.DedupConfig(shingle_k=3, no_such_field=1, **kw)"
+    assert _config_keywords(src) == ["shingle_k", "no_such_field"]
+    assert _config_keywords(repr(src)) == ["shingle_k", "no_such_field"]
+
+
+@pytest.mark.parametrize("script", CONFIG_CALLERS)
+def test_script_config_keywords_are_fields(script):
+    unknown = [k for k in _config_keywords((REPO / script).read_text())
+               if k not in _config_fields()]
+    assert not unknown, unknown
