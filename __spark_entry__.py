@@ -772,7 +772,7 @@ def q_unigram_logprob_quality(spark, sf):
 
 
 def _lang_case_sql() -> str:
-    """DuckDB CASE expression mirroring lang_id_expr's tie-break (en>de>fr>es)."""
+    """DuckDB CASE expression mirroring lang_id_from_tokens' tie-break (en>de>fr>es)."""
     from cqaduplicatefind_spark.functions.text_stats import LANG_MARKERS
 
     score_cols = []
@@ -1404,7 +1404,8 @@ def q_ann_topk(spark, sf):
     """,
 )
 def q_ann_ivf_topk(spark, sf):
-    """IVF-flat top-k (operators/ann.py:ivf_topk): deterministic spherical
+    """IVF-flat top-k (operators/ann.py: ivf_train_centroids +
+    ivf_candidate_scores): deterministic spherical
     k-means coarse quantizer -> inverted lists clustered by centroid id ->
     probe-join -> exact cosine re-rank. Probing ALL lists (nprobe = k) makes
     the result exact by construction — every corpus vector sits in exactly one

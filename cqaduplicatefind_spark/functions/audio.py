@@ -1,26 +1,26 @@
-"""Audio columns: pure-stdlib WAV (RIFF PCM) decode, deterministic spectral
-features, and a Haitsma–Kalker-style robust fingerprint for near-duplicate
-audio — the audio leg of the multimodal surface (images: ``imagecodec.py`` /
-``jpegcodec.py``; video: ``videocodec.py``).
+"""Audio columns: pure-stdlib WAV (RIFF PCM) decode and a Haitsma–Kalker-style
+robust fingerprint for near-duplicate audio — the codec and kernel the
+``multimodal_audio_dedup`` registry row runs inside ``mapInPandas``
+(images: ``jpegcodec.py``, row ``multimodal_phash_groups``; video:
+``videocodec.py``, row ``multimodal_video_dedup``).
 
 Everything here is a real decode/transform, not a stub: RIFF parsing is ~60
 lines of struct reads, and numpy's FFT provides the spectral analysis. The
 compressed formats a crawl also carries (MP3/AAC/Opus) need external codecs
-and fall through to the caller's deterministic fallback exactly like
-progressive JPEG does on the image side.
+and are refused with ``ValueError``, exactly like progressive JPEG on the
+image side.
 
 Scale notes: per-payload work is bounded by ``MAX_SAMPLES`` before any
-allocation (untrusted crawl bytes must not OOM an executor); the Spark
-wrappers in ``multimodal.py`` are Arrow-batched narrow maps — zero shuffle.
-Near-dup pairing over fingerprints reuses the engine's Hamming kernel
-(``bit_count`` on xor, same as SimHash) rather than a new join path.
+allocation (untrusted crawl bytes must not OOM an executor), and the framed
+FFT runs in bounded chunks (``_CHUNK_FRAMES``). Near-dup pairing over
+fingerprints reuses the engine's Hamming kernel (``bit_count`` on xor, same
+as SimHash) rather than a new join path.
 
 Fingerprint design (public: Haitsma & Kalker, "A Highly Robust Audio
 Fingerprinting System", ISMIR 2002): frame the signal, take log-band energies,
-and threshold the time–frequency energy *difference of differences* to bits;
-near-identical audio (re-encoded, slightly noisy) flips few bits, unrelated
-audio ~half. A 64-bit doc-level simhash over frame words makes the existing
-bucketed Hamming machinery apply unchanged.
+and threshold band-energy differences to bits; near-identical audio
+(re-encoded, slightly noisy) flips few bits, unrelated audio ~half. A 64-bit
+doc-level hash makes the existing bucketed Hamming machinery apply unchanged.
 """
 
 from __future__ import annotations
@@ -146,7 +146,7 @@ def encode_wav(samples: np.ndarray, rate: int) -> bytes:
 
 
 # --------------------------------------------------------------------------
-# Deterministic features + robust fingerprint
+# Robust fingerprint
 # --------------------------------------------------------------------------
 
 # frames per FFT chunk: bounds the framing working set regardless of clip
@@ -162,7 +162,7 @@ def _iter_power(samples: np.ndarray):
     """Yield float64 ``(<=_CHUNK_FRAMES, FRAME//2+1)`` power spectra of
     Hann-windowed 50%-overlap frames. Framing is a zero-copy strided view
     (``sliding_window_view``), the window product + FFT run in float32
-    per chunk (exact enough for log-band sign bits and centroid moments),
+    per chunk (exact enough for log-band sign bits),
     accumulation happens in float64."""
     n = samples.size
     if n < FRAME:
@@ -177,125 +177,35 @@ def _iter_power(samples: np.ndarray):
                + spec.imag.astype(np.float64) ** 2)
 
 
-def _framed_spectral(
-    samples: np.ndarray, rate: int, with_bands: bool
-) -> tuple[np.ndarray | None, float]:
-    """ONE chunked pass over the framed power spectra -> (band-energy matrix
-    or None, spectral centroid in Hz). Centroid works at any rate; band
-    energies (the fingerprint input) require ``rate >= MIN_FINGERPRINT_RATE``."""
-    freqs = np.fft.rfftfreq(FRAME, d=1.0 / rate)
-    sels = None
-    if with_bands:
-        if rate < MIN_FINGERPRINT_RATE:
-            raise ValueError(
-                f"sample rate {rate} too low for spectral fingerprint "
-                f"(< MIN_FINGERPRINT_RATE={MIN_FINGERPRINT_RATE})"
-            )
-        # log-spaced band edges over the robust range (300 Hz .. min(3 kHz,
-        # Nyquist))
-        top = min(3000.0, rate / 2.0)
-        edges = np.geomspace(300.0, top, N_BANDS + 1)
-        sels = [(freqs >= edges[b]) & (freqs < edges[b + 1])
-                for b in range(N_BANDS)]
-    rows: list[np.ndarray] = []
-    num = den = 0.0
-    for power in _iter_power(samples):
-        mag = np.sqrt(power)
-        num += float((mag * freqs).sum())
-        den += float(mag.sum())
-        if sels is not None:
-            bands = np.zeros((power.shape[0], N_BANDS))
-            for b, sel in enumerate(sels):
-                if sel.any():
-                    bands[:, b] = power[:, sel].sum(axis=1)
-            # clamp near-silent bands to a per-frame relative floor (-50 dB):
-            # their exact leakage/noise level is measurement noise, and
-            # without the clamp a re-encode or faint noise bed rewrites the
-            # fingerprint bits of every band that carries no real content
-            # (pure tones, silence, band-limited speech all have many such)
-            floor = 1e-5 * power.sum(axis=1, keepdims=True)
-            rows.append(np.maximum(bands, floor))
-    centroid = num / den if den > 0 else 0.0
-    return (np.concatenate(rows, axis=0) if sels is not None else None), centroid
-
-
-def audio_features(samples: np.ndarray, rate: int) -> dict:
-    """Cheap deterministic descriptors: duration, RMS, zero-crossing rate,
-    spectral centroid (Hz) — the centroid over Hann-windowed frames (same
-    framing as the fingerprint, bounded memory) rather than one O(n log n)
-    full-clip FFT whose ~n/2 complex spectrum dominated cost and memory."""
-    n = samples.size
-    if n == 0:
-        return {"duration_ms": 0, "rms": 0.0, "zcr": 0.0, "centroid_hz": 0.0}
-    rms = float(np.sqrt(np.mean(samples**2)))
-    zcr = float(np.mean(np.signbit(samples[1:]) != np.signbit(samples[:-1])))
-    _, centroid = _framed_spectral(samples, rate, with_bands=False)
-    return {
-        "duration_ms": int(round(n * 1000.0 / rate)),
-        "rms": rms,
-        "zcr": zcr,
-        "centroid_hz": centroid,
-    }
-
-
-def analyze_audio(samples: np.ndarray, rate: int,
-                  with_fingerprint: bool = False) -> dict:
-    """Features (+ ``fp`` when requested) from a SINGLE framed spectral pass —
-    what ``multimodal.decode_audio(with_fingerprint=True)`` calls so features
-    and fingerprint never frame/FFT the signal twice. ``fp`` is None when not
-    requested or when the rate is below ``MIN_FINGERPRINT_RATE`` (callers
-    wanting a hard error on that use ``audio_simhash`` / check the rate)."""
-    n = samples.size
-    if n == 0:
-        return {"duration_ms": 0, "rms": 0.0, "zcr": 0.0, "centroid_hz": 0.0,
-                "fp": None}
-    rms = float(np.sqrt(np.mean(samples**2)))
-    zcr = float(np.mean(np.signbit(samples[1:]) != np.signbit(samples[:-1])))
-    want_bands = bool(with_fingerprint) and rate >= MIN_FINGERPRINT_RATE
-    bands, centroid = _framed_spectral(samples, rate, with_bands=want_bands)
-    return {
-        "duration_ms": int(round(n * 1000.0 / rate)),
-        "rms": rms,
-        "zcr": zcr,
-        "centroid_hz": centroid,
-        "fp": _simhash_from_bands(bands) if bands is not None else None,
-    }
-
-
 def _band_energies(samples: np.ndarray, rate: int) -> np.ndarray:
-    """(n_frames, N_BANDS) log-spaced band energies, Hann-windowed frames,
-    floor-clamped (see ``_framed_spectral``)."""
-    bands, _ = _framed_spectral(samples, rate, with_bands=True)
-    return bands
-
-
-def _simhash_from_bands(bands: np.ndarray) -> int:
-    """Band-energy matrix -> the 64-bit fingerprint (see ``audio_simhash``
-    for the bit derivation and its robustness rationale)."""
-    e = np.log(bands + 1e-12)
-    fdiff = e[:, :-1] - e[:, 1:]  # (n_frames, 32) signed margins
-    n = fdiff.shape[0]
-    sig = np.uint64(0)
-    for half, block in ((0, fdiff[: (n + 1) // 2]), (32, fdiff[(n + 1) // 2 :])):
-        if block.shape[0] == 0:
-            continue
-        votes = block.sum(axis=0)
-        for b in range(32):
-            if votes[b] > 0:
-                sig |= np.uint64(1) << np.uint64(half + b)
-    return int(sig.astype(np.int64))
-
-
-def frame_fingerprints(samples: np.ndarray, rate: int) -> np.ndarray:
-    """Per-frame 32-bit fingerprint words (Haitsma–Kalker bit derivation):
-    bit[b] = sign of the time-and-frequency second difference of log band
-    energy. Robust to level changes (log) and slow spectral drift (diffs)."""
-    e = np.log(_band_energies(samples, rate) + 1e-12)
-    fdiff = e[:, :-1] - e[:, 1:]  # (n_frames, 32)
-    tdiff = np.vstack([fdiff[:1], fdiff[1:] - fdiff[:-1]])  # first frame: raw
-    bits = (tdiff > 0).astype(np.uint64)
-    weights = (np.uint64(1) << np.arange(32, dtype=np.uint64))[None, :]
-    return (bits * weights).sum(axis=1).astype(np.uint64)
+    """(n_frames, N_BANDS) log-spaced band energies of Hann-windowed frames,
+    in ONE chunked pass over the framed power spectra; requires
+    ``rate >= MIN_FINGERPRINT_RATE``."""
+    if rate < MIN_FINGERPRINT_RATE:
+        raise ValueError(
+            f"sample rate {rate} too low for spectral fingerprint "
+            f"(< MIN_FINGERPRINT_RATE={MIN_FINGERPRINT_RATE})"
+        )
+    freqs = np.fft.rfftfreq(FRAME, d=1.0 / rate)
+    # log-spaced band edges over the robust range (300 Hz .. min(3 kHz,
+    # Nyquist))
+    top = min(3000.0, rate / 2.0)
+    edges = np.geomspace(300.0, top, N_BANDS + 1)
+    sels = [(freqs >= edges[b]) & (freqs < edges[b + 1]) for b in range(N_BANDS)]
+    rows: list[np.ndarray] = []
+    for power in _iter_power(samples):
+        bands = np.zeros((power.shape[0], N_BANDS))
+        for b, sel in enumerate(sels):
+            if sel.any():
+                bands[:, b] = power[:, sel].sum(axis=1)
+        # clamp near-silent bands to a per-frame relative floor (-50 dB):
+        # their exact leakage/noise level is measurement noise, and without
+        # the clamp a re-encode or faint noise bed rewrites the fingerprint
+        # bits of every band that carries no real content (pure tones,
+        # silence, band-limited speech all have many such)
+        floor = 1e-5 * power.sum(axis=1, keepdims=True)
+        rows.append(np.maximum(bands, floor))
+    return np.concatenate(rows, axis=0)
 
 
 def audio_simhash(samples: np.ndarray, rate: int) -> int:
@@ -307,12 +217,22 @@ def audio_simhash(samples: np.ndarray, rate: int) -> int:
     noise-robust: bands where the spectrum has real structure accumulate large
     margins that small perturbations cannot flip, while near-silent bands'
     noise cancels across frames. The log makes it level-invariant. Per-frame
-    temporal structure is intentionally NOT in this hash (that is what
-    ``frame_fingerprints`` is for — true Haitsma–Kalker words for frame-level
-    matching); two time halves keep enough coarse temporal order that clips
-    differing only in their second half differ in the upper 32 bits.
+    temporal structure is intentionally NOT in this hash; two time halves
+    keep enough coarse temporal order that clips differing only in their
+    second half differ in the upper 32 bits.
 
     Returns a SIGNED 64-bit int (Spark/DuckDB ``bigint`` convention, same as
     ``functions.signatures``) — pair with the same ``bit_count(a ^ b)``
     Hamming kernel the engine uses for SimHash text dedup."""
-    return _simhash_from_bands(_band_energies(samples, rate))
+    e = np.log(_band_energies(samples, rate) + 1e-12)
+    fdiff = e[:, :-1] - e[:, 1:]  # (n_frames, 32) signed margins
+    n = fdiff.shape[0]
+    sig = np.uint64(0)
+    for half, block in ((0, fdiff[: (n + 1) // 2]), (32, fdiff[(n + 1) // 2 :])):
+        if block.shape[0] == 0:
+            continue
+        votes = block.sum(axis=0)
+        for b in range(32):
+            if votes[b] > 0:
+                sig |= np.uint64(1) << np.uint64(half + b)
+    return int(sig.astype(np.int64))

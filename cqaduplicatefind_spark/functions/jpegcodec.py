@@ -7,8 +7,8 @@ the common 4:4:4/4:2:2/4:2:0/4:4:0 cases) — restart markers, multi-chunk
 DQT/DHT, and multi-scan sequential files (one non-interleaved scan per
 component, T.81 A.2.2 — some encoders emit these for 3-component images).
 Progressive (SOF2), arithmetic coding, and 12-bit precision raise
-``ValueError`` — callers fall back the same way they do for any out-of-scope
-payload (``multimodal._decode_image_bytes``).
+``ValueError``, the one error type every decoder here raises on an
+out-of-scope or corrupt payload.
 
 Encoder: baseline, standard Annex K quantization tables scaled by an IJG-style
 quality factor, standard Annex K Huffman tables, 4:4:4 or 4:2:0, optional
@@ -21,15 +21,15 @@ and assert pixel error bounded by the quantization step, plus structural spec
 invariants on the canonical Huffman tables (counts/lengths/prefix-freeness).
 
 Scale notes: entropy decode is sequential per payload by construction (bit
-stream with feedback through DC predictors); the Spark stage wrapping this
-(``multimodal.decode_images``) is an Arrow-batched narrow map, so per-payload
-Python cost is the unit of work and payload size is bounded by
+stream with feedback through DC predictors); the registry rows that run it
+(``multimodal_phash_groups``, and ``multimodal_video_dedup`` per frame) call
+it inside an Arrow-batched ``mapInPandas`` narrow map, so per-payload Python
+cost is the unit of work and payload size is bounded by
 ``MAX_PIXELS`` before any allocation — a lying SOF header cannot OOM an
 executor. The IDCT/color math is vectorized numpy over all blocks at once.
 
 The reference repo has no image handling; this capability belongs to the
-LLM-data-pipeline surface (multimodal dedup/feature plumbing), same scope as
-``imagecodec.py``.
+LLM-data-pipeline surface (multimodal dedup).
 """
 
 from __future__ import annotations
@@ -43,7 +43,7 @@ import numpy as np
 # coefficient planes + IDCT temporaries + upsampled planes peak near ~40 B per
 # pixel, so 16 MP caps an adversarial few-KB payload (lying SOF, all-EOB
 # blocks) at ~650 MB transient and a ~1 s entropy loop instead of letting it
-# OOM or pin an executor (shared spirit with imagecodec.MAX_DECODED_BYTES).
+# OOM or pin an executor (same spirit as audio.MAX_SAMPLES).
 MAX_PIXELS = 16 * 1024 * 1024
 
 

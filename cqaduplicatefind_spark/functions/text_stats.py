@@ -1,14 +1,11 @@
-"""Text-analysis operators for a training-data pipeline: language ID, quality
-scoring, token counting, document fingerprinting.
-
-Everything here is pure Catalyst expressions (whole-stage codegen, zero Python) —
-these run per-document over 10^12 rows, so they must stay JVM-side. Each has a
-SQL-oracle-checkable form surfaced in ``__spark_entry__``.
+"""Heuristic language ID as pure Catalyst expressions (whole-stage codegen,
+zero Python): it runs per document over 10^12 rows, so it stays JVM-side.
+The ``lang_id_histogram`` registry row checks it against a DuckDB oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 # Compact per-language marker sets (top high-frequency function words that are
 # strongly language-specific). An n-gram model would use mapInPandas; for a
@@ -19,24 +16,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "fr": ("le", "la", "les", "des", "est", "une", "dans", "que", "pour", "qui"),
     "es": ("el", "los", "las", "una", "es", "que", "por", "con", "para", "del"),
 }
-
-
-def tokens(col) -> Column:
-    """Whitespace tokens (``\\s+`` boundaries, Python ``str.split()``
-    semantics), edge empties dropped — a single-space split would glue tokens
-    across tabs/newlines, contradicting this docstring."""
-    return F.filter(F.split(col, r"\s+"), lambda x: x != "")
-
-
-def token_count(col) -> Column:
-    """Whitespace token count; empty or whitespace-only string -> 0."""
-    return F.size(tokens(col))
-
-
-def word_token_count(col) -> Column:
-    """BPE-ish subword proxy: count word chunks + digit runs + punctuation marks
-    separately (regexp-based; a real BPE table would be a broadcast join)."""
-    return F.regexp_count(col, F.lit(r"[\p{L}]+|[0-9]+|[^\p{L}0-9\s]"))
 
 
 def distinct_tokens_expr(text_col) -> Column:
@@ -64,59 +43,3 @@ def lang_id_from_tokens(toks_col) -> Column:
     for lang, s in reversed(scores):
         pick = F.when((s == best_score) & (best_score > 0), F.lit(lang)).otherwise(pick)
     return pick
-
-
-def lang_id_expr(text_col) -> Column:
-    """Single-expression heuristic language ID (compatibility form). Prefer
-    projecting ``distinct_tokens_expr`` first and applying ``lang_id_from_tokens``
-    so the token array is computed once per row."""
-    return lang_id_from_tokens(distinct_tokens_expr(text_col))
-
-
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Standard web-text quality gates (Gopher/C4-style rule features):
-    token count, mean word length, alpha ratio, punctuation density, uppercase
-    ratio, repetition proxy (distinct/total tokens)."""
-    t = F.col(text_col)
-    # drop the empty tokens a \s+ split leaves at the text's edges: web text
-    # routinely ends with a newline, and counting the '' token would inflate
-    # q_n_tokens, deflate q_mean_word_len, and admit '' as a distinct token —
-    # skewing exactly the threshold gates these features feed
-    toks = F.filter(F.split(t, r"\s+"), lambda x: x != "")
-    n_tok = F.size(toks)
-    n_chars = F.length(t)
-    return df.withColumns(
-        {
-            "q_n_tokens": n_tok,
-            "q_mean_word_len": F.when(
-                n_tok > 0, (n_chars - (n_tok - 1)).cast("double") / n_tok
-            ).otherwise(F.lit(0.0)),
-            "q_alpha_ratio": F.when(
-                n_chars > 0,
-                F.length(F.regexp_replace(t, r"[^\p{L}]", "")).cast("double") / n_chars,
-            ).otherwise(F.lit(0.0)),
-            "q_punct_ratio": F.when(
-                n_chars > 0,
-                F.length(F.regexp_replace(t, r"[^.,;:!?]", "")).cast("double") / n_chars,
-            ).otherwise(F.lit(0.0)),
-            "q_upper_ratio": F.when(
-                n_chars > 0,
-                F.length(F.regexp_replace(t, r"[^A-Z]", "")).cast("double") / n_chars,
-            ).otherwise(F.lit(0.0)),
-            "q_distinct_token_ratio": F.when(
-                n_tok > 0, F.size(F.array_distinct(toks)).cast("double") / n_tok
-            ).otherwise(F.lit(0.0)),
-        }
-    )
-
-
-def fingerprint_expr(text_col, prefix_tokens: int = 8) -> Column:
-    """Cheap stable document fingerprint: md5 of the first-k-token prefix.
-    For full-content identity use ``F.md5(text)`` (exact dedup); this prefix form
-    groups near-identical heads (title boilerplate detection)."""
-    return F.md5(F.concat_ws(" ", F.slice(F.split(text_col, " "), 1, prefix_tokens)))
-
-
-def content_hash_expr(text_col) -> Column:
-    """Exact-dup content hash (hash-groupBy dedup key)."""
-    return F.md5(text_col)

@@ -1,13 +1,15 @@
 """Video columns: pure-python MJPEG-in-AVI parsing + per-frame baseline JPEG
-decode — the video leg of the multimodal surface (images: ``imagecodec.py`` /
-``jpegcodec.py``; audio: ``audio.py``).
+decode — the container codec and clip fingerprint the
+``multimodal_video_dedup`` registry row runs inside ``mapInPandas``
+(images: ``jpegcodec.py``, whose decoded pixels ``ahash64`` hashes for the
+``multimodal_phash_groups`` row; audio: ``audio.py``).
 
 Motion-JPEG inside an AVI/RIFF container is the one video format decodable
 without external codec libraries: the container is flat chunk framing (~80
 lines of struct reads) and every frame is an independent baseline JPEG the
 pure codec already handles. Everything here is a real decode, not a stub;
 inter-frame-coded containers (H.264/VP9/AV1 in MP4/WebM/MKV) genuinely need
-ffmpeg and keep the honest stub fallback in ``multimodal._sample_frames_bytes``.
+ffmpeg and are refused with ``ValueError``.
 
 The reference (kkrasika/CQADuplicateFind) has no media path at all — this
 extends the engine's multimodal plumbing so video near-dup rides the same
@@ -18,8 +20,7 @@ machinery as text/audio: sampled frames hash to a 64-bit doc-level fingerprint
 Scale notes: frame *indexing* is O(container bytes) with no per-frame
 allocation, so sampling k frames from an N-frame clip decodes only k JPEGs;
 the index table is capped (``MAX_FRAMES``) before it is built — untrusted
-crawl bytes must not balloon driver-side lists or pin an executor. The Spark
-wrappers in ``multimodal.py`` are Arrow-batched narrow maps — zero shuffle.
+crawl bytes must not balloon driver-side lists or pin an executor.
 """
 
 from __future__ import annotations
@@ -105,9 +106,8 @@ def mjpeg_frame_index(payload: bytes) -> list[tuple[int, int]]:
 
 
 def sample_frame_indices(total: int, n: int) -> list[int]:
-    """Evenly-spaced frame indices, box-center convention (same as
-    ``multimodal._resize_nearest``): deterministic, covers the clip's span,
-    returns all frames when ``n >= total``."""
+    """Evenly-spaced frame indices, box-center convention: deterministic,
+    covers the clip's span, returns all frames when ``n >= total``."""
     if total <= 0 or n <= 0:
         return []
     n = min(n, total)
@@ -117,35 +117,13 @@ def sample_frame_indices(total: int, n: int) -> list[int]:
 def sample_frame_payloads(payload: bytes, n: int) -> list[tuple[int, bytes]]:
     """AVI bytes -> [(frame_idx, complete JPEG bytes)] for ``n`` evenly-spaced
     frames: index the container, pick ``sample_frame_indices``, slice only the
-    selected chunks. The single shared recipe behind both
-    ``multimodal._sample_frames_bytes`` (Spark frame sampling) and
-    ``video_simhash`` (clip fingerprinting), so the two paths can never
-    diverge on which frames they extract. Raises ``ValueError`` on non-AVI or
-    misframed payloads."""
+    selected chunks — ``video_simhash``'s frame selection. Raises
+    ``ValueError`` on non-AVI or misframed payloads."""
     table = mjpeg_frame_index(payload)
     return [
         (i, payload[table[i][0] : table[i][0] + table[i][1]])
         for i in sample_frame_indices(len(table), n)
     ]
-
-
-def decode_avi_frames(
-    payload: bytes, indices: list[int] | None = None
-) -> list[tuple[int, np.ndarray]]:
-    """AVI bytes -> [(frame_idx, (H, W, 3) uint8)] for the selected frame
-    indices (all frames if ``indices`` is None). Only the selected frames'
-    JPEGs are decoded. Raises ``ValueError`` on malformed containers, frames
-    that are not baseline JPEG (other MJPEG flavors exist), or out-of-range
-    indices."""
-    table = mjpeg_frame_index(payload)
-    sel = range(len(table)) if indices is None else indices
-    out = []
-    for i in sel:
-        if not 0 <= i < len(table):
-            raise ValueError(f"frame index {i} out of range (n={len(table)})")
-        off, size = table[i]
-        out.append((i, decode_jpeg(payload[off : off + size])))
-    return out
 
 
 def encode_avi_mjpeg(

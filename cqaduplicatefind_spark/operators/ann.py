@@ -16,7 +16,7 @@ The deterministic replacement for the reference's Doc2Vec ``most_similar`` retri
   (embedding near-dup dedup for training pipelines).
 - ``semantic_dedup_kept``: SemDeDup-style kept-corpus emit under a smaller-id
   dominance rule, with exact / RP-LSH / IVF-representative candidate paths.
-- ``ivf_train_centroids`` / ``ivf_candidate_scores`` / ``ivf_topk``: the IVF-flat
+- ``ivf_train_centroids`` / ``ivf_candidate_scores``: the IVF-flat
   scale path (the coarse-quantizer design of Sivic & Zisserman's Video Google /
   FAISS IndexIVFFlat): deterministic spherical k-means centroids (the model
   artifact — k*d floats, broadcast-sized at any corpus scale), corpus assigned
@@ -383,31 +383,6 @@ def ivf_candidate_scores(
         .where(F.col("qid") != F.col("cand"))
         .select("qid", "cand", cosine_col(F.col("qv"), F.col("cv")).alias("cosine"))
     )
-
-
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    iters: int = 3,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: np.ndarray | None = None,
-) -> DataFrame:
-    """IVF-flat approximate top-k: (qid, cand, cosine, rank). Pass ``centroids``
-    to reuse a trained model (index once, search many times)."""
-    if centroids is None:
-        centroids = ivf_train_centroids(
-            corpus, n_centroids, iters, seed, id_col, vec_col
-        )
-    scored = ivf_candidate_scores(
-        queries, corpus, centroids, nprobe, id_col, vec_col
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cand"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def cosine_dedup_pairs(

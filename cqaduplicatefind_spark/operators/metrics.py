@@ -77,13 +77,6 @@ def clusters_to_pairs(
     )
 
 
-def cluster_exact_match(predicted: DataFrame, gold: DataFrame) -> bool:
-    """Exact cluster-assignment equality (both labeled by min-member url)."""
-    diff1 = predicted.exceptAll(gold).count()
-    diff2 = gold.exceptAll(predicted).count()
-    return diff1 == 0 and diff2 == 0
-
-
 def ranked_retrieval_metrics(
     ranked: DataFrame,
     gold_edges: DataFrame,

@@ -157,38 +157,16 @@ def span_candidates(
     assignments: DataFrame | None = None,
     persisted: list | None = None,
     assignments_count: int | None = None,
-) -> DataFrame:
-    """Public wrapper: always returns a DataFrame (empty when discovery
-    short-circuits). ``exact_span_edges`` uses the ``None``-returning private
-    variant so the common all-pure corpus never touches the checkpoint/count
-    machinery at all."""
-    out = _span_candidates(
-        normalized, cfg, id_col, text_col, group_col, dedup, assignments,
-        persisted, assignments_count,
-    )
-    if out is None:
-        return arrow_frame(normalized.sparkSession, "id_a string, id_b string")
-    return out
-
-
-def _span_candidates(
-    normalized: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "url",
-    text_col: str = "norm_text",
-    group_col: str | None = None,
-    dedup: bool = True,
-    assignments: DataFrame | None = None,
-    persisted: list | None = None,
-    assignments_count: int | None = None,
 ) -> DataFrame | None:
     """Corpus-level discovery: candidate pairs that MAY share an exact run of
     >= cfg.min_overlap_span tokens (guaranteed superset by the winnowing bound;
-    verify with overlap_spans). Hot fingerprints (boilerplate runs shared by
-    thousands of docs) go through the same star-cap + salted sub-bucket guard as
-    hot LSH bands — sharing a fingerprint only proves an L-token overlap, not the
-    full min_span, so hot groups are heterogeneous under verification and need
-    the sub-bucket pairing.
+    verify with overlap_spans), or None when discovery short-circuits (no
+    fingerprint bucket spans two clusters), so the common all-pure corpus
+    never touches the pairing kernel. Hot fingerprints (boilerplate runs
+    shared by thousands of docs) go through the same star-cap + salted
+    sub-bucket guard as hot LSH bands — sharing a fingerprint only proves an
+    L-token overlap, not the full min_span, so hot groups are heterogeneous
+    under verification and need the sub-bucket pairing.
 
     When the input carries a precomputed ``span_fps`` column (the signature UDF
     emits it in the same tokenize pass as minhash/simhash), the explode is pure
@@ -399,7 +377,7 @@ def exact_span_edges(
     before = _persistent_rdd_ids(spark)
     het_cached: list = []
     try:
-        raw = _span_candidates(
+        raw = span_candidates(
             normalized, cfg, id_col, text_col, group_col,
             assignments=exclude_assignments, persisted=het_cached,
             assignments_count=assignments_count,
@@ -413,7 +391,7 @@ def exact_span_edges(
     finally:
         # the eager checkpoint materialized the candidate set (or the job
         # failed / short-circuited); either way the cached het-bucket aggregate
-        # (see _span_candidates) has no readers left
+        # (see span_candidates) has no readers left
         for frame in het_cached:
             frame.unpersist()
     ckpt_ids = _persistent_rdd_ids(spark) - before

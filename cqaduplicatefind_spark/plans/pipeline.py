@@ -261,7 +261,7 @@ def _span_on(cfg: DedupConfig) -> bool:
 def _driver_spans_empty(
     signed: pa.Table, cluster: dict, cfg: DedupConfig, group_col: str | None
 ) -> bool:
-    """The span pass's heterogeneous-bucket gate (``overlap._span_candidates``)
+    """The span pass's heterogeneous-bucket gate (``overlap.span_candidates``)
     on the driver: True when no (group, fingerprint) bucket of the docs with
     at least ``min_overlap_span`` tokens holds two clusters. ``cluster`` maps
     a url to its components label; an unlabelled url is its own cluster. By
@@ -632,13 +632,3 @@ def retrieval_scored_pairs(result: PipelineResult, cfg: DedupConfig) -> DataFram
         ["id_a", "id_b"]
     )
     return score_pairs(pairs, result.signatures, cfg, prefilter_margin=1.0)
-
-
-def cluster_summary(clusters: DataFrame) -> DataFrame:
-    """Per-cluster rollup (size, members count) — the 'which pages are duplicates'
-    answer shape."""
-    return (
-        clusters.groupBy("cluster_id")
-        .agg(F.count("*").alias("size"))
-        .withColumn("is_duplicate_cluster", F.col("size") > 1)
-    )

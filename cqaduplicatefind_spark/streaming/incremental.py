@@ -49,9 +49,7 @@ Design (the part that must stay sub-linear per batch at 10^12 docs):
   on-disk layout, the file-size rule and the crash-window protocol that keeps
   the store a readable superset live in ``streaming/store.py``;
 - exactly-once via batch-id-keyed idempotent writes (overwrite-by-batch-part,
-  the Iceberg ``MERGE`` analog);
-- event-time windowed aggregation with a watermark covers the metrics-over-time
-  surface (docs/sec, dup-rate per window).
+  the Iceberg ``MERGE`` analog).
 """
 
 from __future__ import annotations
@@ -104,12 +102,6 @@ SIG_COLS = ("url", "minhash", "simhash", "n_tokens", "n_shingles", "shingles")
 # semi-join instead of OOMing the driver. At that size the increment touches
 # most buckets anyway, so the wide join is the right plan, not a regression.
 BROADCAST_TOUCHED_MAX = 4_000_000
-
-
-def stream_signatures(pages_stream: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Streaming pages(url, text, ...) -> streaming signatures (``SIG_COLS``)
-    from the pipeline's one-eval sign UDF. Stateless."""
-    return sign_pages(pages_stream, replace(cfg, span_pass=False))
 
 
 def _observed_rows(obs: Observation, df: DataFrame) -> int:
@@ -547,8 +539,9 @@ def run_incremental_dedup(
 ):
     """Wire a streaming pages source through signature computation into the
     incremental matcher. Returns (query, dedup) — await query termination, then
-    read ``dedup.matches()``."""
-    sigs = stream_signatures(pages_stream, cfg)
+    read ``dedup.matches()``. Signing is the pipeline's one-eval sign UDF, a
+    stateless narrow map that runs unchanged on a streaming frame."""
+    sigs = sign_pages(pages_stream, replace(cfg, span_pass=False))
     dedup = IncrementalDedup(
         spark, cfg, *store_roots(work_dir), compact_every=compact_every
     )
@@ -562,25 +555,3 @@ def run_incremental_dedup(
         .start()
     )
     return q, dedup
-
-
-def windowed_event_metrics(
-    events_stream: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Watermarked tumbling-window aggregation (late data beyond the watermark is
-    dropped; state is bounded) — the Structured Streaming metrics surface."""
-    return (
-        events_stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), F.col("event_type"))
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n",
-            "total",
-        )
-    )

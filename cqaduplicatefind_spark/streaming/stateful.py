@@ -1,25 +1,19 @@
-"""Custom stateful streaming operators (``applyInPandasWithState``) and
-late-data-tolerant windowed aggregation (watermarks) — the two Structured
-Streaming surfaces the incremental matcher (``streaming/incremental.py``,
-foreachBatch) does not exercise.
+"""A custom stateful streaming operator (``applyInPandasWithState``) — the
+Structured Streaming surface the incremental matcher
+(``streaming/incremental.py``, foreachBatch) does not exercise.
 
-- ``first_seen_stream``: exact-dedup as a STATEFUL STREAM — per content key,
-  emit only the first-arriving row across the whole stream; every later
-  duplicate (same micro-batch, later micro-batch, any interleaving) is
-  suppressed by per-key state in Spark's state store. This is the streaming
-  form of the exact-dedup tier (``exact_dedup_hash_groups``): on an unbounded
-  crawl, "keep the first capture of each byte-identical page" cannot buffer
-  the corpus — per-key state is the scale-correct shape (state size = one
-  flag per distinct key, partitioned by the state store, never the stream).
-  Capability analog of the reference's incremental partial-progress builder
-  (/root/reference/src/archive/MyReader2.py:16,41-42) for the exact tier.
+``first_seen_stream``: exact-dedup as a STATEFUL STREAM — per content key,
+emit only the first-arriving row across the whole stream; every later
+duplicate (same micro-batch, later micro-batch, any interleaving) is
+suppressed by per-key state in Spark's state store. This is the streaming
+form of the exact-dedup tier (``exact_dedup_hash_groups``): on an unbounded
+crawl, "keep the first capture of each byte-identical page" cannot buffer
+the corpus — per-key state is the scale-correct shape (state size = one
+flag per distinct key, partitioned by the state store, never the stream).
+Capability analog of the reference's incremental partial-progress builder
+(/root/reference/src/archive/MyReader2.py:16,41-42) for the exact tier.
 
-- ``windowed_doc_counts``: event-time tumbling-window counts with a watermark;
-  rows arriving later than the watermark allows are dropped and finalized
-  windows are emitted exactly once in append mode — the standard late-data
-  contract for crawl-time monitoring aggregations.
-
-Both operators are plain declarative Structured Streaming: the planner handles
+The operator is plain declarative Structured Streaming: the planner handles
 state partitioning (hash on the group key) and recovery from the checkpoint;
 nothing here collects to the driver.
 """
@@ -29,7 +23,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 
 def first_seen_stream(
@@ -84,29 +78,4 @@ def first_seen_stream(
 
     return stream_df.groupBy(key_col).applyInPandasWithState(
         fn, out_schema, "seen int", "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def windowed_doc_counts(
-    stream_df: DataFrame,
-    ts_col: str = "warc_ts",
-    window_duration: str = "1 hour",
-    watermark_delay: str = "30 minutes",
-    extra_keys: tuple[str, ...] = (),
-) -> DataFrame:
-    """Event-time tumbling-window document counts with late-data handling:
-    rows older than ``max(event time seen) - watermark_delay`` are dropped, and
-    in append mode a window row is emitted exactly once, when the watermark
-    passes its end. Pure declarative streaming aggregation — partial aggregates
-    combine map-side and the only exchange is on (window, extra_keys)."""
-    return (
-        stream_df.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.window(F.col(ts_col), window_duration), *extra_keys)
-        .agg(F.count("*").alias("n_docs"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            *extra_keys,
-            "n_docs",
-        )
     )

@@ -32,12 +32,9 @@ marker means the same thing whoever wrote the dir.
 Schema: each store is read with its declared schema, so no parquet footer is
 opened for schema inference on the read path (a schema-merging read opened
 every footer in the store on every trigger — ~0.5s/trigger on a 4-batch sf0.1
-store). Parquet fills a column absent from a file with NULLs. A store whose
-schema declares ``src_batch`` tags every appended row with its batch id and
-filters replays on it (see ``read``). Legacy parts written before the tag
-existed read it as null and count as index rows: no deployed store predates
-the tag, but the compatibility is one ``coalesce`` and stays
-(tests/test_streaming.py::test_legacy_store_without_src_batch_tag).
+store). A store whose schema declares ``src_batch`` tags every appended row
+with its batch id and filters replays on it (see ``read``). Every writer
+writes every declared column, so a part that lacks one is schema drift.
 
 File size: one rule, ``_n_files``, with one rows-per-file constant per store,
 for appends and merges alike. Writing with the upstream partitioning left
@@ -46,8 +43,9 @@ and re-opened hundreds of them. Row-count sizing is scale-free: a 6k-doc
 micro-batch folds to 1 file, a 10^9-row increment writes ~250 band files of a
 few hundred MB each (guide §6: aim 128MB-1GB). Merges sum the parquet footer
 row counts of their sources, and the same footer pass guards the schema:
-a part holding a column the declared schema lacks makes the merge raise
-before anything is written, instead of folding silently-dropped data.
+a part holding a column the declared schema lacks, or lacking one it
+declares, makes the merge raise before anything is written, instead of
+folding silently-dropped data or a null ``src_batch`` tag.
 
 Crash windows: appends overwrite their own ``batch=<id>`` dir, so a replayed
 batch id replaces its rows (exactly-once). Merges keep the store a readable
@@ -148,8 +146,7 @@ class PartStore:
         is only an I/O shortcut: rows a pre-crash compaction already folded
         into a tier no longer live under that name, so a tagged store filters
         on the ``src_batch`` row tag, which makes the exclusion exact through
-        every crash window. An untagged (legacy) row was written by a finished
-        pre-upgrade batch, so it IS index: null must not compare-exclude."""
+        every crash window."""
         parts = self.parts()
         if exclude_batch is not None:
             skip = f"batch={exclude_batch}"
@@ -160,9 +157,7 @@ class PartStore:
         if not self.tagged:
             return df
         if exclude_batch is not None:
-            df = df.where(
-                F.coalesce(F.col("src_batch"), F.lit(-1)) != int(exclude_batch)
-            )
+            df = df.where(F.col("src_batch") != int(exclude_batch))
         return df.drop("src_batch")
 
     def read_batch(self, batch_id: int) -> DataFrame:
@@ -191,16 +186,14 @@ class PartStore:
 
     def _conform(self, table: pa.Table, batch_id: int | None = None) -> pa.Table:
         """``table`` in the declared Arrow schema: each column cast to its
-        declared type, a missing one null (as Spark's schema'd read fills
-        it). ``batch_id`` tags every row of a tagged store with it."""
+        declared type. ``batch_id`` tags every row of a tagged store with
+        it."""
         cols = []
         for field in self.arrow_schema:
             if field.name == "src_batch" and batch_id is not None:
                 col = pa.array(np.full(table.num_rows, batch_id, np.int64))
-            elif field.name in table.column_names:
-                col = table[field.name].cast(field.type)
             else:
-                col = pa.nulls(table.num_rows, field.type)
+                col = table[field.name].cast(field.type)
             cols.append(col)
         return pa.Table.from_arrays(cols, schema=self.arrow_schema)
 
@@ -239,16 +232,23 @@ class PartStore:
                     self.root, f"compacted={batch_id}{suffix}"))
 
     def _footer_rows(self, files: list[str]) -> int:
-        """Summed footer row counts of ``files``; raises on a file holding a
-        column the declared schema lacks (a missing column reads as null)."""
+        """Summed footer row counts of ``files``; raises on a file whose
+        columns differ from the declared schema's."""
         n = 0
         for f in files:
             meta = pq.read_metadata(f)
-            extra = set(meta.schema.to_arrow_schema().names) - set(self.columns)
+            names = set(meta.schema.to_arrow_schema().names)
+            extra = names - set(self.columns)
             if extra:
                 raise ValueError(
                     f"{f} holds columns {sorted(extra)} the store schema "
                     f"lacks ({self.schema}); refusing to compact them away"
+                )
+            missing = set(self.columns) - names
+            if missing:
+                raise ValueError(
+                    f"{f} lacks columns {sorted(missing)} the store schema "
+                    f"declares ({self.schema}); refusing to fold them in as nulls"
                 )
             n += meta.num_rows
         return n
@@ -263,9 +263,8 @@ class PartStore:
         removed LAST. A crash at any point leaves every row reachable under a
         scanned name (possibly duplicated; readers dropDuplicate), and stale
         ``.old`` dirs self-heal by re-entering the next merge as sources.
-        The fold reads the raw parts (tags included, so a mixed store's
-        untagged rows keep a null tag) and writes size-targeted files — a tier
-        must not multiply the file count it replaces. Sources whose rows fit
+        The fold reads the raw parts (tags included) and writes size-targeted
+        files — a tier must not multiply the file count it replaces. Sources whose rows fit
         the driver bound fold on the driver (pyarrow, read file by file into
         the declared schema); larger ones fold in one Spark job."""
         files = [

@@ -6,7 +6,7 @@ import pytest
 
 from cqaduplicatefind_spark.config import DedupConfig
 from cqaduplicatefind_spark.session import build_session
-from cqaduplicatefind_spark.sources.fixtures import FixtureSpec, pages_df
+from fixtures import FixtureSpec, pages_df
 
 
 @pytest.fixture(scope="session")

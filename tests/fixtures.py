@@ -190,3 +190,10 @@ def pages_df(spark, spec: FixtureSpec = FixtureSpec()):
     edf = spark.createDataFrame(edges, schema="src string, dst string")
     cdf = spark.createDataFrame(clusters, schema="url string, cluster_id string")
     return pdf, edf, cdf
+
+
+def cluster_exact_match(predicted, gold) -> bool:
+    """Exact cluster-assignment equality (both labeled by min-member url)."""
+    diff1 = predicted.exceptAll(gold).count()
+    diff2 = gold.exceptAll(predicted).count()
+    return diff1 == 0 and diff2 == 0

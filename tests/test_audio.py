@@ -1,7 +1,6 @@
-"""Audio leg of the multimodal surface: pure-stdlib WAV codec round trips,
-deterministic spectral features, fingerprint robustness/separation, and the
-Spark wrappers (decode + fingerprint + Hamming near-dup pairing reusing the
-SimHash kernel).
+"""The audio codec and kernel the ``multimodal_audio_dedup`` registry row
+runs: pure-stdlib WAV codec round trips, untrusted-byte guards, and
+fingerprint robustness/separation.
 
 Fingerprint fixtures are broadband (filtered noise with a slow AM envelope)
 — the Haitsma–Kalker bit derivation is specified for real audio, where every
@@ -17,11 +16,9 @@ import numpy as np
 import pytest
 
 from cqaduplicatefind_spark.functions.audio import (
-    audio_features,
     audio_simhash,
     decode_wav,
     encode_wav,
-    frame_fingerprints,
 )
 
 RATE = 16000
@@ -122,18 +119,6 @@ def test_wav_sample_bomb_guard(monkeypatch):
     assert samples.size == 64
 
 
-def test_audio_features_sine_landmarks():
-    t = np.arange(N) / RATE
-    sine = 0.5 * np.sin(2 * np.pi * 440 * t)
-    f = audio_features(sine, RATE)
-    assert f["duration_ms"] == 2000
-    assert abs(f["rms"] - 0.5 / np.sqrt(2)) < 1e-3
-    assert abs(f["zcr"] - 2 * 440 / RATE) < 0.002  # two crossings per cycle
-    assert abs(f["centroid_hz"] - 440) < 5
-    z = audio_features(np.zeros(0), RATE)
-    assert z["duration_ms"] == 0 and z["rms"] == 0.0
-
-
 # --------------------------------------------------------------------------
 # Fingerprint robustness / separation
 # --------------------------------------------------------------------------
@@ -195,136 +180,16 @@ def test_fingerprint_rejects_low_sample_rates():
     assert isinstance(audio_simhash(clip, MIN_FINGERPRINT_RATE), int)
 
 
-def test_frame_fingerprints_ber():
-    """Per-frame Haitsma–Kalker words: tiny BER for a perturbed copy, ~0.4 for
-    unrelated content (the paper's separation property)."""
-    rng = np.random.Generator(np.random.PCG64(5))
-    a = _broadband(1)
-    w1 = frame_fingerprints(a, RATE)
-    w2 = frame_fingerprints(a + rng.normal(0, a.std() / 300, N), RATE)
-    w3 = frame_fingerprints(_broadband(2), RATE)
-    ber_same = np.mean([bin(int(x) ^ int(y)).count("1") for x, y in zip(w1, w2)]) / 32
-    ber_diff = np.mean([bin(int(x) ^ int(y)).count("1") for x, y in zip(w1, w3)]) / 32
-    assert ber_same < 0.05
-    assert ber_diff > 0.25
-    # short clip: padded to one frame, still produces a word
-    assert frame_fingerprints(np.zeros(10), RATE).size == 1
-
-
-# --------------------------------------------------------------------------
-# Spark wrappers
-# --------------------------------------------------------------------------
-
-def test_decode_audio_and_neardup_pairing(spark):
-    """End-to-end: WAV payloads -> features + fingerprints in Arrow-batched
-    maps; near-dup pairs fall out of the same bit_count Hamming expression the
-    SimHash text path uses (whole-stage codegen, no Python in the join)."""
-    from pyspark.sql import functions as F
-
-    from cqaduplicatefind_spark.functions.multimodal import (
-        audio_fingerprints,
-        decode_audio,
-    )
-
-    a = _broadband(1)
-    rng = np.random.Generator(np.random.PCG64(11))
-    near = a + rng.normal(0, a.std() / 300, N)
-    other = _broadband(2)
-    rows = [
-        ("a", bytearray(encode_wav(a, RATE))),
-        ("a_noisy", bytearray(encode_wav(near, RATE))),
-        ("b", bytearray(encode_wav(other, RATE))),
-        ("bad", bytearray(b"not audio at all")),
-        # decodable but below the fingerprint's band range: rate=1 also makes
-        # duration_ms exceed int32 (3M samples -> 3e9 ms), pinning the bigint
-        # column and the drop-from-fingerprints semantics in one row
-        ("slow", bytearray(encode_wav(np.zeros(3_000_000), 1))),
-    ]
-    df = spark.createDataFrame(rows, "media_id string, payload binary")
-
-    feats = {r.media_id: r for r in decode_audio(df).collect()}
-    assert feats["a"].sample_rate == RATE and feats["a"].duration_ms == 2000
-    assert abs(feats["a"].rms - float(np.sqrt((a**2).mean()))) < 1e-3
-    assert feats["bad"].sample_rate is None  # survives as a null-feature row
-    assert feats["slow"].duration_ms == 3_000_000_000  # > int32
-
-    combined = {r.media_id: r
-                for r in decode_audio(df, with_fingerprint=True).collect()}
-    assert combined["slow"].fp is None and combined["bad"].fp is None
-
-    fps = audio_fingerprints(df)
-    assert fps.count() == 3  # undecodable/low-rate rows drop
-    assert {r.media_id: r.fp for r in fps.collect()} == {
-        k: combined[k].fp for k in ("a", "a_noisy", "b")
-    }  # the combined single-decode wrapper emits the identical fingerprints
-    pairs = (
-        fps.alias("x")
-        .join(fps.alias("y"), F.col("x.media_id") < F.col("y.media_id"))
-        .where(F.bit_count(F.col("x.fp").bitwiseXOR(F.col("y.fp"))) <= 4)
-        .select("x.media_id", "y.media_id")
-        .collect()
-    )
-    assert {(r[0], r[1]) for r in pairs} == {("a", "a_noisy")}
-
-
-def test_decode_audio_strict_raises_on_undecodable(spark):
-    from cqaduplicatefind_spark.functions.multimodal import decode_audio
-
-    df = spark.createDataFrame(
-        [("bad", bytearray(b"mp3-ish junk"))], "media_id string, payload binary"
-    )
-    with pytest.raises(Exception, match="audio decode|NotImplementedError"):
-        decode_audio(df, strict=True).collect()
-
-
-def test_analyze_audio_single_pass_matches_two_pass():
-    """analyze_audio (one framed FFT pass) must agree exactly with the
-    separate audio_features + audio_simhash calls it replaces in
-    decode_audio(with_fingerprint=True)."""
-    from cqaduplicatefind_spark.functions.audio import analyze_audio
-
-    x = _broadband(3)
-    f = analyze_audio(x, RATE, with_fingerprint=True)
-    g = audio_features(x, RATE)
-    assert f["fp"] == audio_simhash(x, RATE)
-    for k in ("duration_ms", "rms", "zcr", "centroid_hz"):
-        assert f[k] == pytest.approx(g[k])
-    assert analyze_audio(x, RATE)["fp"] is None  # not requested
-    low = analyze_audio(x, 800, with_fingerprint=True)  # below MIN rate
-    assert low["fp"] is None and low["duration_ms"] > 0
-    empty = analyze_audio(np.array([]), RATE, with_fingerprint=True)
-    assert empty["fp"] is None and empty["duration_ms"] == 0
-
-
 def test_chunked_framing_is_chunk_size_invariant(monkeypatch):
-    """The bounded-memory chunked FFT must produce bit-identical fingerprints
-    and (near-)identical centroids regardless of where chunk boundaries fall."""
+    """The bounded-memory chunked FFT must produce bit-identical band
+    energies and fingerprints regardless of where chunk boundaries fall."""
     from cqaduplicatefind_spark.functions import audio as audio_mod
 
     x = _broadband(7)  # ~30 frames at FRAME=2048/HOP=1024
     ref_fp = audio_simhash(x, RATE)
-    ref_frames = frame_fingerprints(x, RATE)
-    ref_centroid = audio_features(x, RATE)["centroid_hz"]
+    ref_bands = audio_mod._band_energies(x, RATE)
     monkeypatch.setattr(audio_mod, "_CHUNK_FRAMES", 3)
     assert audio_simhash(x, RATE) == ref_fp
-    assert np.array_equal(frame_fingerprints(x, RATE), ref_frames)
-    assert audio_features(x, RATE)["centroid_hz"] == pytest.approx(
-        ref_centroid, rel=1e-9
-    )
+    assert np.array_equal(audio_mod._band_energies(x, RATE), ref_bands)
 
 
-def test_decode_audio_strict_raises_on_low_rate_fingerprint(spark):
-    """strict + with_fingerprint surfaces a decodable-but-unfingerprints-able
-    clip as an error instead of a silent null fp (same contract as
-    audio_fingerprints(strict=True))."""
-    from cqaduplicatefind_spark.functions.multimodal import decode_audio
-
-    df = spark.createDataFrame(
-        [("slow", bytearray(encode_wav(np.zeros(4000), 800)))],
-        "media_id string, payload binary",
-    )
-    with pytest.raises(Exception, match="too low for spectral fingerprint"):
-        decode_audio(df, strict=True, with_fingerprint=True).collect()
-    # non-strict: row survives with null fp, real features
-    row = decode_audio(df, with_fingerprint=True).collect()[0]
-    assert row.fp is None and row.duration_ms == 5000

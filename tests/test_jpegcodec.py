@@ -2,8 +2,8 @@
 spec-structural invariants that catch constant typos a self-consistent
 encode/decode pair alone cannot, and adversarial-header rejection.
 
-No Spark session needed — pure numpy; the Spark-side path is covered by
-``test_multimodal.py`` (strict decode_images over JPEG payloads).
+No Spark session needed — pure numpy; the executor-side path is the
+``multimodal_phash_groups`` registry row, hash-checked against its oracle.
 """
 
 from __future__ import annotations
@@ -220,15 +220,6 @@ def test_lying_segment_lengths_raise_valueerror():
         decode_jpeg(enc[:i] + seg(0xDA, b""))
     with pytest.raises(ValueError, match="truncated DHT"):
         decode_jpeg(b"\xff\xd8" + seg(0xC4, b"\x00" + b"\x01" * 16))
-
-
-def test_decode_image_dispatches_on_jpeg_magic():
-    from cqaduplicatefind_spark.functions.imagecodec import decode_image
-
-    img = _smooth_rgb(8, 8)
-    out = decode_image(encode_jpeg(img, quality=97))
-    assert out is not None and out.shape == (8, 8, 3)
-    assert np.abs(out.astype(int) - img.astype(int)).max() <= 8
 
 
 # --------------------------------------------------------------------------

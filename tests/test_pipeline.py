@@ -19,17 +19,10 @@ from cqaduplicatefind_spark.operators.candidates import (
     band_keys,
     explode_bands,
 )
-from cqaduplicatefind_spark.operators.metrics import (
-    cluster_exact_match,
-    clusters_to_pairs,
-    pair_recall,
-)
+from cqaduplicatefind_spark.operators.metrics import clusters_to_pairs, pair_recall
 from cqaduplicatefind_spark.operators.verify import score_pairs
-from cqaduplicatefind_spark.plans.pipeline import (
-    cluster_summary,
-    run_pipeline,
-    signature_stage,
-)
+from cqaduplicatefind_spark.plans.pipeline import run_pipeline, signature_stage
+from fixtures import cluster_exact_match
 
 
 @pytest.fixture(scope="module")
@@ -91,13 +84,6 @@ def test_determinism_under_partitioning(spark, tiny_fixture, cfg):
     c1 = sorted((r.url, r.cluster_id) for r in r1.clusters.collect())
     c2 = sorted((r.url, r.cluster_id) for r in r2.clusters.collect())
     assert c1 == c2
-
-
-def test_cluster_summary_shape(tiny_run):
-    result, pages, _, _ = tiny_run
-    summary = cluster_summary(result.clusters)
-    total = summary.agg(F.sum("size")).collect()[0][0]
-    assert total == pages.count()
 
 
 def test_star_loop_clusters_match_driver_path(spark, tiny_run, cfg, monkeypatch):

@@ -1,6 +1,5 @@
-"""Structured Streaming: incremental dedup over a file source, windowed metrics."""
+"""Structured Streaming: incremental dedup over a file source."""
 
-import datetime as dt
 import os
 
 import pytest
@@ -8,10 +7,7 @@ from pyspark.sql import functions as F
 
 from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.config import DedupConfig
-from cqaduplicatefind_spark.streaming.incremental import (
-    run_incremental_dedup,
-    windowed_event_metrics,
-)
+from cqaduplicatefind_spark.streaming.incremental import run_incremental_dedup
 
 
 def test_incremental_dedup_file_source(spark, tmp_path):
@@ -187,26 +183,6 @@ def test_streaming_edges_equal_batch_edges(spark):
     assert len(batch) > 0
 
 
-def test_windowed_event_metrics_batch_semantics(spark):
-    # semantics check on a static frame (same expression tree as streaming)
-    t0 = dt.datetime(2024, 1, 1, 0, 30)
-    rows = [
-        (1, t0, 10, "click", 1.0, "{}"),
-        (2, t0 + dt.timedelta(minutes=10), 11, "click", 2.0, "{}"),
-        (3, t0 + dt.timedelta(hours=2), 12, "view", 5.0, "{}"),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string, "
-              "value double, props string"
-    )
-    out = {
-        (r.window_start.hour, r.event_type): (r.n, r.total)
-        for r in windowed_event_metrics(df).collect()
-    }
-    assert out[(0, "click")] == (2, 3.0)
-    assert out[(2, "view")] == (1, 5.0)
-
-
 def test_tiered_compaction_bounds_parts_and_survives_replay(spark, tmp_path):
     """With compact_every=2 over six batches, batch parts fold into tiers and
     tiers merge — the store stays at O(compact_every) dirs without ever
@@ -303,27 +279,22 @@ def test_restart_replay_excludes_own_prior_append(spark, tmp_path):
     assert {(r.id_a, r.id_b) for r in d2.matches().collect()} == want
 
 
-def test_legacy_store_without_src_batch_tag(spark, tmp_path):
-    """Band stores written BEFORE the src_batch row tag existed (or mixed
-    stores upgraded mid-stream) must keep working: the index read merges
-    schemas so the tag column survives a legacy-footer inference pick, legacy
-    rows read the tag as null, and null-tagged rows are never replay-excluded
-    (`null != batch` would otherwise silently drop the whole pre-upgrade
-    index from pairing)."""
-    import os as _os
+def test_compaction_refuses_a_band_part_without_src_batch_tag(spark, tmp_path):
+    """Every writer tags band rows with ``src_batch``, and the replay read
+    filters on it, so a band part stripped of the tag is schema drift: the
+    next fold must raise before it writes anything, instead of folding the
+    rows in with a null tag. Every part stays byte for byte where it was."""
     import shutil
 
     from cqaduplicatefind_spark.functions.signatures import with_signatures
+    from cqaduplicatefind_spark.streaming import store
     from cqaduplicatefind_spark.streaming.incremental import (
         SIG_COLS,
         IncrementalDedup,
     )
 
     cfg = DedupConfig(shingle_k=3, jaccard_threshold=0.7, shuffle_partitions=4)
-    dirs = (
-        str(tmp_path / "bands"), str(tmp_path / "sigs"),
-        str(tmp_path / "matches"),
-    )
+    dirs = store.store_roots(str(tmp_path))
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
 
     def sigs_for(i):
@@ -334,31 +305,26 @@ def test_legacy_store_without_src_batch_tag(spark, tmp_path):
             df.withColumn("norm_text", F.col("text")), cfg, "norm_text"
         ).select(*SIG_COLS)
 
-    d1 = IncrementalDedup(spark, cfg, *dirs)
-    d1.process_batch(sigs_for(0), 0)
-    d1.process_batch(sigs_for(1), 1)
-    # strip the tag from batch 0's part: a pre-upgrade remnant in a mixed store
-    part = _os.path.join(dirs[0], "batch=0")
-    legacy = spark.read.parquet(part).drop("src_batch")
-    tmp_out = str(tmp_path / "legacy_rewrite")
-    legacy.write.parquet(tmp_out)
+    dedup = IncrementalDedup(spark, cfg, *dirs, compact_every=3)
+    dedup.process_batch(sigs_for(0), 0)
+    dedup.process_batch(sigs_for(1), 1)
+    part = os.path.join(dirs[0], "batch=0")
+    stripped = str(tmp_path / "stripped")
+    spark.read.parquet(part).drop("src_batch").write.parquet(stripped)
     shutil.rmtree(part)
-    shutil.move(tmp_out, part)
+    shutil.move(stripped, part)
 
-    # restart over the mixed store and stream a new family member: both the
-    # legacy (untagged) and tagged index rows must pair against it
-    d2 = IncrementalDedup(spark, cfg, *dirs)
-    d2.process_batch(sigs_for(2), 2)
-    got = {(r.id_a, r.id_b) for r in d2.matches().collect()}
-    assert {("fam0", "fam2"), ("fam1", "fam2")} <= got
+    def snapshot():
+        root = tmp_path / "bands"
+        return {str(f.relative_to(root)): f.read_bytes()
+                for f in root.rglob("*") if f.is_file()}
 
-    # replay batch 1 on another restart: fam1's own tagged rows are excluded,
-    # the legacy null-tagged fam0 rows are NOT (they are real index)
-    d3 = IncrementalDedup(spark, cfg, *dirs)
-    d3.process_batch(sigs_for(1), 1)
-    # index as it stood before batch 1's replay: fam0 (legacy, null tag)
-    # plus fam2 (tagged 2) — fam1's own pre-crash rows excluded by tag
-    assert d3.batch_stats[0]["n_index_band_rows"] == 2 * cfg.bands
+    before = snapshot()
+    bands, _, _ = store.open_stores(spark, *dirs, compact_every=2)
+    with pytest.raises(ValueError, match="src_batch"):
+        bands.compact(2)
+    assert snapshot() == before
+    assert sorted(os.listdir(dirs[0])) == ["batch=0", "batch=1"]
 
 
 def test_restart_replay_after_compaction_keeps_stat_exact(spark, tmp_path):

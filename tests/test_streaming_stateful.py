@@ -1,18 +1,14 @@
-"""applyInPandasWithState first-seen dedup + watermarked windowed aggregation,
-driven through REAL multi-trigger streams (file source, maxFilesPerTrigger=1,
-availableNow) with micro-batch order pinned by file modification times."""
+"""applyInPandasWithState first-seen dedup, driven through REAL multi-trigger
+streams (file source, maxFilesPerTrigger=1, availableNow) with micro-batch
+order pinned by file modification times."""
 
-import datetime as dt
 import itertools
 import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from cqaduplicatefind_spark.streaming.stateful import (
-    first_seen_stream,
-    windowed_doc_counts,
-)
+from cqaduplicatefind_spark.streaming.stateful import first_seen_stream
 
 _name_counter = itertools.count()
 
@@ -75,47 +71,3 @@ def test_first_seen_dedup_across_batches(spark, tmp_path):
     # K1: batch0 wins over batch1's smaller url u0; within batch0, u1 < u3.
     # K2: batch0's u5, not batch2's u9. K3: batch1's u2. K4: batch2's u7.
     assert got == {("u1", "K1"), ("u5", "K2"), ("u2", "K3"), ("u7", "K4")}
-
-
-def test_windowed_counts_drop_late_rows(spark, tmp_path):
-    """1-hour tumbling windows, 30-minute watermark, append mode. Late-event
-    filtering uses the PREVIOUS batch's watermark while state eviction uses the
-    current one (Spark 3.5+ two-watermark semantics), so the [8:00, 9:00)
-    window finalizes with count 2 at the end of batch 1 (eviction watermark
-    09:35), and the 08:30 straggler arriving in batch 2 is dropped by the
-    late-event filter (filter watermark 09:35 by then) — without the drop it
-    would re-open the already-emitted window and append mode would emit a
-    duplicate [8:00, 9:00) row."""
-    src = str(tmp_path / "src")
-
-    def ts(h, m):
-        return dt.datetime(2026, 1, 1, h, m)
-
-    _write_batches(
-        src,
-        [
-            # max event 10:05 -> eviction watermark after this batch = 09:35
-            pa.table({"url": ["a", "b", "c"], "warc_ts": [ts(8, 10), ts(8, 20), ts(10, 5)]}),
-            # on-time row; [8:00, 9:00) is evicted+emitted during this batch
-            pa.table({"url": ["d"], "warc_ts": [ts(10, 10)]}),
-            # 08:30 arrives two batches after the watermark passed it: DROPPED;
-            # 12:40 advances the watermark to 12:10 for the next batch
-            pa.table({"url": ["late", "e"], "warc_ts": [ts(8, 30), ts(12, 40)]}),
-            # final trigger flushes [10:00, 11:00) (end 11:00 < 12:10)
-            pa.table({"url": ["f"], "warc_ts": [ts(12, 50)]}),
-        ],
-    )
-    out = _run_stream(
-        spark,
-        src,
-        "url string, warc_ts timestamp",
-        lambda s: windowed_doc_counts(s, "warc_ts", "1 hour", "30 minutes"),
-        "windows",
-        str(tmp_path / "ckpt"),
-    )
-    rows = out.collect()
-    got = sorted((r.window_start.hour, r.n_docs) for r in rows)
-    # [8:00, 9:00) = a+b, emitted exactly once and NOT re-opened by the
-    # straggler; [10:00, 11:00) = c+d; [12:00, 13:00) never finalizes.
-    assert got == [(8, 2), (10, 2)]
-    assert len(rows) == 2  # no duplicate append emissions

@@ -2,20 +2,16 @@
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from cqaduplicatefind_spark.functions.text_stats import (
-    content_hash_expr,
-    fingerprint_expr,
-    lang_id_expr,
-    quality_features,
-    token_count,
-    word_token_count,
+    distinct_tokens_expr,
+    lang_id_from_tokens,
 )
 from cqaduplicatefind_spark.operators.ann import (
     cosine_dedup_pairs,
     cosine_topk,
-    ivf_topk,
+    ivf_candidate_scores,
     ivf_train_centroids,
     rp_lsh_topk,
 )
@@ -30,56 +26,9 @@ def test_lang_id(spark):
         ("u", "zzz qqq xxx"),
     ]
     df = spark.createDataFrame(rows, "id string, text string")
-    got = {r.id: r.lang for r in df.select("id", lang_id_expr(F.col("text")).alias("lang")).collect()}
+    lang = lang_id_from_tokens(distinct_tokens_expr(F.col("text")))
+    got = {r.id: r.lang for r in df.select("id", lang.alias("lang")).collect()}
     assert got == {"e": "en", "d": "de", "f": "fr", "s": "es", "u": "und"}
-
-
-def test_token_counts(spark):
-    df = spark.createDataFrame(
-        [("a", "one two\tthree\n"), ("b", ""), ("c", "hello, world! v2.0")],
-        "id string, text string",
-    )
-    got = {
-        r.id: (r.n, r.w)
-        for r in df.select(
-            "id",
-            token_count(F.col("text")).alias("n"),
-            word_token_count(F.col("text")).alias("w"),
-        ).collect()
-    }
-    assert got["a"] == (3, 3)
-    assert got["b"] == (0, 0)
-    # "hello" "," "world" "!" "v" "2" "." "0" -> 8 BPE-ish pieces
-    assert got["c"][0] == 3
-    assert got["c"][1] == 8
-
-
-def test_quality_features(spark):
-    df = spark.createDataFrame(
-        [("a", "Hello world. This is FINE text."), ("b", "aa aa aa aa")],
-        "id string, text string",
-    )
-    rows = {r.id: r for r in quality_features(df).collect()}
-    a = rows["a"]
-    assert a.q_n_tokens == 6
-    assert 0 < a.q_alpha_ratio < 1
-    assert a.q_punct_ratio > 0
-    assert rows["b"].q_distinct_token_ratio == pytest.approx(0.25)
-
-
-def test_fingerprint_and_content_hash(spark):
-    df = spark.createDataFrame(
-        [("a", "x y z common prefix here one two END"), ("b", "x y z common prefix here one two DIFFERENT")],
-        "id string, text string",
-    )
-    rows = df.select(
-        "id",
-        fingerprint_expr(F.col("text")).alias("fp"),
-        content_hash_expr(F.col("text")).alias("ch"),
-    ).collect()
-    by = {r.id: r for r in rows}
-    assert by["a"].fp == by["b"].fp      # same 8-token prefix
-    assert by["a"].ch != by["b"].ch      # different full content
 
 
 def _vec_df(spark, n=200, d=16, seed=3):
@@ -90,6 +39,17 @@ def _vec_df(spark, n=200, d=16, seed=3):
         base[100 + i] = base[i] + rng.randn(d).astype(np.float32) * 0.01
     rows = [(int(i), [float(x) for x in base[i]]) for i in range(n)]
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>"), base
+
+
+def _ivf_topk(queries, corpus, k, nprobe, centroids):
+    """(qid, cand, cosine, rank): the IVF probe scores ranked per query, the
+    shape the ``ann_ivf_topk`` registry row builds."""
+    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cand"))
+    return (
+        ivf_candidate_scores(queries, corpus, centroids, nprobe)
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+    )
 
 
 def test_cosine_topk_exact(spark):
@@ -117,11 +77,10 @@ def test_ivf_full_probe_is_exact(spark):
     df, _ = _vec_df(spark)
     q = df.where(F.col("vec_id") < 5)
     exact = {(r.qid, r.cand, r.rank) for r in cosine_topk(q, df, k=3).collect()}
+    cent = ivf_train_centroids(df, n_centroids=8, iters=2, seed=1)
     ivf = {
         (r.qid, r.cand, r.rank)
-        for r in ivf_topk(
-            q, df, k=3, n_centroids=8, nprobe=8, iters=2, seed=1
-        ).collect()
+        for r in _ivf_topk(q, df, k=3, nprobe=8, centroids=cent).collect()
     }
     assert ivf == exact
 
@@ -133,7 +92,7 @@ def test_ivf_partial_probe_recall(spark):
     df, _ = _vec_df(spark)
     q = df.where(F.col("vec_id") < 10)
     cent = ivf_train_centroids(df, n_centroids=8, iters=3, seed=1)
-    got = ivf_topk(q, df, k=3, nprobe=2, centroids=cent)
+    got = _ivf_topk(q, df, k=3, nprobe=2, centroids=cent)
     top1 = {r.qid: r.cand for r in got.where(F.col("rank") == 1).collect()}
     hits = sum(1 for i, c in top1.items() if c == 100 + i)
     assert hits >= 9
@@ -151,7 +110,7 @@ def test_ivf_partial_probe_recall(spark):
     two_largest = sum(cell_sizes[:2])
     assert two_largest < 199  # the quantizer actually partitioned the corpus
     per_q = (
-        ivf_topk(q, df, k=10_000, nprobe=2, centroids=cent)
+        _ivf_topk(q, df, k=10_000, nprobe=2, centroids=cent)
         .groupBy("qid")
         .count()
         .collect()
@@ -196,8 +155,8 @@ def test_null_and_zero_embeddings_survive_every_path(spark):
     assert all(r.cand not in (900, 901) for r in rp)
     # ivf: training + full probe unaffected by the weird rows
     cent = ivf_train_centroids(full, n_centroids=4, iters=2, seed=1)
-    ivf = ivf_topk(full.where(F.col("vec_id") < 5), full, k=3,
-                   nprobe=4, centroids=cent).collect()
+    ivf = _ivf_topk(full.where(F.col("vec_id") < 5), full, k=3,
+                    nprobe=4, centroids=cent).collect()
     assert len(ivf) == 15
     # dedup pairs: no crash, no weird-row pairs
     pp = cosine_dedup_pairs(full, threshold=0.95).collect()

@@ -5,7 +5,11 @@ wraps the functions listed in ``TracedPipeline.TARGETS`` with
 script only when it runs (``--trace 1`` crashes on a missing
 ``plans.pipeline.accept_edges``). The same holds for a ``DedupConfig`` field
 a script passes by keyword. These tests resolve every such reference from
-source with ``ast``: no Spark, and no script is imported."""
+source with ``ast``: no Spark, and no script is imported.
+
+The other direction is checked too: every public top-level def in the
+package must be reachable from a non-test entry, or be a listed reference
+capability. Code that only tests call is surface nobody ships."""
 
 from __future__ import annotations
 
@@ -22,8 +26,9 @@ SCRIPTS = sorted(
     for p in [REPO / "bench.py", *(REPO / "tools").glob("*.py"),
               *(REPO / "dedupbench").glob("*.py")]
 )
+# the non-test entries: the registry, the spark-submit runner and the scripts;
 # every caller that builds a DedupConfig outside the package's library code
-CONFIG_CALLERS = sorted([*SCRIPTS, "__spark_entry__.py", f"{PKG}/run.py"])
+ENTRIES = sorted([*SCRIPTS, "__spark_entry__.py", f"{PKG}/run.py"])
 
 
 def _module_file(dotted: str) -> Path | None:
@@ -158,8 +163,176 @@ def test_config_keyword_check_rejects_unknown_fields():
     assert _config_keywords(repr(src)) == ["shingle_k", "no_such_field"]
 
 
-@pytest.mark.parametrize("script", CONFIG_CALLERS)
+@pytest.mark.parametrize("script", ENTRIES)
 def test_script_config_keywords_are_fields(script):
     unknown = [k for k in _config_keywords((REPO / script).read_text())
                if k not in _config_fields()]
     assert not unknown, unknown
+
+
+# ---------------------------------------------------------------- reachability
+
+# Public package defs that no non-test entry calls, kept on purpose: each one
+# is the engine's form of a reference-repo operation (SURVEY.md anchor), and
+# tests pin it. Every other public def must be reachable from ``ENTRIES``.
+REFERENCE_CAPABILITIES = {
+    "operators.ann.cosine_topk": "§3.3 / §7.4 ANN top-k, brute force "
+                                 "(also the oracle of the IVF and RP tests)",
+    "operators.ann.rp_lsh_topk": "§3.3 / §7.4 ANN top-k, random-projection LSH",
+    "operators.candidates.all_pairs": "§7.4 all-pairs semantics (J1)",
+    "operators.metrics.pair_recall": "§1.4 dup-pair recall over canonical pairs",
+    "operators.pairs.labeled_pairs": "§7.4 labeled-pair generation (R3)",
+    "operators.pairs.train_test_split": "§2.8 train/test split (R1)",
+    "operators.topk.retrieve_duplicates": "§7.5 re-rankable retrieval answer",
+    "operators.topk.topk_per_query": "§7.4 top-k per query (J3/T2)",
+    "plans.pipeline.retrieval_scored_pairs": "§3.2 retrieval + re-rank entry",
+    "sources.qa_dumps.read_pairs_csv": "§7.4 pair CSV scan (S3)",
+    "sources.qa_dumps.write_pairs_csv": "§7.4 pair CSV sink (S4)",
+    "streaming.incremental.run_incremental_dedup": "§2.10 / §7.5 streaming "
+                                                   "incremental index",
+}
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+Node = tuple[str, "str | None"]  # (module, top-level name); None: the module body
+
+
+def _code_tree(source: str) -> ast.Module:
+    """``source`` parsed with every docstring dropped: a name mentioned in
+    prose is not a use."""
+    tree = ast.parse(source)
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, *_DEFS)) and ast.get_docstring(node) is not None:
+            node.body[0] = ast.Pass()
+    return tree
+
+
+@cache
+def _package() -> dict[str, ast.Module]:
+    mods = {}
+    for path in sorted((REPO / PKG).rglob("*.py")):
+        parts = path.relative_to(REPO).with_suffix("").parts
+        mods[".".join(parts[:-1] if parts[-1] == "__init__" else parts)] = (
+            _code_tree(path.read_text()))
+    return mods
+
+
+@cache
+def _top_defs(module: str) -> dict[str, ast.stmt]:
+    return {n.name: n for n in _package()[module].body if isinstance(n, _DEFS)}
+
+
+def _target(module: str, attr: str | None) -> Node:
+    if attr is not None and f"{module}.{attr}" in _package():
+        return (f"{module}.{attr}", None)
+    return (module, attr)
+
+
+def _aliases(tree: ast.AST) -> dict[str, set[Node]]:
+    """Local name -> what it names in the package, from every import in the
+    tree (function-local imports included)."""
+    names: dict[str, set[Node]] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] == PKG:
+                    names.setdefault(a.asname or PKG, set()).add(
+                        (a.name if a.asname else PKG, None))
+        elif (isinstance(node, ast.ImportFrom) and node.level == 0
+              and node.module.split(".")[0] == PKG):
+            for a in node.names:
+                names.setdefault(a.asname or a.name, set()).add(
+                    _target(node.module, a.name))
+    return names
+
+
+def _uses(roots: list[ast.AST], module: str | None,
+          names: dict[str, set[Node]]) -> set[Node]:
+    """Package nodes the code under ``roots`` refers to: a bare name of the
+    module's own defs or of an import, an attribute chain off an imported
+    module, and a string constant that parses as Python naming the package
+    (a child-process script)."""
+    local = _top_defs(module) if module else {}
+    out: set[Node] = set()
+    for root in roots:
+        for node in ast.walk(root):
+            if isinstance(node, ast.Name):
+                if node.id in local:
+                    out.add((module, node.id))
+                out |= names.get(node.id, set())
+            elif isinstance(node, ast.Attribute):
+                chain = []
+                while isinstance(node, ast.Attribute):
+                    chain.insert(0, node.attr)
+                    node = node.value
+                for hit in names.get(getattr(node, "id", None), ()):
+                    for attr in chain:
+                        if hit[1] is not None:
+                            break
+                        hit = _target(hit[0], attr)
+                        out.add(hit)
+            elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                  and PKG in node.value):
+                try:
+                    script = _code_tree(node.value)
+                except SyntaxError:
+                    continue
+                out |= _uses([script], None, _aliases(script))
+    return out
+
+
+def _edges(node: Node) -> set[Node]:
+    """A def reaches its module body (importing it runs that) and what its
+    own code names; a module body reaches its parent package."""
+    module, name = node
+    if module not in _package():
+        return set()
+    tree = _package()[module]
+    if name is None:
+        body = [s for s in tree.body if not isinstance(s, _DEFS)]
+        parent = {(module.rsplit(".", 1)[0], None)} if "." in module else set()
+        return _uses(body, module, _aliases(tree)) | parent
+    d = _top_defs(module).get(name)
+    return {(module, None)} | (_uses([d], module, _aliases(tree)) if d else set())
+
+
+@cache
+def _reachable() -> frozenset[Node]:
+    todo: list[Node] = [_target(m, a) for m, a in _traced_targets()]
+    for entry in ENTRIES:
+        tree = _code_tree((REPO / entry).read_text())
+        todo += _uses([tree], None, _aliases(tree))
+        if entry.startswith(f"{PKG}/"):  # an entry inside the package
+            module = entry[:-3].replace("/", ".")
+            todo += [(module, None), *((module, n) for n in _top_defs(module))]
+    seen: set[Node] = set()
+    while todo:
+        node = todo.pop()
+        if node not in seen:
+            seen.add(node)
+            todo += _edges(node) - seen
+    return frozenset(seen)
+
+
+def _unreachable_public_defs() -> set[str]:
+    return {f"{m[len(PKG) + 1:]}.{n}" for m in _package() for n in _top_defs(m)
+            if not n.startswith("_") and (m, n) not in _reachable()}
+
+
+def test_reachability_scan_reads_code_not_docstrings():
+    src = ('"""uses ``cqaduplicatefind_spark.plans.pipeline.run_pipeline``"""\n'
+           "from cqaduplicatefind_spark.plans import pipeline\n"
+           "def f():\n"
+           '    """calls pipeline.cluster_summary"""\n'
+           "    return pipeline.accept_edges\n")
+    tree = _code_tree(src)
+    assert _uses([tree], None, _aliases(tree)) == {
+        (f"{PKG}.plans.pipeline", None), (f"{PKG}.plans.pipeline", "accept_edges"),
+    }
+
+
+def test_every_public_def_is_reachable_or_a_listed_capability():
+    """A public def nothing outside ``tests/`` reaches is dead surface: delete
+    it, move it into ``tests/`` if it is a fixture, or list it above with the
+    SURVEY.md section it implements. A listed name must still exist and still
+    be unreachable, so the list stays exact."""
+    assert _unreachable_public_defs() == set(REFERENCE_CAPABILITIES)

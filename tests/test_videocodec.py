@@ -1,5 +1,6 @@
 """MJPEG-in-AVI codec: container round-trip, untrusted-byte bounds, frame
-sampling, perceptual hashes, and the Spark-side video plumbing they feed."""
+sampling, and the perceptual hashes the ``multimodal_phash_groups`` and
+``multimodal_video_dedup`` registry rows run."""
 
 import struct
 
@@ -10,7 +11,6 @@ from cqaduplicatefind_spark.functions import videocodec
 from cqaduplicatefind_spark.functions.jpegcodec import decode_jpeg, encode_jpeg
 from cqaduplicatefind_spark.functions.videocodec import (
     ahash64,
-    decode_avi_frames,
     encode_avi_mjpeg,
     is_avi,
     mjpeg_frame_index,
@@ -54,17 +54,10 @@ def test_avi_round_trip_indexes_and_decodes_every_frame():
     # each movi chunk holds exactly the standalone baseline JPEG of its frame
     off, size = table[2]
     assert avi[off : off + size] == encode_jpeg(frames[2], quality=95)
-    for (i, img), src in zip(decode_avi_frames(avi), frames):
+    for (off, size), src in zip(table, frames):
+        img = decode_jpeg(avi[off : off + size])
         assert img.shape == src.shape
         assert np.abs(img.astype(int) - src.astype(int)).max() <= 3
-
-
-def test_decode_selected_frames_only_and_range_check():
-    avi = encode_avi_mjpeg(_gradient_frames(5), quality=92)
-    out = decode_avi_frames(avi, [0, 4])
-    assert [i for i, _ in out] == [0, 4]
-    with pytest.raises(ValueError, match="out of range"):
-        decode_avi_frames(avi, [5])
 
 
 def test_rec_list_nesting_parses():
@@ -84,8 +77,9 @@ def test_rec_list_nesting_parses():
     avi = b"RIFF" + struct.pack("<I", len(body)) + body
     table = mjpeg_frame_index(avi)
     assert len(table) == 4
+    off, size = table[1]
     assert np.abs(
-        decode_avi_frames(avi, [1])[0][1].astype(int) - frames[1].astype(int)
+        decode_jpeg(avi[off : off + size]).astype(int) - frames[1].astype(int)
     ).max() <= 3
 
 
@@ -185,65 +179,6 @@ def test_video_simhash_frameless_raises():
         video_simhash(avi)
 
 
-# --------------------------------------------------------------------------
-# Spark plumbing (multimodal wrappers)
-# --------------------------------------------------------------------------
-
-def _video_df(spark, frames_by_id):
-    rows = [(mid, "video", encode_avi_mjpeg(fr, quality=92), None, None, 1000)
-            for mid, fr in frames_by_id.items()]
-    rows.append(("mp4", "video", b"\x00\x00\x00 ftypisom" + bytes(600), None,
-                 None, 1000))
-    return spark.createDataFrame(
-        rows,
-        "media_id string, media_type string, payload binary, "
-        "width int, height int, duration_ms int",
-    )
-
-
-def test_sample_video_frames_real_avi_path_composes_with_decode(spark):
-    from cqaduplicatefind_spark.functions.multimodal import (
-        decode_images, sample_video_frames)
-
-    df = _video_df(spark, {"v1": _gradient_frames(6)})
-    frames = sample_video_frames(df, n_frames=3)
-    got = {r.media_id: r for r in frames.collect()}
-    avi_rows = [r for r in frames.collect() if r.media_id == "v1"]
-    assert len(avi_rows) == 3 and {r.frame_idx for r in avi_rows} == {0, 1, 2}
-    # real path: every sampled frame is a standalone JPEG...
-    assert all(bytes(r.frame)[:2] == b"\xff\xd8" for r in avi_rows)
-    # ...that the image stage decodes for real (compose: frames -> decode)
-    per_frame = frames.where("media_id = 'v1'").withColumnRenamed(
-        "frame", "payload"
-    )
-    decoded = decode_images(per_frame)
-    rows = decoded.collect()
-    assert len(rows) == 3
-    assert all(r.height == 24 and r.width == 32 for r in rows)
-    # non-AVI container falls back to byte windows (stub), still n rows
-    assert "mp4" in got
-
-
-def test_sample_video_frames_strict_contract(spark):
-    from cqaduplicatefind_spark.functions.multimodal import sample_video_frames
-
-    df = _video_df(spark, {})
-    with pytest.raises(Exception, match="NotImplementedError"):
-        sample_video_frames(df, n_frames=2, strict=True).collect()
-
-
-def test_video_fingerprints_drops_undecodable_keeps_avi(spark):
-    from cqaduplicatefind_spark.functions.multimodal import video_fingerprints
-
-    df = _video_df(spark, {"v1": _gradient_frames(6),
-                           "v2": _gradient_frames(6),
-                           "v3": _noise_frames(6)})
-    rows = {r.media_id: r.fp for r in video_fingerprints(df, n_frames=4).collect()}
-    assert set(rows) == {"v1", "v2", "v3"}  # mp4 dropped, not false-paired
-    assert rows["v1"] == rows["v2"]  # identical clips -> identical fp
-    assert _hamming(rows["v1"], rows["v3"]) >= 16
-
-
 def test_ahash_flat_frames_encode_luma_as_thermometer():
     """Flat frames must NOT all collide at hash 0: the thermometer special
     case makes Hamming distance between two flat frames equal their quantized
@@ -264,8 +199,8 @@ def test_ahash_flat_frames_encode_luma_as_thermometer():
 
 
 def test_sample_frame_payloads_shared_by_simhash_and_spark_path():
-    """video_simhash and the Spark frame-sampling path must extract the SAME
-    frames: both ride videocodec.sample_frame_payloads."""
+    """video_simhash's frame selection: evenly-spaced indices, each slice
+    exactly its frame's movi chunk."""
     frames = _gradient_frames(7)
     avi = encode_avi_mjpeg(frames, fps=5, quality=95)
     sampled = videocodec.sample_frame_payloads(avi, 3)

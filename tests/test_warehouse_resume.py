@@ -10,9 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from cqaduplicatefind_spark.config import DedupConfig
-from cqaduplicatefind_spark.operators.metrics import cluster_exact_match
 from cqaduplicatefind_spark.plans.pipeline import run_pipeline
 from cqaduplicatefind_spark.sources.warehouse import Warehouse
+from fixtures import cluster_exact_match
 
 
 @pytest.fixture
