@@ -18,7 +18,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from cqaduplicatefind_spark.config import DedupConfig
+from cqaduplicatefind_spark.config import TOP_K, DedupConfig
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -1148,7 +1148,7 @@ def q_overlap_spans(spark, sf):
     docs = _read(spark, sf, "documents").select(
         F.col("doc_id").cast("string").alias("url"), F.col("text")
     )
-    return overlap_spans(pairs, docs, id_col="url", text_col="text")
+    return overlap_spans(pairs, docs, text_col="text")
 
 
 @_register(
@@ -1710,11 +1710,11 @@ def q_qa_dumps_end_to_end(spark, sf):
     from cqaduplicatefind_spark.operators.verify import score_pairs
 
     pool = clusters_to_pairs(result.clusters, max_cluster_size=1_000_000)
-    scored = score_pairs(
-        pool, result.signatures, cfg, prefilter_margin=1.0, evidence="exact"
-    ).select("id_a", "id_b", "jaccard")
+    scored = score_pairs(pool, result.signatures, cfg).select(
+        "id_a", "id_b", "jaccard"
+    )
     ranked = symmetrize_scored(scored, "jaccard")
-    m = ranked_retrieval_metrics(ranked, gold, k=cfg.top_k)
+    m = ranked_retrieval_metrics(ranked, gold, k=TOP_K)
     return m.select(
         F.col("n_queries").cast("long").alias("n_queries"),
         F.col("found_at_k").cast("long").alias("found_at_k"),
@@ -2196,7 +2196,7 @@ def q_streaming_first_seen_docs(spark, sf):
     )
     name = f"first_seen_oracle_{os.getpid()}_{next(counter)}"
     q = (
-        first_seen_stream(stream, "content_key", "url")
+        first_seen_stream(stream)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")

@@ -4,7 +4,8 @@ All knobs that define duplicate semantics live here so that "identical
 shingle/signature config" (BASELINE.json north_rule) is a single frozen object whose
 fingerprint is stamped into every checkpointed stage table. The reference hard-codes
 its equivalents (top-k=10 at ``src/BM25DuplicateRetriever.py:13``; 150-dim Doc2Vec at
-``src/lstm-siamese/config.py``); we make them explicit and deterministic.
+``src/lstm-siamese/config.py``); we make them explicit and deterministic. Values
+no caller varies are module constants.
 """
 
 from __future__ import annotations
@@ -22,6 +23,12 @@ MERSENNE_PRIME_61 = (1 << 61) - 1
 # SimHash width: one signed 64-bit lane per doc (Spark ``bigint``), split into
 # ``hamming_k + 1`` pigeonhole pieces for candidate generation.
 SIMHASH_BITS = 64
+# splitmix64 key of the SimHash shingle-bit hashes
+SIMHASH_SEED = 7
+
+# retrieval depth of the ranked-retrieval metrics (reference:
+# numberOfRelevantQs=10 at ``src/BM25DuplicateRetriever.py:13``)
+TOP_K = 10
 
 # Row bound for work that runs on (or ships through) the driver instead of a
 # distributed plan: connected components union-finds edge sets of at most
@@ -99,7 +106,6 @@ class DedupConfig:
     rows_per_band: int = 8
 
     # --- SimHash ---
-    simhash_seed: int = 7
     hamming_k: int = 3           # match if Hamming distance <= k (pigeonhole: k+1 pieces)
 
     # --- verification: every candidate pair is exactly verified ---
@@ -122,17 +128,12 @@ class DedupConfig:
     # band groups larger than this emit O(m) star edges + salted sub-bucket pairs
     # instead of O(m^2) full pairs; a pair colliding in every band otherwise costs
     # bands * C(m,2) shuffle rows. Small groups keep full pairing for
-    # verification robustness.
+    # verification robustness. Hot groups are re-keyed into sub-buckets of
+    # expected size max_band_group and fully paired within each (so true-dup
+    # pairs inside a heterogeneous hot bucket survive exact-verify, which may
+    # reject their star edges); an unlucky/adversarial sub-bucket is capped at
+    # 8 * max_band_group members (``bucket_candidates``' ``salt_cap``).
     max_band_group: int = 8
-    # hot groups are re-keyed into sub-buckets of expected size max_band_group and
-    # fully paired within each (so true-dup pairs inside a heterogeneous hot
-    # bucket survive exact-verify, which may reject their star edges); this caps
-    # an unlucky/adversarial sub-bucket at salt_buckets * max_band_group members.
-    # 0 disables sub-bucket pairing (stars only).
-    salt_buckets: int = 8
-
-    # --- retrieval / evaluation ---
-    top_k: int = 10              # reference: numberOfRelevantQs=10
 
     # --- execution ---
     shuffle_partitions: int = 32

@@ -9,19 +9,16 @@ whitespace normalization happens. Byte-identical output per url is the engine's
 per-row invariant (BASELINE.json ``input_hint``), so this must be the html.parser
 algorithm — not BeautifulSoup/lxml, which differ on malformed markup.
 
-Exposed as an Arrow-batched pandas UDF: the parse itself is CPU-bound Python but
-batched transfer keeps serialization off the hot path, and each Spark task streams
-Arrow batches independently — at cluster scale this stage is embarrassingly parallel
-over input partitions with zero shuffle.
+``strip_value`` is the per-value step the pipeline's one-eval sign UDF
+(``functions/signatures.py``) runs before normalizing: the parse itself is
+CPU-bound Python, but Arrow-batched transfer keeps serialization off the hot
+path, and each Spark task streams batches independently — at cluster scale this
+stage is embarrassingly parallel over input partitions with zero shuffle.
 """
 
 from __future__ import annotations
 
 from html.parser import HTMLParser
-
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 
 class _TextExtractor(HTMLParser):
@@ -55,13 +52,3 @@ def strip_value(v: object) -> str | None:
         v = bytes(v).decode("utf-8", errors="replace")
     return strip_tags(v)
 
-
-@F.pandas_udf(StringType())
-def strip_tags_udf(html: pd.Series) -> pd.Series:
-    """Arrow-batched strip_tags; output is the extracted text string."""
-    return html.map(strip_value)
-
-
-def with_extracted_text(df, html_col: str = "html", out_col: str = "text"):
-    """pages(html:binary) -> pages + extracted text column."""
-    return df.withColumn(out_col, strip_tags_udf(F.col(html_col)))

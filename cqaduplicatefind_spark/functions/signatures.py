@@ -34,7 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from cqaduplicatefind_spark.config import SIMHASH_BITS, DedupConfig
+from cqaduplicatefind_spark.config import SIMHASH_BITS, SIMHASH_SEED, DedupConfig
 from cqaduplicatefind_spark.functions.hashing import (
     _SM_GAMMA,
     TokenHasher,
@@ -193,7 +193,7 @@ def _compute_chunk(
     # keeps near-dups close while separating merely topic-similar docs
     # (Henzinger 2006 uses shingle-based features for exactly this reason).
     sim = simhash_vector(
-        splitmix64(all_shingles ^ _U64(cfg.simhash_seed)),
+        splitmix64(all_shingles ^ _U64(SIMHASH_SEED)),
         shingle_offsets,
         SIMHASH_BITS,
     )

@@ -25,8 +25,8 @@ Scale design (the part that must survive 10^12 docs):
         ``max_group``-sized bucket already pay. The salt includes the bucket key,
         so a true dup pair gets an INDEPENDENT 1/n_sub co-location draw in every
         band it collides in, on top of its (usually non-hot) content-specific
-        bands. ``cfg.salt_buckets`` caps an unlucky/adversarial sub-group at
-        ``salt_buckets * max_group`` members (beyond that: stars only).
+        bands. ``salt_cap`` (8) caps an unlucky/adversarial sub-group at
+        ``salt_cap * max_group`` members (beyond that: stars only).
   The flagship pipeline splits the two treatments across a verify feedback loop
   (``mode`` parameter): the FIRST candidate round emits small-bucket pairs +
   star edges only (``mode="base"``, stars tagged ``is_star``); sub-bucket
@@ -58,16 +58,17 @@ PAIR_COLS = ("id_a", "id_b")
 SALT_SEED = 17
 
 
-def canonical_pairs(df: DataFrame, a: str = "id_a", b: str = "id_b", dedup: bool = True) -> DataFrame:
-    """Canonical order (least, greatest) + drop self/duplicate pairs. Mirrors the
-    reference's symmetric dup semantics (src/JsonToCsvConverter.py:17-22).
+def canonical_pairs(df: DataFrame, dedup: bool = True) -> DataFrame:
+    """Canonical order (least, greatest) of (id_a, id_b) + drop self/duplicate
+    pairs. Mirrors the reference's symmetric dup semantics
+    (src/JsonToCsvConverter.py:17-22).
 
     ``dedup=False`` skips the dropDuplicates shuffle — callers that union several
     candidate sources dedup ONCE at the end (a pair colliding in many LSH bands
     otherwise pays one full shuffle per source)."""
     out = df.select(
-        F.least(F.col(a), F.col(b)).alias("id_a"),
-        F.greatest(F.col(a), F.col(b)).alias("id_b"),
+        F.least(F.col("id_a"), F.col("id_b")).alias("id_a"),
+        F.greatest(F.col("id_a"), F.col("id_b")).alias("id_b"),
     ).where(F.col("id_a") < F.col("id_b"))
     return out.dropDuplicates(["id_a", "id_b"]) if dedup else out
 
@@ -91,8 +92,7 @@ def bucket_candidates(
     connectivity backbone) and (b) full pairs within salted sub-buckets of
     expected size max_group (so member-member true-dup pairs survive a later
     exact-verify that may reject their star edges; see module docstring).
-    ``salt_cap`` bounds an unlucky sub-bucket at salt_cap*max_group members
-    (0 disables sub-bucket pairing entirely).
+    ``salt_cap`` bounds an unlucky sub-bucket at salt_cap*max_group members.
 
     ``mode`` selects which of the three pair sources are emitted (the verify
     feedback loop in the module docstring):
@@ -150,11 +150,11 @@ def bucket_candidates(
     # pair within salted sub-buckets of expected size max_group (salt over the
     # bucket key too -> independent draws per band). A NULL salt exempts a member
     # from the pairing join entirely (filtered below): hot members in "base" mode
-    # (stars only — sub-bucket pairing deferred to the rescue round) or when
-    # salt_cap=0; small-bucket members in "rescue" mode (already paired in base).
+    # (stars only — sub-bucket pairing deferred to the rescue round);
+    # small-bucket members in "rescue" mode (already paired in base).
     is_small = F.col("_n") <= max_group
     null_salt = F.lit(None).cast("long")
-    if salt_cap > 0 and mode in ("all", "rescue"):
+    if mode in ("all", "rescue"):
         n_sub = F.ceil(F.col("_n") / F.lit(max_group))
         hot_salt = F.pmod(
             F.xxhash64(F.col("id"), *[F.col(k) for k in keys], F.lit(SALT_SEED)),
@@ -182,7 +182,7 @@ def bucket_candidates(
     pairable = annotated.where(
         F.col("_salt").isNotNull()
         & (F.col("_sn") >= 2)
-        & (F.col("_sn") <= F.lit(max(salt_cap, 1) * max_group))
+        & (F.col("_sn") <= F.lit(salt_cap * max_group))
     )
     left = pairable.select(
         *skeys, F.col("id").alias("id_a"),
@@ -288,7 +288,7 @@ def null_safe_group(df: DataFrame, group_col: str | None) -> DataFrame:
     )
 
 
-def band_keys(cfg: DedupConfig, minhash_col: str = "minhash"):
+def band_keys(cfg: DedupConfig):
     """JVM-side LSH band hash per band: xxhash64 over the band's signature
     slice. Returns one ``array<struct<band:int, bh:bigint>>`` column, parsed
     from a single SQL expression: building it term by term costs a py4j
@@ -298,22 +298,19 @@ def band_keys(cfg: DedupConfig, minhash_col: str = "minhash"):
     r = cfg.rows_per_band
     return F.expr("array({})".format(", ".join(
         f"named_struct('band', {i}, 'bh', "
-        f"xxhash64(slice(`{minhash_col}`, {i * r + 1}, {r})))"
+        f"xxhash64(slice(`minhash`, {i * r + 1}, {r})))"
         for i in range(cfg.bands)
     )))
 
 
 def explode_bands(
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "url",
-    extra_cols: tuple[str, ...] = (),
+    signatures: DataFrame, cfg: DedupConfig, extra_cols: tuple[str, ...] = ()
 ) -> DataFrame:
     """signatures(url, minhash) -> (id, [extras...], band, bh); pure Catalyst
     explode. ``extra_cols`` ride along into the bucket key (e.g. a group column
     for per-forum-scoped dedup)."""
     return signatures.select(
-        F.col(id_col).alias("id"), *extra_cols, F.inline(band_keys(cfg))
+        F.col("url").alias("id"), *extra_cols, F.inline(band_keys(cfg))
     )
 
 
@@ -351,34 +348,32 @@ def _with_orphan_flag(
 def minhash_lsh_candidates(
     signatures: DataFrame,
     cfg: DedupConfig,
-    id_col: str = "url",
-    dedup: bool = True,
     group_col: str | None = None,
     mode: str = "all",
     orphans: DataFrame | None = None,
 ) -> DataFrame:
-    """MinHash-LSH candidate pairs: collide in >= 1 of ``cfg.bands`` bands.
+    """MinHash-LSH candidate pairs: collide in >= 1 of ``cfg.bands`` bands,
+    not deduplicated (``candidate_stage`` dedups both families once).
     With ``group_col``, the group is part of the bucket key, so candidates never
     cross groups — the reference's per-forum runs (SURVEY U1) as one job, no
     driver loop over forums. ``mode``/``orphans``: see ``bucket_candidates``."""
     extras = (group_col,) if group_col else ()
     signatures = null_safe_group(signatures, group_col)
-    bands = explode_bands(signatures, cfg, id_col, extras)
+    bands = explode_bands(signatures, cfg, extras)
     bands, ocarry, ogate = _with_orphan_flag(bands, orphans, (*extras, "band", "bh"))
     return bucket_candidates(
         bands,
         "id",
         (*extras, "band", "bh"),
         max_group=cfg.max_band_group,
-        dedup=dedup,
+        dedup=False,
         carry_cols=ocarry,
         pair_filter=ogate,
-        salt_cap=cfg.salt_buckets,
         mode=mode,
     )
 
 
-def simhash_piece_keys(cfg: DedupConfig, simhash_col: str = "simhash"):
+def simhash_piece_keys(cfg: DedupConfig):
     """Pigeonhole pieces: to find all pairs with Hamming distance <= k, split the
     signature into k+1 pieces — any matching pair agrees exactly on >= 1 piece."""
     n_pieces = cfg.hamming_k + 1
@@ -388,7 +383,7 @@ def simhash_piece_keys(cfg: DedupConfig, simhash_col: str = "simhash"):
         F.struct(
             F.lit(j).alias("piece"),
             (
-                F.shiftright(F.col(simhash_col), j * width).bitwiseAND(F.lit(mask))
+                F.shiftright(F.col("simhash"), j * width).bitwiseAND(F.lit(mask))
             ).alias("pv"),
         )
         for j in range(n_pieces)
@@ -413,24 +408,23 @@ def bit_count(x: np.ndarray) -> np.ndarray:
 def simhash_candidates(
     signatures: DataFrame,
     cfg: DedupConfig,
-    id_col: str = "url",
-    dedup: bool = True,
     group_col: str | None = None,
     mode: str = "all",
     orphans: DataFrame | None = None,
 ) -> DataFrame:
-    """SimHash candidates: agree on >= 1 of k+1 pieces, then exact Hamming filter
-    (bit_count of xor, JVM-side) <= k — applied uniformly to full pairs, star
-    edges (vs the group-min's simhash), and salted sub-bucket pairs. Every pair
-    this family emits is therefore ALREADY known Hamming-accepted; its stars
-    carry ``is_star=false`` in base mode (hot SimHash piece buckets are
-    typically 16-bit noise collisions — rejected stars there must not feed the
-    orphan rescue round; see ``bucket_candidates``). ``group_col`` scopes
-    buckets per group; ``mode``/``orphans``: see ``bucket_candidates``."""
+    """SimHash candidates, not deduplicated: agree on >= 1 of k+1 pieces, then
+    exact Hamming filter (bit_count of xor, JVM-side) <= k — applied uniformly
+    to full pairs, star edges (vs the group-min's simhash), and salted
+    sub-bucket pairs. Every pair this family emits is therefore ALREADY known
+    Hamming-accepted; its stars carry ``is_star=false`` in base mode (hot
+    SimHash piece buckets are typically 16-bit noise collisions — rejected
+    stars there must not feed the orphan rescue round; see
+    ``bucket_candidates``). ``group_col`` scopes buckets per group;
+    ``mode``/``orphans``: see ``bucket_candidates``."""
     extras = (group_col,) if group_col else ()
     signatures = null_safe_group(signatures, group_col)
     pieces = signatures.select(
-        F.col(id_col).alias("id"),
+        F.col("url").alias("id"),
         *extras,
         F.col("simhash"),
         F.explode(F.array(*simhash_piece_keys(cfg))).alias("pk"),
@@ -454,18 +448,18 @@ def simhash_candidates(
         "id",
         (*extras, "piece", "pv"),
         max_group=cfg.max_band_group,
-        dedup=dedup,
+        dedup=False,
         carry_cols=("simhash", *ocarry),
         pair_filter=hamming_gate,
-        salt_cap=cfg.salt_buckets,
         mode=mode,
         star_flag=False,
     )
 
 
-def all_pairs(docs: DataFrame, id_col: str = "url") -> DataFrame:
-    """Brute-force upper-triangle cross join — the reference's archive semantics
-    (src/archive/MyReader.py:17-27). ONLY for tiny oracle fixtures; never at scale."""
-    a = docs.select(F.col(id_col).alias("id_a"))
-    b = docs.select(F.col(id_col).alias("id_b"))
+def all_pairs(docs: DataFrame) -> DataFrame:
+    """Brute-force upper-triangle cross join over ``url`` — the reference's
+    archive semantics (src/archive/MyReader.py:17-27). ONLY for tiny oracle
+    fixtures; never at scale."""
+    a = docs.select(F.col("url").alias("id_a"))
+    b = docs.select(F.col("url").alias("id_b"))
     return a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))

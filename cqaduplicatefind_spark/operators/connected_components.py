@@ -155,6 +155,15 @@ class CheckpointHandle:
         self._ids = set()
 
 
+def local_checkpoint(df: DataFrame) -> tuple[DataFrame, CheckpointHandle]:
+    """``df.localCheckpoint()`` (eager) and the handle that frees its blocks:
+    the RDD ids the checkpoint added to the session's persistent-RDD map."""
+    spark = df.sparkSession
+    before = _persistent_rdd_ids(spark)
+    out = df.localCheckpoint()
+    return out, CheckpointHandle(spark, _persistent_rdd_ids(spark) - before)
+
+
 def _min_root_components(id_a: list, id_b: list) -> tuple[list, list]:
     """Union-find over edge lists whose union keeps the smaller root, so every
     root is its component's minimum id. Returns (ids, cluster_ids)."""
@@ -181,7 +190,6 @@ def _min_root_components(id_a: list, id_b: list) -> tuple[list, list]:
 def connected_components(
     edges: DataFrame,
     assume_unconverged: bool = False,
-    input_distinct: bool = False,
     persisted: list | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -213,11 +221,10 @@ def connected_components(
     star forest after canonicalization, and skipping the probe costs it one
     wasted star round. Web dedup corpora are family-heavy, so the flagship
     callers opt in; callers re-clustering prior assignments keep the default
-    probe-first order and converge in zero rounds. ``input_distinct=True`` skips the initial
-    dedup shuffle — correct when the caller guarantees one row per undirected
-    pair (e.g. edges straight out of ``accept_edges``, whose candidate source
-    dedups on the pair key); orientation canonicalization is a projection and
-    cannot introduce duplicates.
+    probe-first order and converge in zero rounds. The loop takes the edges
+    as they come, with no dedup shuffle: an input with duplicate rows is not a
+    star forest (a duplicated edge gives its source two outgoing edges), so
+    it runs the star rounds, and each round's ``distinct`` drops them.
 
     The final round's checkpoint stays alive (the returned plan reads from it);
     every earlier round is unpersisted as soon as it is superseded. Pass
@@ -257,11 +264,7 @@ def connected_components(
             )
             return arrow_frame(spark, schema, {"id": ids, "cluster_id": labels})
 
-    before = _persistent_rdd_ids(spark)
-    if not input_distinct:
-        cur = cur.distinct()
-    cur = cur.localCheckpoint()
-    live = _persistent_rdd_ids(spark) - before
+    cur, live = local_checkpoint(cur)
     # the star-forest test detects the fixed point directly, so an
     # already-converged input (e.g. re-clustering assignment edges plus a few
     # new span edges) runs zero rounds, and convergence costs one semi-join
@@ -274,14 +277,13 @@ def connected_components(
             raise RuntimeError(
                 f"connected_components did not converge in {MAX_ITERATIONS} rounds"
             )
-        pre = _persistent_rdd_ids(spark)
-        cur = _small_star(_large_star(cur)).localCheckpoint()
-        _unpersist_rdd_ids(spark, live)
-        live = _persistent_rdd_ids(spark) - pre
+        superseded = live
+        cur, live = local_checkpoint(_small_star(_large_star(cur)))
+        superseded.unpersist()
         rounds += 1
 
     if persisted is not None:
-        persisted.append(CheckpointHandle(spark, live))
+        persisted.append(live)
     # at convergence every edge is (node, component-min)
     assign = cur.select(F.col("id_a").alias("id"), F.col("id_b").alias("cluster_id"))
     roots = cur.select(F.col("id_b").alias("id"), F.col("id_b").alias("cluster_id"))
@@ -290,12 +292,10 @@ def connected_components(
     )
 
 
-def attach_singletons(
-    all_ids: DataFrame, assignments: DataFrame, id_col: str = "url"
-) -> DataFrame:
-    """Every id gets a cluster: components keep their min-id label, singletons
-    cluster with themselves (FIXTURES.md gold_clusters semantics)."""
-    ids = all_ids.select(F.col(id_col).alias("id"))
+def attach_singletons(all_ids: DataFrame, assignments: DataFrame) -> DataFrame:
+    """Every ``url`` gets a cluster: components keep their min-id label,
+    singletons cluster with themselves (FIXTURES.md gold_clusters semantics)."""
+    ids = all_ids.select(F.col("url").alias("id"))
     return ids.join(assignments, "id", "left").select(
         F.col("id").alias("url"),
         F.coalesce("cluster_id", "id").alias("cluster_id"),

@@ -53,6 +53,8 @@ from cqaduplicatefind_spark.functions.hashing import (  # noqa: F401 (re-exports
 from cqaduplicatefind_spark.session import arrow_frame
 
 SPAN_EDGE_SCHEMA = "id_a string, id_b string, overlap_span int"
+# token-hash seed of the span verification's rolling window hashes
+SPAN_HASH_SEED = 42
 
 
 def longest_common_span(a: np.ndarray, b: np.ndarray) -> int:
@@ -95,28 +97,24 @@ def longest_common_span(a: np.ndarray, b: np.ndarray) -> int:
 
 
 def overlap_spans(
-    pairs: DataFrame,
-    normalized: DataFrame,
-    id_col: str = "url",
-    text_col: str = "norm_text",
-    hash_seed: int = 42,
+    pairs: DataFrame, normalized: DataFrame, text_col: str = "norm_text"
 ) -> DataFrame:
-    """(id_a, id_b) + docs(url, norm_text) -> (id_a, id_b, overlap_span).
+    """(id_a, id_b) + docs(url, text_col) -> (id_a, id_b, overlap_span).
 
     ``overlap_span`` = longest exactly-shared token run (0 when either side empty).
     """
     a = normalized.select(
-        F.col(id_col).alias("id_a"), F.col(text_col).alias("_text_a")
+        F.col("url").alias("id_a"), F.col(text_col).alias("_text_a")
     )
     b = normalized.select(
-        F.col(id_col).alias("id_b"), F.col(text_col).alias("_text_b")
+        F.col("url").alias("id_b"), F.col(text_col).alias("_text_b")
     )
     joined = pairs.join(a, "id_a").join(b, "id_b").select(
         "id_a", "id_b", "_text_a", "_text_b"
     )
 
     def compute(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        hasher = TokenHasher(hash_seed)
+        hasher = TokenHasher(SPAN_HASH_SEED)
         for pdf in it:
             spans = []
             for ta, tb in zip(pdf["_text_a"], pdf["_text_b"]):
@@ -150,16 +148,14 @@ def make_winnow_udf(gram: int, window: int, hash_seed: int):
 def span_candidates(
     normalized: DataFrame,
     cfg: DedupConfig,
-    id_col: str = "url",
-    text_col: str = "norm_text",
     group_col: str | None = None,
-    dedup: bool = True,
     assignments: DataFrame | None = None,
     persisted: list | None = None,
     assignments_count: int | None = None,
 ) -> DataFrame | None:
-    """Corpus-level discovery: candidate pairs that MAY share an exact run of
-    >= cfg.min_overlap_span tokens (guaranteed superset by the winnowing bound;
+    """Corpus-level discovery over docs(url, norm_text): candidate pairs that
+    MAY share an exact run of >= cfg.min_overlap_span tokens (guaranteed
+    superset by the winnowing bound;
     verify with overlap_spans), or None when discovery short-circuits (no
     fingerprint bucket spans two clusters), so the common all-pure corpus
     never touches the pairing kernel. Hot fingerprints (boilerplate runs
@@ -205,22 +201,20 @@ def span_candidates(
     if "n_tokens" in normalized.columns:
         len_ok = F.col("n_tokens") >= cfg.min_overlap_span
     else:
-        len_ok = F.size(F.split(F.col(text_col), " ")) >= cfg.min_overlap_span
+        len_ok = F.size(F.split(F.col("norm_text"), " ")) >= cfg.min_overlap_span
     normalized = normalized.where(len_ok)
     if "span_fps" in normalized.columns:
         fp_col = F.col("span_fps")
     else:
         gram, window = winnow_params(cfg.min_overlap_span)
-        fp_col = make_winnow_udf(gram, window, cfg.minhash_seed)(F.col(text_col))
+        fp_col = make_winnow_udf(gram, window, cfg.minhash_seed)(F.col("norm_text"))
     carry: tuple[str, ...] = ()
     pair_filter = None
     # project to (id, group, fingerprints) BEFORE any join/explode: the caller's
     # frame is typically the full signatures table, and shipping its minhash/
     # shingle/norm_text payloads through the assignments exchange would cost
     # ~KBs per row for columns this stage never reads
-    docs = normalized.select(
-        F.col(id_col), *extras, fp_col.alias("_span_fps")
-    )
+    docs = normalized.select(F.col("url"), *extras, fp_col.alias("_span_fps"))
     fp_col = F.col("_span_fps")
     if assignments is not None:
         # attach the cluster id at the DOC level, before the fingerprint explode:
@@ -238,7 +232,7 @@ def span_candidates(
         # buckets/pairs — a ~2^-64 per-pair recall risk, the same class (and
         # far below) the rolling-hash span verify already documents.
         asg = assignments.select(
-            F.col("id").alias(id_col), F.xxhash64("cluster_id").alias("_cl")
+            F.col("id").alias("url"), F.xxhash64("cluster_id").alias("_cl")
         )
         # ship the assignment table broadcast when it fits: the docs side of
         # this join carries the span_fps arrays, and an SMJ would shuffle the
@@ -259,11 +253,11 @@ def span_candidates(
         # unassigned endpoints are singletons: their cluster is themselves, so
         # the null fill hashes the doc's own id — identical to what the
         # pre-hash produces for a cluster id equal to the id
-        docs = docs.join(asg, id_col, "left").withColumn(
-            "_cl", F.coalesce(F.col("_cl"), F.xxhash64(F.col(id_col)))
+        docs = docs.join(asg, "url", "left").withColumn(
+            "_cl", F.coalesce(F.col("_cl"), F.xxhash64(F.col("url")))
         )
     fps = docs.select(
-        F.col(id_col).alias("id"),
+        F.col("url").alias("id"),
         *extras,
         *(["_cl"] if assignments is not None else []),
         F.explode(fp_col).alias("fp"),
@@ -321,32 +315,22 @@ def span_candidates(
         "id",
         (*extras, "fp"),
         max_group=cfg.max_band_group,
-        dedup=dedup,
         carry_cols=carry,
         pair_filter=pair_filter,
-        salt_cap=cfg.salt_buckets,
     )
-
-
-# moved to connected_components.CheckpointHandle (shared with the CC final-
-# round checkpoint); re-exported here for the existing call sites
-from cqaduplicatefind_spark.operators.connected_components import (  # noqa: E402
-    CheckpointHandle as _CheckpointHandle,
-)
 
 
 def exact_span_edges(
     normalized: DataFrame,
     cfg: DedupConfig,
     exclude_assignments: DataFrame | None = None,
-    id_col: str = "url",
-    text_col: str = "norm_text",
     group_col: str | None = None,
     persisted: list | None = None,
     assignments_count: int | None = None,
 ) -> DataFrame:
     """The pipeline's suffix-array-analog stage: (id_a, id_b, overlap_span) edges
-    for pairs sharing an exact contiguous run >= cfg.min_overlap_span tokens.
+    for pairs of docs(url, norm_text) sharing an exact contiguous run >=
+    cfg.min_overlap_span tokens.
 
     Candidates come solely from winnowed-fingerprint discovery — by the winnowing
     bound that already covers EVERY qualifying pair; no seeding from the Jaccard
@@ -360,25 +344,22 @@ def exact_span_edges(
     ever sees the genuinely-new cross-cluster containment pairs.
 
     The candidate set is localCheckpoint'ed (count + verify both read it);
-    pass ``persisted`` (a list) to receive a handle whose ``unpersist()`` frees
-    the checkpoint blocks once the returned spans are materialized —
-    ``run_pipeline`` hands it to ``PipelineResult.persisted`` so ``release()``
-    frees it. The handle frees the checkpoint RDD through the JVM's
-    ``getPersistentRDDs`` (``_unpersist_rdd_ids``) — ``DataFrame.unpersist()``
-    does NOT release localCheckpoint blocks (it only uncaches cacheManager
-    entries), so without the id-level free each call pins the checkpoint in
-    executor storage for the session lifetime."""
+    pass ``persisted`` (a list) to receive its ``CheckpointHandle``, whose
+    ``unpersist()`` frees the checkpoint blocks once the returned spans are
+    materialized — ``run_pipeline`` hands it to ``PipelineResult.persisted``
+    so ``release()`` frees it. ``DataFrame.unpersist()`` does NOT release
+    localCheckpoint blocks (it only uncaches cacheManager entries), so
+    without the handle each call pins the checkpoint in executor storage for
+    the session lifetime."""
     from cqaduplicatefind_spark.operators.connected_components import (
-        _persistent_rdd_ids,
-        _unpersist_rdd_ids,
+        local_checkpoint,
     )
 
     spark = normalized.sparkSession
-    before = _persistent_rdd_ids(spark)
     het_cached: list = []
     try:
         raw = span_candidates(
-            normalized, cfg, id_col, text_col, group_col,
+            normalized, cfg, group_col,
             assignments=exclude_assignments, persisted=het_cached,
             assignments_count=assignments_count,
         )
@@ -387,14 +368,14 @@ def exact_span_edges(
             # spans two clusters): no pairing kernel, no checkpoint, no count —
             # the span-free corpus pays exactly one aggregate job
             return arrow_frame(spark, SPAN_EDGE_SCHEMA)
-        cands = raw.localCheckpoint()  # materialize once; count + verify read it
+        # materialize once; count + verify read it
+        cands, handle = local_checkpoint(raw)
     finally:
         # the eager checkpoint materialized the candidate set (or the job
         # failed / short-circuited); either way the cached het-bucket aggregate
         # (see span_candidates) has no readers left
         for frame in het_cached:
             frame.unpersist()
-    ckpt_ids = _persistent_rdd_ids(spark) - before
     n = cands.count()
     if n == 0:
         # het buckets existed but every pair was same-cluster/capped away: skip
@@ -402,15 +383,15 @@ def exact_span_edges(
         # the whole corpus's normalized text on both pair sides just to probe
         # an empty stream. The empty result never reads cands again: free its
         # blocks now.
-        _unpersist_rdd_ids(spark, ckpt_ids)
+        handle.unpersist()
         return arrow_frame(spark, SPAN_EDGE_SCHEMA)
     if persisted is not None:
-        persisted.append(_CheckpointHandle(spark, ckpt_ids))
+        persisted.append(handle)
     # few candidates (the usual case after same-cluster pruning): broadcast the
     # pair side so the doc joins stay exchange-free for the corpus table — the
     # driver-side analog of AQE's SMJ->BHJ rewrite, decided on the actual count
     pairs = F.broadcast(cands) if n <= config.DRIVER_MAX_ROWS else cands
-    spans = overlap_spans(pairs, normalized, id_col, text_col)
+    spans = overlap_spans(pairs, normalized)
     return spans.where(F.col("overlap_span") >= cfg.min_overlap_span)
 
 

@@ -142,12 +142,9 @@ def remove_duplicate_spans(
     as ``overlap.exact_span_edges``). A corpus with no cross-document shared
     run short-circuits to pure pass-through after one aggregate+join job."""
     from cqaduplicatefind_spark.operators.connected_components import (
-        _persistent_rdd_ids,
-        _unpersist_rdd_ids,
+        local_checkpoint,
     )
-    from cqaduplicatefind_spark.operators.overlap import _CheckpointHandle
 
-    spark = docs.sparkSession
     base = docs.select(id_col, text_col)
     # posexplode_OUTER + null filter, not plain posexplode: the inner generate
     # makes Catalyst infer a `size(udf(text)) > 0` pre-filter
@@ -171,11 +168,10 @@ def remove_duplicate_spans(
         .where(F.col(id_col) > F.col("_owner"))
         .select(id_col, "_pos")
     )
-    before = _persistent_rdd_ids(spark)
-    starts = covered.groupBy(id_col).agg(
+    # tiny (affected docs only); both union branches read it
+    starts, handle = local_checkpoint(covered.groupBy(id_col).agg(
         F.sort_array(F.collect_set("_pos")).alias("_starts")
-    ).localCheckpoint()  # tiny (affected docs only); both union branches read it
-    ckpt_ids = _persistent_rdd_ids(spark) - before
+    ))
     stats = starts.agg(
         F.count(F.lit(1)).alias("n"), F.sum(F.size("_starts")).alias("pos")
     ).first()
@@ -184,10 +180,10 @@ def remove_duplicate_spans(
         "n_removed"
     )
     if n_affected == 0:
-        _unpersist_rdd_ids(spark, ckpt_ids)
+        handle.unpersist()
         return base.select(id_col, *passthrough)
     if persisted is not None:
-        persisted.append(_CheckpointHandle(spark, ckpt_ids))
+        persisted.append(handle)
     out_schema = T.StructType(
         [
             base.schema[id_col],

@@ -2,13 +2,12 @@
 
 Replaces the reference's per-pair neural scorer (Siamese BiLSTM at
 ``/root/reference/src/lstm-siamese/model.py:34-123``, token-set "leaks" features at
-``src/lstm-siamese/inputHandler.py:97-98``) with deterministic, JVM-side measures:
+``src/lstm-siamese/inputHandler.py:97-98``) with deterministic, JVM-side measures.
+Every candidate is verified exactly; no signature estimate filters a pair:
 
 - **exact shingle Jaccard** (``array_intersect``/``array_union`` over the distinct
   shingle-hash arrays) — the precision gate; the reference's leaks feature is exactly
-  this numerator (SURVEY.md U3);
-- **MinHash-estimated Jaccard** (fraction of equal signature lanes, ``zip_with`` +
-  ``aggregate``) — cheap pre-filter so the exact set ops only run on plausible pairs;
+  this numerator (SURVEY.md U3). ``est_jaccard`` carries the same value;
 - **SimHash Hamming distance** (``bit_count(xor)``);
 - **containment** (|A ∩ B| / min(|A|,|B|)) — catches the substring-containment pairs
   the suffix/overlap pass targets (a page embedded in a boilerplate shell has low
@@ -16,7 +15,7 @@ Replaces the reference's per-pair neural scorer (Siamese BiLSTM at
 
 Scale: two shuffle joins (edges x docs on each side) on the doc id; everything else
 is whole-stage-codegen expressions. The doc-side projection carries only
-(id, minhash, simhash, shingles) — Catalyst prunes the rest at the scan.
+(url, simhash, n_shingles, shingles) — Catalyst prunes the rest at the scan.
 """
 
 from __future__ import annotations
@@ -41,22 +40,11 @@ EDGE_SCHEMA = (
 )
 
 
-def _doc_side(
-    signatures: DataFrame, id_col: str, suffix: str, carry: tuple[str, ...]
-) -> DataFrame:
-    cols = [F.col(id_col).alias(f"id_{suffix}")]
-    for c in carry:
-        if c in signatures.columns:
-            cols.append(F.col(c).alias(f"{c}_{suffix}"))
-    return signatures.select(*cols)
-
-
-def est_jaccard_col(a, b):
-    """Fraction of equal MinHash lanes — unbiased Jaccard estimate, JVM-side."""
-    eq = F.zip_with(a, b, lambda x, y: (x == y).cast("int"))
-    return (
-        F.aggregate(eq, F.lit(0), lambda acc, v: acc + v).cast("double")
-        / F.size(a).cast("double")
+def _doc_side(signatures: DataFrame, suffix: str) -> DataFrame:
+    return signatures.select(
+        F.col("url").alias(f"id_{suffix}"),
+        *[F.col(c).alias(f"{c}_{suffix}")
+          for c in ("simhash", "n_shingles", "shingles")],
     )
 
 
@@ -64,108 +52,51 @@ def score_pairs(
     pairs: DataFrame,
     signatures: DataFrame,
     cfg: DedupConfig,
-    id_col: str = "url",
-    prefilter_margin: float = 0.15,
-    evidence: str = "both",
     extra_scorers: dict | None = None,
-    extra_carry: tuple[str, ...] = (),
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """(id_a, id_b) -> scored pairs.
 
     Output columns: id_a, id_b, est_jaccard, hamming, jaccard, containment
-    (+ one column per ``extra_scorers`` entry). ``jaccard``/``containment`` are
-    exact set measures over the signature table's ``shingles`` column.
+    (+ one column per ``extra_scorers`` entry, then ``keep_cols`` of
+    ``pairs``). ``jaccard``/``containment`` are exact set measures over the
+    signature table's ``shingles`` column; every candidate is scored, and
+    ``est_jaccard`` is the exact Jaccard.
 
     ``extra_scorers`` is the pluggable per-pair scorer seam (the capability analog
     of the reference's alternative classifiers, e.g.
     ``src/NBAndXGBCountVectorClassifier.py:13-23``): a mapping
     ``name -> callable(scored DataFrame) -> Column`` evaluated after the built-in
     measures, each appended as an output column (usable as ``score_col`` in
-    ``retrieve_duplicates`` for re-ranking). ``extra_carry`` ships additional doc
-    columns to both pair sides as ``<col>_a``/``<col>_b`` for those scorers —
-    mind the shuffle volume, this rides the verify joins.
-
-    ``evidence`` picks what the two verify joins ship per doc — the dominant
-    shuffle volume of the whole pipeline:
-    - ``"both"``: the MinHash estimate pre-filters pairs more than
-      ``prefilter_margin`` below the threshold, so the exact set ops run on
-      survivors only;
-    - ``"exact"``: shingles only — skips the 1KB/doc minhash column; every
-      candidate is exactly verified and ``est_jaccard`` is the exact value.
+    ``retrieve_duplicates`` for re-ranking). The scored frame it sees carries
+    each side's ``simhash``, ``n_shingles`` and ``shingles`` as
+    ``<col>_a``/``<col>_b``.
     """
-    evidence_carry = {
-        "both": ("minhash", "simhash", "n_shingles", "shingles"),
-        "exact": ("simhash", "n_shingles", "shingles"),
-    }
-    if evidence not in evidence_carry:
-        raise ValueError(
-            f"score_pairs: unknown evidence mode {evidence!r} "
-            f"(expected one of {sorted(evidence_carry)})"
-        )
-    carry = evidence_carry[evidence] + tuple(extra_carry)
-    a = _doc_side(signatures, id_col, "a", carry)
-    b = _doc_side(signatures, id_col, "b", carry)
     # no join-strategy hint: an A/B at 600k docs measured shuffle_hash hints on
     # the doc sides as indistinguishable from sort-merge end-to-end (host-drift
     # noise dominated), so the default stays
-    scored = pairs.join(a, "id_a").join(b, "id_b")
+    scored = pairs.join(_doc_side(signatures, "a"), "id_a").join(
+        _doc_side(signatures, "b"), "id_b"
+    )
 
     # empty-shingle docs share simhash=0; force max Hamming so the SimHash route
     # never links them
-    valid_sim = (
-        (F.col("n_shingles_a") > 0) & (F.col("n_shingles_b") > 0)
-        if "n_shingles_a" in scored.columns
-        else F.lit(True)
-    )
-    scored = scored.withColumn(
-        "hamming",
-        F.when(
-            valid_sim,
-            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
-        ).otherwise(F.lit(SIMHASH_BITS)),
-    )
-
-    if "minhash_a" in scored.columns:
-        # zero-shingle docs share the all-MAX_U64 sentinel signature: every lane
-        # compares equal between two unrelated short docs. Force the estimate to 0
-        # when either side has no shingles (there is no set to estimate Jaccard of).
-        scored = scored.withColumn(
-            "est_jaccard",
-            F.when(
-                valid_sim, est_jaccard_col(F.col("minhash_a"), F.col("minhash_b"))
-            ).otherwise(F.lit(0.0)),
-        )
-        # cheap pre-filter: keep pairs plausibly above threshold by estimate OR
-        # close in Hamming space (SimHash candidates can have low lexical-Jaccard
-        # estimates)
-        scored = scored.where(
-            (
-                F.col("est_jaccard")
-                >= F.lit(max(0.0, cfg.jaccard_threshold - prefilter_margin))
-            )
-            | (F.col("hamming") <= F.lit(cfg.hamming_k))
-        )
-
+    valid_sim = (F.col("n_shingles_a") > 0) & (F.col("n_shingles_b") > 0)
     inter = F.size(F.array_intersect("shingles_a", "shingles_b"))
     union = F.size(F.array_union("shingles_a", "shingles_b"))
     min_sz = F.least(F.size("shingles_a"), F.size("shingles_b"))
-    scored = (
-        scored.withColumn(
-            "jaccard",
-            F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(
-                F.lit(0.0)
-            ),
-        )
-        .withColumn(
-            "containment",
-            F.when(min_sz > 0, inter.cast("double") / min_sz.cast("double")).otherwise(
-                F.lit(0.0)
-            ),
-        )
-    )
-    if "est_jaccard" not in scored.columns:  # evidence="exact": exact IS the estimate
-        scored = scored.withColumn("est_jaccard", F.col("jaccard"))
+    scored = scored.withColumns({
+        "hamming": F.when(
+            valid_sim,
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
+        ).otherwise(F.lit(SIMHASH_BITS)),
+        "jaccard": F.when(
+            union > 0, inter.cast("double") / union.cast("double")
+        ).otherwise(F.lit(0.0)),
+        "containment": F.when(
+            min_sz > 0, inter.cast("double") / min_sz.cast("double")
+        ).otherwise(F.lit(0.0)),
+    }).withColumn("est_jaccard", F.col("jaccard"))
 
     extra_names = []
     for name, scorer in (extra_scorers or {}).items():
@@ -196,7 +127,7 @@ def accept_condition(cfg: DedupConfig):
 def driver_score_pairs(
     pairs: list[tuple[str, str]], payload: pa.Table, cfg: DedupConfig
 ) -> dict[str, np.ndarray]:
-    """``score_pairs(evidence="exact")`` on the driver: its columns, same
+    """``score_pairs`` on the driver: its columns, same
     doubles, as numpy arrays, for canonical ``pairs`` and one (url, simhash,
     n_shingles, shingles) ``payload`` row per url. A pair with an endpoint
     missing from ``payload`` drops out, as in a join."""
@@ -236,7 +167,7 @@ def driver_score_pairs(
     return {
         "id_a": np.array([a for a, _ in pairs], dtype=object),
         "id_b": np.array([b for _, b in pairs], dtype=object),
-        "est_jaccard": jaccard,  # exact evidence
+        "est_jaccard": jaccard,
         "hamming": hamming,
         "jaccard": jaccard,
         "containment": containment,

@@ -18,7 +18,8 @@ it every month), so an increment over an existing store reports
 The store (``bands/`` ``sigs/`` ``matches/`` under one work dir) is the
 streaming matcher's: ``streaming/store.py`` owns its layout, file sizing,
 ``src_batch`` row tags and crash-window protocol, so batch increments,
-streaming micro-batches, and this API interoperate on ONE index. Batch-id
+streaming micro-batches, and this API interoperate on ONE index. Pages carry
+``url`` and ``text`` columns, as for ``run_pipeline``. Batch-id
 convention: seeds take NEGATIVE ids (default -1 — Structured Streaming numbers
 its micro-batches from 0, so a non-negative seed id would be silently
 excluded-then-OVERWRITTEN by the colliding micro-batch); increments and
@@ -102,22 +103,15 @@ class DeltaResult:
         self._persisted.clear()
 
 
-def signature_frame(
-    pages: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
-    """pages -> (url, minhash, simhash, n_tokens, n_shingles, shingles) from
-    the pipeline's one-eval sign UDF, honoring ``cfg.normalize_input``
-    exactly like ``plans.pipeline`` (so an index seeded here matches
-    signatures the flagship or the streaming path would compute for the same
-    text). Docs with zero shingles are dropped — they can never pair and the
+def signature_frame(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """pages(url, text) -> (url, minhash, simhash, n_tokens, n_shingles,
+    shingles) from the pipeline's one-eval sign UDF, honoring
+    ``cfg.normalize_input`` exactly like ``plans.pipeline`` (so an index
+    seeded here matches signatures the flagship or the streaming path would
+    compute for the same text). Docs with zero shingles are dropped — they can never pair and the
     stores stay slim (callers that need them, e.g. survivor selection, keep
     their own id frame)."""
-    df = pages.select(
-        F.col(id_col).cast("string").alias("url"), F.col(text_col).alias("text")
-    )
+    df = pages.select(F.col("url").cast("string").alias("url"), F.col("text"))
     # the stores hold no span columns: the UDF skips the winnowing
     return sign_pages(df, replace(cfg, span_pass=False)).where(
         F.col("n_shingles") > 0
@@ -130,8 +124,6 @@ def seed_index(
     cfg: DedupConfig,
     work_dir: str,
     batch_id: int = -1,
-    id_col: str = "url",
-    text_col: str = "text",
 ) -> int:
     """Build the band + signature store from an already-deduplicated corpus
     WITHOUT pairing it. Idempotent per ``batch_id`` (overwrite-by-subdir, the
@@ -150,7 +142,7 @@ def seed_index(
     band_store, sig_store, _ = open_stores(
         spark, *store_roots(work_dir), bands=cfg.bands
     )
-    sig = signature_frame(corpus_pages, cfg, id_col, text_col).persist()
+    sig = signature_frame(corpus_pages, cfg).persist()
     try:
         # count FIRST: it materializes the signature cache at full input
         # parallelism and sizes the store files; the coalesced writes below
@@ -167,19 +159,15 @@ def seed_index(
 
 
 def surviving_new(
-    edges: DataFrame, new_ids: DataFrame, id_col: str = "url",
-    persisted: list | None = None,
+    edges: DataFrame, new_ids: DataFrame, persisted: list | None = None
 ) -> DataFrame:
     """Apply the cluster-consistent survivor rule: components over ``edges``
     (bounded by the increment's duplicate pairs, never the corpus); any
     component containing a non-increment doc drops all its increment members;
     a new-only component keeps its min-id member; increment docs in no edge
     survive untouched. Returns one ``url`` column."""
-    ids = new_ids.select(F.col(id_col).alias("url")).distinct()
-    # accept_edges emits one row per undirected pair -> skip the initial dedup
-    asg = connected_components(
-        edges.select("id_a", "id_b"), input_distinct=True, persisted=persisted
-    )
+    ids = new_ids.select("url").distinct()
+    asg = connected_components(edges.select("id_a", "id_b"), persisted=persisted)
     members = asg.join(
         ids.select(F.col("url").alias("id"), F.lit(True).alias("_new")),
         "id",
@@ -206,17 +194,14 @@ def delta_dedup(
     cfg: DedupConfig,
     work_dir: str,
     batch_id: int,
-    id_col: str = "url",
-    text_col: str = "text",
-    compact_every: int = 16,
 ) -> DeltaResult:
-    """Dedup one increment against the store under ``work_dir`` (seeded by
-    ``seed_index`` and/or grown by previous increments / streaming batches),
-    then append the increment's own bands + signatures so the NEXT increment
-    sees it as index. ``batch_id`` must be a unique non-negative int per
-    increment, disjoint from any streaming micro-batch ids sharing the store
-    (replays of the same id are idempotent — they overwrite their own
-    subdirs)."""
+    """Dedup one increment of pages(url, text) against the store under
+    ``work_dir`` (seeded by ``seed_index`` and/or grown by previous
+    increments / streaming batches), then append the increment's own bands +
+    signatures so the NEXT increment sees it as index. ``batch_id`` must be a
+    unique non-negative int per increment, disjoint from any streaming
+    micro-batch ids sharing the store (replays of the same id are idempotent
+    — they overwrite their own subdirs)."""
     batch_id = int(batch_id)
     if batch_id < 0:
         raise ValueError(
@@ -224,16 +209,14 @@ def delta_dedup(
             "negative ids are reserved for seeds"
         )
     dedup = IncrementalDedup(
-        spark, cfg, *store_roots(work_dir),
-        compact_every=compact_every,
-        count_index_stats=False,
+        spark, cfg, *store_roots(work_dir), count_index_stats=False
     )
-    sig = signature_frame(new_pages, cfg, id_col, text_col)
+    sig = signature_frame(new_pages, cfg)
     dedup.process_batch(sig, batch_id)
     # process_batch appends the increment's matches unconditionally (empty
     # frames included), so a read failure here is a real failure — let it
     # propagate
     edges = dedup.match_store.read_batch(batch_id)
-    ids = new_pages.select(F.col(id_col).cast("string").alias("url")).distinct()
+    ids = new_pages.select(F.col("url").cast("string").alias("url")).distinct()
     return DeltaResult(edges=edges, new_ids=ids, stats=dedup.batch_stats[-1],
                        path=dedup.batch_paths[-1])

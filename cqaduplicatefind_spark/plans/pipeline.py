@@ -44,7 +44,6 @@ from pyspark.sql.types import StructField, StructType
 
 from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.config import DedupConfig
-from cqaduplicatefind_spark.functions.html_strip import with_extracted_text
 from cqaduplicatefind_spark.functions.normalize import with_normalized_text
 from cqaduplicatefind_spark.functions.signatures import sign_pages
 from cqaduplicatefind_spark.operators.candidates import (
@@ -107,21 +106,13 @@ def _spread(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     return pages
 
 
-def normalize_stage(
-    pages: DataFrame,
-    cfg: DedupConfig,
-    use_html: bool = False,
-    group_col: str | None = None,
-) -> DataFrame:
-    """pages(url, [html], text, lang) -> (url, [group], norm_text). If ``use_html``
-    the text column is re-extracted from html (byte-identical invariant); default
-    trusts the provided text column (it must equal strip_tags(html) — verified by
-    tests). For callers that want ``norm_text`` alone: ``signature_stage``
-    normalizes in its own Python pass."""
+def normalize_stage(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """pages(url, text) -> (url, norm_text), trusting the provided text column
+    (it must equal strip_tags(html) — verified by tests). For callers that
+    want ``norm_text`` alone: ``signature_stage`` normalizes in its own
+    Python pass."""
     df = _spread(pages, cfg)
-    if use_html:
-        df = with_extracted_text(df, "html", "text")
-    keep = ["url"] + ([group_col] if group_col else []) + ["norm_text"]
+    keep = ["url", "norm_text"]
     if not cfg.normalize_input:
         # input is declared already-normalized (tokenized, single-spaced):
         # skip the reference normalization pass entirely
@@ -169,7 +160,7 @@ def candidate_stage(
     table emits hot-bucket salted sub-bucket pairs touching an orphan — the
     verify feedback loop documented in ``operators/candidates.py``.
     ``mode="all"`` emits everything in one shot (one-shot/standalone callers)."""
-    # both sources skip their internal dedup; one dropDuplicates shuffle at the end
+    # neither source dedups; one dropDuplicates shuffle at the end
     g = [group_col] if group_col else []
     # docs with zero shingles (fewer than shingle_k tokens) carry the all-MAX_U64
     # sentinel MinHash and simhash=0 — identical signatures for UNRELATED docs.
@@ -177,16 +168,12 @@ def candidate_stage(
     # becomes a candidate.
     signed = signatures.where(F.col("n_shingles") > 0)
     mh = minhash_lsh_candidates(
-        signed.select("url", *g, "minhash"), cfg, dedup=False, group_col=group_col,
+        signed.select("url", *g, "minhash"), cfg, group_col=group_col,
         mode=mode, orphans=orphans,
     )
     sh = simhash_candidates(
-        signed.select("url", *g, "simhash"),
-        cfg,
-        dedup=False,
-        group_col=group_col,
-        mode=mode,
-        orphans=orphans,
+        signed.select("url", *g, "simhash"), cfg, group_col=group_col,
+        mode=mode, orphans=orphans,
     )
     u = mh.unionByName(sh)
     if mode == "base":
@@ -199,7 +186,7 @@ def candidate_stage(
 def driver_pair_stage(
     signatures: DataFrame, cfg: DedupConfig, group_col: str | None = None
 ) -> tuple[dict[str, np.ndarray], np.ndarray, pa.Table] | None:
-    """``candidate_stage(mode="base")`` and ``score_pairs(evidence="exact")``
+    """``candidate_stage(mode="base")`` and ``score_pairs``
     on the driver, for signatures whose band rows fit
     ``config.DRIVER_MAX_ROWS``: one collect, the stream path's bucket pairing
     (``driver_bucket_pairs``) over the band keys and the SimHash pieces, the
@@ -419,17 +406,16 @@ def _pair_and_cluster(
             exact_span_edges,
         )
 
-        # accept_edges output is one row per undirected pair (candidate dedup)
-        # and a fresh pairing graph is never a converged star forest: skip the
-        # initial dedup shuffle and the first fixed-point probe
+        # a fresh pairing graph is never a converged star forest: skip the
+        # first fixed-point probe
         cc_stats: dict = {}
         if cluster is None:
             pre_assign = stage(
                 "pre_clusters",
                 lambda: connected_components(
                     edges.select("id_a", "id_b"),
-                    assume_unconverged=True, input_distinct=True,
-                    persisted=persisted, stats=cc_stats,
+                    assume_unconverged=True, persisted=persisted,
+                    stats=cc_stats,
                 ),
             )
         else:
@@ -495,9 +481,7 @@ def _pair_and_cluster(
                 "clusters",
                 lambda: attach_singletons(
                     pages.select("url"),
-                    connected_components(
-                        all_edges, input_distinct=True, persisted=persisted
-                    ),
+                    connected_components(all_edges, persisted=persisted),
                 ),
             )
         if timings is not None:
@@ -522,8 +506,7 @@ def _pair_and_cluster(
                 pages.select("url"),
                 connected_components(
                     edges.select("id_a", "id_b"),
-                    assume_unconverged=True, input_distinct=True,
-                    persisted=persisted,
+                    assume_unconverged=True, persisted=persisted,
                 ),
             ),
         )
@@ -561,9 +544,7 @@ def _spark_pairs(
     # checkpoint written before candidate_stage emitted is_star fails here.
     scored = stage(
         "scored_pairs",
-        lambda: score_pairs(
-            candidates, signatures, cfg, evidence="exact", keep_cols=("is_star",),
-        ),
+        lambda: score_pairs(candidates, signatures, cfg, keep_cols=("is_star",)),
         reused=True,  # edges + orphan probe
     )
     edges = stage("dup_edges", lambda: accept_edges(scored, cfg), reused=True)
@@ -577,7 +558,7 @@ def _spark_pairs(
     # On homogeneous corpora (hot bands = one dup family, stars all pass) the
     # orphan set is empty and the round is skipped: the pipeline pays O(m) per
     # hot bucket, never C(m,2)/n_sub, unless verify proves a band heterogeneous.
-    # Exact evidence has no estimate prefilter, so EVERY candidate pair
+    # score_pairs filters no pair, so EVERY candidate pair
     # reaches the scored frame and a rejected star edge is simply a scored
     # row failing the accept condition: one filter over the persisted scored
     # cache, no join.
@@ -604,7 +585,7 @@ def _spark_pairs(
         rescue_edges = stage(
             "rescue_edges",
             lambda: accept_edges(
-                score_pairs(rescue_cands, signatures, cfg, evidence="exact"),
+                score_pairs(rescue_cands, signatures, cfg),
                 cfg,
             ),
             # components reads the union twice when it is larger than the
@@ -631,4 +612,4 @@ def retrieval_scored_pairs(result: PipelineResult, cfg: DedupConfig) -> DataFram
     pairs = result.candidates.select("id_a", "id_b").unionByName(closure).dropDuplicates(
         ["id_a", "id_b"]
     )
-    return score_pairs(pairs, result.signatures, cfg, prefilter_margin=1.0)
+    return score_pairs(pairs, result.signatures, cfg)

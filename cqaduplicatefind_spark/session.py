@@ -40,7 +40,6 @@ def build_session(
     app_name: str = "cqaduplicatefind-spark",
     master: str | None = None,
     shuffle_partitions: int = 32,
-    arrow_max_records: int = 2048,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     b = SparkSession.builder.appName(app_name)
@@ -97,7 +96,7 @@ def build_session(
         # Arrow transfer for pandas UDFs; bounded batches keep the numpy signature
         # kernels' intermediates small and the pipeline memory-stable
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": str(arrow_max_records),
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
         "spark.sql.session.timeZone": "UTC",
         # deterministic shuffle behavior for the local[8]==local[32] check
         "spark.sql.execution.sortBeforeRepartition": "true",

@@ -308,7 +308,6 @@ class IncrementalDedup:
                     max_group=cfg.max_band_group,
                     carry_cols=("is_new",),
                     pair_filter=involves_new,
-                    salt_cap=cfg.salt_buckets,
                 ).persist()
                 held.append(cand)
                 n_cand = cand.count()
@@ -357,10 +356,7 @@ class IncrementalDedup:
                         .persist()
                     )
                     held.append(needed)
-                edges = accept_edges(
-                    score_pairs(cand, needed, cfg, evidence="exact"),
-                    cfg,
-                )
+                edges = accept_edges(score_pairs(cand, needed, cfg), cfg)
 
             if on_driver is not None:
                 # the driver holds the batch, its band rows and its edges:
@@ -535,16 +531,13 @@ def run_incremental_dedup(
     cfg: DedupConfig,
     work_dir: str,
     checkpoint_dir: str | None = None,
-    compact_every: int = 16,
 ):
     """Wire a streaming pages source through signature computation into the
     incremental matcher. Returns (query, dedup) — await query termination, then
     read ``dedup.matches()``. Signing is the pipeline's one-eval sign UDF, a
     stateless narrow map that runs unchanged on a streaming frame."""
     sigs = sign_pages(pages_stream, replace(cfg, span_pass=False))
-    dedup = IncrementalDedup(
-        spark, cfg, *store_roots(work_dir), compact_every=compact_every
-    )
+    dedup = IncrementalDedup(spark, cfg, *store_roots(work_dir))
     q = (
         sigs.writeStream.foreachBatch(dedup.process_batch)
         .option(

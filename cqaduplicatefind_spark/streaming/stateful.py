@@ -26,18 +26,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 
-def first_seen_stream(
-    stream_df: DataFrame,
-    key_col: str = "content_key",
-    order_col: str = "url",
-    out_cols: tuple[str, ...] | None = None,
-) -> DataFrame:
-    """streaming df -> rows whose ``key_col`` is seen for the FIRST time across
-    the stream. Deterministic within a micro-batch: among a batch's rows for a
-    new key, the min-``order_col`` row is emitted, with ties broken by the
-    remaining output columns (an unstable single-column sort would otherwise
-    pick an arbitrary row among equal-``order_col`` captures, varying across
-    reruns with Arrow chunking and input partitioning). State per key is a single
+def first_seen_stream(stream_df: DataFrame) -> DataFrame:
+    """streaming (url, content_key) -> the rows whose ``content_key`` is seen
+    for the FIRST time across the stream. Deterministic within a micro-batch:
+    among a batch's rows for a new key, the min-``url`` row is emitted (a
+    total order on both columns, so the pick is a function of the batch's
+    row multiset, independent of Arrow chunking and input partitioning).
+    State per key is a single
     flag (``seen int``) — the smallest possible state footprint; no timeout, so
     a key stays deduplicated for the stream's lifetime (bound it with a TTL
     timeout if the key space is unbounded and staleness is acceptable).
@@ -48,34 +43,25 @@ def first_seen_stream(
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if out_cols is None:
-        out_cols = (order_col, key_col)
+    cols = ["url", "content_key"]
     fields = dict(stream_df.dtypes)
-    out_schema = ", ".join(f"{c} {fields[c]}" for c in out_cols)
-    cols = list(out_cols)
-
-    # total order: order_col first, then every other emitted column — makes
-    # the picked row a function of the batch's row MULTISET, independent of
-    # chunk order
-    sort_keys = [order_col] + [c for c in cols if c != order_col]
+    out_schema = ", ".join(f"{c} {fields[c]}" for c in cols)
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state):
         if state.exists:
             return  # duplicate key: suppress the whole group, touch nothing
         best: pd.DataFrame | None = None
         for pdf in pdfs:
-            cand = pdf.sort_values(sort_keys, kind="stable").head(1)
+            cand = pdf.sort_values(cols, kind="stable").head(1)
             best = (
                 cand
                 if best is None
-                else pd.concat([best, cand]).sort_values(
-                    sort_keys, kind="stable"
-                ).head(1)
+                else pd.concat([best, cand]).sort_values(cols, kind="stable").head(1)
             )
         state.update((1,))
         if best is not None:
             yield best[cols]
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
+    return stream_df.groupBy("content_key").applyInPandasWithState(
         fn, out_schema, "seen int", "append", GroupStateTimeout.NoTimeout
     )

@@ -146,7 +146,9 @@ class PartStore:
         is only an I/O shortcut: rows a pre-crash compaction already folded
         into a tier no longer live under that name, so a tagged store filters
         on the ``src_batch`` row tag, which makes the exclusion exact through
-        every crash window."""
+        every crash window. A row without the tag raises in the job that
+        reads it: the filter cannot tell whose row it is, and dropping it
+        would hide it from every later trigger."""
         parts = self.parts()
         if exclude_batch is not None:
             skip = f"batch={exclude_batch}"
@@ -157,7 +159,12 @@ class PartStore:
         if not self.tagged:
             return df
         if exclude_batch is not None:
-            df = df.where(F.col("src_batch") != int(exclude_batch))
+            tag = F.col("src_batch")
+            df = df.where(
+                F.when(tag.isNull(), F.raise_error(F.lit(
+                    f"{self.root}: a row without its src_batch tag"
+                ))).otherwise(tag != int(exclude_batch))
+            )
         return df.drop("src_batch")
 
     def read_batch(self, batch_id: int) -> DataFrame:

@@ -15,8 +15,11 @@ def spark():
         app_name="cqadf-tests",
         master="local[4]",
         shuffle_partitions=8,
-        arrow_max_records=512,
-        extra={"spark.ui.enabled": "false", "spark.driver.memory": "4g"},
+        extra={
+            "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "4g",
+        },
     )
     yield s
     s.stop()

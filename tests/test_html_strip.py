@@ -9,10 +9,11 @@ script/style text KEPT, malformed tags).
 
 from html.parser import HTMLParser
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from cqaduplicatefind_spark.functions.html_strip import strip_tags, with_extracted_text
+from cqaduplicatefind_spark.functions.html_strip import strip_tags, strip_value
 
 
 class _ReferenceStripper(HTMLParser):
@@ -74,9 +75,20 @@ def test_known_goldens():
     assert strip_tags("a\n\n  b") == "a\n\n  b"
 
 
+def _with_extracted_text(df, out_col):
+    """df + ``out_col``: ``strip_value`` over the html column in an
+    Arrow-batched pandas UDF, the strip step of the pipeline's sign UDF."""
+
+    @F.pandas_udf("string")
+    def strip(html: pd.Series) -> pd.Series:
+        return html.map(strip_value)
+
+    return df.withColumn(out_col, strip(F.col("html")))
+
+
 def test_udf_matches_plain_function(spark, tiny_fixture):
     pages, _, _ = tiny_fixture
-    out = with_extracted_text(pages.select("url", "html"), "html", "text2")
+    out = _with_extracted_text(pages.select("url", "html"), "text2")
     rows = out.select("url", "html", "text2").limit(50).collect()
     assert rows
     for r in rows:
@@ -86,6 +98,6 @@ def test_udf_matches_plain_function(spark, tiny_fixture):
 def test_fixture_invariant_text_equals_strip(spark, tiny_fixture):
     """pages.text must equal strip_tags(pages.html) byte-for-byte on every row."""
     pages, _, _ = tiny_fixture
-    recomputed = with_extracted_text(pages, "html", "text2")
+    recomputed = _with_extracted_text(pages, "text2")
     n_bad = recomputed.filter(F.col("text") != F.col("text2")).count()
     assert n_bad == 0

@@ -214,6 +214,7 @@ def test_asymmetric_metrics_match_reference_on_directed_dups(spark):
 
 
 def test_retrieval_on_fixture_finds_gold(spark, tiny_fixture, cfg):
+    from cqaduplicatefind_spark.config import TOP_K
     from cqaduplicatefind_spark.plans.pipeline import (
         retrieval_scored_pairs,
         run_pipeline,
@@ -221,9 +222,9 @@ def test_retrieval_on_fixture_finds_gold(spark, tiny_fixture, cfg):
 
     pages, gold_edges, _ = tiny_fixture
     result = run_pipeline(spark, pages, cfg)
-    ranked = retrieve_duplicates(retrieval_scored_pairs(result, cfg), k=cfg.top_k)
+    ranked = retrieve_duplicates(retrieval_scored_pairs(result, cfg), k=TOP_K)
     m = ranked_retrieval_metrics(
-        ranked.select("query_id", "candidate_id", "score"), gold_edges, k=cfg.top_k
+        ranked.select("query_id", "candidate_id", "score"), gold_edges, k=TOP_K
     ).collect()[0]
     # every gold dup should be retrieved in top-10 on the fixture (clusters < 10)
     assert m.p_at_k > 0
@@ -263,7 +264,7 @@ def test_extra_scorer_reranks_retrieval(spark, cfg):
         return 1.0 - F.col("jaccard")
 
     scored = score_pairs(
-        pairs, sigs, cfg, prefilter_margin=1.0,
+        pairs, sigs, cfg,
         extra_scorers={"length_balance": length_balance, "inv_score": inverted},
     )
     rows = {(r["id_a"], r["id_b"]): r.asDict() for r in scored.collect()}
@@ -480,9 +481,9 @@ def test_span_checkpoint_freed_by_release(spark):
     are gone from the persistent-RDD map; before it, they are present."""
     from cqaduplicatefind_spark.config import DedupConfig
     from cqaduplicatefind_spark.operators.connected_components import (
+        CheckpointHandle,
         _persistent_rdd_ids,
     )
-    from cqaduplicatefind_spark.operators.overlap import _CheckpointHandle
     from cqaduplicatefind_spark.plans.pipeline import run_pipeline
 
     content = " ".join(f"story{j} word{j}" for j in range(25))
@@ -502,7 +503,7 @@ def test_span_checkpoint_freed_by_release(spark):
                     signature_partitions=8),
     )
     result.clusters.count()
-    handles = [p for p in result.persisted if isinstance(p, _CheckpointHandle)]
+    handles = [p for p in result.persisted if isinstance(p, CheckpointHandle)]
     assert handles, "span candidates were non-empty -> a handle must exist"
     ids = set().union(*(h._ids for h in handles))
     assert ids, "handle must carry the checkpoint RDD ids"

@@ -65,7 +65,7 @@ def test_lsh_candidates_vs_bruteforce_oracle(spark, tiny_fixture, cfg):
     pages, _, _ = tiny_fixture
     signatures = signature_stage(pages, cfg).cache()
     brute = all_pairs(signatures)
-    brute_scored = score_pairs(brute, signatures, cfg, prefilter_margin=1.0)
+    brute_scored = score_pairs(brute, signatures, cfg)
     truly_dup = brute_scored.where(F.col("jaccard") >= cfg.jaccard_threshold)
 
     from cqaduplicatefind_spark.plans.pipeline import candidate_stage

@@ -7,8 +7,10 @@ and hand every pass it cannot take to the unchanged Spark plans."""
 from __future__ import annotations
 
 import itertools
+import struct
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -19,6 +21,7 @@ from cqaduplicatefind_spark.functions.hashing import TokenHasher
 from cqaduplicatefind_spark.functions.normalize import review_to_wordlist
 from cqaduplicatefind_spark.functions.signatures import compute_signatures_pdf
 from cqaduplicatefind_spark.operators.connected_components import CheckpointHandle
+from cqaduplicatefind_spark.operators.verify import driver_score_pairs, score_pairs
 from cqaduplicatefind_spark.plans import pipeline
 
 CFG = DedupConfig(shingle_k=3, jaccard_threshold=0.7, min_overlap_span=40,
@@ -160,6 +163,63 @@ def test_driver_path_equals_spark_path(spark, variant, path, data):
     assert got["overlap_edges"]
     sa_sb = [e for e in got["edges"] if e[:2] == ("sa", "sb")]
     assert sa_sb and sa_sb[0][2] < CFG.jaccard_threshold
+
+
+# a small shingle alphabet so payloads overlap; the signed 64-bit extremes
+# ride along
+_SHINGLES = [-(1 << 63), -7, 0, 1, 5, 9, 1 << 40, (1 << 63) - 1]
+
+
+@st.composite
+def _payloads(draw):
+    """Score payload rows (url, simhash, n_shingles, shingles): shingle
+    arrays with repeats and empty ones, a null or wrong ``n_shingles`` now
+    and then, SimHashes a few bits apart."""
+    n = draw(st.integers(2, 7))
+    base = draw(st.integers(-(1 << 63), (1 << 63) - 1))
+    rows = []
+    for i in range(n):
+        shingles = draw(st.lists(st.sampled_from(_SHINGLES), max_size=10))
+        n_sh = draw(st.sampled_from([len(set(shingles)), None, 0, 3]))
+        flips = draw(st.lists(st.integers(0, 63), max_size=5))
+        sim = base
+        for bit in flips:
+            sim ^= 1 << bit
+        rows.append((f"d{i}", _signed(sim % (1 << 64)), n_sh, shingles))
+    return rows
+
+
+def _bits(v):
+    """A row value with each double as its IEEE-754 bit pattern."""
+    return struct.pack("<d", v) if isinstance(v, float) else v
+
+
+@settings(max_examples=10, deadline=None, derandomize=True)
+@given(rows=_payloads())
+def test_driver_scorer_equals_spark_scorer(spark, rows):
+    """``driver_score_pairs`` returns ``score_pairs``' rows: every pair,
+    all six columns, doubles equal bit for bit."""
+    schema = "url string, simhash long, n_shingles int, shingles array<long>"
+    sigs = spark.createDataFrame(rows, schema)
+    pairs = [(a[0], b[0]) for a, b in itertools.combinations(rows, 2)]
+    cols = ["id_a", "id_b", "est_jaccard", "hamming", "jaccard", "containment"]
+    got = score_pairs(
+        spark.createDataFrame(pairs, "id_a string, id_b string"), sigs, CFG
+    )
+    assert got.columns == cols
+    table = pa.Table.from_pylist(
+        [dict(zip(["url", "simhash", "n_shingles", "shingles"], r)) for r in rows],
+        schema=pa.schema([("url", pa.string()), ("simhash", pa.int64()),
+                          ("n_shingles", pa.int32()),
+                          ("shingles", pa.list_(pa.int64()))]),
+    )
+    want = driver_score_pairs(pairs, table, CFG)
+    assert list(want) == cols
+    want_rows = sorted(
+        tuple(_bits(want[c][i]) for c in cols) for i in range(len(pairs))
+    )
+    got_rows = sorted(tuple(_bits(v) for v in r) for r in got.collect())
+    assert got_rows == want_rows
 
 
 def _pages(spark, rows):

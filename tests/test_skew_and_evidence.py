@@ -1,6 +1,6 @@
 """Hot-band skew guard (star pairing keeps pair volume linear in the bucket
 size — the property that survives boilerplate pages colliding at 10^12-doc
-scale) and verify-evidence-mode equivalence."""
+scale) and the zero-shingle sentinel guard."""
 
 from __future__ import annotations
 
@@ -147,41 +147,17 @@ def test_short_docs_never_link_via_sentinel_signatures(spark):
         assert clusters["d1"] == clusters["d2"]
         assert len({clusters[s] for s in shorts}) == len(shorts)
 
-        # scored directly, with the MinHash estimate shipped and no prefilter,
-        # every short pair still reads est_jaccard 0 and is rejected
+        # scored directly, every short pair still reads est_jaccard 0 and
+        # is rejected
         pairs = spark.createDataFrame(
             [(a, b) for a in shorts for b in shorts if a < b],
             "id_a string, id_b string",
         )
-        scored = score_pairs(
-            pairs, result.signatures, cfg, prefilter_margin=1.0, evidence="both"
-        )
+        scored = score_pairs(pairs, result.signatures, cfg)
         assert {r["est_jaccard"] for r in scored.collect()} == {0.0}
         assert accept_edges(scored, cfg).count() == 0
     finally:
         result.release()
-
-
-def test_evidence_modes_agree_on_accepted_edges(spark, tiny_fixture):
-    """evidence='exact' (no minhash shipped) and evidence='both' (minhash
-    prefilter) accept the same edges whenever the 128-perm estimate is within
-    the prefilter margin — true on the fixture."""
-    pages, _, _ = tiny_fixture
-    cfg = _cfg()
-    sigs = signature_stage(pages, cfg).persist()
-    try:
-        cand = candidate_stage(sigs, cfg).persist()
-        exact = accept_edges(
-            score_pairs(cand, sigs, cfg, evidence="exact"), cfg
-        ).select("id_a", "id_b")
-        both = accept_edges(
-            score_pairs(cand, sigs, cfg, evidence="both"), cfg
-        ).select("id_a", "id_b")
-        assert exact.exceptAll(both).count() == 0
-        assert both.exceptAll(exact).count() == 0
-        cand.unpersist()
-    finally:
-        sigs.unpersist()
 
 
 def test_hot_cluster_closure_stays_linear(spark):

@@ -108,6 +108,37 @@ def test_compaction_refuses_a_part_with_an_undeclared_column(spark, tmp_path):
     }
 
 
+@pytest.mark.parametrize("bound", [None, 0], ids=["driver", "spark"])
+def test_index_read_refuses_a_band_row_without_its_tag(
+    spark, tmp_path, monkeypatch, bound
+):
+    """A band part whose rows lack the ``src_batch`` tag makes the next
+    batch's index read raise, on either matcher path: the replay filter
+    cannot tell whose rows they are, and dropping them would leave every
+    later batch unpaired against them."""
+    if bound is not None:
+        monkeypatch.setattr(config, "DRIVER_MAX_ROWS", bound)
+    dedup = IncrementalDedup(spark, CFG, *store.store_roots(str(tmp_path)))
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
+
+    def sigs_for(i):
+        rows = [(f"fam{i}", base + f"tail{i}"), (f"noise{i}", f"zz{i} qq " * 30)]
+        return signature_frame(
+            spark.createDataFrame(rows, "url string, text string"), CFG
+        )
+
+    dedup.process_batch(sigs_for(0), 0)
+    part = os.path.join(dedup.bands_dir, "batch=0")
+    stripped = str(tmp_path / "stripped")
+    spark.read.parquet(part).drop("src_batch").write.parquet(stripped)
+    shutil.rmtree(part)
+    shutil.move(stripped, part)
+
+    with pytest.raises(Exception, match="without its src_batch tag"):
+        dedup.process_batch(sigs_for(1), 1)
+    assert dedup.matches().count() == 0
+
+
 def test_uncommitted_part_stays_hidden_until_replayed(spark, tmp_path):
     """Under the v2 committer a write killed mid-job leaves its ``batch=<id>``
     dir holding the part files its finished tasks moved there, and no

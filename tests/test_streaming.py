@@ -1,13 +1,19 @@
 """Structured Streaming: incremental dedup over a file source."""
 
 import os
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
 
 from cqaduplicatefind_spark import config
 from cqaduplicatefind_spark.config import DedupConfig
-from cqaduplicatefind_spark.streaming.incremental import run_incremental_dedup
+from cqaduplicatefind_spark.functions.signatures import sign_pages
+from cqaduplicatefind_spark.streaming.incremental import (
+    IncrementalDedup,
+    run_incremental_dedup,
+)
+from cqaduplicatefind_spark.streaming.store import store_roots
 
 
 def test_incremental_dedup_file_source(spark, tmp_path):
@@ -132,8 +138,16 @@ def test_per_batch_work_bounded_by_touched_buckets(spark, tmp_path, monkeypatch)
             "append"
         ).parquet(src)
         stream = spark.readStream.schema("url string, text string").parquet(src)
-        q, dedup = run_incremental_dedup(
-            spark, stream, cfg, str(tmp_path / "work"), compact_every=4
+        # run_incremental_dedup's wiring, with a processor that compacts
+        # every 4 parts
+        work = str(tmp_path / "work")
+        dedup = IncrementalDedup(spark, cfg, *store_roots(work), compact_every=4)
+        q = (
+            sign_pages(stream, replace(cfg, span_pass=False))
+            .writeStream.foreachBatch(dedup.process_batch)
+            .option("checkpointLocation", os.path.join(work, "checkpoint"))
+            .trigger(availableNow=True)
+            .start()
         )
         q.awaitTermination(120)
         stats.extend(dedup.batch_stats)

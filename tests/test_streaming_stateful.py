@@ -63,7 +63,7 @@ def test_first_seen_dedup_across_batches(spark, tmp_path):
         spark,
         src,
         "url string, content_key string",
-        lambda s: first_seen_stream(s, "content_key", "url"),
+        first_seen_stream,
         "first_seen",
         str(tmp_path / "ckpt"),
     )

@@ -9,7 +9,9 @@ source with ``ast``: no Spark, and no script is imported.
 
 The other direction is checked too: every public top-level def in the
 package must be reachable from a non-test entry, or be a listed reference
-capability. Code that only tests call is surface nobody ships."""
+capability. Code that only tests call is surface nobody ships. The same
+holds for a setting: a defaulted engine parameter that every non-test call
+site leaves at one value must be a constant, or a listed exception."""
 
 from __future__ import annotations
 
@@ -336,3 +338,144 @@ def test_every_public_def_is_reachable_or_a_listed_capability():
     SURVEY.md section it implements. A listed name must still exist and still
     be unreachable, so the list stays exact."""
     assert _unreachable_public_defs() == set(REFERENCE_CAPABILITIES)
+
+
+# ------------------------------------------------------------ parameter census
+
+# The engine modules whose settings the census covers: every public def's and
+# public class ``__init__``'s defaulted parameters.
+ENGINE_MODULES = ("operators.candidates", "operators.verify",
+                  "operators.connected_components", "operators.overlap",
+                  "plans", "streaming", "session")
+
+# Defaulted engine parameters that no non-test caller varies, kept on purpose.
+PARAMETER_EXCEPTIONS = {
+    "operators.verify.score_pairs(extra_scorers)": "§7.5 per-pair scorer seam",
+    "plans.delta.seed_index(batch_id)": "the write's identity; seeds take "
+                                        "negative ids, which it checks",
+    "streaming.incremental.run_incremental_dedup(checkpoint_dir)":
+        "a path: a deployment setting",
+}
+
+_ANY = object()  # a non-literal argument: whatever its caller passes
+
+
+def _literal(node: ast.expr) -> object:
+    try:
+        return repr(ast.literal_eval(node))
+    except ValueError:
+        return _ANY
+
+
+def _engine_signatures() -> dict[str, tuple[str, list[str], dict[str, object]]]:
+    """def name -> (qualified name, positional parameter names, defaulted
+    parameter -> default); a class's entry is its ``__init__`` less
+    ``self``."""
+    sigs = {}
+    for module, tree in _package().items():
+        short = module[len(PKG) + 1:]
+        if not any(short == m or short.startswith(f"{m}.") for m in ENGINE_MODULES):
+            continue
+        for node in tree.body:
+            if not isinstance(node, _DEFS) or node.name.startswith("_"):
+                continue
+            fn, skip = node, 0
+            if isinstance(node, ast.ClassDef):
+                fn = next((f for f in node.body if isinstance(f, ast.FunctionDef)
+                           and f.name == "__init__"), None)
+                skip = 1
+            if fn is None:
+                continue
+            a = fn.args
+            pos = [p.arg for p in a.posonlyargs + a.args]
+            defaults = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+            defaults |= {p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                         if d is not None}
+            assert node.name not in sigs, f"two engine defs named {node.name}"
+            sigs[node.name] = (f"{short}.{node.name}", pos[skip:],
+                               {p: _literal(d) for p, d in defaults.items()})
+    return sigs
+
+
+def _calls(tree: ast.AST):
+    """Every call in ``tree``, and in each string constant that parses as
+    Python and names the package (a child-process script)."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            yield node
+        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+              and PKG in node.value):
+            try:
+                yield from _calls(ast.parse(node.value))
+            except SyntaxError:
+                pass
+
+
+def _parameter_values(trees) -> dict[str, set]:
+    """``"<def>(<param>)"`` -> the values its call sites in ``trees`` give it,
+    a call matched to an engine def by name. An omitted argument is the
+    default; a literal is its value; a non-literal (a name, attribute or
+    call) is ``_ANY``, and so is every parameter a ``*args``/``**kwargs``
+    could fill."""
+    sigs = _engine_signatures()
+    values = {f"{q}({p})": set() for q, _, d in sigs.values() for p in d}
+    for tree in trees:
+        for call in _calls(tree):
+            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+            if name not in sigs:
+                continue
+            qual, pos, defaults = sigs[name]
+            given, starred = {}, False
+            for i, arg in enumerate(call.args):
+                if isinstance(arg, ast.Starred):
+                    starred = True
+                    break
+                if i < len(pos):
+                    given[pos[i]] = _literal(arg)
+            for kw in call.keywords:
+                if kw.arg is None:
+                    starred = True
+                else:
+                    given[kw.arg] = _literal(kw.value)
+            for param, default in defaults.items():
+                value = given.get(param, _ANY if starred else default)
+                values[f"{qual}({param})"].add(value)
+    return values
+
+
+def _single_valued(values: dict[str, set]) -> set[str]:
+    return {p for p, vs in values.items() if len(vs) < 2 and _ANY not in vs}
+
+
+@cache
+def _census() -> dict[str, set]:
+    trees = [_code_tree((REPO / e).read_text()) for e in ENTRIES]
+    return _parameter_values([*trees, *_package().values()])
+
+
+def test_parameter_census_reads_call_sites():
+    src = ("from cqaduplicatefind_spark.operators import verify\n"
+           "verify.score_pairs(p, s, cfg, None, ('is_star',))\n"
+           "verify.score_pairs(p, s, cfg)\n"
+           "verify.score_pairs(p, s, cfg, **kw)\n"
+           "overlap_spans(p, d, text_col='norm_text')\n"
+           "run('''from cqaduplicatefind_spark import session\n"
+           "session.build_session(master=m)''')\n")
+    values = _parameter_values([ast.parse(src)])
+    assert values["operators.verify.score_pairs(keep_cols)"] == {"()", "('is_star',)", _ANY}
+    assert values["operators.verify.score_pairs(extra_scorers)"] == {"None", _ANY}
+    # a literal equal to the default is the default
+    assert values["operators.overlap.overlap_spans(text_col)"] == {"'norm_text'"}
+    assert values["session.build_session(master)"] == {_ANY}
+    assert _single_valued(values) >= {"operators.overlap.overlap_spans(text_col)",
+                                      "session.build_session(app_name)"}
+
+
+def test_every_engine_parameter_takes_two_values():
+    """A defaulted engine parameter that every non-test call site leaves at
+    one value is a constant, not a setting: inline it, or list it above with
+    the reason it stays. A listed name must still exist and still be
+    single-valued, so the list stays exact."""
+    census = _census()
+    assert len(census) <= 60
+    assert _single_valued(census) == set(PARAMETER_EXCEPTIONS)

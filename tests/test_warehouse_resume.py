@@ -115,7 +115,7 @@ def test_parallelism_change_does_not_invalidate_fingerprint():
     )
     assert DedupConfig(shingle_k=7).fingerprint() != base.fingerprint()
     assert DedupConfig(jaccard_threshold=0.9).fingerprint() != base.fingerprint()
-    assert DedupConfig(salt_buckets=0).fingerprint() != base.fingerprint()
+    assert DedupConfig(max_band_group=16).fingerprint() != base.fingerprint()
 
 
 def test_manifest_json_readable(spark, wh):
